@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextAnalysis, Vectors}
-import graft.operators.{Bq, Components, Contamination, Dedup, Keywords,
-  Merge, Multimodal, Similarity, Sq}
+import graft.operators.{CellIndex, Components, Contamination, Dedup,
+  FlatIndex, Keywords, Merge, Multimodal, Pq, Similarity, VectorCodec}
 
 /** LLM-training-data-pipeline extension operators over the `documents` /
   * `embeddings` tables (builder brief + SURVEY.md §7.1.6): dedup, similarity
@@ -1899,9 +1899,9 @@ object ExtQueries {
     "ann_pq" -> ((s, d) => {
       val corpus = embs(s, d).filter(col("vec_id") =!= 0)
       val query = embs(s, d).filter(col("vec_id") === 0)
-      val cb = graft.operators.Pq.train(corpus, "vec_id", "embedding",
+      val cb = Pq.train(corpus, "vec_id", "embedding",
         m = 16, k = 16)
-      graft.operators.Pq.topK(corpus, "vec_id", "embedding",
+      Pq.topK(corpus, "vec_id", "embedding",
           query, "embedding", 10, cb, oversample = 12)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     }),
@@ -1910,12 +1910,12 @@ object ExtQueries {
     "ann_pq_recall" -> ((s, d) => {
       val corpus = embs(s, d).filter(col("vec_id") =!= 0)
       val query = embs(s, d).filter(col("vec_id") === 0)
-      val cb = graft.operators.Pq.train(corpus, "vec_id", "embedding",
+      val cb = Pq.train(corpus, "vec_id", "embedding",
         m = 16, k = 16)
       recallOf(
         Similarity.bruteForceTopK(corpus, "vec_id", "embedding",
           query, "embedding", 10).select("vec_id"),
-        graft.operators.Pq.topK(corpus, "vec_id", "embedding",
+        Pq.topK(corpus, "vec_id", "embedding",
           query, "embedding", 10, cb, oversample = 12),
         Seq("vec_id"), floor = 0.8)
     }),
@@ -1929,13 +1929,14 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_index_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfPqIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 4, m = 16, k = 16, kmeansIters = 2)
+      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 4,
+        nprobe = 3, kmeansIters = 2)
+      ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceTopK(corpus, "vec_id", "embedding",
           query, "embedding", 10).select("vec_id"),
-        Similarity.ivfPqTopKFromIndex(s, idx, corpus, "vec_id", "embedding",
-          query, "embedding", 10, nprobe = 3, oversample = 12),
+        ix.topK(s, "vec_id", "embedding", query, "embedding", 10,
+          oversample = 12, rawCorpus = Some(corpus)),
         Seq("vec_id"), floor = 0.7)
     }),
 
@@ -2652,7 +2653,7 @@ object ExtQueries {
 
     // the INCREMENTAL serving path's quality number: IVF-PQ index built on
     // 80% of the corpus, the other 20% appended with the FROZEN sidecar
-    // centroids/codebooks (Similarity.appendToIvfPqIndex — the
+    // centroids/codebooks (CellIndex.append — the
     // corpus-builder loop's maintenance move), then served as one index.
     // Recall vs brute force over the FULL corpus, same floor as the
     // build-once ann_ivfpq_recall: appending must not cost quality.
@@ -2664,14 +2665,15 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_append_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfPqIndex(initial, "vec_id", "embedding", idx,
-        nlist = 4, m = 16, k = 16, kmeansIters = 2)
-      Similarity.appendToIvfPqIndex(batch, "vec_id", "embedding", idx)
+      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 4,
+        nprobe = 3, kmeansIters = 2)
+      ix.write(initial, "vec_id", "embedding")
+      ix.append(batch, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceTopK(all, "vec_id", "embedding",
           query, "embedding", 10).select("vec_id"),
-        Similarity.ivfPqTopKFromIndex(s, idx, all, "vec_id", "embedding",
-          query, "embedding", 10, nprobe = 3, oversample = 12),
+        ix.topK(s, "vec_id", "embedding", query, "embedding", 10,
+          oversample = 12, rawCorpus = Some(all)),
         Seq("vec_id"), floor = 0.7)
     }),
 
@@ -2890,15 +2892,15 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_filt_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfPqIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, m = 16, k = 16, kmeansIters = 2,
-        attrCols = Seq("label"))
+      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 8,
+        nprobe = 6, kmeansIters = 2)
+      ix.write(corpus, "vec_id", "embedding", attrCols = Seq("label"))
       recallOf(
         Similarity.bruteForceTopK(corpus.filter(col("label") === 2),
           "vec_id", "embedding", query, "embedding", 10).select("vec_id"),
-        Similarity.ivfPqTopKFromIndex(s, idx, corpus, "vec_id", "embedding",
-          query, "embedding", k = 10, nprobe = 6, oversample = 8,
-          filter = Some(col("label") === 2)),
+        ix.topK(s, "vec_id", "embedding", query, "embedding", k = 10,
+          oversample = 8, filter = Some(col("label") === 2),
+          rawCorpus = Some(corpus)),
         Seq("vec_id"), floor = 0.5)
     }),
 
@@ -2911,8 +2913,9 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_sq8_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Sq.writeSqIndex(corpus, "vec_id", "embedding", idx)
-      Sq.sqBatchTopKFromIndex(s, idx, "vec_id", "embedding",
+      val ix = FlatIndex(idx, VectorCodec.Sq8)
+      ix.write(corpus, "vec_id", "embedding")
+      ix.batchTopK(s, "vec_id", "embedding",
           embs(s, d).filter(col("vec_id") === 0),
           "vec_id", "embedding", k = 10, oversample = 4)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
@@ -2929,12 +2932,13 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_sq8_batch_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Sq.writeSqIndex(corpus, "vec_id", "embedding", idx)
+      val ix = FlatIndex(idx, VectorCodec.Sq8)
+      ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5)
           .select("query_id", "vec_id"),
-        Sq.sqBatchTopKFromIndex(s, idx, "vec_id", "embedding",
+        ix.batchTopK(s, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5, oversample = 4),
         Seq("query_id", "vec_id"), floor = 0.9)
     }),
@@ -3050,14 +3054,14 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfsq_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Sq.writeIvfSqIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0)
+      val ix = CellIndex(idx, VectorCodec.Sq8, nlist = 8, nprobe = 4)
+      ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5)
           .select("query_id", "vec_id"),
-        Sq.ivfSqBatchTopKFromIndex(s, idx, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5, nprobe = 4),
+        ix.batchTopK(s, "vec_id", "embedding",
+          queries, "vec_id", "embedding", k = 5),
         Seq("query_id", "vec_id"), floor = 0.5)
     }),
 
@@ -3071,8 +3075,9 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_bq_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Bq.writeBqIndex(corpus, "vec_id", "embedding", idx)
-      Bq.bqBatchTopKFromIndex(s, idx, "vec_id", "embedding",
+      val ix = FlatIndex(idx, VectorCodec.Bq)
+      ix.write(corpus, "vec_id", "embedding")
+      ix.batchTopK(s, "vec_id", "embedding",
           embs(s, d).filter(col("vec_id") === 0),
           "vec_id", "embedding", k = 10, oversample = 16)
         .select(col("vec_id"), round(col("score"), 6).as("score"))
@@ -3090,12 +3095,13 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_bq_batch_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Bq.writeBqIndex(corpus, "vec_id", "embedding", idx)
+      val ix = FlatIndex(idx, VectorCodec.Bq)
+      ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5)
           .select("query_id", "vec_id"),
-        Bq.bqBatchTopKFromIndex(s, idx, "vec_id", "embedding",
+        ix.batchTopK(s, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5, oversample = 16),
         // measured 0.82 on this fixture — the fixture is ADVERSARIAL for
         // sign-bit codes (true neighbors at cosine ≈ 0.3, the ann_rp
@@ -3115,15 +3121,14 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfbq_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Bq.writeIvfBqIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0)
+      val ix = CellIndex(idx, VectorCodec.Bq, nlist = 8, nprobe = 4)
+      ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5)
           .select("query_id", "vec_id"),
-        Bq.ivfBqBatchTopKFromIndex(s, idx, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5, nprobe = 4,
-          oversample = 16),
+        ix.batchTopK(s, "vec_id", "embedding",
+          queries, "vec_id", "embedding", k = 5, oversample = 16),
         Seq("query_id", "vec_id"), floor = 0.5)
     }),
 
@@ -3216,24 +3221,22 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_pq_batched_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      val cb = graft.operators.Pq.train(corpus, "vec_id", "embedding",
-        m = 16, k = 16)
-      graft.operators.Pq.writeIndex(corpus, "vec_id", "embedding", idx, cb)
+      val ix = FlatIndex(idx, Pq.Codec(m = 16, k = 16))
+      ix.write(corpus, "vec_id", "embedding")
       val qRows = queries.select(col("vec_id"),
           col("embedding").cast("array<float>"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1)))
       val truth = qRows.flatMap { case (qid, v) =>
-        graft.operators.Pq.topKFromIndex(s, idx, corpus, "vec_id",
-            "embedding", Seq((qid, v)).toDF("vec_id", "embedding"),
-            "embedding", k = 5, oversample = 8)
+        ix.topK(s, "vec_id", "embedding",
+            Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", k = 5,
+            oversample = 8, rawCorpus = Some(corpus))
           .select("vec_id").as[Long].collect()
           .map(id => (qid, id))
       }.toSeq.toDF("query_id", "vec_id")
       recallOf(truth,
-        graft.operators.Pq.batchTopKFromIndex(s, idx, corpus, "vec_id",
-          "embedding", queries, "vec_id", "embedding",
-          k = 5, oversample = 8),
+        ix.batchTopK(s, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 5, oversample = 8, rawCorpus = Some(corpus)),
         Seq("query_id", "vec_id"), floor = 1.0)
     }),
 
@@ -3245,23 +3248,23 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_batched_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfPqIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, m = 16, k = 16, kmeansIters = 0)
+      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 8,
+        nprobe = 3)
+      ix.write(corpus, "vec_id", "embedding")
       val qRows = queries.select(col("vec_id"),
           col("embedding").cast("array<float>"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1)))
       val truth = qRows.flatMap { case (qid, v) =>
-        Similarity.ivfPqTopKFromIndex(s, idx, corpus, "vec_id", "embedding",
-            Seq((qid, v)).toDF("vec_id", "embedding"), "embedding",
-            k = 5, nprobe = 3, oversample = 8)
+        ix.topK(s, "vec_id", "embedding",
+            Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", k = 5,
+            oversample = 8, rawCorpus = Some(corpus))
           .select("vec_id").as[Long].collect()
           .map(id => (qid, id))
       }.toSeq.toDF("query_id", "vec_id")
       recallOf(truth,
-        Similarity.ivfPqBatchTopKFromIndex(s, idx, corpus, "vec_id",
-          "embedding", queries, "vec_id", "embedding",
-          k = 5, nprobe = 3, oversample = 8),
+        ix.batchTopK(s, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 5, oversample = 8, rawCorpus = Some(corpus)),
         Seq("query_id", "vec_id"), floor = 1.0)
     }),
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 /** Native Catalyst expression for PQ encoding: the full m×k argmin over
   * trained codebooks in ONE fused codegen loop.
   *
-  * The composed formulation ([[graft.operators.Pq.encodeExpr]]'s former
+  * The composed formulation ([[graft.operators.Pq.Codebooks.encode]]'s former
   * shape — per subspace an `array_min` over k literal `(cost, code)`
   * structs, each cost a dot product) unrolls to m·k expression trees: at
   * m = k = 16 the generated projection method passed 10k lines, hit

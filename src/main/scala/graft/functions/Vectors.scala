@@ -29,10 +29,6 @@ object Vectors {
     when(d === 0, lit(null)).otherwise(dot(a, b) / d)
   }
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v))
-
   /** Sign-bit bucket id for random-hyperplane LSH: bit i of the result is
     * sign(v · hᵢ) where hᵢ is a deterministic ±1 hyperplane derived from a
     * splitmix64 hash of (tableSeed, i, j) — no stored hyperplane matrix

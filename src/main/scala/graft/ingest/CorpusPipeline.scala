@@ -60,19 +60,32 @@ object CorpusPipeline {
   private def indexExists(spark: SparkSession, indexPath: String): Boolean =
     pathExists(spark, s"$indexPath/meta")
 
-  /** Per-batch ANN configuration: the corpus embeddings maintain an
-    * IVF-PQ index at `indexPath` the same way the text side maintains its
-    * MinHash index. While the corpus holds fewer than `minTrainRows`
-    * documents the index is REBUILT from the full corpus each batch —
-    * sidecars frozen on a tiny first batch would be degenerate (a 1-doc
-    * bootstrap yields one seed centroid and duplicate-padded codebooks,
-    * silently flattening every ADC ranking as the corpus grows). Once the
-    * training mass is reached the sidecars freeze and batches append with
-    * them ([[Similarity.appendToIvfPqIndex]]), so every later generation
-    * is encoded comparably and servable through
-    * [[Similarity.ivfPqTopKFromIndex]].
+  /** A codec index the loop maintains per batch
+    * ([[graft.operators.CodecIndex]]), the same way the text side
+    * maintains its MinHash index. While the corpus holds fewer than
+    * `minTrainRows` documents the index is REBUILT from the full corpus
+    * each batch — sidecars frozen on a tiny first batch would be
+    * degenerate (a 1-doc bootstrap yields one seed centroid and
+    * duplicate-padded codebooks, silently flattening every ADC ranking;
+    * SQ ranges trained on it clamp everything the growing corpus adds).
+    * Once the training mass is reached the sidecars freeze and batches
+    * append with them, so every later generation is encoded comparably.
+    * `compactEvery` > 0 rewrites the code table on that append cadence.
     */
-  /** `reclusterImbalance`: when the post-append cell-population imbalance
+  sealed trait CodecIndexCfg {
+    def index: graft.operators.CodecIndex
+    def embeddingCol: String
+    def minTrainRows: Long
+    def compactEvery: Int
+    def reclusterImbalance: Double
+    def trainSampleFraction: Double
+  }
+
+  /** Per-batch ANN configuration: the corpus embeddings maintain an
+    * IVF-PQ [[graft.operators.CellIndex]] at `indexPath`, servable through
+    * [[Similarity.ivfPqTopKFromIndex]].
+    *
+    * `reclusterImbalance`: when the post-append cell-population imbalance
     * ([[Similarity.ivfIndexStats]], max/mean) exceeds this, the frozen
     * sidecars are declared stale and the index is REBUILT from the corpus
     * (fresh Lloyd + codebooks — [[Similarity.reclusterIvfIndex]]'s
@@ -92,20 +105,24 @@ object CorpusPipeline {
     * small corpora — set ≪1 in production. Encoding/assignment below the
     * trained sidecars always covers every row regardless.
     *
-    * `compactEvery`: every append lands one file-set per touched cell
+    * `compactEvery`: every append lands one file per touched cell
     * partition, so after N batches the codes directories are an
     * N-small-files swamp. When > 0, every `compactEvery`-th append is
-    * followed by [[graft.sources.Compaction.compactPartitioned]] over the
-    * codes table (per-leaf atomic rewrite preserving the `cell=` layout),
-    * bounding file count at a constant factor of the cell count. 0 =
-    * never (caller owns maintenance).
+    * followed by a per-leaf atomic rewrite preserving the `cell=` layout
+    * ([[graft.operators.CellIndex.compact]]), bounding file count at a
+    * constant factor of the cell count. 0 = never (caller owns
+    * maintenance).
     */
   case class AnnIndex(indexPath: String, embeddingCol: String,
                       nlist: Int = 16, m: Int = 8, k: Int = 16,
                       kmeansIters: Int = 2, minTrainRows: Long = 256,
                       reclusterImbalance: Double = Double.MaxValue,
                       trainSampleFraction: Double = 1.0,
-                      compactEvery: Int = 0)
+                      compactEvery: Int = 0) extends CodecIndexCfg {
+    def index: graft.operators.CodecIndex = graft.operators.CellIndex(
+      indexPath, graft.operators.Pq.Codec(m, k), nlist,
+      kmeansIters = kmeansIters)
+  }
 
   /** Rows the frozen sidecars were trained on (−1 = no index yet). */
   private def annTrainedRows(spark: SparkSession, annPath: String): Long =
@@ -114,15 +131,17 @@ object CorpusPipeline {
       .collect().head.getLong(0)
 
   /** Per-batch SQ8 maintenance: the corpus embeddings also keep an int8
-    * scalar-quantized index ([[graft.operators.Sq]]) — rebuild-from-corpus
-    * until `minTrainRows` (per-dim min/max trained on a tiny bootstrap
-    * would freeze clamping ranges the growing corpus immediately
-    * outruns), frozen-params append after, exactly the [[AnnIndex]]
-    * freeze contract.
+    * scalar-quantized [[graft.operators.FlatIndex]] under the
+    * [[CodecIndexCfg]] freeze contract.
     */
   case class SqIndexCfg(indexPath: String, embeddingCol: String,
                         minTrainRows: Long = 256,
-                        compactEvery: Int = 0)
+                        compactEvery: Int = 0) extends CodecIndexCfg {
+    def index: graft.operators.CodecIndex = graft.operators.FlatIndex(
+      indexPath, graft.operators.VectorCodec.Sq8)
+    def reclusterImbalance: Double = Double.MaxValue
+    def trainSampleFraction: Double = 1.0
+  }
 
   /** Appends-since-last-compaction counter, a [[Watermark]]-style plain
     * text sidecar at `<indexPath>/_maint_appends` — underscore-prefixed
@@ -599,67 +618,49 @@ object CorpusPipeline {
         // triage) can distinguish it from the cleanly-replayable
         // pre-append failures they are allowed to hold-and-retry.
         try {
-        // ANN maintenance runs BEFORE the MinHash append: the MinHash
+        // codec-index maintenance runs BEFORE the MinHash append: the MinHash
         // index is the retry GATE (a replayed batch matches its own
         // indexed signatures and drops), so it must commit LAST — a crash
         // between the other appends and the gate makes the retry REPEAT
         // them (benign, visible duplication), whereas gating first would
         // make the retry SKIP them (the batch silently unfindable in the
         // ANN index forever)
-        ann.foreach { a =>
-          val trained = annTrainedRows(spark, a.indexPath)
-          if (trained >= a.minTrainRows) {
-            Similarity.appendToIvfPqIndex(survivors, idCol, a.embeddingCol,
-              a.indexPath)
-            // small-files maintenance on a cadence: the counter sidecar
-            // bumps per append; every compactEvery-th batch the codes
-            // table's cell leaves are rewritten in place (atomic per
-            // leaf, layout preserved)
-            maybeCompact(a.indexPath, a.compactEvery) {
-              graft.sources.Compaction.compactPartitioned(spark,
-                s"${a.indexPath}/codes")
-            }
-            // index-health check AFTER the append: skewed batches degrade
-            // the frozen geometry cumulatively; past the threshold the
-            // cheap append is followed by a one-off rebuild so the NEXT
-            // batch starts from balanced cells. Computed ONLY when the
-            // feature is armed — with the MaxValue default the threshold
-            // cannot trip, and the codes-table groupBy would be pure
-            // per-batch overhead on the streaming hot path.
-            if (a.reclusterImbalance < Double.MaxValue) {
-              val imbalance = Similarity
-                .ivfIndexStats(spark, a.indexPath)
-                .select(col("imbalance")).collect().head.getDouble(0)
-              if (imbalance > a.reclusterImbalance) {
-                // rebuild trains on a seeded SAMPLE (trainSampleFraction)
-                // — a full-corpus Lloyd per trigger is the 100 TB
-                // anti-pattern; encoding below the new sidecars still
-                // covers every row
-                val corpusNow = spark.read.parquet(corpusPath)
-                val n = corpusNow.count()
-                Similarity.writeIvfPqIndex(corpusNow, idCol, a.embeddingCol,
-                  a.indexPath, nlist = a.nlist, m = a.m, k = a.k,
-                  kmeansIters = a.kmeansIters,
-                  sampleFraction = a.trainSampleFraction)
-                import spark.implicits._
-                Seq(n).toDF("trained_rows").coalesce(1)
-                  .write.mode("overwrite")
-                  .parquet(s"${a.indexPath}/trained_meta")
-              }
-            }
-          } else {
-            // (re)build over the FULL corpus as written so far (this
-            // batch included) until the training mass is reached
+        (ann.toSeq ++ sq).foreach { c =>
+          val ix = c.index
+          // (re)build over the FULL corpus as written so far (this batch
+          // included), training on `fraction` of it
+          def rebuild(fraction: Double): Unit = {
             val corpusNow = spark.read.parquet(corpusPath)
             val n = corpusNow.count()
-            Similarity.writeIvfPqIndex(corpusNow, idCol, a.embeddingCol,
-              a.indexPath, nlist = a.nlist, m = a.m, k = a.k,
-              kmeansIters = a.kmeansIters)
+            ix.write(corpusNow, idCol, c.embeddingCol,
+              sampleFraction = fraction)
             import spark.implicits._
             Seq(n).toDF("trained_rows").coalesce(1)
               .write.mode("overwrite")
-              .parquet(s"${a.indexPath}/trained_meta")
+              .parquet(s"${ix.path}/trained_meta")
           }
+          if (annTrainedRows(spark, ix.path) >= c.minTrainRows) {
+            ix.append(survivors, idCol, c.embeddingCol)
+            // small-files maintenance on a cadence: the counter sidecar
+            // bumps per append; every compactEvery-th batch the code
+            // table is rewritten in place (atomic per leaf, layout
+            // preserved)
+            maybeCompact(ix.path, c.compactEvery)(ix.compact(spark))
+            // index-health check AFTER the append: skewed batches degrade
+            // the frozen geometry cumulatively; past the threshold the
+            // cheap append is followed by a one-off rebuild (trained on a
+            // seeded SAMPLE — a full-corpus Lloyd per trigger is the
+            // 100 TB anti-pattern) so the NEXT batch starts from balanced
+            // cells. Computed ONLY when the feature is armed — with the
+            // MaxValue default the threshold cannot trip, and the
+            // code-table groupBy would be pure per-batch overhead on the
+            // streaming hot path.
+            if (c.reclusterImbalance < Double.MaxValue &&
+                Similarity.ivfIndexStats(spark, ix.path)
+                  .select(col("imbalance")).collect().head.getDouble(0) >
+                  c.reclusterImbalance)
+              rebuild(c.trainSampleFraction)
+          } else rebuild(1.0)
         }
         // lexical retrieval index: the survivors' postings append with
         // the other per-batch index state BEFORE the MinHash gate
@@ -720,29 +721,6 @@ object CorpusPipeline {
                 graft.sources.SketchSidecar.compactRows(spark, cfg)
               writeCount(cfg.sidecarPath, "_maint_rowmerge", 0)
             }
-          }
-        }
-        // SQ8 maintenance: same rebuild-until-trained / frozen-append
-        // contract as the ANN block above, and for the same reason it
-        // runs BEFORE the MinHash gate append
-        sq.foreach { q =>
-          val trained = annTrainedRows(spark, q.indexPath)
-          if (trained >= q.minTrainRows) {
-            graft.operators.Sq.appendToSqIndex(survivors, idCol,
-              q.embeddingCol, q.indexPath)
-            // SQ data is unpartitioned — plain whole-table compaction
-            maybeCompact(q.indexPath, q.compactEvery) {
-              graft.sources.Compaction.compact(spark, s"${q.indexPath}/data")
-            }
-          } else {
-            val corpusNow = spark.read.parquet(corpusPath)
-            val n = corpusNow.count()
-            graft.operators.Sq.writeSqIndex(corpusNow, idCol,
-              q.embeddingCol, q.indexPath)
-            import spark.implicits._
-            Seq(n).toDF("trained_rows").coalesce(1)
-              .write.mode("overwrite")
-              .parquet(s"${q.indexPath}/trained_meta")
           }
         }
         if (hadIndex)

@@ -486,12 +486,15 @@ object Dedup {
 
   /** Append `df`'s index rows to an existing index (parameters read from
     * the sidecar, so appended rows are always comparable to stored ones).
+    * The AQE rebalance lands a batch smaller than one target file as ONE
+    * file whatever its input partitioning; large batches stay parallel.
     */
   def appendMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                          path: String): Unit = {
     val meta = df.sparkSession.read.parquet(s"$path/meta").collect().head
     minhashIndexRows(df, idCol, textCol,
         meta.getInt(0), meta.getInt(1), meta.getInt(2))
+      .hint("rebalance")
       .write.mode("append").parquet(s"$path/data")
   }
 

@@ -171,7 +171,7 @@ object Lm {
   }
 
   /** Materialize the trained bigram LM as an index sidecar — the
-    * [[Dedup.writeMinhashIndex]] / [[Similarity.writeIvfPqIndex]] pattern
+    * [[Dedup.writeMinhashIndex]] / [[CellIndex.write]] pattern
     * applied to the LM: count tables (sublinear in the corpus by Heaps'
     * law) written once, so a corpus-builder loop gates every batch
     * against a FROZEN reference model without retraining. Layout:

@@ -639,11 +639,6 @@ object Multimodal {
   def writeAudioHashIndex(df: DataFrame, indexPath: String): Unit =
     audioHashes(df).write.mode("overwrite").parquet(indexPath)
 
-  /** Append one ingest batch's audio fingerprints (one decode pass over
-    * the BATCH only). */
-  def appendAudioHashIndex(df: DataFrame, indexPath: String): Unit =
-    audioHashes(df).write.mode("append").parquet(indexPath)
-
   /** [[audioNearDupPairs]] served FROM the fingerprint index — zero
     * decodes. Returns (id_a, id_b, hamming). */
   def audioNearDupPairsFromIndex(spark: SparkSession, indexPath: String,
@@ -653,21 +648,6 @@ object Multimodal {
       graft.sources.Tombstones.exclude(spark.read.parquet(indexPath),
         indexPath, col("media_id")),
       "media_id", "ahash", maxHamming)
-
-  /** New-batch audio ids within `maxHamming` of an INDEXED fingerprint
-    * — [[dedupAgainstMediaIndex]]'s waveform twin. Returns
-    * (new_id, corpus_id, hamming). */
-  def dedupAgainstAudioIndex(batch: DataFrame, indexPath: String,
-                             maxHamming: Int = 3): DataFrame = {
-    val spark = batch.sparkSession
-    val newHashes = audioHashes(batch)
-      .select(col("media_id").as("new_id"), col("ahash"))
-    val indexed = graft.sources.Tombstones.exclude(
-        spark.read.parquet(indexPath), indexPath, col("media_id"))
-      .select(col("media_id").as("corpus_id"), col("ahash"))
-    Dedup.hammingJoin64(newHashes, "new_id", indexed, "corpus_id",
-      "ahash", maxHamming)
-  }
 
   /** Exact ×k time stretch of a 16-bit PCM WAV (each frame repeated k
     * times, real javax.sound re-encode) — fixture generator for the

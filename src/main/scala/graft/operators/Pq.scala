@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
 
@@ -19,22 +19,88 @@ import graft.functions.Vectors
   * like IVF centroids), trained by per-subspace Lloyd iterations in plain
   * Scala over a capped, seeded sample collected once. Encoding and the
   * per-query ADC tables are FUSED native expressions
-  * ([[graft.functions.PqEncode]] / [[graft.functions.PqAdcTables]]):
-  * primitive codegen loops over the codebooks as one flat reference
-  * array — constant generated-code size at any m·k, where the composed
-  * per-centroid expression trees blew Janino's 64 KB method limit and
-  * fell back to the interpreter on the corpus-sized encode. ADC scoring
-  * is m `element_at` lookups summed — narrow. Nothing here shuffles
-  * except the final top-k.
+  * ([[graft.functions.PqEncodeExpr]]): primitive codegen loops over the
+  * codebooks as one flat reference array — constant generated-code size
+  * at any m·k, where the composed per-centroid expression trees blew
+  * Janino's 64 KB method limit and fell back to the interpreter on the
+  * corpus-sized encode. ADC scoring is m `element_at` lookups summed —
+  * narrow. Serving lives in [[FlatIndex]] / [[CellIndex]] with [[Codec]].
   */
 object Pq {
 
   /** Trained per-subspace codebooks: `cents(m)(j)` is the j-th centroid of
     * subspace m, over L2-NORMALIZED input vectors (so ADC inner product
-    * approximates cosine).
+    * approximates cosine). As codec params the per-query state is the m×k
+    * ADC table and the approximate score is its m lookups.
     */
   case class Codebooks(m: Int, k: Int, subDim: Int,
-                       cents: Seq[Seq[Seq[Double]]]) extends Serializable
+                       cents: Seq[Seq[Seq[Double]]])
+      extends VectorCodec.Params {
+
+    /** The codebook sidecar: m rows (subspace, centroids). */
+    def write(spark: SparkSession, path: String): Unit = {
+      import spark.implicits._
+      cents.zipWithIndex
+        .map { case (cs, mi) => (mi, cs) }
+        .toDF("subspace", "centroids")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    }
+
+    /** Per subspace, argmin_j ‖sub/‖v‖ − c_j‖² as one fused native
+      * expression ([[graft.functions.PqEncodeExpr.pqEncode]]). */
+    def encode(vec: Column): Column =
+      graft.functions.PqEncodeExpr.pqEncode(Vectors.toDouble(vec), cents)
+
+    /** The per-ROW ADC tables (m arrays of k doubles) — each query row
+      * carries its own table through the broadcast join. */
+    def queryState(vec: Column): Column =
+      graft.functions.PqEncodeExpr.pqAdcTables(Vectors.toDouble(vec), cents)
+
+    /** table(mi)(j) = dot(cents(mi)(j), q_sub) / ‖q‖ for a collected query.
+      * The normalization enters as a final scalar division of each dot —
+      * EXACTLY the arithmetic the in-plan tables use, so the two are
+      * bit-identical (both dots sum sequentially left-to-right).
+      */
+    def queryState(q: Seq[Double]): Column = {
+      val qn = math.sqrt(q.map(x => x * x).sum)
+      val safe = if (qn == 0) 1.0 else qn
+      typedlit((0 until m).map { mi =>
+        val sub = q.slice(mi * subDim, (mi + 1) * subDim)
+        cents(mi).map(c =>
+          c.zip(sub).map { case (a, b) => a * b }.sum / safe)
+      })
+    }
+
+    def score(decoded: Column, state: Column): Column =
+      (0 until m).map(mi =>
+          element_at(element_at(state, mi + 1),
+            element_at(decoded, mi + 1) + 1))
+        .reduce(_ + _)
+  }
+
+  /** The PQ codec: `m` subspaces of `k` centroids, `iters` Lloyd rounds.
+    * The index stores codes only (`codes/`, column `pq_codes`) and the
+    * rerank reads the caller's raw corpus.
+    */
+  final case class Codec(m: Int = 8, k: Int = 16, iters: Int = 5)
+      extends VectorCodec {
+    def train(corpus: DataFrame, idCol: String, vecCol: String): Codebooks =
+      Pq.train(corpus, idCol, vecCol, m, k, iters)
+
+    def read(spark: SparkSession, path: String): Codebooks = {
+      val rows = spark.read.parquet(s"$path/codebooks")
+        .orderBy("subspace").collect()
+        .map(r => r.getSeq[scala.collection.Seq[Double]](1)
+          .map(_.toSeq).toSeq).toSeq
+      Codebooks(rows.size, rows.head.size, rows.head.head.size, rows)
+    }
+
+    def ascending = false
+    def defaultOversample = 4
+    def storesRaw = false
+    def table = "codes"
+    def codeCol = "pq_codes"
+  }
 
   /** Train codebooks on a seeded sample (capped at `maxSample` rows
     * collected to the driver — PQ-standard: codebook quality needs a
@@ -44,12 +110,9 @@ object Pq {
     * a biased non-sample on any corpus laid out by time or source.
     */
   def train(corpus: DataFrame, idCol: String, vecCol: String, m: Int,
-            k: Int, iters: Int = 5, sampleFraction: Double = 1.0,
-            maxSample: Int = 4096): Codebooks = {
+            k: Int, iters: Int = 5, maxSample: Int = 4096): Codebooks = {
     require(m > 0 && k > 1 && iters >= 0)
-    val sampled = (if (sampleFraction < 1.0)
-      corpus.sample(withReplacement = false, sampleFraction, seed = 42L)
-    else corpus)
+    val sampled = corpus
       .orderBy(Sampling.scramble(col(idCol)), col(idCol))
       .limit(maxSample)
       .select(Vectors.toDouble(col(vecCol)).as("v"))
@@ -98,220 +161,16 @@ object Pq {
     Codebooks(m, k, subDim, cents)
   }
 
-  /** The PQ code array (one int per subspace) for a raw vector column:
-    * per subspace, argmin_j ‖sub/‖v‖ − c_j‖² = argmin_j (‖c_j‖² −
-    * 2·dot(sub, c_j)/‖v‖) — one fused native expression
-    * ([[graft.functions.PqEncode]]): the m×k argmin as three primitive
-    * codegen loops with the codebooks as a flat reference array. The
-    * former composed form (per-subspace `array_min` over k literal
-    * structs) unrolled to an m·k expression tree whose generated
-    * projection blew Janino's 64 KB method limit at m = k = 16, pushing
-    * the corpus-sized encode stage into the interpreter.
-    */
-  def encodeExpr(cb: Codebooks, vec: Column): Column =
-    graft.functions.PqEncodeExpr.pqEncode(Vectors.toDouble(vec), cb.cents)
-
-  /** Corpus → (idCol, pq_codes) — the compressed index representation. */
-  def encode(df: DataFrame, idCol: String, vecCol: String,
-             cb: Codebooks): DataFrame =
-    df.select(col(idCol), encodeExpr(cb, col(vecCol)).as("pq_codes"))
-
-  /** Materialize the PQ index: the encoded corpus (id + m ints per
-    * vector — the 8–16× compressed representation ADC actually scans)
-    * plus the codebooks as a tiny sidecar. Raw vectors stay in the
-    * original corpus files and are touched only by the rerank's semi-join
-    * — the scan split that makes a 100 TB corpus servable from the code
-    * table alone.
-    */
-  def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                 path: String, cb: Codebooks): Unit = {
-    encode(corpus, idCol, vecCol, cb)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    writeCodebooks(corpus.sparkSession, path, cb)
-  }
-
-  /** Append a batch to a materialized flat-PQ index with the FROZEN
-    * codebook sidecar (the convention every index in the engine follows:
-    * readers keep a consistent geometry; rebuild when drift matters).
-    * Cost: encoding the batch — m·k literal-centroid dots per row.
-    */
-  def appendToIndex(batch: DataFrame, idCol: String, vecCol: String,
-                    path: String): Unit = {
-    val cb = readCodebooks(batch.sparkSession, path)
-    encode(batch, idCol, vecCol, cb)
-      .write.mode("append").parquet(s"$path/codes")
-  }
-
-  /** The codebook sidecar (m rows), shared with the IVF-PQ index writer. */
-  private[operators] def writeCodebooks(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      cb: Codebooks): Unit = {
-    import spark.implicits._
-    cb.cents.zipWithIndex
-      .map { case (cs, mi) => (mi, cs) }
-      .toDF("subspace", "centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-  }
-
-  /** Read the sidecar codebooks back (bounded: m rows). */
-  def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Codebooks = {
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .orderBy("subspace").collect()
-      .map(r => r.getSeq[scala.collection.Seq[Double]](1)
-        .map(_.toSeq).toSeq).toSeq
-    Codebooks(rows.size, rows.head.size, rows.head.head.size, rows)
-  }
-
-  /** Serve top-k from a materialized index: the ADC pass scans ONLY the
-    * code table (no raw vectors in its ReadSchema — asserted in
-    * SimilaritySpec); `rawCorpus` is joined just for the candidate
-    * minority's exact rerank.
-    *
-    * Serving boundary: this FLAT-PQ path ADC-scans the entire code table
-    * per query — right while the code table is memory-scale. Beyond that,
-    * use [[Similarity.ivfPqTopKFromIndex]]: same codes, partition-pruned
-    * to nprobe/nlist of them per query.
-    */
-  def topKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    rawCorpus: DataFrame, idCol: String, vecCol: String,
-                    query: DataFrame, queryVecCol: String, k: Int,
-                    oversample: Int = 4): DataFrame = {
-    val cb = readCodebooks(spark, path)
-    val codes = spark.read.parquet(s"$path/codes")
-      // lazy-takedown overlay ([[graft.sources.Tombstones]])
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-    rerank(codes, rawCorpus, idCol, vecCol, query, queryVecCol, k, cb,
-      oversample)
-  }
-
-  /** BATCHED flat-PQ serving — one plan for a whole query table,
-    * completing the batched family (brute-force / IVF / IVF-PQ / LSH /
-    * SQ8 all have one). Each query row computes its OWN ADC table in-plan
-    * ([[adcTablesExpr]]) and carries it through the broadcast join — no
-    * driver-held table, no per-query job. ADC pass scans only the code
-    * table; the k·oversample survivors per query rerank exactly against
-    * `rawCorpus`. Same serving boundary as [[topKFromIndex]]: flat PQ
-    * ADC-scans every code per query — beyond memory-scale code tables use
-    * [[Similarity.ivfPqBatchTopKFromIndex]], which is this plan behind
-    * cell pruning. Returns (query_id, idCol, score).
-    */
-  def batchTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String, rawCorpus: DataFrame, idCol: String,
-                         vecCol: String, queries: DataFrame,
-                         queryIdCol: String, queryVecCol: String, k: Int,
-                         oversample: Int = 4): DataFrame = {
-    val cb = readCodebooks(spark, path)
-    val codes = spark.read.parquet(s"$path/codes")
-      // lazy-takedown overlay ([[graft.sources.Tombstones]])
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-    val q = broadcast(queries.select(col(queryIdCol).as("query_id"),
-      Vectors.toDouble(col(queryVecCol)).as("__qvec"),
-      adcTablesExpr(cb, col(queryVecCol)).as("__adc")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("score").desc, col(idCol))
-    val candidates = codes.crossJoin(q.select("query_id", "__adc"))
-      .select(col("query_id"), col(idCol),
-        adcScoreExpr(cb.m, col("__adc")).as("score"))
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= k * oversample)
-      .select("query_id", idCol)
-    candidates.join(rawCorpus.select(col(idCol), col(vecCol)), idCol)
-      .join(q.select("query_id", "__qvec"), "query_id")
-      .select(col("query_id"), col(idCol),
-        Vectors.cosine(col(vecCol), col("__qvec")).as("score"))
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= k).drop("__rank")
-  }
-
-  /** ADC top-k with exact rerank: score all codes via m table lookups,
-    * keep the top `k`·`oversample` candidates (TakeOrderedAndProject),
-    * rerank ONLY those against their raw vectors with exact cosine.
+  /** ADC top-k with exact rerank over an UN-indexed corpus: encode every
+    * row with `cb`, keep the top `k`·`oversample` ADC candidates, rerank
+    * only those against their raw vectors — the single-query plan of
+    * [[CodecIndex]] over codes computed in-plan.
     */
   def topK(corpus: DataFrame, idCol: String, vecCol: String,
            query: DataFrame, queryVecCol: String, k: Int,
            cb: Codebooks, oversample: Int = 4): DataFrame =
-    rerank(encode(corpus, idCol, vecCol, cb), corpus, idCol, vecCol,
-      query, queryVecCol, k, cb, oversample)
-
-  /** The single query vector collected ONCE (bounded: one row) — shared
-    * by the guard, probe ranking and rerank literals of every single-query
-    * serve path, so an un-materialized expensive query frame is evaluated
-    * exactly once instead of per consumer.
-    */
-  private[operators] def collectSingleQuery(query: DataFrame,
-                                            queryVecCol: String): Seq[Double] = {
-    val qRows = query.select(Vectors.toDouble(col(queryVecCol))).take(2)
-    require(qRows.length == 1,
-      s"single-query ANN serving expects exactly one query row, got " +
-        s"${qRows.length}+ — use the *Batch* variants for query tables")
-    qRows.head.getSeq[Double](0).toSeq
-  }
-
-  /** The m×k ADC table for a collected query vector: table(mi)(j) =
-    * dot(cents(mi)(j), q_sub) / ‖q‖. The normalization enters as a final
-    * scalar division of each dot — EXACTLY the arithmetic
-    * [[adcTablesExpr]] plans, so the driver-side and in-plan tables are
-    * bit-identical (both dots sum sequentially left-to-right).
-    */
-  private def adcTables(cb: Codebooks, q: Seq[Double]): Seq[Seq[Double]] = {
-    val qn = math.sqrt(q.map(x => x * x).sum)
-    val safe = if (qn == 0) 1.0 else qn
-    (0 until cb.m).map { mi =>
-      val sub = q.slice(mi * cb.subDim, (mi + 1) * cb.subDim)
-      cb.cents(mi).map(c =>
-        c.zip(sub).map { case (a, b) => a * b }.sum / safe)
-    }
-  }
-
-  /** The per-ROW ADC tables as a nested array column (m arrays of k
-    * doubles) — the batched-serving move: each query row carries its own
-    * table through the broadcast join instead of the driver holding one.
-    * m·k literal-centroid dots per query row (not per candidate);
-    * candidates then score with m `element_at` lookups, the ADC contract.
-    */
-  private[operators] def adcTablesExpr(cb: Codebooks, vec: Column): Column =
-    graft.functions.PqEncodeExpr.pqAdcTables(Vectors.toDouble(vec), cb.cents)
-
-  /** ADC score of a `pq_codes` column against per-row ADC tables (either
-    * a literal via [[adcTablesExpr]]'s shape or the column it returns).
-    */
-  private[operators] def adcScoreExpr(m: Int, adcTables: Column): Column =
-    (0 until m).map(mi =>
-        element_at(element_at(adcTables, mi + 1),
-          element_at(col("pq_codes"), mi + 1) + 1))
-      .reduce(_ + _)
-
-  /** Contract: `query` carries exactly ONE vector row — batched queries
-    * use the *Batch* index paths. The one collected vector drives BOTH the
-    * ADC pass and the exact rerank (a multi-row frame would otherwise
-    * silently rerank candidates against the wrong vectors).
-    */
-  private[operators] def rerank(codes: DataFrame, corpus: DataFrame, idCol: String,
-                     vecCol: String, query: DataFrame, queryVecCol: String,
-                     k: Int, cb: Codebooks, oversample: Int): DataFrame =
-    rerankWith(codes, corpus, idCol, vecCol,
-      collectSingleQuery(query, queryVecCol), k, cb, oversample)
-
-  /** [[rerank]] over an ALREADY-COLLECTED query vector — lets callers that
-    * needed the vector anyway (e.g. for probe-cell ranking) evaluate the
-    * query frame exactly once.
-    */
-  private[operators] def rerankWith(codes: DataFrame, corpus: DataFrame,
-                     idCol: String, vecCol: String, q: Seq[Double],
-                     k: Int, cb: Codebooks, oversample: Int): DataFrame = {
-    val tables = adcTables(cb, q)
-    val adc = adcScoreExpr(cb.m, typedlit(tables))
-    val candidates = codes.select(col(idCol), adc.as("adc_score"))
-      .orderBy(col("adc_score").desc, col(idCol))
-      .limit(k * oversample)
-    // exact rerank of the candidate minority only, against the SAME
-    // vector the ADC pass used (a literal — no crossJoin with the query
-    // frame, so a stray extra query row can't mix into the rerank)
-    corpus.join(candidates.select(idCol), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        Vectors.cosine(col(vecCol), typedlit(q)).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
+    CodecIndex.singleQueryTopK(
+      corpus.select(col(idCol), cb.encode(col(vecCol)).as("pq_codes")),
+      corpus, idCol, vecCol, Similarity.collectSingleQuery(query, queryVecCol),
+      k, cb, Codec(), oversample)
 }

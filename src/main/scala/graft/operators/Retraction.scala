@@ -34,8 +34,7 @@ import org.apache.spark.sql.functions._
   *    rewrite (≤ nlist touched leaves), geometry sidecars untouched;
   *  - LSH index      → [[Similarity.retractFromLshIndex]] —
   *    (table, bucket)-pruned rewrite (≤ |ids|·tables leaves);
-  *  - SQ8 index      → [[Sq.retractFromSqIndex]];
-  *  - BQ index       → [[Bq.retractFromBqIndex]];
+  *  - SQ8 / BQ index → [[FlatIndex.retract]] — one anti-join rewrite;
   *  - media/audio    → [[Multimodal.retractFromMediaIndex]];
   *  - label store    → [[Components.retractFromLabelStore]] + satellite
   *    RE-CLOSURE from the stored signatures (a retracted canonical's
@@ -397,12 +396,11 @@ object Retraction {
             Similarity.retractFromLshIndex(spark, p, keys, "__rid",
               a.lshIdCol))
           }
-          a.sqIndexPath.foreach { p => tracks += (() =>
-            Sq.retractFromSqIndex(spark, p, keys, "__rid", a.sqIdCol))
-          }
-          a.bqIndexPath.foreach { p => tracks += (() =>
-            Bq.retractFromBqIndex(spark, p, keys, "__rid", a.bqIdCol))
-          }
+          (a.sqIndexPath.map(FlatIndex(_, VectorCodec.Sq8) -> a.sqIdCol) ++
+            a.bqIndexPath.map(FlatIndex(_, VectorCodec.Bq) -> a.bqIdCol))
+            .foreach { case (ix, idCol) => tracks += (() =>
+              ix.retract(spark, keys, "__rid", idCol))
+            }
           a.mediaIndexPath.foreach { p => tracks += (() =>
             Multimodal.retractFromMediaIndex(spark, p, keys, "__rid"))
           }
@@ -1130,29 +1128,14 @@ object Retraction {
             spark.read.parquet(p).select(a.idCol),
             p, fullCoverage = true)
       }
-      a.annIndexPath.foreach { p =>
-        if (exists(s"$p/data"))
-          rows += row("ann_index",
-            spark.read.parquet(s"$p/data").select(a.annIdCol),
+      (a.annIndexPath.map(("ann_index", _, a.annIdCol)) ++
+        a.lshIndexPath.map(("lsh_index", _, a.lshIdCol)) ++
+        a.sqIndexPath.map(("sq_index", _, a.sqIdCol)) ++
+        a.bqIndexPath.map(("bq_index", _, a.bqIdCol))).foreach {
+        case (name, p, idCol) if exists(s"$p/data") =>
+          rows += row(name, spark.read.parquet(s"$p/data").select(idCol),
             p, fullCoverage = false)
-      }
-      a.lshIndexPath.foreach { p =>
-        if (exists(s"$p/data"))
-          rows += row("lsh_index",
-            spark.read.parquet(s"$p/data").select(a.lshIdCol),
-            p, fullCoverage = false)
-      }
-      a.sqIndexPath.foreach { p =>
-        if (exists(s"$p/data"))
-          rows += row("sq_index",
-            spark.read.parquet(s"$p/data").select(a.sqIdCol),
-            p, fullCoverage = false)
-      }
-      a.bqIndexPath.foreach { p =>
-        if (exists(s"$p/data"))
-          rows += row("bq_index",
-            spark.read.parquet(s"$p/data").select(a.bqIdCol),
-            p, fullCoverage = false)
+        case _ => ()
       }
       a.mediaIndexPath.foreach { p =>
         if (exists(p))

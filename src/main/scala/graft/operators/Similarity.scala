@@ -205,14 +205,6 @@ object Similarity {
         round(col("max_pop") / col("mean_pop"), 4).as("imbalance"))
   }
 
-  /** Adds the LSH bucket column(s): one per hash table. */
-  def withLshBuckets(df: DataFrame, vecCol: String,
-                     nBits: Int = 12, tables: Int = 4): DataFrame =
-    (0 until tables).foldLeft(df) { (d, t) =>
-      d.withColumn(s"bucket_$t",
-        Vectors.hyperplaneBucket(col(vecCol), nBits, tableSeed = t))
-    }
-
   /** All buckets within hamming distance `hammingProbe` (0, 1 or 2) of
     * the base bucket: the exact bucket, every single bit flip, and — for
     * hamming 2 — every pair of flips. Multiprobe LSH: a near neighbor
@@ -514,16 +506,31 @@ object Similarity {
     }.sum.toInt
   }
 
+  /** The single query vector collected ONCE (bounded: one row) — shared
+    * by the guard, probe ranking and rerank literals of every single-query
+    * serve path, so an un-materialized expensive query frame is evaluated
+    * exactly once instead of per consumer.
+    */
+  private[operators] def collectSingleQuery(query: DataFrame,
+                                            queryVecCol: String): Seq[Double] = {
+    val qRows = query.select(Vectors.toDouble(col(queryVecCol))).take(2)
+    require(qRows.length == 1,
+      s"single-query ANN serving expects exactly one query row, got " +
+        s"${qRows.length}+ — use the batched serves for query tables")
+    qRows.head.getSeq[Double](0).toSeq
+  }
+
   /** The query's nprobe nearest cell ids, ranked DRIVER-SIDE over the
     * bounded centroid set from the ONE collected query vector (see
-    * [[Pq.collectSingleQuery]] — the query frame is evaluated exactly
+    * [[collectSingleQuery]] — the query frame is evaluated exactly
     * once per serve, shared by guard, probe ranking and rerank). Same
     * (score desc, cid asc) tie semantics as [[topCellsFor]]; the dot sums
     * sequentially left-to-right exactly like the planned
     * [[Vectors.dot]], so driver and in-plan rankings agree bit-for-bit.
     */
-  private def probeCellIds(q: Seq[Double], cents: Seq[(Long, Seq[Double])],
-                           nprobe: Int): Seq[Long] =
+  private[operators] def probeCellIds(q: Seq[Double],
+                                      cents: Seq[(Long, Seq[Double])],
+                                      nprobe: Int): Seq[Long] =
     cents.map { case (cid, cv) =>
         (cv.zip(q).map { case (a, b) => a * b }.sum, cid)
       }
@@ -536,7 +543,7 @@ object Similarity {
               kmeansIters: Int = 0, sampleFraction: Double = 1.0): DataFrame = {
     val cents =
       trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters, sampleFraction)
-    val q = Pq.collectSingleQuery(query, queryVecCol)
+    val q = collectSingleQuery(query, queryVecCol)
     val cells = probeCellIds(q, cents, nprobe)
     corpus.select(col(idCol), col(vecCol),
         bestCellFor(cents)(col(vecCol)).as("cell"))
@@ -614,7 +621,7 @@ object Similarity {
     *
     * Plain-IVF only (the index stores raw vectors, so geometry is the only
     * trainable state). For IVF-PQ the equivalent action is a rebuild from
-    * the corpus ([[writeIvfPqIndex]] — codebooks must retrain with the
+    * the corpus ([[CellIndex.write]] — codebooks must retrain with the
     * geometry), which [[graft.ingest.CorpusPipeline]] triggers off the
     * same imbalance signal.
     *
@@ -723,7 +730,7 @@ object Similarity {
                        k: Int, nprobe: Int = 4,
                        filter: Option[Column] = None): DataFrame = {
     val cents = readCentroids(spark, path)
-    val q = Pq.collectSingleQuery(query, queryVecCol)
+    val q = collectSingleQuery(query, queryVecCol)
     val cells = probeCellIds(q, cents, nprobe) // bounded like cents
     spark.read.parquet(s"$path/data")
       .where(col("cell").isin(cells.toIndexedSeq: _*)) // → parquet PartitionFilters
@@ -828,130 +835,18 @@ object Similarity {
       .where(col("cosine") >= threshold)
   }
 
-  /** IVF-PQ index — the FAISS-shaped composition and the full 100 TB
-    * serving story: PQ codes (the 8–16× compressed representation)
-    * partitioned by Voronoi cell, so a query (a) prunes to its nprobe
-    * cell DIRECTORIES via parquet partition pruning, (b) ADC-scores only
-    * those cells' code rows — a scan that reads no raw vectors at all —
-    * and (c) exactly reranks the candidate minority against the raw
-    * corpus. Cost per query: nprobe/nlist of the code table + k·oversample
-    * full vectors.
-    */
-  def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                      path: String, nlist: Int = 16, m: Int = 8,
-                      k: Int = 16, kmeansIters: Int = 0,
-                      sampleFraction: Double = 1.0,
-                      attrCols: Seq[String] = Nil): Unit = {
-    val cents =
-      trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters, sampleFraction)
-    val cb = Pq.train(corpus, idCol, vecCol, m, k,
-      sampleFraction = sampleFraction)
-    // attrCols ride in the CODE table (the [[writeIvfIndex]] convention):
-    // a filtered serve evaluates its predicate inside the pruned ADC scan,
-    // so candidate generation — not just the final cut — respects it
-    corpus.select(Seq(col(idCol),
-        Pq.encodeExpr(cb, col(vecCol)).as("pq_codes")) ++
-        attrCols.map(col) :+
-        bestCellFor(cents)(col(vecCol)).as("cell"): _*)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    cents.toDF("cid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Pq.writeCodebooks(spark, path, cb)
-  }
-
-  /** Append a new batch to a materialized IVF-PQ index: encode with the
-    * EXISTING codebooks and assign with the EXISTING centroids (both read
-    * back from the sidecars), append codes to the cell partitions. Same
-    * frozen-sidecar stance as [[appendToIvfIndex]] — quantizer drift is a
-    * rebuild decision, not an append-time one; the batch is the only data
-    * touched.
-    */
-  def appendToIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
-                         path: String, attrCols: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val cents = readCentroids(spark, path)
-    val cb = Pq.readCodebooks(spark, path)
-    // attrCols must match the build's ([[appendToIvfIndex]]'s contract)
-    batch.select(Seq(col(idCol),
-        Pq.encodeExpr(cb, col(vecCol)).as("pq_codes")) ++
-        attrCols.map(col) :+
-        bestCellFor(cents)(col(vecCol)).as("cell"): _*)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-  }
-
-  /** Serve top-k from the IVF-PQ index: centroid + codebook sidecars are
-    * bounded reads; the ADC pass scans only the probed cells' codes.
+  /** Single-query serve of an IVF-PQ [[CellIndex]] (codes under `codes/`,
+    * `centroids` + `codebooks` sidecars): the probed cells' codes are
+    * ADC-scored and the candidates reranked against `rawCorpus` — the
+    * [[CellIndex.topK]] plan, under the name the benchmark harness calls.
     */
   def ivfPqTopKFromIndex(spark: SparkSession, path: String,
                          rawCorpus: DataFrame, idCol: String, vecCol: String,
                          query: DataFrame, queryVecCol: String, k: Int,
                          nprobe: Int = 4, oversample: Int = 4,
-                         filter: Option[Column] = None): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val q = Pq.collectSingleQuery(query, queryVecCol) // evaluated ONCE
-    val cells = probeCellIds(q, cents, nprobe)
-    val cb = Pq.readCodebooks(spark, path)
-    val codes = spark.read.parquet(s"$path/codes")
-      .where(col("cell").isin(cells.toIndexedSeq: _*)) // → parquet PartitionFilters
-      .transform(df => filter.fold(df)(df.where)) // → parquet PushedFilters
-      // lazy-takedown overlay ([[graft.sources.Tombstones]])
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-    Pq.rerankWith(codes, rawCorpus, idCol, vecCol, q, k, cb, oversample)
-  }
-
-  /** BATCHED IVF-PQ serving — [[ivfBatchTopKFromIndex]]'s shape with ADC
-    * scoring: every query row computes its OWN m×k ADC table in-plan
-    * ([[Pq.adcTablesExpr]] — m·k literal-centroid dots once per QUERY,
-    * carried through the broadcast join as a nested-array column, the
-    * batched replacement for per-query driver state), candidates in the
-    * probed cells score with m `element_at` lookups, a per-query window
-    * keeps the top k·oversample, and ONLY that minority joins the raw
-    * corpus for the exact cosine rerank. Per-query results are IDENTICAL
-    * to looping [[ivfPqTopKFromIndex]] (driver and in-plan ADC tables are
-    * bit-identical — see [[Pq.adcTablesExpr]]; pinned by
-    * `ann_ivfpq_batched_recall` at floor 1.0); the job count is
-    * independent of the batch size. Returns (query_id, idCol, score).
-    */
-  def ivfPqBatchTopKFromIndex(spark: SparkSession, path: String,
-                              rawCorpus: DataFrame, idCol: String,
-                              vecCol: String, queries: DataFrame,
-                              queryIdCol: String, queryVecCol: String,
-                              k: Int, nprobe: Int = 4,
-                              oversample: Int = 4,
-                              filter: Option[Column] = None): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val cb = Pq.readCodebooks(spark, path)
-    val assigned = queries.select(col(queryIdCol).as("query_id"),
-      Vectors.toDouble(col(queryVecCol)).as("__qvec"),
-      Pq.adcTablesExpr(cb, col(queryVecCol)).as("__adc"),
-      explode(topCellsFor(cents, nprobe)(col(queryVecCol))).as("cell"))
-    val cells = assigned.select("cell").distinct()
-      .collect().map(_.getLong(0))
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adc_score").desc, col(idCol))
-    val candidates = spark.read.parquet(s"$path/codes")
-      .where(col("cell").isin(cells.toIndexedSeq: _*)) // → parquet PartitionFilters
-      .transform(df => filter.fold(df)(df.where)) // → parquet PushedFilters
-      // lazy-takedown overlay ([[graft.sources.Tombstones]])
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-      .join(broadcast(assigned), "cell")
-      .select(col("query_id"), col(idCol), col("__qvec"),
-        Pq.adcScoreExpr(cb.m, col("__adc")).as("adc_score"))
-      .withColumn("__rank", row_number().over(wAdc))
-      .where(col("__rank") <= k * oversample)
-    // exact rerank of each query's candidate minority against the raw
-    // vectors, reusing the __qvec already carried on the candidate row
-    val wK = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("score").desc, col(idCol))
-    candidates.select(col("query_id"), col(idCol), col("__qvec"))
-      .join(rawCorpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col("query_id"), col(idCol),
-        Vectors.cosine(col(vecCol), col("__qvec")).as("score"))
-      .withColumn("__rank", row_number().over(wK))
-      .where(col("__rank") <= k).drop("__rank")
-  }
+                         filter: Option[Column] = None): DataFrame =
+    CellIndex(path, Pq.Codec(), nprobe = nprobe).topK(spark, idCol, vecCol,
+      query, queryVecCol, k, oversample, filter, Some(rawCorpus))
 
   /** Materialize the LSH index: the corpus posexploded to one row per
     * (table, bucket) membership, written PARTITIONED BY (table, bucket),

@@ -31,7 +31,7 @@ class CorpusPipelineMaintSpec extends AnyFunSuite with SparkFixture {
   test("compactEvery: 20 appended batches keep the index file count " +
       "bounded; serving unchanged by the maintenance pass") {
     import graft.ingest.CorpusPipeline.{AnnIndex, SqIndexCfg}
-    import graft.operators.{Similarity, Sq}
+    import graft.operators.{CellIndex, Pq}
     val dir = Files.createTempDirectory("corpus_compact_every")
     val corpus = dir.resolve("corpus").toString
     val idx = dir.resolve("index").toString
@@ -86,10 +86,10 @@ class CorpusPipelineMaintSpec extends AnyFunSuite with SparkFixture {
     val total = spark.read.parquet(corpus).count()
     assert(spark.read.parquet(s"$ann/codes").count() === total)
     assert(spark.read.parquet(s"$sqp/data").count() === total)
-    val top = Similarity.ivfPqTopKFromIndex(spark, ann,
-        spark.read.parquet(corpus), "doc_id", "embedding",
-        Seq((0L, planted)).toDF("vec_id", "embedding"), "embedding", 1,
-        nprobe = 2, oversample = 8)
+    val top = CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+        "embedding", Seq((0L, planted)).toDF("vec_id", "embedding"),
+        "embedding", 1, oversample = 8,
+        rawCorpus = Some(spark.read.parquet(corpus)))
       .as[(Long, Double)].collect()
     assert(top.head._1 === 100L, s"planted vector lost: ${top.toSeq}")
   }
@@ -97,7 +97,7 @@ class CorpusPipelineMaintSpec extends AnyFunSuite with SparkFixture {
   test("imbalance-triggered rebuild trains on a SAMPLE " +
       "(trainSampleFraction) and still restores serving") {
     import graft.ingest.CorpusPipeline.AnnIndex
-    import graft.operators.Similarity
+    import graft.operators.{CellIndex, Pq}
     val dir = Files.createTempDirectory("corpus_recluster_sample")
     val corpus = dir.resolve("corpus").toString
     val idx = dir.resolve("index").toString
@@ -141,10 +141,10 @@ class CorpusPipelineMaintSpec extends AnyFunSuite with SparkFixture {
       s"imbalance rebuild did not run (trained_meta=$trained2)")
     // and the sample-trained geometry serves the drifted direction: a
     // query down e2 finds a drifted member with limited probing
-    val top = Similarity.ivfPqTopKFromIndex(spark, ann,
-        spark.read.parquet(corpus), "doc_id", "embedding",
-        Seq((0L, member(2, bias = 0.5))).toDF("vec_id", "embedding"),
-        "embedding", 3, nprobe = 2, oversample = 8)
+    val top = CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+        "embedding", Seq((0L, member(2, bias = 0.5))).toDF("vec_id",
+          "embedding"), "embedding", 3, oversample = 8,
+        rawCorpus = Some(spark.read.parquet(corpus)))
       .as[(Long, Double)].collect()
     assert(top.forall(_._1 >= 101L),
       s"drifted cluster not recalled after sample rebuild: ${top.toSeq}")

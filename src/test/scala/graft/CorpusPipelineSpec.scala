@@ -122,7 +122,7 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("corpus loop maintains an ANN index alongside the dedup index: " +
       "bootstrap on batch 1, append batch 2 with frozen sidecars, serve both") {
-    import graft.operators.Similarity
+    import graft.operators.{CellIndex, Pq}
     val dir = Files.createTempDirectory("corpus_ann")
     val src = dir.resolve("src").toString
     val corpus = dir.resolve("corpus").toString
@@ -160,10 +160,9 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
     // the ONE maintained index serves vectors from BOTH batches
     val rawCorpus = spark.read.parquet(corpus)
     def top1(q: Array[Float]): Long =
-      Similarity.ivfPqTopKFromIndex(spark, ann, rawCorpus,
-          "doc_id", "embedding",
-          Seq((0L, q)).toDF("vec_id", "embedding"), "embedding", 1,
-          nprobe = 2, oversample = 4)
+      CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+          "embedding", Seq((0L, q)).toDF("vec_id", "embedding"), "embedding",
+          1, rawCorpus = Some(rawCorpus))
         .as[(Long, Double)].collect().head._1
     assert(top1(v1) === 1L)
     assert(top1(v3) === 3L)
@@ -294,7 +293,7 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("ANN sidecar freeze boundary: recall immediately after the freeze " +
       "matches a full rebuild on the same corpus") {
-    import graft.operators.Similarity
+    import graft.operators.{CellIndex, Pq}
     val dir = Files.createTempDirectory("corpus_freeze")
     val src = dir.resolve("src").toString
     val corpus = dir.resolve("corpus").toString
@@ -335,13 +334,12 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
     // reference: a full rebuild over the SAME final corpus
     val rawCorpus = spark.read.parquet(corpus)
     val rebuilt = dir.resolve("rebuilt").toString
-    Similarity.writeIvfPqIndex(rawCorpus, "doc_id", "embedding", rebuilt,
-      nlist = 4, m = 8, k = 8, kmeansIters = 2)
+    CellIndex(rebuilt, Pq.Codec(m = 8, k = 8), nlist = 4, kmeansIters = 2)
+      .write(rawCorpus, "doc_id", "embedding")
     def top1(path: String, q: Array[Float]): Long =
-      Similarity.ivfPqTopKFromIndex(spark, path, rawCorpus,
-          "doc_id", "embedding",
-          Seq((0L, q)).toDF("vec_id", "embedding"), "embedding", 1,
-          nprobe = 2, oversample = 4)
+      CellIndex(path, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+          "embedding", Seq((0L, q)).toDF("vec_id", "embedding"), "embedding",
+          1, rawCorpus = Some(rawCorpus))
         .as[(Long, Double)].collect().head._1
     // every corpus vector — batch-3's post-freeze appends included — must
     // resolve to itself through the frozen-sidecar index exactly as it
@@ -358,7 +356,7 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
   test("SQ8 sidecar freeze boundary: frozen-params appends serve like " +
       "the built rows") {
     import graft.ingest.CorpusPipeline
-    import graft.operators.Sq
+    import graft.operators.{FlatIndex, VectorCodec}
     val dir = Files.createTempDirectory("corpus_sq")
     val corpus = dir.resolve("corpus").toString
     val idx = dir.resolve("index").toString
@@ -388,8 +386,8 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
     // itself through the maintained index
     val queries = (1 to 6).map(i => (100L + i, vs(i - 1)))
       .toDF("vec_id", "embedding")
-    val top1 = Sq.sqBatchTopKFromIndex(spark, sqp, "doc_id", "embedding",
-        queries, "vec_id", "embedding", k = 1)
+    val top1 = FlatIndex(sqp, VectorCodec.Sq8).batchTopK(spark, "doc_id",
+        "embedding", queries, "vec_id", "embedding", k = 1)
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1 - 100L, r._2)).toMap
     for (i <- 1 to 6) assert(top1(i.toLong) === i.toLong, s"doc $i")

@@ -246,7 +246,7 @@ class CorpusPipelineStreamSpec extends AnyFunSuite with SparkFixture {
   test("streaming corpus maintains the ANN index across micro-batches") {
     import graft.streaming.CorpusStream
     import graft.ingest.CorpusPipeline
-    import graft.operators.Similarity
+    import graft.operators.{CellIndex, Pq}
     val dir = Files.createTempDirectory("corpus_stream_ann")
     val src = dir.resolve("src").toString
     val corpus = dir.resolve("corpus").toString
@@ -275,10 +275,9 @@ class CorpusPipelineStreamSpec extends AnyFunSuite with SparkFixture {
       .write.mode("append").parquet(src)
     runOnce()
     val raw = spark.read.parquet(corpus)
-    val top = Similarity.ivfPqTopKFromIndex(spark, ann, raw,
-        "doc_id", "embedding",
-        Seq((0L, v2)).toDF("vec_id", "embedding"), "embedding", 1,
-        nprobe = 2, oversample = 4)
+    val top = CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+        "embedding", Seq((0L, v2)).toDF("vec_id", "embedding"), "embedding",
+        1, rawCorpus = Some(raw))
       .as[(Long, Double)].collect()
     assert(top.head._1 === 2L) // batch-2 vector served from the index
   }

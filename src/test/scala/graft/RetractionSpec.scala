@@ -4,8 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Components, Dedup, Merge, Multimodal, Retraction,
-  Similarity, Sq}
+import graft.operators.{Components, Dedup, FlatIndex, Merge, Multimodal,
+  Retraction, Similarity, VectorCodec}
 import graft.sources.{BloomKeyIndex, TextIndex}
 
 /** The takedown verb: retractDocs must excise a document from the corpus
@@ -55,7 +55,8 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
       a.annIndexPath.get, nlist = 4)
     Similarity.writeLshIndex(docs, "doc_id", "embedding",
       a.lshIndexPath.get, nBits = 6, tables = 3)
-    Sq.writeSqIndex(docs, "doc_id", "embedding", a.sqIndexPath.get)
+    FlatIndex(a.sqIndexPath.get, VectorCodec.Sq8)
+      .write(docs, "doc_id", "embedding")
     // components: 5 is a canonical (min of {5,40,41}), 10 a satellite of
     // {2,10}, {50,51} untouched
     Components.updateLabelStore(spark, a.dupLabelsPath.get,

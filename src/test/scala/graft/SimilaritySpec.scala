@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Similarity
+import graft.operators.{CellIndex, FlatIndex, Pq, Similarity, VectorCodec}
 import graft.functions.Vectors
 
 class SimilaritySpec extends AnyFunSuite with SparkFixture {
@@ -206,17 +206,17 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     // the COMPRESSED index honors it too: the predicate prunes the ADC
     // candidate scan (codes carry the label), single and batched serves
     val pqDir = java.nio.file.Files.createTempDirectory("ivfpqidxf").toString
-    Similarity.writeIvfPqIndex(labeled, "vec_id", "embedding", pqDir,
-      nlist = 16, m = 8, k = 16, kmeansIters = 1, attrCols = Seq("label"))
-    val pqTop = Similarity.ivfPqTopKFromIndex(spark, pqDir, labeled,
-        "vec_id", "embedding", queryDf, "embedding", 5, nprobe = 4,
-        filter = Some(col("label") === 1))
+    val pq = CellIndex(pqDir, Pq.Codec(m = 8, k = 16), nlist = 16,
+      nprobe = 4, kmeansIters = 1)
+    pq.write(labeled, "vec_id", "embedding", attrCols = Seq("label"))
+    val pqTop = pq.topK(spark, "vec_id", "embedding", queryDf, "embedding",
+        5, filter = Some(col("label") === 1), rawCorpus = Some(labeled))
       .as[(Long, Double)].collect()
     assert(pqTop.head._1 === 999L)
     assert(!pqTop.map(_._1).contains(998L))
-    val pqBatched = Similarity.ivfPqBatchTopKFromIndex(spark, pqDir, labeled,
-        "vec_id", "embedding", queryDf, "vec_id", "embedding", 5, nprobe = 4,
-        filter = Some(col("label") === 1))
+    val pqBatched = pq.batchTopK(spark, "vec_id", "embedding", queryDf,
+        "vec_id", "embedding", 5, filter = Some(col("label") === 1),
+        rawCorpus = Some(labeled))
       .orderBy(col("score").desc).as[(Long, Long, Double)].collect()
     assert(pqBatched.head._2 === 999L)
     assert(!pqBatched.map(_._2).contains(998L))
@@ -346,18 +346,17 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
   test("PQ: codes in range and deterministic, ADC+rerank finds the planted " +
       "neighbor first") {
-    import graft.operators.Pq
     val cb = Pq.train(corpusDf, "vec_id", "embedding", m = 4, k = 8, iters = 3)
     assert(cb.cents.size === 4 && cb.cents.forall(_.size === 8))
-    val codes = Pq.encode(corpusDf, "vec_id", "embedding", cb)
-      .orderBy("vec_id").as[(Long, Seq[Int])].collect()
+    def encode(cb: Pq.Codebooks) =
+      corpusDf.select(col("vec_id"), cb.encode(col("embedding")))
+        .orderBy("vec_id").as[(Long, Seq[Int])].collect()
+    val codes = encode(cb)
     assert(codes.forall(_._2.forall(c => c >= 0 && c < 8)))
     assert(codes.forall(_._2.size === 4))
     // deterministic: retrain + re-encode gives identical codes
     val cb2 = Pq.train(corpusDf, "vec_id", "embedding", m = 4, k = 8, iters = 3)
-    val codes2 = Pq.encode(corpusDf, "vec_id", "embedding", cb2)
-      .orderBy("vec_id").as[(Long, Seq[Int])].collect()
-    assert(codes.toSeq === codes2.toSeq)
+    assert(codes.toSeq === encode(cb2).toSeq)
     // the near-identical planted vector survives quantization + rerank
     val top = Pq.topK(corpusDf, "vec_id", "embedding", queryDf, "embedding",
         5, cb, oversample = 8)
@@ -367,14 +366,13 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("materialized PQ index: ADC scans codes only, same served result") {
-    import graft.operators.Pq
     val cb = Pq.train(corpusDf, "vec_id", "embedding", m = 4, k = 8, iters = 3)
     val path = java.nio.file.Files.createTempDirectory("pq_idx").toString
-    Pq.writeIndex(corpusDf, "vec_id", "embedding", path, cb)
-    val cb2 = Pq.readCodebooks(spark, path)
-    assert(cb2 === cb)
-    val served = Pq.topKFromIndex(spark, path, corpusDf, "vec_id",
-      "embedding", queryDf, "embedding", 5, oversample = 8)
+    val ix = FlatIndex(path, Pq.Codec(m = 4, k = 8, iters = 3))
+    ix.write(corpusDf, "vec_id", "embedding")
+    assert(ix.codec.read(spark, path) === cb)
+    val served = ix.topK(spark, "vec_id", "embedding", queryDf, "embedding",
+      5, oversample = 8, rawCorpus = Some(corpusDf))
     // the ADC candidate scan reads the compressed codes, never embeddings:
     // exactly one parquet scan in the plan, with only id + codes
     val plan = served.queryExecution.executedPlan.toString
@@ -392,8 +390,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   test("IVF-PQ index: partition-pruned codes-only ADC scan, planted " +
       "neighbor served") {
     val path = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
-    Similarity.writeIvfPqIndex(corpusDf, "vec_id", "embedding", path,
-      nlist = 4, m = 4, k = 8, kmeansIters = 1)
+    CellIndex(path, Pq.Codec(m = 4, k = 8), nlist = 4, kmeansIters = 1)
+      .write(corpusDf, "vec_id", "embedding")
     val served = Similarity.ivfPqTopKFromIndex(spark, path, corpusDf,
       "vec_id", "embedding", queryDf, "embedding", 5,
       nprobe = 2, oversample = 8)
@@ -403,6 +401,14 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).nonEmpty, plan)
     assert("Scan parquet".r.findAllMatchIn(plan).size === 1, plan)
     assert("ReadSchema:[^\\n]*embedding".r.findFirstIn(plan).isEmpty, plan)
+    // the single-query plan: literal ADC tables, TakeOrderedAndProject
+    // candidates and a left-semi rerank — never a batch-of-one window,
+    // never a join with the query frame
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(plan.contains("LeftSemi"), plan)
+    assert(!plan.contains("Window"), plan)
+    // the one local relation is the raw corpus (the rerank side)
+    assert("LocalTableScan".r.findAllMatchIn(plan).size === 1, plan)
     val top = served.as[(Long, Double)].collect()
     // near-identical vectors share the best cell, so nprobe=2 always
     // covers the planted neighbor
@@ -439,12 +445,12 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
     // IVF-PQ (codes encoded with the stored codebooks)
     val pqDir = java.nio.file.Files.createTempDirectory("ivfpq_app").toString
-    Similarity.writeIvfPqIndex(initial, "vec_id", "embedding", pqDir,
-      nlist = 4, m = 4, k = 8, kmeansIters = 1)
-    Similarity.appendToIvfPqIndex(batch, "vec_id", "embedding", pqDir)
-    val pqTop = Similarity.ivfPqTopKFromIndex(spark, pqDir, corpusDf,
-        "vec_id", "embedding", queryDf, "embedding", 5,
-        nprobe = 2, oversample = 8)
+    val pq = CellIndex(pqDir, Pq.Codec(m = 4, k = 8), nlist = 4, nprobe = 2,
+      kmeansIters = 1)
+    pq.write(initial, "vec_id", "embedding")
+    pq.append(batch, "vec_id", "embedding")
+    val pqTop = pq.topK(spark, "vec_id", "embedding", queryDf, "embedding",
+        5, oversample = 8, rawCorpus = Some(corpusDf))
       .as[(Long, Double)].collect()
     assert(pqTop.head._1 === 999L && pqTop.head._2 > 0.99)
 
@@ -488,14 +494,12 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       plan)
   }
 
-  test("batched IVF / IVF-PQ serving: per-query results identical to the " +
-      "per-query loop; job count independent of batch size") {
+  test("batched IVF / LSH / brute-force serving: per-query results " +
+      "identical to the per-query loop; job count independent of batch " +
+      "size") {
     val ivfDir = java.nio.file.Files.createTempDirectory("ivf_batch").toString
-    val pqDir = java.nio.file.Files.createTempDirectory("ivfpq_batch").toString
     Similarity.writeIvfIndex(corpusDf, "vec_id", "embedding", ivfDir,
       nlist = 4, kmeansIters = 1)
-    Similarity.writeIvfPqIndex(corpusDf, "vec_id", "embedding", pqDir,
-      nlist = 4, m = 4, k = 8, kmeansIters = 1)
 
     // query TABLE: the planted query + 5 corpus vectors under fresh ids
     val queryRows = (0L, q) +: corpus.take(5)
@@ -507,12 +511,6 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
           Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", k, nprobe)
         .as[(Long, Double)].collect().map { case (id, s) => (qid, id, s) }
     }
-    def loopPq(k: Int, nprobe: Int, os: Int) = queryRows.flatMap { case (qid, v) =>
-      Similarity.ivfPqTopKFromIndex(spark, pqDir, corpusDf, "vec_id",
-          "embedding", Seq((qid, v)).toDF("vec_id", "embedding"),
-          "embedding", k, nprobe, os)
-        .as[(Long, Double)].collect().map { case (id, s) => (qid, id, s) }
-    }
 
     val ivfBatch = Similarity.ivfBatchTopKFromIndex(spark, ivfDir, "vec_id",
         "embedding", queriesDf, "vec_id", "embedding", k = 5, nprobe = 2)
@@ -521,44 +519,6 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       loopIvf(5, 2).toSeq.sortBy(r => (r._1, -r._3, r._2)))
     // the planted query still finds its planted neighbor through the batch
     assert(ivfBatch.filter(_._1 == 0L).maxBy(_._3)._2 === 999L)
-
-    val pqBatch = Similarity.ivfPqBatchTopKFromIndex(spark, pqDir, corpusDf,
-        "vec_id", "embedding", queriesDf, "vec_id", "embedding",
-        k = 5, nprobe = 2, oversample = 8)
-      .as[(Long, Long, Double)].collect().toSeq
-    assert(pqBatch.sortBy(r => (r._1, -r._3, r._2)) ===
-      loopPq(5, 2, 8).toSeq.sortBy(r => (r._1, -r._3, r._2)))
-
-    // batched FLAT-PQ from the materialized index ≡ the per-query loop
-    val flatDir = java.nio.file.Files.createTempDirectory("pq_flat").toString
-    val flatCb = graft.operators.Pq.train(corpusDf, "vec_id", "embedding",
-      m = 4, k = 8)
-    graft.operators.Pq.writeIndex(corpusDf, "vec_id", "embedding", flatDir,
-      flatCb)
-    val flatBatch = graft.operators.Pq.batchTopKFromIndex(spark, flatDir,
-        corpusDf, "vec_id", "embedding", queriesDf, "vec_id", "embedding",
-        k = 5, oversample = 8)
-      .as[(Long, Long, Double)].collect().toSeq
-    val flatLoop = queryRows.flatMap { case (qid, v) =>
-      graft.operators.Pq.topKFromIndex(spark, flatDir, corpusDf, "vec_id",
-          "embedding", Seq((qid, v)).toDF("vec_id", "embedding"),
-          "embedding", k = 5, oversample = 8)
-        .as[(Long, Double)].collect().map { case (id, s) => (qid, id, s) }
-    }
-    assert(flatBatch.sortBy(r => (r._1, -r._3, r._2)) ===
-      flatLoop.toSeq.sortBy(r => (r._1, -r._3, r._2)))
-
-    // frozen-codebook flat-PQ append: the appended near-dup serves through
-    // the same index and outranks everything but the planted neighbor
-    val extraPq = Seq((7000L, planted.map(x => x + 1e-4f)))
-      .toDF("vec_id", "embedding")
-    graft.operators.Pq.appendToIndex(extraPq, "vec_id", "embedding", flatDir)
-    val afterAppend = graft.operators.Pq.batchTopKFromIndex(spark, flatDir,
-        corpusDf.unionByName(extraPq), "vec_id", "embedding",
-        queriesDf.filter(col("vec_id") === 0L), "vec_id", "embedding",
-        k = 2, oversample = 8)
-      .as[(Long, Long, Double)].collect().map(_._2).toSet
-    assert(afterAppend === Set(999L, 7000L))
 
     // batched LSH from the materialized index ≡ the per-query loop
     val lshDir = java.nio.file.Files.createTempDirectory("lsh_batch").toString
@@ -624,19 +584,21 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(jobsFull === jobsSmall,
       s"batched serve scaled with batch size: $jobsSmall vs $jobsFull jobs")
 
-    // same invariance for the LSH and SQ8 batch paths
+    // same invariance for the LSH and codec-index batch paths
     def lshJobs(qs: org.apache.spark.sql.DataFrame): Int =
       jobsRunning {
         Similarity.lshBatchTopKFromIndex(spark, lshDir, "vec_id",
           "embedding", qs, "vec_id", "embedding", k = 5).count()
       }
     assert(lshJobs(queriesDf) === lshJobs(queriesDf.limit(2)))
-    val sqDir = java.nio.file.Files.createTempDirectory("sq_jobs").toString
-    graft.operators.Sq.writeSqIndex(corpusDf, "vec_id", "embedding", sqDir)
+    val sq = FlatIndex(
+      java.nio.file.Files.createTempDirectory("sq_jobs").toString,
+      VectorCodec.Sq8)
+    sq.write(corpusDf, "vec_id", "embedding")
     def sqJobs(qs: org.apache.spark.sql.DataFrame): Int =
       jobsRunning {
-        graft.operators.Sq.sqBatchTopKFromIndex(spark, sqDir, "vec_id",
-          "embedding", qs, "vec_id", "embedding", k = 5).count()
+        sq.batchTopK(spark, "vec_id", "embedding", qs, "vec_id",
+          "embedding", k = 5).count()
       }
     assert(sqJobs(queriesDf) === sqJobs(queriesDf.limit(2)))
   }
@@ -664,25 +626,26 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
   test("SQ8: codes stay in the int8 domain, reconstruction error is " +
       "bounded by span/255, serving finds the planted neighbor") {
-    import graft.operators.Sq
     val dir = java.nio.file.Files.createTempDirectory("sq8").toString
-    Sq.writeSqIndex(corpusDf, "vec_id", "embedding", dir)
+    val ix = FlatIndex(dir, VectorCodec.Sq8)
+    ix.write(corpusDf, "vec_id", "embedding")
     val data = spark.read.parquet(s"$dir/data")
     val codes = data.select(explode(col("code"))).as[Int].collect()
     assert(codes.forall(c => c >= -128 && c <= 127))
     // max |x − dequant(quant(x))| ≤ span/(2·255) + fp slack, per dimension
-    val (mins, maxs) = Sq.readSqParams(spark, dir)
-    val worstSpan = mins.indices.map(i => maxs(i) - mins(i)).max
+    val ranges = VectorCodec.Sq8.read(spark, dir)
+    val worstSpan = ranges.mins.indices
+      .map(i => ranges.maxs(i) - ranges.mins(i)).max
     val errs = data.select(
         aggregate(zip_with(
           graft.functions.Vectors.toDouble(col("embedding")),
-          Sq.dequantizeExpr(col("code"), mins, maxs),
+          ranges.decode(col("code")),
           (a, b) => abs(a - b)), lit(0.0),
           (acc, x) => greatest(acc, x)).as("e"))
       .as[Double].collect()
     assert(errs.max <= worstSpan / 255.0 / 2.0 + 1e-9)
     // serving: the planted near-copy of q must surface as the top hit
-    val top = Sq.sqBatchTopKFromIndex(spark, dir, "vec_id", "embedding",
+    val top = ix.batchTopK(spark, "vec_id", "embedding",
         queryDf, "vec_id", "embedding", k = 5, oversample = 4)
       .as[(Long, Long, Double)].collect().sortBy(-_._3)
     assert(top.head._2 === 999L)
@@ -690,7 +653,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     // the ADC pass column-prunes to (id, code): one index scan reads the
     // code column WITHOUT the float vectors (the 4× bandwidth claim), the
     // rerank scan reads the vectors — both visible in the executed plan
-    val serve = Sq.sqBatchTopKFromIndex(spark, dir, "vec_id", "embedding",
+    val serve = ix.batchTopK(spark, "vec_id", "embedding",
       queryDf, "vec_id", "embedding", k = 5, oversample = 4)
     serve.collect()
     val schemas = "ReadSchema: [^\\n]*".r
@@ -698,15 +661,6 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(schemas.exists(s => s.contains("code") && !s.contains("embedding")),
       schemas.mkString("\n"))
     assert(schemas.exists(_.contains("embedding")), schemas.mkString("\n"))
-
-    // frozen-params append: appended rows serve identically to built rows
-    val extra = Seq((5000L, planted.map(x => x + 1e-4f)))
-      .toDF("vec_id", "embedding")
-    Sq.appendToSqIndex(extra, "vec_id", "embedding", dir)
-    val top2 = Sq.sqBatchTopKFromIndex(spark, dir, "vec_id", "embedding",
-        queryDf, "vec_id", "embedding", k = 2, oversample = 8)
-      .as[(Long, Long, Double)].collect().map(_._2).toSet
-    assert(top2 === Set(999L, 5000L))
   }
 
   test("randomProject: deterministic across invocations, near-identical " +
@@ -731,33 +685,6 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     intercept[IllegalArgumentException] {
       Similarity.randomProject(corpusDf, "embedding", dim, dim + 1, 7L, "rp")
     }
-  }
-
-  test("IVF x SQ8: cell-pruned compressed serving finds the planted " +
-      "neighbor; full probe ≡ flat SQ8") {
-    import graft.operators.Sq
-    val dir = java.nio.file.Files.createTempDirectory("ivfsq").toString
-    val flat = java.nio.file.Files.createTempDirectory("ivfsq_flat").toString
-    Sq.writeIvfSqIndex(corpusDf, "vec_id", "embedding", dir,
-      nlist = 4, kmeansIters = 1)
-    Sq.writeSqIndex(corpusDf, "vec_id", "embedding", flat)
-    val served = Sq.ivfSqBatchTopKFromIndex(spark, dir, "vec_id",
-      "embedding", queryDf, "vec_id", "embedding", k = 5, nprobe = 2)
-    val rows = served.as[(Long, Long, Double)].collect()
-    // the planted near-copy shares the query's best cell by construction
-    assert(rows.maxBy(_._3)._2 === 999L)
-    val plan = served.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).nonEmpty,
-      plan)
-    // probing every cell degrades exactly to the flat SQ8 serve (same
-    // global params, same candidate window, same rerank)
-    val full = Sq.ivfSqBatchTopKFromIndex(spark, dir, "vec_id", "embedding",
-        queryDf, "vec_id", "embedding", k = 5, nprobe = 4)
-      .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    val flatR = Sq.sqBatchTopKFromIndex(spark, flat, "vec_id", "embedding",
-        queryDf, "vec_id", "embedding", k = 5)
-      .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2))
-    assert(full === flatR)
   }
 
   test("maxSimTopK: each query token matches its best doc vector " +
