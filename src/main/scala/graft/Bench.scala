@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline queries (SparkEntry.benchQueries) on
   * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
@@ -7,21 +6,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the localCheckpoint release discipline (unpersist after the last
-    // consumer) logs a WARN per released RDD ("was locally checkpointed …
-    // cannot be recomputed") — by design the lineage is dead at that
-    // point, and the warning would otherwise be the first line of the
-    // bench artifact tail the driver stores
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession()
     // noop sink: materializes every row/column of the result without the
     // count()-only plan that lets Catalyst prune the very work being
     // benchmarked (EliminateSorts drops orderBy, column pruning deletes

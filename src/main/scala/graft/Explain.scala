@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump the formatted physical plan of selected queries so the
   * scale-critical properties are auditable — parquet PushedFilters /
   * ReadSchema (pushdown + pruning), BroadcastHashJoin vs SortMergeJoin,
@@ -35,13 +33,7 @@ object Explain {
       // point-estimate rides conditional aggregates; a second branch
       // would re-sort everything) and ONE exchange keyed by __r
       "q_bootstrap_quantile")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     names.foreach { n =>
       println(s"\n======== $n ========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

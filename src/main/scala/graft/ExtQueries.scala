@@ -68,10 +68,9 @@ object ExtQueries {
     Tables.load(s, d, "embeddings")
 
   /** The mm_dhash_dedup_indexed fixture: the hash-once media index for
-    * the [[dhashMedia]] corpus, built IF ABSENT (keyed by sf dir,
-    * `_SUCCESS`-gated so a crashed partial write rebuilds) — the first
-    * caller pays the one decode pass, every later query and bench pass
-    * serves from persisted 8-byte fingerprints. The fixture is
+    * the [[dhashMedia]] corpus, built once per sf dir ([[buildOnce]]) —
+    * the first caller pays the one decode pass, every later query and
+    * bench pass serves from persisted 8-byte fingerprints. The fixture is
     * deterministic (seed-keyed synthetic media), so reuse across runs
     * is sound.
     */
@@ -79,16 +78,14 @@ object ExtQueries {
     val path = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_media_hash_index_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      graft.sources.Compaction.rm(path)
+    buildOnce(path) {
       Multimodal.writeMediaHashIndex(readDhashMedia(s, d), path.toString)
     }
     path.toString
   }
 
-  /** The [[dhashMedia]] corpus STAGED as parquet bytes, built IF ABSENT
-    * (`_SUCCESS`-gated, keyed by sf dir — the [[mediaHashIndexFor]]
-    * convention): the PNG synthesis (ImageIO encode per doc, plus a
+  /** The [[dhashMedia]] corpus STAGED as parquet bytes, built once per
+    * sf dir ([[buildOnce]]): the PNG synthesis (ImageIO encode per doc, plus a
     * decode+re-encode for every upscaled odd doc) is FIXTURE BUILD, not
     * the verb mm_dhash_dedup prices — a deployment decodes stored
     * bytes, it does not synthesize them — so the timed body reads the
@@ -100,9 +97,8 @@ object ExtQueries {
     val path = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_dhash_media_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      graft.sources.Compaction.rm(path)
-      dhashMedia(s, d).write.mode("overwrite").parquet(path.toString)
+    buildOnce(path) {
+      dhashMedia(s, d).write.parquet(path.toString)
     }
     path.toString
   }
@@ -112,15 +108,14 @@ object ExtQueries {
 
   /** The mm_ahash_dedup_indexed fixture: the hash-once AUDIO fingerprint
     * index for the [[ahashMedia]] corpus — the waveform twin of
-    * [[mediaHashIndexFor]], same `_SUCCESS`-gated build-if-absent
-    * discipline (deterministic seed-keyed synthetic WAVs).
+    * [[mediaHashIndexFor]], built once per sf dir the same way
+    * (deterministic seed-keyed synthetic WAVs).
     */
   private def audioHashIndexFor(s: SparkSession, d: String): String = {
     val path = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_audio_hash_index_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      graft.sources.Compaction.rm(path)
+    buildOnce(path) {
       Multimodal.writeAudioHashIndex(ahashMedia(s, d), path.toString)
     }
     path.toString
@@ -149,17 +144,16 @@ object ExtQueries {
     cfg
   }
 
-  /** Build-once gate for the deterministic sketch fixtures (the
-    * [[mediaHashIndexFor]] convention): `build` runs only when the
-    * `_FIXTURE_DONE` marker is absent — the marker is written AFTER the
-    * last append, so a crashed partial build rebuilds from scratch —
-    * and later calls serve from the existing sidecar. This is what
-    * makes the bench rows SERVE-ONLY: pass 1 pays the one-off batch
-    * ingest, passes 2+ time the O(#batches) sidecar merge alone, so the
-    * min-of-passes number is the steady-state monitoring cost (the
-    * mm_dhash_dedup_indexed discipline). Sound to reuse across runs:
-    * every append is a deterministic function of the parquet fixture
-    * (pmod splits, fixed config, seeded sketches).
+  /** Build-once gate for the deterministic fixtures: `build` runs only
+    * when the `_FIXTURE_DONE` marker is absent — the marker is written
+    * AFTER the build, so a crashed partial build rebuilds from scratch —
+    * and later calls serve from the existing fixture. This is what makes
+    * the bench rows SERVE-ONLY: pass 1 pays the one-off build (batch
+    * ingest, media synthesis, the hash-once decode), passes 2+ time the
+    * serve alone, so the min-of-passes number is the steady-state cost.
+    * Sound to reuse across runs: every fixture is a deterministic
+    * function of the parquet inputs (pmod splits, fixed config, seeded
+    * sketches and synthetic media).
     */
   // one lock per fixture root: concurrent callers (overlapped driver
   // threads, a parallelized spec) must not race the rm/build/marker

@@ -158,16 +158,8 @@ object CorpusPipeline {
       java.nio.charset.StandardCharsets.UTF_8).trim.toInt
     catch { case scala.util.control.NonFatal(_) => 0 }
 
-  private def writeCount(indexPath: String, name: String, n: Int): Unit = {
-    val p = java.nio.file.Paths.get(s"$indexPath/$name")
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = java.nio.file.Paths.get(s"$indexPath/$name.tmp")
-    java.nio.file.Files.write(tmp, n.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeCount(indexPath: String, name: String, n: Int): Unit =
+    graft.sources.Compaction.writeFile(s"$indexPath/$name", n.toString)
 
   private def readAppendCount(indexPath: String): Int =
     readCount(indexPath, "_maint_appends")

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.JobText
 
@@ -42,26 +42,22 @@ object JobsPipeline {
   /** C6 — the stored procedure's daily refresh
     * (`/root/reference/script.sql:13-49`): re-render `remaining_time` for
     * every row from `due_date` vs the new anchor. Spark tables are
-    * immutable, so UPDATE-in-place becomes recompute-and-overwrite; the
-    * write goes through a staging path because overwriting the table being
-    * read is not allowed.
+    * immutable, so the procedure's one-transaction UPDATE becomes one
+    * staged rewrite installed by [[graft.sources.Compaction.replace]]: a
+    * refresh that fails at any point leaves the jobs table as it was.
+    * Returns the table's row count, observed on the rewrite itself.
     */
   def refreshRemainingTime(spark: SparkSession, jobsDir: String,
                            anchor: Column): Long = {
-    val refreshed = spark.read.parquet(jobsDir)
-      .withColumn("remaining_time",
-        JobText.remainingTime(col("due_date"), anchor))
-    val tmp = jobsDir + ".refresh.tmp"
-    refreshed.write.mode("overwrite").parquet(tmp)
-    val out = spark.read.parquet(tmp)
-    out.write.mode("overwrite").parquet(jobsDir)
-    val n = spark.read.parquet(jobsDir).count()
-    // best-effort cleanup of the staging copy
-    try {
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    } catch { case _: Throwable => () }
-    n
+    val obs = new Observation
+    graft.sources.Compaction.replace(jobsDir, "refresh") { staging =>
+      spark.read.parquet(jobsDir)
+        .withColumn("remaining_time",
+          JobText.remainingTime(col("due_date"), anchor))
+        .observe(obs, count(lit(1)).as("n"))
+        .write.parquet(staging.toString)
+      true
+    }
+    obs.get("n").asInstanceOf[Long]
   }
 }

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Watermark sidecar state: `{"last_processed": "<iso>"}`, mirroring the
   * reference's `tmp/last_processed_time.json`
@@ -9,9 +9,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *
   * Read is fail-open — any error ⇒ None ⇒ reprocess everything, exactly the
   * reference's recovery semantics (`:24-26`). Write is atomic
-  * (temp file + move) and must be called only AFTER the sink commit so a
-  * failed batch is re-processed, never skipped (intended semantics; the
-  * reference's own advance is broken — bug B4, SURVEY.md §2.10).
+  * ([[graft.sources.Compaction.writeFile]]: temp file + move) and must
+  * be called only AFTER the sink commit so a failed batch is
+  * re-processed, never skipped (intended semantics; the reference's own
+  * advance is broken — bug B4, SURVEY.md §2.10).
   */
 object Watermark {
 
@@ -30,13 +31,7 @@ object Watermark {
       }
     } catch { case _: Throwable => None }
 
-  def write(path: String, isoTimestamp: String): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp,
-      s"""{"last_processed": "$isoTimestamp"}""".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  def write(path: String, isoTimestamp: String): Unit =
+    graft.sources.Compaction.writeFile(path,
+      s"""{"last_processed": "$isoTimestamp"}""")
 }

@@ -151,7 +151,7 @@ object Components {
     * `maxIters` the incremental form converges under).
     *
     * Each update rewrites the store via the staged atomic swap
-    * ([[graft.sources.Compaction.swapInto]]) — crash-safe like every
+    * ([[graft.sources.Compaction.replace]]) — crash-safe like every
     * other sidecar rewrite; a retried batch re-derives the same labels
     * (idempotent: star ∪ same-pairs gives the same partition). The store
     * is O(nodes-in-pairs) — the duplicate minority, not the corpus.
@@ -226,15 +226,10 @@ object Components {
     }
     // pin the layout BEFORE any partitioned data lands: a crash between
     // the two leaves meta-without-data, which the next call treats as a
-    // fresh creation at the same pinned P. Write-then-rename (the swap
-    // discipline) so a crash mid-write cannot leave a truncated meta.
-    if (partitions > 0 && metaP.isEmpty) {
-      dir.mkdirs()
-      val tmp = new java.io.File(dir, "._label_partitions__tmp")
-      java.nio.file.Files.writeString(tmp.toPath, partitions.toString)
-      if (!tmp.renameTo(meta))
-        throw new java.io.IOException(s"cannot pin layout meta at $meta")
-    }
+    // fresh creation at the same pinned P. Write-then-move so a crash
+    // mid-write cannot leave a truncated meta.
+    if (partitions > 0 && metaP.isEmpty)
+      graft.sources.Compaction.writeFile(meta.toString, partitions.toString)
     def lpOf(c: Column): Column = pmod(xxhash64(c), lit(partitions))
     val prior: Option[DataFrame] =
       if (flatExisting || partitionedExisting)
@@ -267,16 +262,14 @@ object Components {
           case Some(kept) => closed.union(kept.select("id", "component"))
           case None => closed
         }
-        val staging = graft.sources.Compaction.stagingDir(dir, "labels")
-        if (staging.exists()) graft.sources.Compaction.rm(staging)
         // connectedComponents returns a checkpoint-backed frame, but the
         // `untouched` side still READS the store files the swap replaces
         // — materialize the union before writing so the swap cannot pull
         // the files out from under a lazy scan
         val out = labels.localCheckpoint(true)
-        try {
-          out.write.mode("overwrite").parquet(staging.toString)
-          graft.sources.Compaction.swapInto(path, staging.toString)
+        try graft.sources.Compaction.replace(path, "labels") { staging =>
+          out.write.parquet(staging.toString)
+          true
         } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(out)
       } else {
         // touched partitions: where affected components lived (so rows

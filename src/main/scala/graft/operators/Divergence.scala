@@ -117,11 +117,11 @@ object Divergence {
     // reading during the delete-then-write) must see the previous
     // snapshot, never a missing/partial one — the same swap discipline
     // every other sidecar rewrite in the repo follows
-    val dir = new java.io.File(s"$indexPath/cell_occupancy")
-    val staging = graft.sources.Compaction.stagingDir(dir, "occupancy")
-    if (staging.exists()) graft.sources.Compaction.rm(staging)
-    occ.write.mode("overwrite").parquet(staging.toString)
-    graft.sources.Compaction.swapInto(dir.toString, staging.toString)
+    graft.sources.Compaction.replace(s"$indexPath/cell_occupancy",
+        "occupancy") { staging =>
+      occ.write.parquet(staging.toString)
+      true
+    }
   }
 
   /** Embedding-space drift of a batch against a frozen IVF index — the

@@ -360,17 +360,14 @@ object Graph {
     * set's signature. */
   private def writePushState(statePath: String, st: DataFrame, sig: Long,
                              damping: Double): Unit = {
-    import graft.sources.Compaction
-    val dir = new java.io.File(statePath)
-    val staging = Compaction.stagingDir(dir, "pprstate")
-    if (staging.exists()) Compaction.rm(staging)
-    st.select("id", "p", "r").write.mode("overwrite")
-      .parquet(staging.toString)
-    java.nio.file.Files.writeString(
-      new java.io.File(staging, "_edges_sig").toPath, sig.toString)
-    java.nio.file.Files.writeString(
-      new java.io.File(staging, "_damping").toPath, damping.toString)
-    Compaction.swapInto(statePath, staging.toString)
+    graft.sources.Compaction.replace(statePath, "pprstate") { staging =>
+      st.select("id", "p", "r").write.parquet(staging.toString)
+      java.nio.file.Files.writeString(
+        new java.io.File(staging, "_edges_sig").toPath, sig.toString)
+      java.nio.file.Files.writeString(
+        new java.io.File(staging, "_damping").toPath, damping.toString)
+      true
+    }
   }
 
   private def readPushMeta(statePath: String): Option[(Long, Double)] = {
@@ -1284,12 +1281,10 @@ object Graph {
       // window between them is exactly what the recount path heals
       if (!delta.isEmpty)
         delta.write.mode("append").parquet(edgesPath)
-      val storeDir = new java.io.File(storePath)
-      storeDir.mkdirs()
-      val staging = Compaction.stagingDir(storeDir, "census")
-      if (staging.exists()) Compaction.rm(staging)
-      census.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      Compaction.swapInto(censusPath, staging.toString)
+      Compaction.replace(censusPath, "census") { staging =>
+        census.coalesce(1).write.parquet(staging.toString)
+        true
+      }
       census.withColumn("mode", lit(mode))
       } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(full)
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(delta)
@@ -1433,15 +1428,12 @@ object Graph {
         case r => r.getLong(0)
       }
     def writeState(labels: DataFrame, s: Long): Unit = {
-      import graft.sources.Compaction
-      val dir = new java.io.File(statePath)
-      val staging = Compaction.stagingDir(dir, "lpastate")
-      if (staging.exists()) Compaction.rm(staging)
-      labels.select("id", "community").write.mode("overwrite")
-        .parquet(staging.toString)
-      java.nio.file.Files.writeString(
-        new java.io.File(staging, "_edges_sig").toPath, s.toString)
-      Compaction.swapInto(statePath, staging.toString)
+      graft.sources.Compaction.replace(statePath, "lpastate") { staging =>
+        labels.select("id", "community").write.parquet(staging.toString)
+        java.nio.file.Files.writeString(
+          new java.io.File(staging, "_edges_sig").toPath, s.toString)
+        true
+      }
     }
     def storedSig(): Option[Long] = {
       val f = new java.io.File(statePath, "_edges_sig")

@@ -350,10 +350,11 @@ object Merge {
   def scd2DedupeStored(spark: SparkSession, path: String): Unit = {
     val leaf = new java.io.File(path, "is_current=false")
     if (!leaf.exists()) return
-    val staging = graft.sources.Compaction.stagingDir(leaf, "scd2dedupe")
-    if (staging.exists()) graft.sources.Compaction.rm(staging)
-    spark.read.parquet(leaf.toString).distinct()
-      .write.mode("overwrite").parquet(staging.toString)
-    graft.sources.Compaction.swapInto(leaf.toString, staging.toString)
+    graft.sources.Compaction.replace(leaf.toString, "scd2dedupe") {
+      staging =>
+        spark.read.parquet(leaf.toString).distinct()
+          .write.parquet(staging.toString)
+        true
+    }
   }
 }

@@ -594,9 +594,6 @@ object Retraction {
           graft.functions.TextAnalysis.tokenCount(col(a.textCol))),
       "shard", "__h", "n_tokens", tokenBudget)
       .drop("__h")
-    val dir = new java.io.File(outPath)
-    val staging = graft.sources.Compaction.stagingDir(dir, "export")
-    if (staging.exists()) graft.sources.Compaction.rm(staging)
     // ONE served-corpus scan (the incremental twin's shape): the
     // id-bounds check and the emptiness test ride the staged write as
     // observed metrics. BOTH bounds matter — a negative id would pass a
@@ -606,41 +603,42 @@ object Retraction {
     // BEFORE install (the staging is rebuilt fresh by the next call and
     // vacuum-swept); at 100 TB the separate bounds aggregate this
     // replaces was a second full pass over the served corpus.
-    val obs = new org.apache.spark.sql.Observation
-    assigned.observe(obs, count(lit(1)).as("n"),
-        min(col(a.idCol).cast("long")).as("lo"),
-        max(col(a.idCol).cast("long")).as("hi"))
-      .write.partitionBy("shard").parquet(staging.toString)
-    if (obs.get("n").asInstanceOf[Long] == 0L) {
-      // EMPTY served corpus (everything tombstoned, or export before the
-      // first admission): a partitionBy write of zero rows stages only a
-      // _SUCCESS marker, which a parquet read cannot infer a schema
-      // from — install an explicitly-typed empty manifest instead so the
-      // verb stays total and the receipt says "zero shards" loudly.
-      graft.sources.Compaction.rm(staging)
-      val emptyManifest = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        manifestSchema)
-      emptyManifest.coalesce(1).write.mode("overwrite")
+    graft.sources.Compaction.replace(outPath, "export") { staging =>
+      val obs = new org.apache.spark.sql.Observation
+      assigned.observe(obs, count(lit(1)).as("n"),
+          min(col(a.idCol).cast("long")).as("lo"),
+          max(col(a.idCol).cast("long")).as("hi"))
+        .write.partitionBy("shard").parquet(staging.toString)
+      val manifest =
+        if (obs.get("n").asInstanceOf[Long] == 0L) {
+          // EMPTY served corpus (everything tombstoned, or export before
+          // the first admission): a partitionBy write of zero rows stages
+          // only a _SUCCESS marker, which a parquet read cannot infer a
+          // schema from — install an explicitly-typed empty manifest
+          // instead so the verb stays total and the receipt says "zero
+          // shards" loudly.
+          graft.sources.Compaction.rm(staging)
+          spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](),
+            manifestSchema)
+        } else {
+          val (exLo, exHi) = (obs.get("lo").asInstanceOf[Long],
+            obs.get("hi").asInstanceOf[Long])
+          require(exLo >= 0 && exHi < (1L << 31),
+            s"exportTrainingShards needs ids in [0, 2^31): " +
+              s"[$exLo, $exHi] would overflow the cross-engine hash")
+          // manifest from the STAGED files (what will actually serve),
+          // riding the same atomic swap so data + receipt install together
+          spark.read.parquet(staging.toString)
+            .groupBy("shard")
+            .agg(count(lit(1)).as("n_docs"),
+              sum("n_tokens").as("n_tokens"),
+              countDistinct("seq_id").as("n_sequences"))
+        }
+      manifest.coalesce(1).write
         .parquet(new java.io.File(staging, "_manifest").toString)
-      graft.sources.Compaction.swapInto(outPath, staging.toString)
-      return spark.read.parquet(s"$outPath/_manifest")
+      true
     }
-    val (exLo, exHi) = (obs.get("lo").asInstanceOf[Long],
-      obs.get("hi").asInstanceOf[Long])
-    require(exLo >= 0 && exHi < (1L << 31),
-      s"exportTrainingShards needs ids in [0, 2^31): [$exLo, $exHi] " +
-        "would overflow the cross-engine hash")
-    // manifest from the STAGED files (what will actually serve), riding
-    // the same atomic swap so data + receipt install together
-    val manifest = spark.read.parquet(staging.toString)
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("n_tokens").as("n_tokens"),
-        countDistinct("seq_id").as("n_sequences"))
-    manifest.coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(staging, "_manifest").toString)
-    graft.sources.Compaction.swapInto(outPath, staging.toString)
     spark.read.parquet(s"$outPath/_manifest")
   }
 
@@ -680,8 +678,9 @@ object Retraction {
     * creates no epoch — the verb is an idempotent daily cadence.
     * Crash contract: the epoch stages as a dot-prefixed sibling inside
     * `outRoot` (invisible to partition discovery) and installs by ONE
-    * rename; a crashed staging is rebuilt fresh by the next call and
-    * swept by [[graft.sources.Compaction.vacuum]].
+    * [[graft.sources.Compaction.replace]]; a crashed staging is rebuilt
+    * fresh by the next call and swept by
+    * [[graft.sources.Compaction.vacuum]].
     */
   def exportTrainingShardsIncremental(spark: SparkSession, a: Artifacts,
                                       outRoot: String, shards: Int,
@@ -725,46 +724,44 @@ object Retraction {
       "shard", "__h", "n_tokens", tokenBudget)
       .drop("__h")
     val epochDir = new java.io.File(root, s"epoch=$next")
-    val staging = graft.sources.Compaction.stagingDir(epochDir, "export")
-    if (staging.exists()) graft.sources.Compaction.rm(staging)
     // ONE scan: the id-bounds check and the emptiness test ride the
     // write as observed metrics — an out-of-bounds id throws AFTER the
     // staged write but BEFORE install (the staging is rebuilt fresh by
     // the next call and vacuum-swept), and an empty delta discards the
     // row-less staging without ever re-scanning the corpus
-    val obs = new org.apache.spark.sql.Observation
-    assigned.observe(obs, count(lit(1)).as("n"),
-        min(col(a.idCol).cast("long")).as("lo"),
-        max(col(a.idCol).cast("long")).as("hi"))
-      .write.partitionBy("shard").parquet(staging.toString)
-    if (obs.get("n").asInstanceOf[Long] == 0L) {
-      graft.sources.Compaction.rm(staging)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        manifestSchema.add("epoch",
-          org.apache.spark.sql.types.IntegerType))
+    val shipped = graft.sources.Compaction.replace(epochDir.toString,
+        "export") { staging =>
+      val obs = new org.apache.spark.sql.Observation
+      assigned.observe(obs, count(lit(1)).as("n"),
+          min(col(a.idCol).cast("long")).as("lo"),
+          max(col(a.idCol).cast("long")).as("hi"))
+        .write.partitionBy("shard").parquet(staging.toString)
+      if (obs.get("n").asInstanceOf[Long] == 0L) false
+      else {
+        val (lo, hi) = (obs.get("lo").asInstanceOf[Long],
+          obs.get("hi").asInstanceOf[Long])
+        require(lo >= 0 && hi < (1L << 31),
+          s"exportTrainingShardsIncremental needs ids in [0, 2^31): " +
+            s"[$lo, $hi] would overflow the cross-engine hash")
+        val staged = spark.read.parquet(staging.toString)
+        staged.select(a.idCol).coalesce(1).write
+          .parquet(new java.io.File(staging, "_ids").toString)
+        java.nio.file.Files.writeString(
+          new java.io.File(staging, "_shards").toPath, shards.toString)
+        staged.groupBy("shard")
+          .agg(count(lit(1)).as("n_docs"),
+            sum("n_tokens").as("n_tokens"),
+            countDistinct("seq_id").as("n_sequences"))
+          .withColumn("epoch", lit(next))
+          .coalesce(1).write
+          .parquet(new java.io.File(staging, "_manifest").toString)
+        true
+      }
     }
-    val (lo, hi) = (obs.get("lo").asInstanceOf[Long],
-      obs.get("hi").asInstanceOf[Long])
-    require(lo >= 0 && hi < (1L << 31),
-      s"exportTrainingShardsIncremental needs ids in [0, 2^31): " +
-        s"[$lo, $hi] would overflow the cross-engine hash")
-    val staged = spark.read.parquet(staging.toString)
-    staged.select(a.idCol).coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(staging, "_ids").toString)
-    java.nio.file.Files.writeString(
-      new java.io.File(staging, "_shards").toPath, shards.toString)
-    staged.groupBy("shard")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("n_tokens").as("n_tokens"),
-        countDistinct("seq_id").as("n_sequences"))
-      .withColumn("epoch", lit(next))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(staging, "_manifest").toString)
-    if (!staging.renameTo(epochDir))
-      throw new java.io.IOException(
-        s"cannot install $staging as $epochDir")
-    spark.read.parquet(s"$epochDir/_manifest")
+    if (shipped) spark.read.parquet(s"$epochDir/_manifest")
+    else spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      manifestSchema.add("epoch", org.apache.spark.sql.types.IntegerType))
   }
 
   /** What [[retractFromExport]] did: ids asked, epochs whose ledger held
@@ -918,25 +915,21 @@ object Retraction {
               val leaf = new java.io.File(epochDir, s"shard=$sv")
               if (hasParquet(leaf)) {
                 rewrote.incrementAndGet()
-                val staging = graft.sources.Compaction
-                  .stagingDir(leaf, "retract")
-                if (staging.exists()) graft.sources.Compaction.rm(staging)
-                val leafDf = spark.read.parquet(leaf.toString)
-                val obs = new org.apache.spark.sql.Observation
-                leafDf.join(broadcast(keys),
-                    leafDf(idCol).cast("long") === keys("__rid"),
-                    "left_anti")
-                  .observe(obs, count(lit(1)).as("n"))
-                  .write.mode("overwrite").parquet(staging.toString)
-                if (obs.get("n").asInstanceOf[Long] == 0L) {
-                  // the takedown emptied the leaf: remove it WHOLE — a
-                  // schema-only stub would serve nothing but still
-                  // carry a receipt row, and readers and manifests must
-                  // agree the shard is gone from this epoch
-                  graft.sources.Compaction.rm(staging)
-                  graft.sources.Compaction.rm(leaf)
-                } else graft.sources.Compaction.swapInto(leaf.toString,
-                  staging.toString)
+                // a leaf the takedown empties installs nothing: it is
+                // removed WHOLE — a schema-only stub would serve nothing
+                // but still carry a receipt row, and readers and
+                // manifests must agree the shard is gone from this epoch
+                graft.sources.Compaction.replace(leaf.toString, "retract") {
+                  staging =>
+                    val leafDf = spark.read.parquet(leaf.toString)
+                    val obs = new org.apache.spark.sql.Observation
+                    leafDf.join(broadcast(keys),
+                        leafDf(idCol).cast("long") === keys("__rid"),
+                        "left_anti")
+                      .observe(obs, count(lit(1)).as("n"))
+                      .write.parquet(staging.toString)
+                    obs.get("n").asInstanceOf[Long] > 0L
+                }
               }
             }
             // count LEAVES ACTUALLY TOUCHED (rewritten or removed), not
@@ -964,14 +957,12 @@ object Retraction {
                     col("n_tokens"), col("n_sequences"),
                     lit(epoch).as("epoch"))
               }
-            val mStaging = graft.sources.Compaction
-              .stagingDir(manifestDir, "retract")
-            if (mStaging.exists()) graft.sources.Compaction.rm(mStaging)
-            recomputed.foldLeft(untouched)(_ unionByName _)
-              .coalesce(1).write.mode("overwrite")
-              .parquet(mStaging.toString)
-            graft.sources.Compaction.swapInto(manifestDir.toString,
-              mStaging.toString)
+            graft.sources.Compaction.replace(manifestDir.toString,
+                "retract") { staging =>
+              recomputed.foldLeft(untouched)(_ unionByName _)
+                .coalesce(1).write.parquet(staging.toString)
+              true
+            }
             // ledger LAST — the commit point (see the contract above)
             graft.sources.Compaction.retractRows(spark,
               new java.io.File(epochDir, "_ids").toString, keys,
@@ -1128,15 +1119,19 @@ object Retraction {
             spark.read.parquet(p).select(a.idCol),
             p, fullCoverage = true)
       }
-      (a.annIndexPath.map(("ann_index", _, a.annIdCol)) ++
-        a.lshIndexPath.map(("lsh_index", _, a.lshIdCol)) ++
-        a.sqIndexPath.map(("sq_index", _, a.sqIdCol)) ++
-        a.bqIndexPath.map(("bq_index", _, a.bqIdCol))).foreach {
-        case (name, p, idCol) if exists(s"$p/data") =>
-          rows += row(name, spark.read.parquet(s"$p/data").select(idCol),
-            p, fullCoverage = false)
-        case _ => ()
-      }
+      // the ANN index is IVF-family: vectors under data/ (plain IVF) or
+      // codes under codes/ (IVF-PQ, the corpus pipeline's layout)
+      (a.annIndexPath.map(p => ("ann_index", p,
+          Similarity.cellTableDir(spark, p), a.annIdCol)) ++
+        a.lshIndexPath.map(p => ("lsh_index", p, s"$p/data", a.lshIdCol)) ++
+        a.sqIndexPath.map(p => ("sq_index", p, s"$p/data", a.sqIdCol)) ++
+        a.bqIndexPath.map(p => ("bq_index", p, s"$p/data", a.bqIdCol)))
+        .foreach {
+          case (name, p, table, idCol) if exists(table) =>
+            rows += row(name, spark.read.parquet(table).select(idCol),
+              p, fullCoverage = false)
+          case _ => ()
+        }
       a.mediaIndexPath.foreach { p =>
         if (exists(p))
           rows += row("media_index",

@@ -608,7 +608,7 @@ object Similarity {
     * re-run Lloyd over the CURRENT index contents (optionally a sample),
     * re-assign every vector to the new Voronoi geometry, rewrite the cell
     * partitions, and swap the WHOLE index root via one
-    * [[graft.sources.Compaction.swapInto]] rename pair. Data and centroid
+    * [[graft.sources.Compaction.replace]] rename pair. Data and centroid
     * sidecar are staged together under a single dot-prefixed
     * sibling and replace the root in one rename — swapping them with two
     * separate calls would open a window (crash between them, or a
@@ -652,32 +652,30 @@ object Similarity {
         else lloydRefine(corpus, vecCol, seedsV, kmeansIters, sampleFraction)
       val attrCols = corpus.columns.toSeq
         .filterNot(c => c == idCol || c == vecCol)
-      val root = new java.io.File(path)
-      val staging = graft.sources.Compaction.stagingDir(root, "reclustering")
-      // pre-clean a stale staging dir from a crashed prior run: Spark's
-      // overwrite would clear data/ and centroids/, but copyExtraSidecars
-      // copies by filename and would MERGE new sidecar part-files into
-      // surviving old ones — the swap would then install a corrupt
-      // sidecar (two conflicting trained_meta rows, say)
-      if (staging.exists()) graft.sources.Compaction.rm(staging)
       import spark.implicits._
-      // the two staged writes are independent (data from the
-      // checkpointed corpus, sidecar from the driver-held centroids) —
-      // overlap their jobs; the swap below is still the single commit
-      graft.sources.Compaction.parEach(Seq(
-        () => corpus.select(Seq(col(idCol), col(vecCol)) ++
-            attrCols.map(col) :+
-            bestCellFor(cents)(col(vecCol)).as("cell"): _*)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(new java.io.File(staging, "data").toString),
-        () => cents.toDF("cid", "cvec").coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(staging, "centroids").toString)
-      ))(_.apply())
-      // any other sidecar at the root (e.g. a trained_meta written by a
-      // maintenance loop) rides through the swap by COPY — the original
-      // stays complete until the single parent rename below
-      copyExtraSidecars(root, staging, keep = Set("data", "centroids"))
-      graft.sources.Compaction.swapInto(path, staging.toString)
+      // replace starts from a fresh staging dir: copyExtraSidecars copies
+      // by filename and would MERGE new sidecar part-files into a crashed
+      // run's survivors (two conflicting trained_meta rows, say)
+      graft.sources.Compaction.replace(path, "reclustering") { staging =>
+        // the two staged writes are independent (data from the
+        // checkpointed corpus, sidecar from the driver-held centroids) —
+        // overlap their jobs; the swap is still the single commit
+        graft.sources.Compaction.parEach(Seq(
+          () => corpus.select(Seq(col(idCol), col(vecCol)) ++
+              attrCols.map(col) :+
+              bestCellFor(cents)(col(vecCol)).as("cell"): _*)
+            .write.partitionBy("cell")
+            .parquet(new java.io.File(staging, "data").toString),
+          () => cents.toDF("cid", "cvec").coalesce(1).write
+            .parquet(new java.io.File(staging, "centroids").toString)
+        ))(_.apply())
+        // any other sidecar at the root (e.g. a trained_meta written by a
+        // maintenance loop) rides through the swap by COPY — the original
+        // stays complete until the single parent rename
+        copyExtraSidecars(new java.io.File(path), staging,
+          keep = Set("data", "centroids"))
+        true
+      }
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(corpus)
   }
 

@@ -272,12 +272,9 @@ object BloomKeyIndex {
         .agg(sum(col("n")).as("n"), bloomMerge(col("bloom")).as("bloom"))
         .coalesce(1)
         .localCheckpoint(true) // sever lineage from the swapped files
-      try {
-        val dir = new java.io.File(cfg.bloomPath)
-        val staging = Compaction.stagingDir(dir, "rowmerge")
-        if (staging.exists()) Compaction.rm(staging)
-        merged.write.mode("overwrite").parquet(staging.toString)
-        Compaction.swapInto(cfg.bloomPath, staging.toString)
+      try Compaction.replace(cfg.bloomPath, "rowmerge") { staging =>
+        merged.write.parquet(staging.toString)
+        true
       } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(merged)
     }
     Compaction.compactPartitioned(spark, cfg.keysPath)

@@ -71,20 +71,18 @@ object Bucketing {
     * write it replaces. Installed by the staged atomic swap, not a
     * delete-then-write on the live path — a re-laid-out table that is
     * already serving must expose the old layout or the new one, never a
-    * half-written directory (the [[Compaction.swapInto]] discipline
+    * half-written directory (the [[Compaction.replace]] discipline
     * every rewrite in the repo follows).
     */
   def writeRangeBucketed(df: DataFrame, path: String, colName: String,
                          bounds: Seq[Double],
                          bucketCol: String = "rb"): Unit = {
-    val dir = new java.io.File(path)
-    val staging = Compaction.stagingDir(dir, "rangebucket")
-    if (staging.exists()) Compaction.rm(staging)
-    df.withColumn(bucketCol,
-        rangeBucket(col(colName).cast("double"), bounds))
-      .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(staging.toString)
-    Compaction.swapInto(path, staging.toString)
+    Compaction.replace(path, "rangebucket") { staging =>
+      df.withColumn(bucketCol,
+          rangeBucket(col(colName).cast("double"), bounds))
+        .write.partitionBy(bucketCol).parquet(staging.toString)
+      true
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -127,18 +125,16 @@ object Bucketing {
   def writeKeyBucketed(df: DataFrame, path: String, keyCol: String,
                        partitions: Int, bucketCol: String = "kb"): Unit = {
     require(partitions > 0, s"partitions=$partitions")
-    val dir = new java.io.File(path)
-    val staging = Compaction.stagingDir(dir, "keybucket")
-    if (staging.exists()) Compaction.rm(staging)
-    df.withColumn(bucketCol,
-        pmod(xxhash64(col(keyCol).cast("long")), lit(partitions))
-          .cast("int"))
-      .write.mode("overwrite").partitionBy(bucketCol)
-      .parquet(staging.toString)
-    java.nio.file.Files.writeString(
-      new java.io.File(staging, "_key_partitions").toPath,
-      partitions.toString)
-    Compaction.swapInto(path, staging.toString)
+    Compaction.replace(path, "keybucket") { staging =>
+      df.withColumn(bucketCol,
+          pmod(xxhash64(col(keyCol).cast("long")), lit(partitions))
+            .cast("int"))
+        .write.partitionBy(bucketCol).parquet(staging.toString)
+      java.nio.file.Files.writeString(
+        new java.io.File(staging, "_key_partitions").toPath,
+        partitions.toString)
+      true
+    }
   }
 
   /** Append a batch under the pinned layout — the corpus-loop form. */

@@ -45,14 +45,15 @@ object Compaction {
               targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     require(targetBytes > 0)
     val dir = new File(path)
+    restoreRetired(dir)
     val before = parquetFiles(dir)
     if (before.isEmpty) return (0, 0)
     val totalBytes = before.map(_.length()).sum
     val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val tmp = stagingDir(dir, "compacting")
-    spark.read.parquet(path).coalesce(n)
-      .write.mode("overwrite").parquet(tmp.toString)
-    swapInto(path, tmp.toString)
+    replace(path, "compacting") { staging =>
+      spark.read.parquet(path).coalesce(n).write.parquet(staging.toString)
+      true
+    }
     (before.length, parquetFiles(dir).length)
   }
 
@@ -82,30 +83,86 @@ object Compaction {
     } finally pool.shutdown()
   }
 
-  /** Recursive delete, shared by every rewrite-then-replace site. */
+  /** Recursive delete of a directory tree. */
   private[graft] def rm(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
     f.delete()
   }
 
-  /** The rename-based atomic swap: retire `path`, move `tmp` into its
-    * place, delete the retired copy; roll back if the final rename fails
-    * (the original data wins). Shared by [[compact]] and the index
-    * maintenance passes ([[graft.operators.Similarity.reclusterIvfIndex]])
-    * — any rewrite-then-replace follows this discipline. The retired copy
-    * is dot-prefixed ([[stagingDir]]) so a crash between the
-    * retire-rename and the cleanup leaves a dir Spark scans ignore.
+  /** The one staged commit behind every artifact rewrite: replace the
+    * directory at `path` with what `stage` writes into a fresh staging
+    * sibling (`.<name>__<suffix>`, see [[stagingDir]]), in order:
+    *
+    *  1. a sole-copy `.<name>__retired` (a crash between the two renames
+    *     of an earlier commit) is renamed back to `path` when `path` is
+    *     missing, so the stage reads the last committed state — never an
+    *     absent table, and the old copy is never deleted as garbage;
+    *  2. any stale staging of the same suffix is cleared;
+    *  3. `stage(staging)` writes the new contents and returns whether
+    *     there is anything to install;
+    *  4. `true`: the two-rename [[swapInto]] installs the staging and
+    *     removes the retired copy. `false` (the result is empty): the
+    *     staging is discarded and `path`, if present, is retired and
+    *     removed — a rename, so readers never see it half-deleted.
+    *
+    * If `stage` throws, `path` is untouched; what it staged stays in the
+    * dot-prefixed sibling (the state a crash leaves), which the next
+    * `replace` with the same suffix clears and [[vacuum]] sweeps.
+    * Returns what `stage` returned.
     */
-  def swapInto(path: String, tmp: String): Unit = {
+  def replace(path: String, suffix: String)(stage: File => Boolean)
+      : Boolean = {
     val dir = new File(path)
-    val tmpDir = new File(tmp)
+    restoreRetired(dir)
+    val staging = stagingDir(dir, suffix)
+    if (staging.exists()) rm(staging)
+    val install = stage(staging)
+    if (install) swapInto(dir, Some(staging))
+    else { rm(staging); swapInto(dir, None) }
+    install
+  }
+
+  /** Write a single-file sidecar (a watermark, a counter, a layout pin)
+    * so no reader ever sees it truncated: the text lands in a dot-
+    * prefixed temp sibling, then one atomic move replaces `path`.
+    */
+  def writeFile(path: String, text: String): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    val tmp = stagingDir(p.toFile, "writing").toPath
+    java.nio.file.Files.writeString(tmp, text)
+    java.nio.file.Files.move(tmp, p,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Crash recovery for the rename window of [[swapInto]]: when `dir` is
+    * missing but its `.<name>__retired` copy exists, that copy is the
+    * only one left — rename it back.
+    */
+  private def restoreRetired(dir: File): Unit = {
     val retired = stagingDir(dir, "retired")
-    if (retired.exists()) rm(retired) // garbage from a crashed cleanup
+    if (!dir.exists() && retired.exists() && !retired.renameTo(dir))
+      throw new java.io.IOException(s"cannot restore $retired to $dir")
+  }
+
+  /** The rename-based atomic swap: retire `dir`, move `staged` into its
+    * place (none: leave `dir` absent), delete the retired copy; roll back
+    * if the install rename fails (the original data wins). The retired
+    * copy is dot-prefixed ([[stagingDir]]) so a crash between the renames
+    * leaves a dir Spark scans ignore, which the next [[replace]] restores.
+    */
+  private def swapInto(dir: File, staged: Option[File]): Unit = {
+    restoreRetired(dir)
+    val retired = stagingDir(dir, "retired")
+    if (retired.exists()) rm(retired) // garbage: the live copy exists
     if (dir.exists() && !dir.renameTo(retired))
-      throw new java.io.IOException(s"cannot retire $path")
-    if (!tmpDir.renameTo(dir)) {
-      retired.renameTo(dir) // roll back — the original data wins
-      throw new java.io.IOException(s"cannot swap $tmp into $path")
+      throw new java.io.IOException(s"cannot retire $dir")
+    staged.foreach { tmp =>
+      if (!tmp.renameTo(dir)) {
+        retired.renameTo(dir) // roll back — the original data wins
+        throw new java.io.IOException(s"cannot swap $tmp into $dir")
+      }
     }
     rm(retired)
   }
@@ -132,14 +189,15 @@ object Compaction {
                     org.apache.spark.sql.Column,
                   readOptions: Map[String, String] = Map.empty): Unit = {
     val dir = new File(path)
+    restoreRetired(dir)
     if (!dir.exists()) return
-    val table = spark.read.options(readOptions).parquet(path)
-    val staging = stagingDir(dir, "retract")
-    if (staging.exists()) rm(staging)
-    table.join(org.apache.spark.sql.functions.broadcast(keys),
-        cond(table, keys), "left_anti")
-      .write.mode("overwrite").parquet(staging.toString)
-    swapInto(path, staging.toString)
+    replace(path, "retract") { staging =>
+      val table = spark.read.options(readOptions).parquet(path)
+      table.join(org.apache.spark.sql.functions.broadcast(keys),
+          cond(table, keys), "left_anti")
+        .write.parquet(staging.toString)
+      true
+    }
   }
 
   /** TAKEDOWN rewrite of the TOUCHED leaves of a partitioned table in
@@ -197,6 +255,7 @@ object Compaction {
         s"leaf tuple $t does not match partition columns $partCols")
       partCols.zip(t).map { case (c, v) => s"$c=$v" }.mkString("/")
     }
+    leaves.foreach(t => restoreRetired(new File(rootDir, leafRel(t))))
     val live = leaves.filter(t => new File(rootDir, leafRel(t)).exists())
     if (live.isEmpty) return
     // Guard: the pruned scan matches partition values through their
@@ -237,7 +296,7 @@ object Compaction {
             dataSchema)
           .write.mode("overwrite").parquet(stagedLeaf.toString)
       }
-      swapInto(leaf.toString, stagedLeaf.toString)
+      swapInto(leaf, Some(stagedLeaf))
     }
     rm(staging)
   }
@@ -273,7 +332,7 @@ object Compaction {
                           held: Seq[String])
 
   /** GC of crash orphans under `root`: every staged rewrite in the engine
-    * goes through [[stagingDir]]'s `.name__suffix` siblings + [[swapInto]],
+    * goes through [[replace]]'s `.name__suffix` staging siblings,
     * so a crash mid-rewrite leaves a dot-prefixed directory that every
     * Spark scan ignores (correctness is unaffected — that is the point of
     * the dot) but that holds disk forever and, for partition leaves, gets
@@ -291,7 +350,8 @@ object Compaction {
     *  - a `retired` dir is removed only when its live sibling EXISTS: a
     *    crash between [[swapInto]]'s retire-rename and install-rename
     *    leaves `.name__retired` as the ONLY copy of the data — those are
-    *    reported in `held`, never deleted;
+    *    reported in `held`, never deleted (the next [[replace]] of that
+    *    path restores them);
     *  - an age guard: a candidate whose tree was modified within
     *    `minAgeMs` is skipped — it may be a rewrite IN FLIGHT on another
     *    driver (the bounded-pool leaf rewrites run concurrently).

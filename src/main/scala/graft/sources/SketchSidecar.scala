@@ -858,12 +858,9 @@ object SketchSidecar {
       (if (hasKmv) out.withColumn("kmvk", lit(cfg.kmvK)) else out)
       .coalesce(1)
       .localCheckpoint(true)
-    try {
-      val dir = new java.io.File(cfg.sidecarPath)
-      val staging = Compaction.stagingDir(dir, "rowmerge")
-      if (staging.exists()) Compaction.rm(staging)
-      outK.write.mode("overwrite").parquet(staging.toString)
-      Compaction.swapInto(cfg.sidecarPath, staging.toString)
+    try Compaction.replace(cfg.sidecarPath, "rowmerge") { staging =>
+      outK.write.parquet(staging.toString)
+      true
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(outK)
   }
 
@@ -1423,7 +1420,7 @@ object SketchSidecar {
     * merged row, so serve cost stays O(1) no matter how many batches the
     * corpus has seen — the file-level `compactEvery` pass bounds FILE
     * count; this bounds ROW count. Atomic via the same staged
-    * [[Compaction.swapInto]] rename every sidecar rewrite uses; safe to
+    * [[Compaction.replace]] every sidecar rewrite uses; safe to
     * run on any cadence (weekly/monthly), and appends keep landing
     * next to the merged row afterwards.
     *
@@ -1519,12 +1516,9 @@ object SketchSidecar {
       .coalesce(1)
       // sever lineage from the files the swap below replaces
       .localCheckpoint(true)
-    try {
-      val dir = new java.io.File(cfg.sidecarPath)
-      val staging = Compaction.stagingDir(dir, "rowmerge")
-      if (staging.exists()) Compaction.rm(staging)
-      out.write.mode("overwrite").parquet(staging.toString)
-      Compaction.swapInto(cfg.sidecarPath, staging.toString)
+    try Compaction.replace(cfg.sidecarPath, "rowmerge") { staging =>
+      out.write.parquet(staging.toString)
+      true
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(out)
   }
 

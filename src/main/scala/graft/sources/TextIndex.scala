@@ -156,10 +156,8 @@ object TextIndex {
           "the postings schema is pinned at creation; re-create the " +
           "index to change it")
     } else {
-      new File(cfg.indexPath).mkdirs()
-      java.nio.file.Files.writeString(f.toPath, cfg.partitions.toString)
-      if (cfg.positional)
-        java.nio.file.Files.writeString(posFile(cfg).toPath, "true")
+      Compaction.writeFile(f.toString, cfg.partitions.toString)
+      if (cfg.positional) Compaction.writeFile(posFile(cfg).toString, "true")
     }
   }
 
@@ -252,16 +250,14 @@ object TextIndex {
         .select((col("__sn") - col("__on")).as("n_docs"),
           (col("__ss") - col("__os")).as("sum_len"))
         .collect().head // two scalars — bounded driver state
-      val dir = new File(statsPath(cfg))
-      val staging = Compaction.stagingDir(dir, "readmit")
-      if (staging.exists()) Compaction.rm(staging)
       import spark.implicits._
-      Seq((folded.getLong(0), folded.getLong(1))).toDF("n_docs", "sum_len")
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      if (!kept.isEmpty)
-        kept.write.mode("overwrite")
-          .parquet(new File(staging, ".retract_ledger").toString)
-      Compaction.swapInto(statsPath(cfg), staging.toString)
+      Compaction.replace(statsPath(cfg), "readmit") { staging =>
+        Seq((folded.getLong(0), folded.getLong(1))).toDF("n_docs", "sum_len")
+          .coalesce(1).write.parquet(staging.toString)
+        if (!kept.isEmpty)
+          kept.write.parquet(new File(staging, ".retract_ledger").toString)
+        true
+      }
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(kept)
   }
 
@@ -845,12 +841,11 @@ object TextIndex {
     val sl = spark.read.parquet(postingsPath(cfg))
       .agg(coalesce(sum("tf"), lit(0L))).collect().head.getLong(0)
     import spark.implicits._
-    val dir = new File(statsPath(cfg))
-    val staging = Compaction.stagingDir(dir, "statsheal")
-    if (staging.exists()) Compaction.rm(staging)
-    Seq((n, sl)).toDF("n_docs", "sum_len")
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    Compaction.swapInto(statsPath(cfg), staging.toString)
+    Compaction.replace(statsPath(cfg), "statsheal") { staging =>
+      Seq((n, sl)).toDF("n_docs", "sum_len")
+        .coalesce(1).write.parquet(staging.toString)
+      true
+    }
   }
 
   /** Small-files maintenance: per-term-partition rewrite of the postings
@@ -868,11 +863,10 @@ object TextIndex {
     val merged = mergedStats(spark, cfg)
       .collect().head // two scalars — bounded driver state
     import spark.implicits._
-    val dir = new File(sp)
-    val staging = Compaction.stagingDir(dir, "statsmerge")
-    if (staging.exists()) Compaction.rm(staging)
-    Seq((merged.getLong(0), merged.getLong(1))).toDF("n_docs", "sum_len")
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    Compaction.swapInto(sp, staging.toString)
+    Compaction.replace(sp, "statsmerge") { staging =>
+      Seq((merged.getLong(0), merged.getLong(1))).toDF("n_docs", "sum_len")
+        .coalesce(1).write.parquet(staging.toString)
+      true
+    }
   }
 }

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * `<root>__tombstones`, not inside the artifact root — two of the
   * artifact layouts are wholesale-swapped by their physical excision
   * (the media hash index and the flat label store rewrite their entire
-  * root via [[Compaction.swapInto]], which would destroy an in-root
+  * root via [[Compaction.replace]], which would destroy an in-root
   * overlay with the retired copy), and the partitioned label store's
   * partition discovery must not see a foreign subdirectory. A sibling
   * survives every rewrite shape and is invisible to every table scan.

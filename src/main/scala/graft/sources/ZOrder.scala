@@ -96,7 +96,7 @@ object ZOrder {
   /** Re-cluster a table whose layout decayed under appends — the
     * lakehouse `OPTIMIZE ZORDER BY` maintenance verb: one staged
     * [[clusteredWrite]] of the current contents + the atomic whole-root
-    * swap ([[graft.sources.Compaction.swapInto]] — a crash leaves the
+    * swap ([[graft.sources.Compaction.replace]] — a crash leaves the
     * original intact or the retired copy recoverable, never a mix).
     * Content is IDENTICAL after (same rows, new file layout), so every
     * reader and sidecar is untouched; run it when [[clusterStats]]'s
@@ -139,7 +139,7 @@ object ZOrder {
     * Crash contract: the staged dir (`.root__zorderinc`) either swaps
     * in whole or is GC'd by [[Compaction.vacuum]]'s parent-sibling
     * sweep; hardlinked carry-overs keep their inodes alive when
-    * [[Compaction.swapInto]] retires the old root, so no crash window
+    * [[Compaction.replace]] retires the old root, so no crash window
     * holds the only copy of an untouched file. Falls back to a byte
     * copy on filesystems without hardlinks.
     */
@@ -188,16 +188,6 @@ object ZOrder {
         fracs.length.toLong, 0L)
     val decayed = decayed0.map(f => toFile(f._1))
     val tight = tight0.map(f => toFile(f._1))
-    val staging = Compaction.stagingDir(dir, "zorderinc")
-    if (staging.exists()) Compaction.rm(staging)
-    staging.mkdirs()
-    tight.foreach { f =>
-      val link = new java.io.File(staging, f.getName).toPath
-      try java.nio.file.Files.createLink(link, f.toPath)
-      catch { case _: UnsupportedOperationException |
-                   _: java.nio.file.FileSystemException =>
-        java.nio.file.Files.copy(f.toPath, link) }
-    }
     val bytes = decayed.map(_.length()).sum
     // rewrite granularity: sized by bytes, or pinned by the caller when
     // the rewritten subset must land at a specific file count (the
@@ -205,12 +195,22 @@ object ZOrder {
     val n = rewritePartitions.getOrElse(
       math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt)
     val z = zValue(clusterCols.map(col), bits)
-    // mode Append: the staged dir already holds the carried-over links
-    spark.read.parquet(decayed.map(_.toString).toIndexedSeq: _*)
-      .repartitionByRange(n, z)
-      .sortWithinPartitions(z)
-      .write.mode("append").parquet(staging.toString)
-    Compaction.swapInto(path, staging.toString)
+    Compaction.replace(path, "zorderinc") { staging =>
+      staging.mkdirs()
+      tight.foreach { f =>
+        val link = new java.io.File(staging, f.getName).toPath
+        try java.nio.file.Files.createLink(link, f.toPath)
+        catch { case _: UnsupportedOperationException |
+                     _: java.nio.file.FileSystemException =>
+          java.nio.file.Files.copy(f.toPath, link) }
+      }
+      // mode Append: the staged dir already holds the carried-over links
+      spark.read.parquet(decayed.map(_.toString).toIndexedSeq: _*)
+        .repartitionByRange(n, z)
+        .sortWithinPartitions(z)
+        .write.mode("append").parquet(staging.toString)
+      true
+    }
     PartialReclusterReport(fracs.length.toLong, decayed.length.toLong,
       tight.length.toLong, bytes)
   }
@@ -218,14 +218,11 @@ object ZOrder {
   def recluster(spark: org.apache.spark.sql.SparkSession, path: String,
                 clusterCols: Seq[String], bits: Int = 16,
                 partitions: Int = 8): Unit = {
-    val dir = new java.io.File(path)
     // sever lineage from the files about to be swapped out
     val snap = spark.read.parquet(path).localCheckpoint(true)
-    try {
-      val staging = Compaction.stagingDir(dir, "zorder")
-      if (staging.exists()) Compaction.rm(staging)
+    try Compaction.replace(path, "zorder") { staging =>
       clusteredWrite(snap, staging.toString, clusterCols, bits, partitions)
-      Compaction.swapInto(path, staging.toString)
+      true
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(snap)
   }
 }

@@ -60,6 +60,27 @@ class JobsPipelineSpec extends AnyFunSuite with SparkFixture {
       "Đã hết thời gian ứng tuyển", "Đã hết thời gian ứng tuyển"))
   }
 
+  test("refreshRemainingTime: a refresh that fails at run time leaves " +
+      "the jobs table unchanged, and the next refresh converges") {
+    val root = Files.createTempDirectory("jobs_fail")
+    val dir = root.resolve("jobs").toString
+    JobsPipeline.cleanStaging(mkStaging(), anchor)
+      .write.mode("overwrite").parquet(dir)
+    def table() = spark.read.parquet(dir).orderBy("job_link").collect().toSeq
+    val before = table()
+    // the anchor raises only when a row evaluates it, i.e. mid-write
+    val boom = raise_error(lit("refresh failed")).cast("timestamp_ntz")
+    intercept[Exception](JobsPipeline.refreshRemainingTime(spark, dir, boom))
+    assert(table() === before)
+    assert(!new java.io.File(dir + ".refresh.tmp").exists())
+    val nextDay = lit("2026-08-13 12:00:00").cast("timestamp_ntz")
+    assert(JobsPipeline.refreshRemainingTime(spark, dir, nextDay) === 3)
+    assert(spark.read.parquet(dir).orderBy("job_link")
+      .select("remaining_time").as[String].collect().head ===
+      "Còn 23 ngày để ứng tuyển")
+    assert(root.toFile.list().toSeq === Seq("jobs"))
+  }
+
   test("typed Dataset[Job] view over the cleaned table (S6 schema)") {
     val ds = JobsPipeline.cleanStaging(mkStaging(), anchor)
       .withColumn("posted_date", col("posted_date").cast("timestamp"))

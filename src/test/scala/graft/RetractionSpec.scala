@@ -4,8 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Components, Dedup, FlatIndex, Merge, Multimodal,
-  Retraction, Similarity, VectorCodec}
+import graft.operators.{CellIndex, Components, Dedup, FlatIndex, Merge,
+  Multimodal, Pq, Retraction, Similarity, VectorCodec}
 import graft.sources.{BloomKeyIndex, TextIndex}
 
 /** The takedown verb: retractDocs must excise a document from the corpus
@@ -1289,6 +1289,18 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
       assert(r.getLong(1) === n, r)            // ids
       assert((2 to 5).map(r.getLong) === Seq(0L, 0L, 0L, 0L), r)
     }
+    // an IVF-PQ ANN index (codes under codes/, the corpus pipeline's
+    // layout) gets its own row, and a stray id in it is a leak
+    val ann = root.resolve("ann").toString
+    val pq = CellIndex(ann, Pq.Codec(m = 2, k = 4, iters = 2), nlist = 2)
+    pq.write(docs, "doc_id", "embedding")
+    pq.append(Seq((99L, embed(99L))).toDF("doc_id", "embedding"),
+      "doc_id", "embedding")
+    val withAnn = Retraction.audit(spark,
+        a.copy(annIndexPath = Some(ann))).collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(withAnn("ann_index").getLong(1) === n + 1)
+    assert(withAnn("ann_index").getLong(4) === 1L, "extra_leaked")
     // EXTRA: index a stray doc the corpus never admitted — it is
     // SERVING (leak) until a tombstone covers it
     TextIndex.appendBatch(Seq((99L, "hash join stray")).toDF(

@@ -402,7 +402,7 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
       "a mixed or partial listing") {
     // The entire maintenance story (compaction, recluster, triage) hangs
     // on the single-parent-rename discipline: every rewrite lands in a
-    // dot-prefixed staging sibling and is installed by swapInto's two
+    // dot-prefixed staging sibling and is installed by replace's two
     // renames. This spec is the CONTRACT test — a reader racing the swap
     // must never observe a half-old/half-new directory. Each generation
     // writes a disjoint, self-describing value set across several files
@@ -456,10 +456,10 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
       while (g < maxGen || (reads.get() == 0 && g < hardCap)) {
         g += 1
         lastGen = g.toLong
-        val staging = Compaction
-          .stagingDir(new java.io.File(path), "rewrite")
-        genData(g.toLong).write.mode("overwrite").parquet(staging.toString)
-        Compaction.swapInto(path, staging.toString)
+        Compaction.replace(path, "rewrite") { staging =>
+          genData(g.toLong).write.parquet(staging.toString)
+          true
+        }
         if (g >= maxGen) Thread.sleep(50) // give the reader a window
       }
     } finally { stop = true; reader.join(30000) }
@@ -474,6 +474,134 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     val leftovers = Option(root.toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName != "t")
     assert(leftovers.isEmpty, leftovers.mkString(", "))
+  }
+
+  // A table `t` under a fresh root, its sorted rows, and the root's
+  // listing (name, size per file) — the crash-window cases below compare
+  // both before and after.
+  private def crashRoot(tag: String): (java.io.File, String) = {
+    val root = java.nio.file.Files.createTempDirectory(tag).toFile
+    val path = new java.io.File(root, "t").toString
+    (0 until 100).toDF("v").repartition(3).write.parquet(path)
+    (root, path)
+  }
+  private def rowsOf(path: String): Seq[Int] =
+    spark.read.parquet(path).as[Int].collect().toSeq.sorted
+  private def listing(dir: java.io.File): Seq[(String, Long)] =
+    Option(dir.listFiles()).getOrElse(Array.empty).toSeq
+      .flatMap(f => if (f.isDirectory) listing(f).map { case (n, l) =>
+        (f.getName + "/" + n, l) } else Seq((f.getName, f.length())))
+      .sorted
+  private def bump(path: String): Boolean =
+    graft.sources.Compaction.replace(path, "rewrite") { staging =>
+      spark.read.parquet(path).select((col("v") + 1000).as("v"))
+        .write.parquet(staging.toString)
+      true
+    }
+
+  test("replace crash window: a stage that throws leaves the table's " +
+      "files and rows identical; the rerun commits and leaves no " +
+      "staging sibling; an empty result removes the table") {
+    import graft.sources.Compaction
+    val (root, path) = crashRoot("replace_throw")
+    val files = listing(new java.io.File(path))
+    val rows = rowsOf(path)
+    intercept[IllegalStateException] {
+      Compaction.replace(path, "rewrite") { staging =>
+        spark.read.parquet(path).write.parquet(staging.toString)
+        throw new IllegalStateException("crash after the staged write")
+      }
+    }
+    assert(listing(new java.io.File(path)) === files)
+    assert(rowsOf(path) === rows)
+    assert(new java.io.File(root, ".t__rewrite").exists(),
+      "a crashed stage leaves its staging for the next commit")
+    assert(bump(path))
+    assert(rowsOf(path) === rows.map(_ + 1000))
+    assert(root.list().toSeq === Seq("t"))
+    assert(!Compaction.replace(path, "rewrite")(_ => false))
+    assert(root.list().isEmpty, "an empty result removes the table whole")
+  }
+
+  test("replace crash window: a sole-copy .t__retired (crash between " +
+      "the retire and install renames) is restored, and the rerun " +
+      "converges to the rows of a clean run") {
+    val (root, path) = crashRoot("replace_retired")
+    val (_, cleanPath) = crashRoot("replace_clean")
+    bump(cleanPath)
+    // the on-disk state of that crash: the live dir is gone, the old
+    // data survives only as `.t__retired`, the staging was never moved
+    assert(new java.io.File(path)
+      .renameTo(new java.io.File(root, ".t__retired")))
+    (0 until 5).toDF("v").write.parquet(
+      new java.io.File(root, ".t__rewrite").toString)
+    assert(bump(path))
+    assert(rowsOf(path) === rowsOf(cleanPath))
+    assert(root.list().toSeq === Seq("t"))
+    // the takedown rewrite sees the restored rows too, never an absent
+    // table it would skip
+    assert(new java.io.File(path)
+      .renameTo(new java.io.File(root, ".t__retired")))
+    graft.sources.Compaction.retractRows(spark, path,
+      Seq(1000).toDF("k"), (t, k) => t("v") === k("k"))
+    assert(rowsOf(path) === rowsOf(cleanPath).filterNot(_ == 1000))
+    assert(root.list().toSeq === Seq("t"))
+  }
+
+  test("writeFile never exposes a truncated file to a concurrent reader") {
+    val root = java.nio.file.Files.createTempDirectory("write_file").toFile
+    val f = new java.io.File(root, "wm.json")
+    def text(g: Int): String = s"$g:" + ("x" * 200000) + s":$g"
+    graft.sources.Compaction.writeFile(f.toString, text(0))
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    @volatile var stop = false
+    val reader = new Thread(() => {
+      while (!stop) {
+        val s = java.nio.file.Files.readString(f.toPath)
+        reads.incrementAndGet()
+        val g = scala.util.Try(s.takeWhile(_ != ':').toInt).getOrElse(-1)
+        if (s != text(g)) bad.add(s"torn read of ${s.length} chars")
+      }
+    })
+    reader.start()
+    try (1 to 60).foreach(g =>
+      graft.sources.Compaction.writeFile(f.toString, text(g)))
+    finally { stop = true; reader.join(30000) }
+    assert(bad.isEmpty, String.valueOf(bad.peek()))
+    assert(reads.get() > 0)
+    assert(java.nio.file.Files.readString(f.toPath) === text(60))
+    assert(root.list().toSeq === Seq("wm.json"))
+  }
+
+  test("source guard: every commit in src/main goes through Compaction " +
+      "(no stagingDir/swapInto/renameTo/ATOMIC_MOVE elsewhere)") {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val mainDir = new java.io.File("src/main/scala")
+    assert(mainDir.isDirectory, s"run from the repo root, not ${
+      new java.io.File(".").getAbsolutePath}")
+    val patterns = Seq("stagingDir(", "swapInto(", "renameTo(", "ATOMIC_MOVE")
+    val hits = for {
+      f <- scalaFiles(mainDir) if f.getName != "Compaction.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq.zipWithIndex
+      if patterns.exists(line.contains)
+    } yield (f.getName, i + 1, line.trim)
+    // the streaming triage CLAIMS the quarantine queue by renaming it
+    // (the claimed dir is the sole copy, recovered on the next run) —
+    // a claim, not a commit
+    val claims = hits.filter { case (f, _, l) =>
+      f == "CorpusStream.scala" &&
+        (l.contains("""stagingDir(qDir, "triage")""") ||
+          l.contains("qDir.renameTo(claimed)"))
+    }
+    assert(claims.size === 4, claims)
+    assert(hits.diff(claims).isEmpty,
+      s"hand-rolled commit outside Compaction: ${hits.diff(claims)}")
   }
 
   test("bucketed equi-join plans without a shuffle exchange") {
