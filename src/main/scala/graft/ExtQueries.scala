@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextAnalysis, Vectors}
 import graft.operators.{CellIndex, Components, Contamination, Dedup,
   FlatIndex, Keywords, Merge, Multimodal, Pq, Similarity, VectorCodec}
+import graft.operators.CellAssigner.{Hyperplane, Voronoi}
+import graft.operators.VectorCodec.Exact
 
 /** LLM-training-data-pipeline extension operators over the `documents` /
   * `embeddings` tables (builder brief + SURVEY.md §7.1.6): dedup, similarity
@@ -546,12 +548,29 @@ object ExtQueries {
     val idx = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_emb_drift_idx_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-    Similarity.writeIvfIndex(
+    CellIndex(idx, Voronoi(nlist = 8), Exact).write(
       embs(s, d).filter(pmod(col("vec_id"), lit(5)) =!= 0),
-      "vec_id", "embedding", idx, nlist = 8, kmeansIters = 0)
+      "vec_id", "embedding")
     graft.operators.Divergence.writeCellOccupancy(s, idx)
     idx
   }
+
+  /** Semantic near-dup matches of an arriving batch against an INDEXED
+    * corpus — [[Dedup.dedupAgainstIndex]]'s move applied to embeddings:
+    * the plain IVF index's threshold search (the batch probes its cells
+    * with the frozen centroids, the index is read only in those cell
+    * directories, candidates verify by exact cosine), a batch row never
+    * matching its own id. Precision is exact; recall is bounded by cell
+    * co-residence. Returns (new_id, corpus_id, cosine).
+    */
+  private def semanticDupAgainst(s: SparkSession, ix: CellIndex,
+                                 batch: DataFrame,
+                                 threshold: Double): DataFrame =
+    ix.withinThreshold(s, "vec_id", "embedding", batch, "vec_id",
+        "embedding", threshold)
+      .where(col("query_id") =!= col("vec_id"))
+      .select(col("query_id").as("new_id"), col("vec_id").as("corpus_id"),
+        col("score").as("cosine"))
 
   /** Recall of `approx` against ground-truth `truth` on key columns `keys`,
     * as a 1-row frame (found, total, recall, meets_floor) — puts the
@@ -1923,8 +1942,8 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_index_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 4,
-        nprobe = 3, kmeansIters = 2)
+      val ix = CellIndex(idx, Voronoi(nlist = 4, nprobe = 3, kmeansIters = 2),
+        Pq.Codec(m = 16, k = 16))
       ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceTopK(corpus, "vec_id", "embedding",
@@ -1962,10 +1981,9 @@ object ExtQueries {
       // partials in nondeterministic order — low-bit centroid drift could
       // flip boundary vectors' cells and change the row set run-to-run.
       // Seeds are pure lowest-id vectors: bit-stable everywhere.
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 4, kmeansIters = 0)
-      Similarity.semanticDupAgainstIndex(batch, "vec_id", "embedding",
-          idx, threshold = 0.4, probes = 2)
+      val ix = CellIndex(idx, Voronoi(nlist = 4, nprobe = 2), Exact)
+      ix.write(corpus, "vec_id", "embedding")
+      semanticDupAgainst(s, ix, batch, 0.4)
         .select(col("new_id"), col("corpus_id"),
           round(col("cosine"), 6).as("cosine"))
         .transform(Queries.presentSorted(_, "new_id", "corpus_id"))
@@ -1982,8 +2000,8 @@ object ExtQueries {
         sys.props("java.io.tmpdir"),
         "graft_ivf_semdedup_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
       // kmeansIters = 0: same deterministic index as the rows query above
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 4, kmeansIters = 0)
+      val ix = CellIndex(idx, Voronoi(nlist = 4, nprobe = 2), Exact)
+      ix.write(corpus, "vec_id", "embedding")
       val truth = batch
         .select(col("vec_id").as("new_id"),
           graft.functions.Vectors.toDouble(col("embedding")).as("bv"))
@@ -1995,9 +2013,7 @@ object ExtQueries {
       // recall (0.76 at sf0.01 — Lloyd refinement would buy ~0.08 at the
       // cost of run-to-run drift in the rows artifact) is exactly
       // reproducible; the floor still leaves slack for fixture changes
-      recallOf(truth,
-        Similarity.semanticDupAgainstIndex(batch, "vec_id", "embedding",
-          idx, threshold = 0.4, probes = 2),
+      recallOf(truth, semanticDupAgainst(s, ix, batch, 0.4),
         Seq("new_id", "corpus_id"), floor = 0.7)
     }),
 
@@ -2659,8 +2675,8 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_append_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 4,
-        nprobe = 3, kmeansIters = 2)
+      val ix = CellIndex(idx, Voronoi(nlist = 4, nprobe = 3, kmeansIters = 2),
+        Pq.Codec(m = 16, k = 16))
       ix.write(initial, "vec_id", "embedding")
       ix.append(batch, "vec_id", "embedding")
       recallOf(
@@ -2723,19 +2739,20 @@ object ExtQueries {
       // seed centroids (kmeansIters=0): concrete rows land in the
       // artifact, and Lloyd's shuffle-order float drift could flip
       // boundary cells run-to-run (same stance as emb_semdedup_incremental)
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0)
-      Similarity.ivfBatchTopKFromIndex(s, idx, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5, nprobe = 3)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 3), Exact)
+      ix.write(corpus, "vec_id", "embedding")
+      ix.batchTopK(s, "vec_id", "embedding", queries, "vec_id", "embedding",
+          k = 5)
         .select(col("query_id"), col("vec_id"),
           round(col("score"), 6).as("score"))
         .transform(Queries.presentSorted(_, "query_id", "vec_id"))
     }),
 
     // batched ≡ per-query-loop consistency, MACHINE-ENFORCED at floor 1.0:
-    // the truth side literally loops ivfTopKFromIndex over the same query
-    // table (the contract the batched plan replaces), so ANY divergence —
-    // cell ranking, tie-breaks, score arithmetic — reads as spark_rows: 0
+    // the truth side literally loops the single-query serve over the same
+    // query table (the contract the batched plan replaces), so ANY
+    // divergence — cell ranking, tie-breaks, score arithmetic — reads as
+    // spark_rows: 0
     "ann_ivf_batched_recall" -> ((s, d) => {
       import s.implicits._
       val all = embs(s, d)
@@ -2744,22 +2761,21 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivf_batched_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 3), Exact)
+      ix.write(corpus, "vec_id", "embedding")
       val qRows = queries.select(col("vec_id"),
           col("embedding").cast("array<float>"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1)))
       val truth = qRows.flatMap { case (qid, v) =>
-        Similarity.ivfTopKFromIndex(s, idx, "vec_id", "embedding",
-            Seq((qid, v)).toDF("vec_id", "embedding"), "embedding",
-            k = 5, nprobe = 3)
+        ix.topK(s, "vec_id", "embedding",
+            Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", k = 5)
           .select("vec_id").as[Long].collect()
           .map(id => (qid, id))
       }.toSeq.toDF("query_id", "vec_id")
       recallOf(truth,
-        Similarity.ivfBatchTopKFromIndex(s, idx, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5, nprobe = 3),
+        ix.batchTopK(s, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 5),
         Seq("query_id", "vec_id"), floor = 1.0)
     }),
 
@@ -2775,14 +2791,14 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivf_batched_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 4), Exact)
+      ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5)
           .select("query_id", "vec_id"),
-        Similarity.ivfBatchTopKFromIndex(s, idx, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5, nprobe = 4),
+        ix.batchTopK(s, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 5),
         Seq("query_id", "vec_id"), floor = 0.5)
     }),
 
@@ -2841,10 +2857,9 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivf_filtered_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0, attrCols = Seq("label"))
-      Similarity.ivfTopKFromIndex(s, idx, "vec_id", "embedding",
-          query, "embedding", k = 10, nprobe = 4,
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 4), Exact)
+      ix.write(corpus, "vec_id", "embedding", attrCols = Seq("label"))
+      ix.topK(s, "vec_id", "embedding", query, "embedding", k = 10,
           filter = Some(col("label") === 2))
         .select(col("vec_id"), round(col("score"), 6).as("score"))
     }),
@@ -2859,13 +2874,12 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivf_filtered_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0, attrCols = Seq("label"))
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 4), Exact)
+      ix.write(corpus, "vec_id", "embedding", attrCols = Seq("label"))
       recallOf(
         Similarity.bruteForceTopK(corpus.filter(col("label") === 2),
           "vec_id", "embedding", query, "embedding", 10).select("vec_id"),
-        Similarity.ivfTopKFromIndex(s, idx, "vec_id", "embedding",
-          query, "embedding", k = 10, nprobe = 4,
+        ix.topK(s, "vec_id", "embedding", query, "embedding", k = 10,
           filter = Some(col("label") === 2)),
         Seq("vec_id"), floor = 0.5)
     }),
@@ -2877,7 +2891,7 @@ object ExtQueries {
     // Selectivity eats CELL coverage here (a 10%-selective predicate's
     // true top-10 reaches ~20% down the label's ranking, spread across
     // more cells): nprobe rises to 6/8 — the raise-nprobe-with-
-    // selectivity guidance on ivfTopKFromIndex, measured (4/8 → 0.4,
+    // selectivity guidance on the plain IVF serve, measured (4/8 → 0.4,
     // 6/8 → 0.6 fixture recall); oversample 8 already admits every
     // matching row the probed cells hold, so ADC isn't the limiter.
     "ann_ivfpq_filtered_recall" -> ((s, d) => {
@@ -2886,8 +2900,8 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_filt_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 8,
-        nprobe = 6, kmeansIters = 2)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 6, kmeansIters = 2),
+        Pq.Codec(m = 16, k = 16))
       ix.write(corpus, "vec_id", "embedding", attrCols = Seq("label"))
       recallOf(
         Similarity.bruteForceTopK(corpus.filter(col("label") === 2),
@@ -3009,8 +3023,8 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivf_stats_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 1)
+      CellIndex(idx, Voronoi(nlist = 8, kmeansIters = 1), Exact)
+        .write(corpus, "vec_id", "embedding")
       Similarity.ivfIndexStats(s, idx)
     }),
 
@@ -3048,7 +3062,7 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfsq_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      val ix = CellIndex(idx, VectorCodec.Sq8, nlist = 8, nprobe = 4)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 4), VectorCodec.Sq8)
       ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",
@@ -3115,7 +3129,7 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfbq_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      val ix = CellIndex(idx, VectorCodec.Bq, nlist = 8, nprobe = 4)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 4), VectorCodec.Bq)
       ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",
@@ -3153,12 +3167,12 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivf_hardneg_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeIvfIndex(corpus, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 4), Exact)
+      ix.write(corpus, "vec_id", "embedding")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("query_id").orderBy(col("score").desc, col("vec_id"))
-      val approx = Similarity.ivfBatchTopKFromIndex(s, idx, "vec_id",
-          "embedding", queries, "vec_id", "embedding", k = 30, nprobe = 4)
+      val approx = ix.batchTopK(s, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 30)
         .join(corpus.select(col("vec_id"), col("label")), "vec_id")
         .join(broadcast(queries.select(col("vec_id").as("query_id"),
           col("label").as("__qlabel"))), "query_id")
@@ -3183,21 +3197,21 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_lsh_batched_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeLshIndex(corpus, "vec_id", "embedding", idx,
-        nBits = 3, tables = 12)
+      val ix = CellIndex(idx, Hyperplane(nBits = 3, tables = 12), Exact)
+      ix.write(corpus, "vec_id", "embedding")
       val qRows = queries.select(col("vec_id"),
           col("embedding").cast("array<float>"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1)))
       val truth = qRows.flatMap { case (qid, v) =>
-        Similarity.lshTopKFromIndex(s, idx, "vec_id", "embedding",
+        ix.topK(s, "vec_id", "embedding",
             Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", 5)
           .select("vec_id").as[Long].collect()
           .map(id => (qid, id))
       }.toSeq.toDF("query_id", "vec_id")
       recallOf(truth,
-        Similarity.lshBatchTopKFromIndex(s, idx, "vec_id", "embedding",
-          queries, "vec_id", "embedding", k = 5),
+        ix.batchTopK(s, "vec_id", "embedding", queries, "vec_id",
+          "embedding", k = 5),
         Seq("query_id", "vec_id"), floor = 1.0)
     }),
 
@@ -3242,8 +3256,8 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_ivfpq_batched_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      val ix = CellIndex(idx, Pq.Codec(m = 16, k = 16), nlist = 8,
-        nprobe = 3)
+      val ix = CellIndex(idx, Voronoi(nlist = 8, nprobe = 3),
+        Pq.Codec(m = 16, k = 16))
       ix.write(corpus, "vec_id", "embedding")
       val qRows = queries.select(col("vec_id"),
           col("embedding").cast("array<float>"))
@@ -3711,13 +3725,13 @@ object ExtQueries {
       val idx = new java.io.File(
         sys.props("java.io.tmpdir"),
         "graft_lsh_index_" + d.replaceAll("[^A-Za-z0-9]", "_")).toString
-      Similarity.writeLshIndex(corpus, "vec_id", "embedding", idx,
-        nBits = 3, tables = 12)
+      val ix = CellIndex(idx, Hyperplane(nBits = 3, tables = 12), Exact)
+      ix.write(corpus, "vec_id", "embedding")
       recallOf(
         Similarity.bruteForceTopK(corpus, "vec_id", "embedding",
           query, "embedding", 10).select("vec_id"),
-        Similarity.lshTopKFromIndex(s, idx, "vec_id", "embedding",
-          query, "embedding", 10).select("vec_id"),
+        ix.topK(s, "vec_id", "embedding", query, "embedding", 10)
+          .select("vec_id"),
         Seq("vec_id"), floor = 0.7)
     }),
 
@@ -4026,10 +4040,10 @@ object ExtQueries {
       val bmHits = graft.sources.TextIndex.bm25TopK(s, fx.text, "doc_id",
           Seq("hash", "join", "vector"), k = 1000)
         .join(goneIds, Seq("doc_id"), "left_semi").count()
-      val annHits = graft.operators.Similarity.ivfTopKFromIndex(s, fx.ann,
-          "vec_id", "embedding",
+      val annHits = CellIndex(fx.ann, Voronoi(nprobe = 8), Exact)
+        .topK(s, "vec_id", "embedding",
           Tables.load(s, d, "embeddings").where(col("vec_id") === 83L),
-          "embedding", k = 500, nprobe = 8)
+          "embedding", k = 500)
         .join(goneIds.select(col("doc_id").as("vec_id")), Seq("vec_id"),
           "left_semi").count()
       // the index side of the gate: no batch may ever match AGAINST a
@@ -4070,10 +4084,10 @@ object ExtQueries {
       val bmHits = graft.sources.TextIndex.bm25TopK(s, fx.text, "doc_id",
           Seq("hash", "join", "vector"), k = 1000)
         .join(goneIds, Seq("doc_id"), "left_semi").count()
-      val annHits = graft.operators.Similarity.ivfTopKFromIndex(s, fx.ann,
-          "vec_id", "embedding",
+      val annHits = CellIndex(fx.ann, Voronoi(nprobe = 8), Exact)
+        .topK(s, "vec_id", "embedding",
           Tables.load(s, d, "embeddings").where(col("vec_id") === 83L),
-          "embedding", k = 500, nprobe = 8)
+          "embedding", k = 500)
         .join(goneIds.select(col("doc_id").as("vec_id")), Seq("vec_id"),
           "left_semi").count()
       val mhHits = graft.operators.Dedup.dedupAgainstIndex(docs(s, d),
@@ -4351,8 +4365,8 @@ object ExtQueries {
         () => kept = s.read.parquet(s"$idx/data").count(),
         () => nTruth = truth.count(),
         () => found = truth.join(
-          Similarity.ivfBatchTopKFromIndex(s, idx, "vec_id", "embedding",
-              queries, "vec_id", "embedding", k = 5, nprobe = 4)
+          CellIndex(idx, Voronoi(nprobe = 4), Exact).batchTopK(s, "vec_id",
+              "embedding", queries, "vec_id", "embedding", k = 5)
             .select("query_id", "vec_id"),
           Seq("query_id", "vec_id"), "left_semi").count()
       ))(_.apply())
@@ -4897,9 +4911,8 @@ object ExtQueries {
       graft.operators.Dedup.writeMinhashIndex(all, "doc_id", "text",
         fx.minhash)
       graft.sources.BloomKeyIndex.appendBatch(all, fx.bloom)
-      graft.operators.Similarity.writeIvfIndex(
-        Tables.load(s, d, "embeddings"), "vec_id", "embedding", fx.ann,
-        nlist = 8)
+      CellIndex(fx.ann, Voronoi(nlist = 8), Exact).write(
+        Tables.load(s, d, "embeddings"), "vec_id", "embedding")
       graft.operators.Retraction.retractDocs(s,
         all.where(pmod(col("doc_id"), lit(83)) === 0).select("doc_id"),
         "doc_id",
@@ -4945,9 +4958,8 @@ object ExtQueries {
       graft.sources.TextIndex.writeIndex(all, "doc_id", "text", fx.text)
       graft.operators.Dedup.writeMinhashIndex(all, "doc_id", "text",
         fx.minhash)
-      graft.operators.Similarity.writeIvfIndex(
-        Tables.load(s, d, "embeddings"), "vec_id", "embedding", fx.ann,
-        nlist = 8)
+      CellIndex(fx.ann, Voronoi(nlist = 8), Exact).write(
+        Tables.load(s, d, "embeddings"), "vec_id", "embedding")
       graft.operators.Retraction.tombstoneDocs(s,
         all.where(pmod(col("doc_id"), lit(83)) === 0).select("doc_id"),
         "doc_id", lazyArtifacts(fx))
@@ -5321,9 +5333,9 @@ object ExtQueries {
       val drifted = all.filter(pmod(col("vec_id"), lit(2)) === 1)
         .select("vec_id", "embedding")
       val idx = new java.io.File(root, "idx").toString
-      Similarity.writeIvfIndex(base, "vec_id", "embedding", idx,
-        nlist = 8, kmeansIters = 0)
-      Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", idx)
+      val ix = CellIndex(idx, Voronoi(nlist = 8), Exact)
+      ix.write(base, "vec_id", "embedding")
+      ix.append(drifted, "vec_id", "embedding")
       val corpus = base.unionByName(drifted)
       val queries = corpus.filter(pmod(col("vec_id"), lit(40)) === 0)
       Similarity.bruteForceBatchTopK(corpus, "vec_id", "embedding",

@@ -30,8 +30,6 @@ object Probe {
 
     probes(spark, sfDir).foreach { case (n, mk) => timed(n)(mk()) }
     if (which("takedown_parts")) takedownParts(spark, sfDir)
-    if (which("ivf_parts")) ivfParts(spark, sfDir)
-    if (which("recluster_parts")) reclusterParts(spark, sfDir)
     if (which("pagerank_parts")) pagerankParts(spark, sfDir)
     if (which("mh_parts")) mhParts(spark, sfDir)
     if (which("rewrite_plan")) rewritePlan(spark, sfDir)
@@ -76,40 +74,6 @@ object Probe {
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
   }
-
-  /** Decompose reclusterIvfIndex's phases on the staged decayed index:
-    * lineage checkpoint, seed collect, Lloyd iterations (1 vs 5 isolates
-    * the per-iteration cost), and the assignment+partitioned rewrite
-    * (timed as writeIvfIndex with kmeansIters=0 — same assign+write,
-    * no Lloyd). Two passes; pass 2 is the warm number.
-    */
-  def reclusterParts(s: SparkSession, d: String): Unit =
-    (1 to 2).foreach { pass =>
-      def t[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"PART p$pass $name%-30s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-        r
-      }
-      SparkEntry.prepares("q_ivf_recluster")(s, d)
-      val work = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_rc_work_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-      new java.io.File(work, "_PRISTINE").delete()
-      val idx = new java.io.File(work, "idx").toString
-      val corpus = t("checkpoint")(
-        s.read.parquet(s"$idx/data").drop("cell").localCheckpoint(true))
-      t("read_cents")(s.read.parquet(s"$idx/centroids").collect())
-      t("train_seeds_only")(graft.operators.Similarity.trainCentroids(
-        corpus, "vec_id", "embedding", 8, kmeansIters = 0))
-      t("train_1iter")(graft.operators.Similarity.trainCentroids(
-        corpus, "vec_id", "embedding", 8, kmeansIters = 1))
-      t("train_5iter")(graft.operators.Similarity.trainCentroids(
-        corpus, "vec_id", "embedding", 8, kmeansIters = 5))
-      val tmp = new java.io.File(work, "probe_write").toString
-      t("assign_write")(graft.operators.Similarity.writeIvfIndex(
-        corpus, "vec_id", "embedding", tmp, nlist = 8, kmeansIters = 0))
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(corpus)
-    }
 
   /** Decompose q_pagerank: the trade-edge build (fact-fact shuffle +
     * broadcast dims + edge aggregation), 1-round vs 5-round pageRank
@@ -171,45 +135,6 @@ object Probe {
       t("full_row_mh")(noop(SparkEntry.queries("dedup_clean_transitive_mh")(s, d)))
       t("full_row_minhash")(noop(SparkEntry.queries("dedup_minhash")(s, d)))
     }
-
-  /** Time q_ivf_recluster's sub-actions one by one on a fresh staged
-    * copy. */
-  def ivfParts(s: SparkSession, d: String): Unit =
-    (1 to 2).foreach { pass => ivfPartsOnce(s, d, pass) }
-
-  private def ivfPartsOnce(s: SparkSession, d: String, pass: Int): Unit = {
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PART p$pass $name%-30s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-    SparkEntry.prepares("q_ivf_recluster")(s, d)
-    val work = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_ivf_rc_work_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    new java.io.File(work, "_PRISTINE").delete()
-    val idx = new java.io.File(work, "idx").toString
-    import org.apache.spark.sql.functions._
-    t("stats.before")(graft.operators.Similarity.ivfIndexStats(s, idx)
-      .select("imbalance").first())
-    t("total.count")(s.read.parquet(s"$idx/data").count())
-    t("recluster")(graft.operators.Similarity.reclusterIvfIndex(
-      s, idx, "vec_id", "embedding", kmeansIters = 5))
-    t("stats.after")(graft.operators.Similarity.ivfIndexStats(s, idx)
-      .select("imbalance").first())
-    t("kept.count")(s.read.parquet(s"$idx/data").count())
-    val queries = s.read.parquet(s"$d/embeddings.parquet")
-      .filter(pmod(col("vec_id"), lit(40)) === 0)
-      .select("vec_id", "embedding")
-    val truth = s.read.parquet(new java.io.File(work, "truth").toString)
-    t("truth.count")(truth.count())
-    t("serve.found")(truth.join(
-      graft.operators.Similarity.ivfBatchTopKFromIndex(s, idx,
-          "vec_id", "embedding", queries, "vec_id", "embedding",
-          k = 5, nprobe = 4)
-        .select("query_id", "vec_id"),
-      Seq("query_id", "vec_id"), "left_semi").count())
-  }
 
   /** Time retractDocs' sub-verbs one by one on a fresh staged copy. */
   def takedownParts(s: SparkSession, d: String): Unit = {

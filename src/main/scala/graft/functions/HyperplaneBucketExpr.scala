@@ -75,4 +75,13 @@ object HyperplaneBucketExpr {
   def hyperplaneBucket(v: Column, nBits: Int, tableSeed: Int): Column =
     GraftBridge.column(HyperplaneBucketExpr(
       GraftBridge.expression(v), nBits, tableSeed))
+
+  /** The bucket of one driver-side vector — the same [[compute]] the
+    * planned expression runs. */
+  def bucketOf(v: Seq[Double], nBits: Int, tableSeed: Int): Long =
+    HyperplaneBucketExpr(
+      org.apache.spark.sql.catalyst.expressions.Literal(null,
+        ArrayType(DoubleType)), nBits, tableSeed)
+      .compute(new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        v.toArray))
 }

@@ -120,8 +120,8 @@ object CorpusPipeline {
                       trainSampleFraction: Double = 1.0,
                       compactEvery: Int = 0) extends CodecIndexCfg {
     def index: graft.operators.CodecIndex = graft.operators.CellIndex(
-      indexPath, graft.operators.Pq.Codec(m, k), nlist,
-      kmeansIters = kmeansIters)
+      indexPath, graft.operators.CellAssigner.Voronoi(nlist,
+        kmeansIters = kmeansIters), graft.operators.Pq.Codec(m, k))
   }
 
   /** Rows the frozen sidecars were trained on (−1 = no index yet). */

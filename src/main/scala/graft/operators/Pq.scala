@@ -99,7 +99,7 @@ object Pq {
     def defaultOversample = 4
     def storesRaw = false
     def table = "codes"
-    def codeCol = "pq_codes"
+    def codeCol = Some("pq_codes")
   }
 
   /** Train codebooks on a seeded sample (capped at `maxSample` rows

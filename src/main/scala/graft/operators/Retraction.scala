@@ -30,10 +30,10 @@ import org.apache.spark.sql.functions._
   *    keys table pruned to the keys' `kp=` partitions; the bloom keeps a
   *    stale positive that the exact-confirm join resolves, which is
   *    precisely the re-admission contract;
-  *  - ANN code/data  → [[Similarity.retractFromIndex]] — cell-pruned
-  *    rewrite (≤ nlist touched leaves), geometry sidecars untouched;
-  *  - LSH index      → [[Similarity.retractFromLshIndex]] —
-  *    (table, bucket)-pruned rewrite (≤ |ids|·tables leaves);
+  *  - ANN code/data  → [[CellIndex.retract]] — cell-pruned rewrite
+  *    (≤ nlist touched leaves), geometry sidecars untouched;
+  *  - LSH index      → [[CellIndex.retract]] — (table, bucket)-pruned
+  *    rewrite (≤ |ids|·tables leaves);
   *  - SQ8 / BQ index → [[FlatIndex.retract]] — one anti-join rewrite;
   *  - media/audio    → [[Multimodal.retractFromMediaIndex]];
   *  - label store    → [[Components.retractFromLabelStore]] + satellite
@@ -388,15 +388,16 @@ object Retraction {
           a.minhashIndexPath.foreach { p => tracks += (() =>
             Dedup.retractFromMinhashIndex(spark, p, keys, "__rid"))
           }
-          a.annIndexPath.foreach { p => tracks += (() =>
-            Similarity.retractFromIndex(spark, p, keys, "__rid",
-              a.annIdCol))
-          }
-          a.lshIndexPath.foreach { p => tracks += (() =>
-            Similarity.retractFromLshIndex(spark, p, keys, "__rid",
-              a.lshIdCol))
-          }
-          (a.sqIndexPath.map(FlatIndex(_, VectorCodec.Sq8) -> a.sqIdCol) ++
+          // the ANN index is IVF-family: raw vectors under data/ (plain
+          // IVF) or codes under codes/ (IVF-PQ); retract reads only the
+          // codec's table dir
+          (a.annIndexPath.map(p => CellIndex(p, CellAssigner.Voronoi(),
+              if (Similarity.cellTableDir(spark, p).endsWith("/data"))
+                VectorCodec.Exact
+              else Pq.Codec()) -> a.annIdCol) ++
+            a.lshIndexPath.map(CellIndex(_, CellAssigner.Hyperplane(),
+              VectorCodec.Exact) -> a.lshIdCol) ++
+            a.sqIndexPath.map(FlatIndex(_, VectorCodec.Sq8) -> a.sqIdCol) ++
             a.bqIndexPath.map(FlatIndex(_, VectorCodec.Bq) -> a.bqIdCol))
             .foreach { case (ix, idCol) => tracks += (() =>
               ix.retract(spark, keys, "__rid", idCol))

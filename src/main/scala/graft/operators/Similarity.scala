@@ -59,7 +59,7 @@ object Similarity {
     * This is the EXACT variant (the [[bruteForceBatchTopK]] shape plus a
     * label-mismatch predicate pushed below the window), oracle-checkable
     * and the ground truth for approximate mining. The scale path composes
-    * the index family: [[ivfBatchTopKFromIndex]] with an over-fetch
+    * the index family: [[CellIndex.batchTopK]] with an over-fetch
     * (k' > k), join labels back onto the (small) result set, drop
     * same-label rows, re-cut to k — `ann_hardneg_recall` prices exactly
     * that composition against this method. Returns
@@ -139,14 +139,6 @@ object Similarity {
       .orderBy(col("maxsim").desc, col(docIdCol))
       .limit(k)
 
-  /** Index health diagnostics for a materialized IVF-family index: cell
-    * population statistics as one row — populated cells, min/max/mean
-    * population, and the imbalance factor max/mean. At 100 TB this is the
-    * number an operator watches: imbalance ≫ 1 means some cells carry a
-    * disproportionate share of every probe (skewed serving latency) and
-    * the index wants retraining with more iterations or a resharded
-    * nlist. One column-pruned scan (id only) + one grouped count.
-    */
   /** The cell-partitioned table of an IVF-family index: plain IVF stores
     * vectors under `data/`, IVF-PQ stores codes under `codes/` — every
     * cell-population question (health stats, the drift monitor's
@@ -160,38 +152,14 @@ object Similarity {
     if (fs.exists(hp)) s"$path/data" else s"$path/codes"
   }
 
-  /** TAKEDOWN over an IVF-family index: excise the given ids from the
-    * cell table (data/ for plain IVF, codes/ for IVF-PQ — the
-    * [[cellTableDir]] dispatch) with a CELL-PRUNED rewrite: one
-    * column-pruned pass (id + the directory-derived cell, no vectors/
-    * codes read) finds which cells hold the ids (≤ nlist ints,
-    * bounded), then ONLY those leaves are rewritten — anti-join on the
-    * id, staged atomic swap per leaf, untouched cells keep their files
-    * byte-for-byte (the [[graft.sources.TextIndex.retract]]
-    * discipline). Sidecars (centroids/codebooks/trained_meta) are
-    * geometry, not membership — untouched. Idempotent: re-running for
-    * absent ids is a no-op.
+  /** Index health diagnostics for a materialized IVF-family index: cell
+    * population statistics as one row — populated cells, min/max/mean
+    * population, and the imbalance factor max/mean. At 100 TB this is the
+    * number an operator watches: imbalance ≫ 1 means some cells carry a
+    * disproportionate share of every probe (skewed serving latency) and
+    * the index wants retraining with more iterations or a resharded
+    * nlist. One column-pruned scan (id only) + one grouped count.
     */
-  def retractFromIndex(spark: SparkSession, path: String,
-                       ids: DataFrame, idsCol: String,
-                       indexIdCol: String): Unit = {
-    val table = cellTableDir(spark, path)
-    // an index that never materialized holds nothing to excise
-    if (!new java.io.File(table).exists()) return
-    val keys = ids.select(col(idsCol).cast("long").as("__rid")).distinct()
-      .localCheckpoint(true)
-    try {
-      val touched = spark.read.parquet(table)
-        .select(col(indexIdCol).cast("long").as("__rid"), col("cell"))
-        .join(broadcast(keys), Seq("__rid"), "left_semi")
-        .select("cell").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      graft.sources.Compaction.rewriteLeaves(spark, table, "cell", touched,
-        df => df.join(broadcast(keys),
-          df(indexIdCol).cast("long") === keys("__rid"), "left_anti"))
-    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(keys)
-  }
-
   def ivfIndexStats(spark: SparkSession, path: String): DataFrame = {
     val counts = spark.read.parquet(cellTableDir(spark, path))
       .groupBy("cell").agg(count(lit(1)).as("n"))
@@ -205,29 +173,35 @@ object Similarity {
         round(col("max_pop") / col("mean_pop"), 4).as("imbalance"))
   }
 
-  /** All buckets within hamming distance `hammingProbe` (0, 1 or 2) of
-    * the base bucket: the exact bucket, every single bit flip, and — for
-    * hamming 2 — every pair of flips. Multiprobe LSH: a near neighbor
-    * that lands one or two hyperplanes on the wrong side sits in a
-    * hamming-1/2 bucket, so probing those recovers most of the recall an
-    * extra hash table would buy WITHOUT replicating the corpus again —
-    * probe count is per-QUERY cost (1 + n + n(n−1)/2 at hamming 2, still
-    * tiny), table count is per-CORPUS cost (another full copy in the
-    * index).
+  /** The XOR masks reaching every bucket within hamming distance
+    * `hammingProbe` (0, 1 or 2) of a base bucket: none, every single bit
+    * flip, and — for hamming 2 — every pair of flips. Multiprobe LSH: a
+    * near neighbor that lands one or two hyperplanes on the wrong side
+    * sits in a hamming-1/2 bucket, so probing those recovers most of the
+    * recall an extra hash table would buy WITHOUT replicating the corpus
+    * again — probe count is per-QUERY cost (1 + n + n(n−1)/2 at hamming
+    * 2, still tiny), table count is per-CORPUS cost (another full copy in
+    * the index).
     */
-  private def probeSet(baseBucket: Column, nBits: Int,
-                       hammingProbe: Int): Column = {
+  private[operators] def probeMasks(nBits: Int,
+                                    hammingProbe: Int): Seq[Long] = {
     require(hammingProbe >= 0 && hammingProbe <= 2,
       "hammingProbe 0 (exact), 1 (single-bit flips) or 2 (+pair flips)")
-    val masks = hammingProbe match {
+    hammingProbe match {
       case 0 => Seq.empty[Long]
       case 1 => (0 until nBits).map(i => 1L << i)
       case _ => (0 until nBits).map(i => 1L << i) ++
         (for (i <- 0 until nBits; j <- i + 1 until nBits)
           yield (1L << i) | (1L << j))
     }
-    array(baseBucket +: masks.map(m => baseBucket.bitwiseXOR(lit(m))): _*)
   }
+
+  /** [[probeMasks]] applied in-plan: the probed buckets as an array, the
+    * base bucket first. */
+  private[operators] def probeSet(baseBucket: Column, nBits: Int,
+                                  hammingProbe: Int): Column =
+    array(baseBucket +: probeMasks(nBits, hammingProbe)
+      .map(m => baseBucket.bitwiseXOR(lit(m))): _*)
 
   /** Approximate top-k: candidates = union over hash tables of vectors in
     * the query's probed bucket(s), reranked exactly. Recall grows with
@@ -262,22 +236,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF-style ANN: partition the corpus into `nlist` Voronoi cells around
-    * deterministic seed centroids (the lowest-id vectors — a k-means round
-    * would refine them; seeds keep the operator fully deterministic), search
-    * only the query's `nprobe` nearest cells, rerank exactly.
-    *
-    * Scale shape: the centroid set is tiny and bounded (like a broadcast
-    * side), so it is collected once and inlined as literal vectors; cell
-    * assignment is then a NARROW argmax — `nlist` codegen'd dots per row and
-    * an `array_max` over (score, cid) structs — with no join, no window and
-    * no shuffle of the corpus. (The previous form cross-joined the corpus
-    * with the centroids and ranked with a `Window.partitionBy(id)`: a full
-    * shuffle of nlist× the corpus keyed by a near-unique id — a
-    * scale-killer.) The assigned table can be written partitioned by `cell`
-    * so a query reads only nprobe partitions — the classic IVF pruning,
-    * expressed as partition pruning.
-    */
   /** Max-dot cell assignment — native [[graft.functions.CellArgmaxExpr]]
     * (centroids ride as a reference object, so the plan is one node and
     * the codegen source is centroid-independent: no per-iteration
@@ -537,6 +495,22 @@ object Similarity {
       .sortBy { case (score, cid) => (-score, cid) }
       .take(nprobe).map(_._2)
 
+  /** IVF-style ANN: partition the corpus into `nlist` Voronoi cells around
+    * deterministic seed centroids (the lowest-id vectors — a k-means round
+    * would refine them; seeds keep the operator fully deterministic), search
+    * only the query's `nprobe` nearest cells, rerank exactly.
+    *
+    * Scale shape: the centroid set is tiny and bounded (like a broadcast
+    * side), so it is collected once and inlined as literal vectors; cell
+    * assignment is then a NARROW argmax — `nlist` codegen'd dots per row and
+    * an `array_max` over (score, cid) structs — with no join, no window and
+    * no shuffle of the corpus. (The previous form cross-joined the corpus
+    * with the centroids and ranked with a `Window.partitionBy(id)`: a full
+    * shuffle of nlist× the corpus keyed by a near-unique id — a
+    * scale-killer.) The assigned table can be written partitioned by `cell`
+    * so a query reads only nprobe partitions — the classic IVF pruning,
+    * expressed as partition pruning.
+    */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
               query: DataFrame, queryVecCol: String, k: Int,
               nlist: Int = 16, nprobe: Int = 4,
@@ -551,52 +525,6 @@ object Similarity {
       .select(col(idCol), Vectors.cosine(col(vecCol), typedlit(q)).as("score"))
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
-  }
-
-  /** Materialize the IVF index: the assigned corpus written PARTITIONED BY
-    * cell (one directory per Voronoi cell) plus the trained centroids as a
-    * tiny sidecar table. This converts IVF pruning into parquet partition
-    * pruning: a query plans a scan whose PartitionFilters keep only its
-    * nprobe cell directories — the other (nlist − nprobe)/nlist of the
-    * corpus is never opened. Pay the assignment once at index-build time,
-    * prune on every query — the 100 TB serving shape.
-    */
-  /** `attrCols` ride along in the cell partitions (metadata for FILTERED
-    * search: a predicate over them evaluates inside the pruned scan —
-    * parquet-pushable — instead of a post-hoc join back to the corpus).
-    */
-  def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    path: String, nlist: Int = 16,
-                    kmeansIters: Int = 0, sampleFraction: Double = 1.0,
-                    attrCols: Seq[String] = Nil): Unit = {
-    val cents =
-      trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters, sampleFraction)
-    corpus.select(Seq(col(idCol), col(vecCol)) ++ attrCols.map(col) :+
-        bestCellFor(cents)(col(vecCol)).as("cell"): _*)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/data")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    cents.toDF("cid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Append a new batch to a materialized IVF index: assign cells with
-    * the EXISTING sidecar centroids (read back, bounded) and append to the
-    * cell partition directories — the index a corpus-builder loop
-    * maintains batch-over-batch without retraining. Centroids are frozen
-    * at build time (the FAISS convention: retrain/rebuild when drift
-    * matters, never mid-serve — readers meanwhile keep a consistent
-    * geometry); the assignment pass is the same narrow argmax as the
-    * build, touching only the batch.
-    */
-  def appendToIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
-                       path: String, attrCols: Seq[String] = Nil): Unit = {
-    val cents = readCentroids(batch.sparkSession, path)
-    // attrCols must match the build's (parquet would otherwise leave the
-    // missing columns null on read — silently unfilterable rows)
-    batch.select(Seq(col(idCol), col(vecCol)) ++ attrCols.map(col) :+
-        bestCellFor(cents)(col(vecCol)).as("cell"): _*)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/data")
   }
 
   /** Re-cluster a materialized IVF index in place — the maintenance action
@@ -707,132 +635,6 @@ object Similarity {
       .foreach(f => copy(f, new java.io.File(staging, f.getName)))
   }
 
-  /** Approximate top-k served FROM a materialized index: reads the sidecar
-    * centroids (nlist rows), ranks cells for the query, and scans only the
-    * nprobe matching partitions of the index (partition pruning — assert
-    * `PartitionFilters` in the scan node).
-    *
-    * `filter` is an optional metadata predicate over `attrCols` the index
-    * was built with — FILTERED search (the vector-database contract:
-    * "nearest neighbors WHERE label = x"). It lands between the partition
-    * pruning and the cosine, so it reaches the parquet scan as a pushed
-    * data filter (`PushedFilters`) over the probed cells only: no post-hoc
-    * join back to the corpus, no scoring of rows the predicate rejects.
-    * Semantics are post-filtering WITHIN the probed cells, so recall
-    * against the filtered brute-force truth degrades as the predicate gets
-    * more selective (fewer matching rows per probed cell) — raise nprobe
-    * with selectivity; `ann_ivf_filtered_recall` prices the fixture point.
-    */
-  def ivfTopKFromIndex(spark: SparkSession, path: String, idCol: String,
-                       vecCol: String, query: DataFrame, queryVecCol: String,
-                       k: Int, nprobe: Int = 4,
-                       filter: Option[Column] = None): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val q = collectSingleQuery(query, queryVecCol)
-    val cells = probeCellIds(q, cents, nprobe) // bounded like cents
-    spark.read.parquet(s"$path/data")
-      .where(col("cell").isin(cells.toIndexedSeq: _*)) // → parquet PartitionFilters
-      .transform(df => filter.fold(df)(df.where)) // → parquet PushedFilters
-      // lazy-takedown overlay: tombstoned ids never serve (broadcast
-      // anti-join over the probed cells only; identity when absent)
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-      .select(col(idCol), Vectors.cosine(col(vecCol), typedlit(q)).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** BATCHED IVF serving: a whole query TABLE answered in ONE plan — the
-    * [[semanticDupAgainstIndex]] shape given top-k semantics. Each query
-    * row soft-assigns to its `nprobe` nearest cells in-plan (narrow
-    * [[topCellsFor]] + explode), the index scan is pruned to the UNION of
-    * probed cell directories (bounded list collected → parquet
-    * PartitionFilters), the equi-join on `cell` restricts every query to
-    * ITS OWN cells, and a per-query window takes the top k. Per-query
-    * results are IDENTICAL to looping [[ivfTopKFromIndex]] (same cell
-    * ranking and tie semantics — pinned by `ann_ivf_batched_recall` at
-    * floor 1.0) but the job count is independent of the batch size: a
-    * 10k-query retrieval batch is one Spark job, not 10k.
-    *
-    * The candidate shuffle (the window's) is keyed by `query_id` and
-    * carries only (query_id, id, score) — candidates per query are
-    * bounded by the probed cells' population. `queries` is evaluated
-    * twice (cell-list collect + join); localCheckpoint expensive query
-    * pipelines first. Returns (query_id, idCol, score).
-    */
-  def ivfBatchTopKFromIndex(spark: SparkSession, path: String, idCol: String,
-                            vecCol: String, queries: DataFrame,
-                            queryIdCol: String, queryVecCol: String,
-                            k: Int, nprobe: Int = 4,
-                            filter: Option[Column] = None): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val assigned = queries.select(col(queryIdCol).as("query_id"),
-      Vectors.toDouble(col(queryVecCol)).as("__qvec"),
-      explode(topCellsFor(cents, nprobe)(col(queryVecCol))).as("cell"))
-    // the batch's probed cell set — bounded by min(nlist, batch·nprobe)
-    val cells = assigned.select("cell").distinct()
-      .collect().map(_.getLong(0))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("score").desc, col(idCol))
-    spark.read.parquet(s"$path/data")
-      .where(col("cell").isin(cells.toIndexedSeq: _*)) // → parquet PartitionFilters
-      .transform(df => filter.fold(df)(df.where)) // → parquet PushedFilters
-      // lazy-takedown overlay, as in [[ivfTopKFromIndex]]
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-      .select(col("cell"), col(idCol), col(vecCol))
-      .join(broadcast(assigned), "cell")
-      .select(col("query_id"), col(idCol),
-        Vectors.cosine(col(vecCol), col("__qvec")).as("score"))
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= k).drop("__rank")
-  }
-
-  /** Semantic near-dup matches of an arriving batch against an INDEXED
-    * corpus — [[Dedup.dedupAgainstIndex]]'s move applied to embeddings:
-    * the batch soft-assigns to its `probes` nearest cells with the FROZEN
-    * sidecar centroids, the IVF index (which stores raw vectors,
-    * partitioned by cell) is scanned ONLY in those cell directories
-    * (bounded cell list collected → parquet PartitionFilters), and
-    * candidates are verified by exact cosine — so precision is exact and
-    * the corpus is never read outside the batch's cells. Recall is
-    * bounded by cell co-residence exactly like [[semanticDupPairs]];
-    * `emb_semdedup_incremental_recall` prices it. Returns
-    * (new_id, corpus_id, cosine).
-    *
-    * This is the corpus-builder's semantic gate: a batch's near-dups of
-    * ALREADY-INGESTED documents surface without recomputing corpus-side
-    * anything — the index was paid for at build/append time.
-    */
-  def semanticDupAgainstIndex(batch: DataFrame, idCol: String,
-                              vecCol: String, path: String,
-                              threshold: Double,
-                              probes: Int = 2): DataFrame = {
-    val spark = batch.sparkSession
-    val cents = readCentroids(spark, path)
-    val assigned = batch.select(
-        col(idCol).as("new_id"),
-        Vectors.toDouble(col(vecCol)).as("__v"),
-        explode(topCellsFor(cents, probes)(col(vecCol))).as("cell"))
-    // the batch's probed cell set is bounded by min(nlist, batch·probes) —
-    // collected so the corpus scan prunes at the DIRECTORY level instead
-    // of joining against every cell
-    val cells = assigned.select("cell").distinct()
-      .collect().map(_.getLong(0))
-    val corpus = spark.read.parquet(s"$path/data")
-      .where(col("cell").isin(cells.toIndexedSeq: _*)) // → parquet PartitionFilters
-      // lazy-takedown overlay: a batch's near-dup of a TOMBSTONED doc
-      // is novel content — it must not be attributed to a document that
-      // is logically gone (the [[graft.sources.Tombstones]] contract)
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-      .select(col("cell"), col(idCol).as("corpus_id"),
-        Vectors.toDouble(col(vecCol)).as("__cv"))
-    assigned.join(corpus, "cell")
-      .where(col("new_id") =!= col("corpus_id"))
-      .dropDuplicates("new_id", "corpus_id") // multi-probe collisions
-      .select(col("new_id"), col("corpus_id"),
-        Vectors.cosine(col("__v"), col("__cv")).as("cosine"))
-      .where(col("cosine") >= threshold)
-  }
-
   /** Single-query serve of an IVF-PQ [[CellIndex]] (codes under `codes/`,
     * `centroids` + `codebooks` sidecars): the probed cells' codes are
     * ADC-scored and the candidates reranked against `rawCorpus` — the
@@ -843,174 +645,9 @@ object Similarity {
                          query: DataFrame, queryVecCol: String, k: Int,
                          nprobe: Int = 4, oversample: Int = 4,
                          filter: Option[Column] = None): DataFrame =
-    CellIndex(path, Pq.Codec(), nprobe = nprobe).topK(spark, idCol, vecCol,
-      query, queryVecCol, k, oversample, filter, Some(rawCorpus))
-
-  /** Materialize the LSH index: the corpus posexploded to one row per
-    * (table, bucket) membership, written PARTITIONED BY (table, bucket),
-    * plus a tiny sidecar recording the (nBits, tables) parameters. This is
-    * the [[writeIvfIndex]] move applied to LSH: bucket probing becomes
-    * parquet partition pruning — a query opens only its `tables` probe
-    * directories out of tables·2^nBits, instead of re-bucketing the corpus
-    * per call (which is what back-to-back [[lshTopK]] calls pay). The
-    * corpus is replicated `tables`× in the index — the standard
-    * multi-table LSH space-for-recall trade; pay it once at build time.
-    */
-  def writeLshIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    path: String, nBits: Int = 12, tables: Int = 4): Unit = {
-    corpus.select(col(idCol), col(vecCol),
-        posexplode(array((0 until tables).map(t =>
-          Vectors.hyperplaneBucket(col(vecCol), nBits, tableSeed = t)): _*))
-          .as(Seq("table", "bucket")))
-      .write.mode("overwrite").partitionBy("table", "bucket")
-      .parquet(s"$path/data")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Seq((nBits, tables)).toDF("n_bits", "tables")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Append a new batch to a materialized LSH index: bucket with the
-    * EXISTING sidecar parameters (nBits/tables — hyperplanes are derived
-    * from the table seed, so stored and appended rows always hash
-    * identically) and append to the (table, bucket) partitions. The
-    * tables× replication applies to the batch only.
-    */
-  def appendToLshIndex(batch: DataFrame, idCol: String, vecCol: String,
-                       path: String): Unit = {
-    val meta = batch.sparkSession.read.parquet(s"$path/meta").collect().head
-    val (nBits, tables) = (meta.getInt(0), meta.getInt(1))
-    batch.select(col(idCol), col(vecCol),
-        posexplode(array((0 until tables).map(t =>
-          Vectors.hyperplaneBucket(col(vecCol), nBits, tableSeed = t)): _*))
-          .as(Seq("table", "bucket")))
-      .write.mode("append").partitionBy("table", "bucket")
-      .parquet(s"$path/data")
-  }
-
-  /** Approximate top-k served FROM a materialized LSH index: reads the
-    * sidecar params, computes the query's `tables` probe buckets (bounded
-    * driver state, like the IVF probe cells), and scans only the matching
-    * (table, bucket) partitions — assert `PartitionFilters` in the scan
-    * node. Candidates are deduplicated across tables before the exact
-    * rerank, exactly as [[lshTopK]] does.
-    */
-  /** TAKEDOWN over the (table, bucket)-partitioned LSH index — the
-    * [[retractFromIndex]] discipline under the two-level layout: a doc
-    * lives in exactly `tables` leaves, so one column-pruned pass (id +
-    * the directory-derived table/bucket, no vectors read) finds the
-    * touched (table, bucket) pairs (≤ |ids|·tables, bounded) and ONLY
-    * those leaves rewrite — anti-join on the id, staged atomic swap per
-    * leaf, overlapped via [[graft.sources.Compaction.parEach]]. The
-    * meta sidecar (nBits, tables) is geometry, untouched. Idempotent.
-    */
-  def retractFromLshIndex(spark: SparkSession, path: String,
-                          ids: DataFrame, idsCol: String,
-                          indexIdCol: String): Unit = {
-    val table = s"$path/data"
-    if (!new java.io.File(table).exists()) return
-    val keys = ids.select(col(idsCol).cast("long").as("__rid")).distinct()
-      .localCheckpoint(true)
-    try {
-      // partition-column values read back type-inferred from directory
-      // names (a small bucket parses as int) — cast both explicitly
-      val touched = spark.read.parquet(table)
-        .select(col(indexIdCol).cast("long").as("__rid"),
-          col("table").cast("int").as("table"),
-          col("bucket").cast("long").as("bucket"))
-        .join(broadcast(keys), Seq("__rid"), "left_semi")
-        .select("table", "bucket").distinct()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      // ONE pruned scan + dynamic write + per-leaf swaps over the
-      // two-level (table, bucket) layout — the same one-job takedown
-      // shape as every single-level index (job count O(1), not
-      // O(|ids|·tables))
-      graft.sources.Compaction.rewriteLeavesN(spark, table,
-        Seq("table", "bucket"), touched.map { case (t, b) => Seq(t, b) },
-        df => df.join(broadcast(keys),
-          df(indexIdCol).cast("long") === keys("__rid"), "left_anti"))
-    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(keys)
-  }
-
-  def lshTopKFromIndex(spark: SparkSession, path: String, idCol: String,
-                       vecCol: String, query: DataFrame, queryVecCol: String,
-                       k: Int, hammingProbe: Int = 0): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val (nBits, tables) = (meta.getInt(0), meta.getInt(1))
-    val exact: Seq[(Int, Long)] = query
-      .select(posexplode(array((0 until tables).map(t =>
-        Vectors.hyperplaneBucket(col(queryVecCol), nBits, tableSeed = t)): _*))
-        .as(Seq("__table", "__bucket")))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    // multiprobe widens the probe LIST, not the index: hamming-1 flips are
-    // extra pruned partitions per table — (1+nBits)·tables directories,
-    // still bounded driver state
-    val probes: Seq[(Int, Long)] =
-      if (hammingProbe == 0) exact
-      else exact.flatMap { case (t, b) =>
-        (t, b) +: (0 until nBits).map(i => (t, b ^ (1L << i)))
-      }.distinct
-    val pruned = probes.map { case (t, bkt) =>
-      col("table") === t && col("bucket") === bkt
-    }.reduce(_ || _) // → parquet PartitionFilters (partition cols only)
-    val qvec = broadcast(query.select(col(queryVecCol).as("__qvec")))
-    spark.read.parquet(s"$path/data")
-      .where(pruned)
-      // lazy-takedown overlay ([[graft.sources.Tombstones]])
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-      .dropDuplicates(idCol)
-      .crossJoin(qvec)
-      .select(col(idCol), Vectors.cosine(col(vecCol), col("__qvec")).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
-
-  /** BATCHED LSH serving — [[ivfBatchTopKFromIndex]]'s contract for the
-    * (table, bucket)-partitioned LSH index: every query row computes its
-    * probe buckets in-plan (the same hyperplane expressions the index was
-    * built with), the scan is pruned to the UNION of probed partitions
-    * (bounded list collected → parquet PartitionFilters), the equi-join on
-    * (table, bucket) restricts each query to ITS OWN probes, candidates
-    * dedup per (query, id) across tables exactly like [[lshTopKFromIndex]],
-    * and a per-query window takes the top k. Job count independent of
-    * batch size; per-query results identical to the loop (pinned by
-    * `ann_lsh_batched_recall` at floor 1.0). Returns (query_id, idCol,
-    * score).
-    */
-  def lshBatchTopKFromIndex(spark: SparkSession, path: String, idCol: String,
-                            vecCol: String, queries: DataFrame,
-                            queryIdCol: String, queryVecCol: String,
-                            k: Int, hammingProbe: Int = 0): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val (nBits, tables) = (meta.getInt(0), meta.getInt(1))
-    val probes = queries
-      .select(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec"),
-        posexplode(array((0 until tables).map(t =>
-          Vectors.hyperplaneBucket(col(queryVecCol), nBits, tableSeed = t)): _*))
-          .as(Seq("table", "__b0")))
-      .select(col("query_id"), col("__qvec"), col("table"),
-        explode(probeSet(col("__b0"), nBits, hammingProbe)).as("bucket"))
-    // the batch's probed (table, bucket) set — bounded by
-    // batch·tables·(1+nBits), like the IVF cell list
-    val pairs = probes.select("table", "bucket").distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    require(pairs.nonEmpty, "LSH batch serving got an empty query table")
-    val pruned = pairs.map { case (t, b) =>
-      col("table") === t && col("bucket") === b
-    }.reduce(_ || _) // → parquet PartitionFilters (partition cols only)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("score").desc, col(idCol))
-    spark.read.parquet(s"$path/data")
-      .where(pruned)
-      // lazy-takedown overlay ([[graft.sources.Tombstones]])
-      .transform(graft.sources.Tombstones.exclude(_, path, col(idCol)))
-      .join(broadcast(probes), Seq("table", "bucket"))
-      .dropDuplicates("query_id", idCol) // multi-table collisions
-      .select(col("query_id"), col(idCol),
-        Vectors.cosine(col(vecCol), col("__qvec")).as("score"))
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= k).drop("__rank")
-  }
+    CellIndex(path, CellAssigner.Voronoi(nprobe = nprobe), Pq.Codec())
+      .topK(spark, idCol, vecCol, query, queryVecCol, k, oversample, filter,
+        Some(rawCorpus))
 
   /** Near-duplicate pairs via LSH blocking: pairs are generated only
     * within a hyperplane bucket (an equi-join, never a cross product) and

@@ -9,8 +9,11 @@ import graft.functions.Vectors
   * candidates → k·oversample → exact-rerank serving contract
   * (asymmetric serving — compressed corpus, full-precision query and
   * rerank; Jégou et al., "Product Quantization for Nearest Neighbor
-  * Search", TPAMI 2011). Three points on the compression spectrum:
+  * Search", TPAMI 2011). Four points on the compression spectrum:
   *
+  *  - [[VectorCodec.Exact]] — no compression: the raw vector is the code
+  *    and the candidate score is already the exact cosine (plain IVF and
+  *    LSH are this codec over a [[CellIndex]]);
   *  - [[VectorCodec.Sq8]] — int8 per dimension, 4× (FAISS `SQ8`,
   *    Lucene `int8_hnsw`): near-lossless;
   *  - [[VectorCodec.Bq]] — one sign bit per dimension, 32× (FAISS binary,
@@ -35,9 +38,12 @@ trait VectorCodec extends Serializable {
   def defaultOversample: Int
   /** The index table stores the raw vector next to the code. */
   def storesRaw: Boolean
-  /** Index table directory under the root, and its code column. */
+  /** Index table directory under the root, and its code column — None
+    * when the code IS the stored raw vector, which makes the approximate
+    * score the exact one: serves cut straight at k, with no rerank join.
+    */
   def table: String
-  def codeCol: String
+  def codeCol: Option[String]
 }
 
 object VectorCodec {
@@ -125,7 +131,7 @@ object VectorCodec {
     val defaultOversample = 4
     val storesRaw = true
     val table = "data"
-    val codeCol = "code"
+    val codeCol = Some("code")
   }
 
   /** Binary (1-bit) quantization: bit `b` of word `w` is set iff
@@ -189,6 +195,28 @@ object VectorCodec {
     val defaultOversample = 16
     val storesRaw = true
     val table = "data"
-    val codeCol = "code"
+    val codeCol = Some("code")
+  }
+
+  /** No quantization: the index table stores the raw vector (`data/`, the
+    * plain IVF and LSH layouts) and scores candidates by their exact
+    * cosine, so there is nothing to train, no params sidecar and no
+    * rerank.
+    */
+  object Exact extends VectorCodec with Params {
+    def train(corpus: DataFrame, idCol: String, vecCol: String): Params = this
+    def read(spark: SparkSession, path: String): Params = this
+    def write(spark: SparkSession, path: String): Unit = ()
+    def encode(vec: Column): Column = vec
+    def queryState(vec: Column): Column = Vectors.toDouble(vec)
+    def queryState(q: Seq[Double]): Column = typedlit(q)
+    def score(decoded: Column, state: Column): Column =
+      Vectors.cosine(decoded, state)
+
+    val ascending = false
+    val defaultOversample = 1
+    val storesRaw = true
+    val table = "data"
+    val codeCol = None
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * bounding BOX in (a, b) space — filters on either (or both) dimensions
   * prune files. The classic lakehouse layout technique (Delta/Iceberg
   * `OPTIMIZE ZORDER BY`), expressed with plain Spark: an integer-arithmetic
-  * expression + `repartitionByRange` + `sortWithinPartitions`.
+  * expression, a range split on it and `sortWithinPartitions`.
   *
   * The z-value is pure codegen'd bit arithmetic — reproducible in any
   * engine (the DuckDB oracle runs the same shifts), no UDF, no shuffle
@@ -40,11 +40,32 @@ object ZOrder {
     * covering a tight bounding box of the clustered dimensions.
     */
   def clusteredWrite(df: DataFrame, path: String, clusterCols: Seq[String],
-                     bits: Int = 16, partitions: Int = 8): Unit = {
-    val z = zValue(clusterCols.map(col), bits)
-    df.repartitionByRange(partitions, z)
-      .sortWithinPartitions(z)
+                     bits: Int = 16, partitions: Int = 8): Unit =
+    zRanged(df, zValue(clusterCols.map(col), bits), partitions)
       .write.mode("overwrite").parquet(path)
+
+  /** `df` split into `n` z-ranges, sorted by `z` within each. The range
+    * bounds are n-quantiles of a FIXED sample of the z-values (the up to
+    * 100·n non-null values with the smallest seeded hash), so the layout
+    * depends only on the data written. `repartitionByRange` seeds its
+    * bound sample from the RDD id, which made the files — and every
+    * layout metric read off them — depend on what the session ran
+    * before. A z equal to a bound lands in that bound's range, as with
+    * `repartitionByRange`; null z-values land in the first.
+    */
+  private def zRanged(df: DataFrame, z: Column, n: Int): DataFrame = {
+    val sample = df.select(z.as("__z")).where(col("__z").isNotNull)
+      .orderBy(xxhash64(col("__z")), col("__z"))
+      .limit(math.min(100L * n, 1000000L).toInt)
+      .collect().map(_.getLong(0)).sorted
+    val bounds = (1 until n).filter(_ => sample.nonEmpty)
+      .map(i => sample(i * sample.length / n)).distinct
+    import org.apache.spark.sql.GraftBridge.{column, expression}
+    val found = column(org.apache.spark.sql.catalyst.expressions
+      .ArrayBinarySearch(expression(typedlit(bounds)), expression(z)))
+    df.repartitionById(n,
+        coalesce(when(found >= 0, found).otherwise(-found - 1), lit(0)))
+      .sortWithinPartitions(z)
   }
 
   /** Layout health of a clustered table — the number that tells an
@@ -205,9 +226,8 @@ object ZOrder {
           java.nio.file.Files.copy(f.toPath, link) }
       }
       // mode Append: the staged dir already holds the carried-over links
-      spark.read.parquet(decayed.map(_.toString).toIndexedSeq: _*)
-        .repartitionByRange(n, z)
-        .sortWithinPartitions(z)
+      zRanged(spark.read.parquet(decayed.map(_.toString).toIndexedSeq: _*),
+          z, n)
         .write.mode("append").parquet(staging.toString)
       true
     }

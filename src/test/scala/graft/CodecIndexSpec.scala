@@ -4,9 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CellIndex, CodecIndex, FlatIndex, Pq, Similarity,
   VectorCodec}
+import graft.operators.CellAssigner.{Hyperplane, Voronoi}
 
-/** The shared index contract over {SQ8, BQ, PQ} × {flat, cell}, plus the
-  * BQ codec's own bit-level checks. */
+/** The shared index contract over {SQ8, BQ, PQ} × {flat, cell}, plain IVF
+  * (Exact × cell) and LSH (Exact × hyperplane cells), plus the BQ codec's
+  * own bit-level checks. */
 class CodecIndexSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
@@ -30,6 +32,11 @@ class CodecIndexSpec extends AnyFunSuite with SparkFixture {
   private val codecs: Seq[(String, VectorCodec)] = Seq(
     "SQ8" -> VectorCodec.Sq8, "BQ" -> VectorCodec.Bq,
     "PQ" -> Pq.Codec(m = 4, k = 8))
+  private val lsh = Hyperplane(nBits = 3, tables = 3, hammingProbe = 1)
+  // the exact codec has no params: a flat exact index is brute force
+  private val layouts: Seq[(String, VectorCodec, String)] =
+    (for ((n, c) <- codecs; l <- Seq("flat", "cell")) yield (n, c, l)) ++
+      Seq("cell", "lsh").map(l => ("Exact", VectorCodec.Exact, l))
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString
@@ -37,7 +44,7 @@ class CodecIndexSpec extends AnyFunSuite with SparkFixture {
   /** Every sidecar file's bytes, by relative path. */
   private def sidecars(root: String): Map[String, Seq[Byte]] = {
     val r = new java.io.File(root)
-    Seq("params", "codebooks", "centroids")
+    Seq("params", "codebooks", "centroids", "meta")
       .map(new java.io.File(r, _)).filter(_.isDirectory)
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
       .map(f => r.toPath.relativize(f.toPath).toString ->
@@ -47,15 +54,20 @@ class CodecIndexSpec extends AnyFunSuite with SparkFixture {
   private def byQuery(rows: Seq[(Long, Long, Double)]) =
     rows.sortBy(r => (r._1, -r._3, r._2))
 
-  for ((name, codec) <- codecs; layout <- Seq("flat", "cell"))
+  for ((name, codec, layout) <- layouts)
     test(s"$name × $layout index: planted neighbor served with its exact " +
         "score, frozen-params append, tombstones hide, retract excises " +
         "with sidecars untouched" +
-        (if (layout == "cell") ", full probe ≡ flat" else "")) {
-      def index(path: String): CodecIndex =
-        if (layout == "flat") FlatIndex(path, codec)
-        else CellIndex(path, codec, nlist = nlist, nprobe = 2,
-          kmeansIters = 1)
+        (if (layout == "cell") ", full probe ≡ flat" else "") +
+        (if (layout == "lsh") ", one row per (query, id)" else "")) {
+      def index(path: String): CodecIndex = layout match {
+        case "flat" => FlatIndex(path, codec)
+        case "cell" => CellIndex(path, Voronoi(nlist = nlist, nprobe = 2,
+          kmeansIters = 1), codec)
+        case _ => CellIndex(path, lsh, codec)
+      }
+      // rows stored per id: the LSH layout replicates each per table
+      val copies = if (layout == "lsh") lsh.tables.toLong else 1L
       val raw = if (codec.storesRaw) None else Some(corpusDf)
       // build without the planted vector, then append it with the frozen
       // sidecars; returns the sidecars as written
@@ -100,14 +112,32 @@ class CodecIndexSpec extends AnyFunSuite with SparkFixture {
         assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan)
           .nonEmpty, plan)
         // probing every cell degrades exactly to the flat serve (global
-        // params, same candidate window, same rerank)
-        val flat = FlatIndex(tmp(s"ci_${name}_twin"), codec)
-        build(flat)
-        assert(byQuery(batched(CellIndex(dir, codec, nprobe = nlist),
-          queriesDf)) === byQuery(batched(flat, queriesDf)))
+        // params, same candidate window, same rerank) — for the exact
+        // codec, that is the exact batch top-k
+        val full = byQuery(batched(CellIndex(dir, Voronoi(nprobe = nlist),
+          codec), queriesDf))
+        if (codec == VectorCodec.Exact)
+          assert(full === byQuery(Similarity.bruteForceBatchTopK(corpusDf,
+              "vec_id", "embedding", queriesDf, "vec_id", "embedding", 5)
+            .as[(Long, Long, Double)].collect().toSeq))
+        else {
+          val flat = FlatIndex(tmp(s"ci_${name}_twin"), codec)
+          build(flat)
+          assert(full === byQuery(batched(flat, queriesDf)))
+        }
         // one probed cell still yields k distinct rows
-        val one = batched(CellIndex(dir, codec, nprobe = 1), queryDf)
+        val one = batched(CellIndex(dir, Voronoi(nprobe = 1), codec), queryDf)
         assert(one.size === 5 && one.map(_._2).distinct.size === 5)
+      }
+      if (layout == "lsh") {
+        val plan = ix.batchTopK(spark, "vec_id", "embedding", queryDf,
+            "vec_id", "embedding", 5)
+          .queryExecution.executedPlan.toString
+        assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan)
+          .nonEmpty, plan)
+        // a row stored in several probed cells still serves once
+        val deep = batched(ix, queryDf, k = 50)
+        assert(deep.size > 5 && deep.map(_._2).distinct.size === deep.size)
       }
 
       // tombstone overlay: the served top row disappears from serving
@@ -118,17 +148,17 @@ class CodecIndexSpec extends AnyFunSuite with SparkFixture {
         "vec_id")
       assert(!batched(ix, queryDf).map(_._2).contains(runnerUp))
       assert(spark.read.parquet(table)
-        .filter(col("vec_id") === runnerUp).count() === 1L)
+        .filter(col("vec_id") === runnerUp).count() === copies)
 
       // retract excises the planted row, leaves the sidecars, and is
       // idempotent
       val before = spark.read.parquet(table).count()
       ix.retract(spark, Seq(999L).toDF("id"), "id", "vec_id")
-      assert(spark.read.parquet(table).count() === before - 1)
+      assert(spark.read.parquet(table).count() === before - copies)
       assert(!batched(ix, queryDf).map(_._2).contains(999L))
       assert(sidecars(dir) === trained, "retract moved the sidecars")
       ix.retract(spark, Seq(999L).toDF("id"), "id", "vec_id")
-      assert(spark.read.parquet(table).count() === before - 1)
+      assert(spark.read.parquet(table).count() === before - copies)
     }
 
   test("BQ encode packs sign bits exactly (toy vector, zero thresholds)") {

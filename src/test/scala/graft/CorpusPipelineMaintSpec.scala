@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{CorpusPipeline, Watermark}
+import graft.operators.CellAssigner.Voronoi
 
 /** The MAINTENANCE half of the corpus-builder loop specs: compaction
   * cadences, imbalance-triggered rebuilds, triage, provenance and
@@ -86,7 +87,8 @@ class CorpusPipelineMaintSpec extends AnyFunSuite with SparkFixture {
     val total = spark.read.parquet(corpus).count()
     assert(spark.read.parquet(s"$ann/codes").count() === total)
     assert(spark.read.parquet(s"$sqp/data").count() === total)
-    val top = CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+    val top = CellIndex(ann, Voronoi(nprobe = 2), Pq.Codec())
+      .topK(spark, "doc_id",
         "embedding", Seq((0L, planted)).toDF("vec_id", "embedding"),
         "embedding", 1, oversample = 8,
         rawCorpus = Some(spark.read.parquet(corpus)))
@@ -141,7 +143,8 @@ class CorpusPipelineMaintSpec extends AnyFunSuite with SparkFixture {
       s"imbalance rebuild did not run (trained_meta=$trained2)")
     // and the sample-trained geometry serves the drifted direction: a
     // query down e2 finds a drifted member with limited probing
-    val top = CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+    val top = CellIndex(ann, Voronoi(nprobe = 2), Pq.Codec())
+      .topK(spark, "doc_id",
         "embedding", Seq((0L, member(2, bias = 0.5))).toDF("vec_id",
           "embedding"), "embedding", 3, oversample = 8,
         rawCorpus = Some(spark.read.parquet(corpus)))

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{CorpusPipeline, Watermark}
+import graft.operators.CellAssigner.Voronoi
 
 /** The daily corpus-builder loop end to end: bootstrap, cross-batch dedup
   * via the index, within-batch dedup, watermark advance, no-op rerun.
@@ -160,7 +161,7 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
     // the ONE maintained index serves vectors from BOTH batches
     val rawCorpus = spark.read.parquet(corpus)
     def top1(q: Array[Float]): Long =
-      CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+      CellIndex(ann, Voronoi(nprobe = 2), Pq.Codec()).topK(spark, "doc_id",
           "embedding", Seq((0L, q)).toDF("vec_id", "embedding"), "embedding",
           1, rawCorpus = Some(rawCorpus))
         .as[(Long, Double)].collect().head._1
@@ -334,10 +335,11 @@ class CorpusPipelineSpec extends AnyFunSuite with SparkFixture {
     // reference: a full rebuild over the SAME final corpus
     val rawCorpus = spark.read.parquet(corpus)
     val rebuilt = dir.resolve("rebuilt").toString
-    CellIndex(rebuilt, Pq.Codec(m = 8, k = 8), nlist = 4, kmeansIters = 2)
+    CellIndex(rebuilt, Voronoi(nlist = 4, kmeansIters = 2),
+      Pq.Codec(m = 8, k = 8))
       .write(rawCorpus, "doc_id", "embedding")
     def top1(path: String, q: Array[Float]): Long =
-      CellIndex(path, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+      CellIndex(path, Voronoi(nprobe = 2), Pq.Codec()).topK(spark, "doc_id",
           "embedding", Seq((0L, q)).toDF("vec_id", "embedding"), "embedding",
           1, rawCorpus = Some(rawCorpus))
         .as[(Long, Double)].collect().head._1

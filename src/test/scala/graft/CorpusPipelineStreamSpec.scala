@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{CorpusPipeline, Watermark}
+import graft.operators.CellAssigner.Voronoi
 
 /** The STREAMING half of the corpus-builder loop specs: checkpointed
   * file streams driving the same gates, sidecars and indexes per
@@ -275,7 +276,8 @@ class CorpusPipelineStreamSpec extends AnyFunSuite with SparkFixture {
       .write.mode("append").parquet(src)
     runOnce()
     val raw = spark.read.parquet(corpus)
-    val top = CellIndex(ann, Pq.Codec(), nprobe = 2).topK(spark, "doc_id",
+    val top = CellIndex(ann, Voronoi(nprobe = 2), Pq.Codec())
+      .topK(spark, "doc_id",
         "embedding", Seq((0L, v2)).toDF("vec_id", "embedding"), "embedding",
         1, rawCorpus = Some(raw))
       .as[(Long, Double)].collect()

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Divergence
+import graft.operators.CellAssigner.Voronoi
+import graft.operators.VectorCodec.Exact
 
 class DivergenceSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -84,8 +86,8 @@ class DivergenceSpec extends AnyFunSuite with SparkFixture {
     }
     val corpus = (0 until 80).map(i => (i.toLong, vec(i % 2, i)))
       .toDF("vec_id", "embedding")
-    graft.operators.Similarity.writeIvfIndex(corpus, "vec_id", "embedding",
-      idx, nlist = 2, kmeansIters = 2)
+    graft.operators.CellIndex(idx, Voronoi(nlist = 2, kmeansIters = 2),
+      Exact).write(corpus, "vec_id", "embedding")
     graft.operators.Divergence.writeCellOccupancy(spark, idx)
     assert(spark.read.parquet(s"$idx/cell_occupancy").count() === 2)
     // in-distribution batch: same 50/50 cluster mix → tiny js

@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CellIndex, Components, Dedup, FlatIndex, Merge,
   Multimodal, Pq, Retraction, Similarity, VectorCodec}
 import graft.sources.{BloomKeyIndex, TextIndex}
+import graft.operators.CellAssigner.{Hyperplane, Voronoi}
+import graft.operators.VectorCodec.Exact
 
 /** The takedown verb: retractDocs must excise a document from the corpus
   * and EVERY derived serving artifact, prune its rewrites to the
@@ -51,10 +53,10 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
     TextIndex.writeIndex(docs, "doc_id", "text", a.textIndex.get)
     Dedup.writeMinhashIndex(docs, "doc_id", "text", a.minhashIndexPath.get)
     BloomKeyIndex.appendBatch(docs, a.exactKeys.get)
-    Similarity.writeIvfIndex(docs, "doc_id", "embedding",
-      a.annIndexPath.get, nlist = 4)
-    Similarity.writeLshIndex(docs, "doc_id", "embedding",
-      a.lshIndexPath.get, nBits = 6, tables = 3)
+    CellIndex(a.annIndexPath.get, Voronoi(nlist = 4), Exact)
+      .write(docs, "doc_id", "embedding")
+    CellIndex(a.lshIndexPath.get, Hyperplane(nBits = 6, tables = 3), Exact)
+      .write(docs, "doc_id", "embedding")
     FlatIndex(a.sqIndexPath.get, VectorCodec.Sq8)
       .write(docs, "doc_id", "embedding")
     // components: 5 is a canonical (min of {5,40,41}), 10 a satellite of
@@ -386,8 +388,8 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
       TextIndex.writeIndex(docs, "doc_id", "text", a.textIndex.get)
       Dedup.writeMinhashIndex(docs, "doc_id", "text",
         a.minhashIndexPath.get)
-      Similarity.writeIvfIndex(docs, "doc_id", "embedding",
-        a.annIndexPath.get, nlist = 4)
+      CellIndex(a.annIndexPath.get, Voronoi(nlist = 4), Exact)
+        .write(docs, "doc_id", "embedding")
       // 4 is a canonical (min of {4,30,31}), 9 a satellite of {2,9}
       Components.updateLabelStore(spark, a.dupLabelsPath.get,
         Seq((4L, 30L), (30L, 31L), (2L, 9L)).toDF("src", "dst"),
@@ -412,10 +414,10 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
     val plan = bm.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"overlay consult must be a broadcast anti-join:\n$plan")
-    val ann = Similarity.ivfTopKFromIndex(spark, a.annIndexPath.get,
-      "doc_id", "embedding",
-      docs.where(col("doc_id") === 4L).select("embedding"), "embedding",
-      k = 60, nprobe = 4)
+    val ann = CellIndex(a.annIndexPath.get, Voronoi(nprobe = 4), Exact)
+      .topK(spark, "doc_id", "embedding",
+        docs.where(col("doc_id") === 4L).select("embedding"), "embedding",
+        k = 60)
     assert(ann.where(col("doc_id").isin(gone: _*)).isEmpty)
     val mh = Dedup.dedupAgainstIndex(docs, "doc_id", "text",
       a.minhashIndexPath.get, threshold = 0.8)
@@ -1292,7 +1294,8 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
     // an IVF-PQ ANN index (codes under codes/, the corpus pipeline's
     // layout) gets its own row, and a stray id in it is a leak
     val ann = root.resolve("ann").toString
-    val pq = CellIndex(ann, Pq.Codec(m = 2, k = 4, iters = 2), nlist = 2)
+    val pq = CellIndex(ann, Voronoi(nlist = 2),
+      Pq.Codec(m = 2, k = 4, iters = 2))
     pq.write(docs, "doc_id", "embedding")
     pq.append(Seq((99L, embed(99L))).toDF("doc_id", "embedding"),
       "doc_id", "embedding")

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Packing, Sampling}
+import graft.operators.CellAssigner.Voronoi
+import graft.operators.VectorCodec.Exact
 
 class SamplingPackingSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
@@ -222,8 +224,8 @@ class SamplingPackingSpec extends AnyFunSuite with SparkFixture {
     val df = rows.toDF("id", "embedding", "score")
     val idx = java.nio.file.Files.createTempDirectory("cbs_idx")
       .resolve("idx").toString
-    graft.operators.Similarity.writeIvfIndex(df, "id", "embedding", idx,
-      nlist = 2, kmeansIters = 2)
+    graft.operators.CellIndex(idx, Voronoi(nlist = 2, kmeansIters = 2),
+      Exact).write(df, "id", "embedding")
     val sel = Sampling.clusterBalancedSample(df, "id", "embedding", idx,
         quotaPerCell = 5, "score")
       .select("id", "cell", "score")

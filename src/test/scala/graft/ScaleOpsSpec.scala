@@ -74,6 +74,23 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     // per file because every file spans all of b)
     assert(boxes.sum.toDouble / boxes.length <= 0.4 * domain,
       boxes.mkString(","))
+
+    // the layout depends only on the data written: the same write made
+    // after unrelated jobs (which move Spark's RDD ids, the seed of a
+    // sampled range partitioner) gives the same per-file z-ranges
+    def zRanges(d: String): Seq[(Long, Long)] =
+      new java.io.File(d).listFiles().filter(_.getName.endsWith(".parquet"))
+        .map { f =>
+          val r = spark.read.parquet(f.toString)
+            .select(ZOrder.zValue(Seq(col("a"), col("b")), 6).as("z"))
+            .agg(min("z"), max("z")).collect().head
+          (r.getLong(0), r.getLong(1))
+        }.toSeq.sorted
+    spark.range(5000).repartitionByRange(7, col("id") % 13).count()
+    spark.range(100).repartition(3).collect()
+    val dir2 = java.nio.file.Files.createTempDirectory("zorder").toString
+    ZOrder.clusteredWrite(grid, dir2, Seq("a", "b"), bits = 6, partitions = 8)
+    assert(zRanges(dir2) === zRanges(dir))
   }
 
   test("z-order maintenance: unclustered appends decay the layout, " +
@@ -602,6 +619,40 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     assert(claims.size === 4, claims)
     assert(hits.diff(claims).isEmpty,
       s"hand-rolled commit outside Compaction: ${hits.diff(claims)}")
+  }
+
+  test("source guard: every cell-partitioned ANN table in src/main is " +
+      "written by CodecIndex") {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val mainDir = new java.io.File("src/main/scala")
+    assert(mainDir.isDirectory, s"run from the repo root, not ${
+      new java.io.File(".").getAbsolutePath}")
+    val patterns = Seq("""partitionBy("cell"""",
+      """partitionBy("table", "bucket"""")
+    val hits = for {
+      f <- scalaFiles(mainDir) if f.getName != "CodecIndex.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq.zipWithIndex
+      // a window spec is not a table layout
+      if patterns.exists(line.contains) && !line.contains("Window.partitionBy")
+    } yield (f.getName, i + 1, line.trim)
+    // the recluster's one staged rewrite of a plain IVF root (data and
+    // centroids swap in together), and Probe's rewrite_plan fixture (a
+    // two-level table for the leaf-pruning explain, not an index)
+    val exceptions = hits.filter { case (f, _, l) =>
+      (f == "Similarity.scala" &&
+        l.contains(""".write.partitionBy("cell")""")) ||
+        (f == "Probe.scala" &&
+          l.contains("""partitionBy("table", "bucket").parquet(two)"""))
+    }
+    assert(exceptions.size === 2, exceptions)
+    assert(hits.diff(exceptions).isEmpty,
+      "cell-partitioned index write outside CodecIndex: " +
+        hits.diff(exceptions))
   }
 
   test("bucketed equi-join plans without a shuffle exchange") {

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CellIndex, FlatIndex, Pq, Similarity, VectorCodec}
+import graft.operators.CellAssigner.{Hyperplane, Voronoi}
+import graft.operators.VectorCodec.Exact
 import graft.functions.Vectors
 
 class SimilaritySpec extends AnyFunSuite with SparkFixture {
@@ -68,10 +70,11 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
     // the index-serving path agrees with the from-scratch multiprobe result
     val dir = java.nio.file.Files.createTempDirectory("lshidx_mp").toString
-    Similarity.writeLshIndex(corpusDf, "vec_id", "embedding", dir,
-      nBits = 8, tables = 2)
-    val served = Similarity.lshTopKFromIndex(spark, dir, "vec_id", "embedding",
-        queryDf, "embedding", 1000, hammingProbe = 1)
+    val mp = CellIndex(dir, Hyperplane(nBits = 8, tables = 2,
+      hammingProbe = 1), Exact)
+    mp.write(corpusDf, "vec_id", "embedding")
+    val served = mp.topK(spark, "vec_id", "embedding", queryDf, "embedding",
+        1000)
       .as[(Long, Double)].collect().map(_._1).toSet
     assert(served === multi)
 
@@ -81,9 +84,17 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
         queryDf, "embedding", 1000, nBits = 8, tables = 2, hammingProbe = 2)
       .as[(Long, Double)].collect().map(_._1).toSet
     assert(multi.subsetOf(multi2))
+    // ...and the index serve probes the same pair flips at hamming 2
+    assert(CellIndex(dir, Hyperplane(hammingProbe = 2), Exact)
+      .topK(spark, "vec_id", "embedding", queryDf, "embedding", 1000)
+      .as[(Long, Double)].collect().map(_._1).toSet === multi2)
     intercept[IllegalArgumentException] {
       Similarity.lshTopK(corpusDf, "vec_id", "embedding",
         queryDf, "embedding", 5, nBits = 8, tables = 1, hammingProbe = 3)
+    }
+    intercept[IllegalArgumentException] {
+      CellIndex(dir, Hyperplane(hammingProbe = 3), Exact)
+        .topK(spark, "vec_id", "embedding", queryDf, "embedding", 5)
     }
   }
 
@@ -159,17 +170,24 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
   test("materialized IVF index: partition-pruned scan, same planted recall") {
     val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    Similarity.writeIvfIndex(corpusDf, "vec_id", "embedding", dir,
-      nlist = 16, kmeansIters = 1)
-    val served = Similarity.ivfTopKFromIndex(spark, dir, "vec_id", "embedding",
-      queryDf, "embedding", 5, nprobe = 4)
+    val ix = CellIndex(dir, Voronoi(nlist = 16, nprobe = 4, kmeansIters = 1),
+      Exact)
+    ix.write(corpusDf, "vec_id", "embedding")
+    val served = ix.topK(spark, "vec_id", "embedding", queryDf, "embedding", 5)
     val plan = served.queryExecution.executedPlan.toString
     // the scan must keep only the probed cells — IVF pruning expressed as
     // parquet partition pruning
     assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
+    // the exact codec's score is final: one scan, no rerank join
+    assert(!plan.contains("LeftSemi"), plan)
     val top = served.as[(Long, Double)].collect()
     assert(top.head._1 === 999L)
     assert(top.head._2 > 0.99)
+    // a query frame of two rows is refused, never mixed into one ranking
+    intercept[IllegalArgumentException] {
+      ix.topK(spark, "vec_id", "embedding", queryDf.union(queryDf),
+        "embedding", 5)
+    }
   }
 
   test("filtered IVF serve: predicate pushed into the pruned scan, " +
@@ -182,10 +200,11 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
         :+ (999L, planted, 1) :+ (998L, planted2, 0))
       .toDF("vec_id", "embedding", "label")
     val dir = java.nio.file.Files.createTempDirectory("ivfidxf").toString
-    Similarity.writeIvfIndex(labeled, "vec_id", "embedding", dir,
-      nlist = 16, kmeansIters = 1, attrCols = Seq("label"))
-    val served = Similarity.ivfTopKFromIndex(spark, dir, "vec_id", "embedding",
-      queryDf, "embedding", 5, nprobe = 4, filter = Some(col("label") === 1))
+    val ix = CellIndex(dir, Voronoi(nlist = 16, nprobe = 4, kmeansIters = 1),
+      Exact)
+    ix.write(labeled, "vec_id", "embedding", attrCols = Seq("label"))
+    val served = ix.topK(spark, "vec_id", "embedding", queryDf, "embedding", 5,
+      filter = Some(col("label") === 1))
     val plan = served.queryExecution.executedPlan.toString
     // both prunings visible in the ONE scan: cell directories dropped via
     // PartitionFilters, the label predicate pushed to parquet row groups
@@ -197,17 +216,16 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     assert(!top.map(_._1).contains(998L))
     assert(top.map(_._1).forall(id => id == 999L || id % 2 == 1))
     // batched path honors the same filter (same exclusion, 999 on top)
-    val batched = Similarity.ivfBatchTopKFromIndex(spark, dir, "vec_id",
-        "embedding", queryDf, "vec_id", "embedding", 5, nprobe = 4,
-        filter = Some(col("label") === 1))
+    val batched = ix.batchTopK(spark, "vec_id", "embedding", queryDf,
+        "vec_id", "embedding", 5, filter = Some(col("label") === 1))
       .orderBy(col("score").desc).as[(Long, Long, Double)].collect()
     assert(batched.head._2 === 999L)
     assert(!batched.map(_._2).contains(998L))
     // the COMPRESSED index honors it too: the predicate prunes the ADC
     // candidate scan (codes carry the label), single and batched serves
     val pqDir = java.nio.file.Files.createTempDirectory("ivfpqidxf").toString
-    val pq = CellIndex(pqDir, Pq.Codec(m = 8, k = 16), nlist = 16,
-      nprobe = 4, kmeansIters = 1)
+    val pq = CellIndex(pqDir, Voronoi(nlist = 16, nprobe = 4, kmeansIters = 1),
+      Pq.Codec(m = 8, k = 16))
     pq.write(labeled, "vec_id", "embedding", attrCols = Seq("label"))
     val pqTop = pq.topK(spark, "vec_id", "embedding", queryDf, "embedding",
         5, filter = Some(col("label") === 1), rawCorpus = Some(labeled))
@@ -224,10 +242,9 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
   test("materialized LSH index: partition-pruned scan, planted neighbor served") {
     val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
-    Similarity.writeLshIndex(corpusDf, "vec_id", "embedding", dir,
-      nBits = 8, tables = 4)
-    val served = Similarity.lshTopKFromIndex(spark, dir, "vec_id", "embedding",
-      queryDf, "embedding", 5)
+    val ix = CellIndex(dir, Hyperplane(nBits = 8, tables = 4), Exact)
+    ix.write(corpusDf, "vec_id", "embedding")
+    val served = ix.topK(spark, "vec_id", "embedding", queryDf, "embedding", 5)
     val plan = served.queryExecution.executedPlan.toString
     // the scan must keep only the probed (table, bucket) directories —
     // LSH probing expressed as parquet partition pruning
@@ -239,6 +256,11 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     val scratch = Similarity.lshTopK(corpusDf, "vec_id", "embedding",
       queryDf, "embedding", 5, nBits = 8, tables = 4).as[(Long, Double)].collect()
     assert(top.toSeq === scratch.toSeq)
+    // a query frame of two rows is refused, never mixed into one ranking
+    intercept[IllegalArgumentException] {
+      ix.topK(spark, "vec_id", "embedding", queryDf.union(queryDf),
+        "embedding", 5)
+    }
   }
 
   test("native cell argmax / top-cells are bit-identical to the " +
@@ -274,8 +296,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       "keys, untouched leaves keep their bytes, serving unaffected, " +
       "idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("lshidx_rt").toString
-    Similarity.writeLshIndex(corpusDf, "vec_id", "embedding", dir,
-      nBits = 6, tables = 3)
+    val ix = CellIndex(dir, Hyperplane(nBits = 6, tables = 3), Exact)
+    ix.write(corpusDf, "vec_id", "embedding")
     val gone = Seq(5L, 17L, 42L)
     // leaves NOT touched by the takedown must not be rewritten at all
     // (the pruned scan never opens them) — fingerprint their bytes
@@ -293,7 +315,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       .find(!touched.contains(_))
     val beforeBytes = untouchedLeaf.map { case (t, b) => leafFiles(t, b) }
     val keys = gone.toDF("id")
-    Similarity.retractFromLshIndex(spark, dir, keys, "id", "vec_id")
+    ix.retract(spark, keys, "id", "vec_id")
     val data = spark.read.parquet(s"$dir/data")
     assert(data.where(col("vec_id").isin(gone: _*)).isEmpty)
     // every surviving id still has all `tables` replicas
@@ -303,11 +325,11 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
         s"untouched leaf table=$t/bucket=$b was rewritten")
     }
     // serving still finds the planted neighbor through the pruned scan
-    val top = Similarity.lshTopKFromIndex(spark, dir, "vec_id", "embedding",
-      queryDf, "embedding", 5).as[(Long, Double)].collect()
+    val top = ix.topK(spark, "vec_id", "embedding", queryDf, "embedding", 5)
+      .as[(Long, Double)].collect()
     assert(top.head._1 === 999L)
     // idempotent: excising absent keys is a no-op
-    Similarity.retractFromLshIndex(spark, dir, keys, "id", "vec_id")
+    ix.retract(spark, keys, "id", "vec_id")
     assert(spark.read.parquet(s"$dir/data")
       .where(col("vec_id").isin(gone: _*)).isEmpty)
   }
@@ -390,7 +412,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   test("IVF-PQ index: partition-pruned codes-only ADC scan, planted " +
       "neighbor served") {
     val path = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
-    CellIndex(path, Pq.Codec(m = 4, k = 8), nlist = 4, kmeansIters = 1)
+    CellIndex(path, Voronoi(nlist = 4, kmeansIters = 1), Pq.Codec(m = 4, k = 8))
       .write(corpusDf, "vec_id", "embedding")
     val served = Similarity.ivfPqTopKFromIndex(spark, path, corpusDf,
       "vec_id", "embedding", queryDf, "embedding", 5,
@@ -426,16 +448,16 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
     // IVF
     val ivfDir = java.nio.file.Files.createTempDirectory("ivf_app").toString
-    Similarity.writeIvfIndex(initial, "vec_id", "embedding", ivfDir,
-      nlist = 4, kmeansIters = 1)
+    val ivf = CellIndex(ivfDir, Voronoi(nlist = 4, nprobe = 2,
+      kmeansIters = 1), Exact)
+    ivf.write(initial, "vec_id", "embedding")
     val centsBefore = spark.read.parquet(s"$ivfDir/centroids")
       .collect().map(_.toString).sorted.toSeq
-    assert(!Similarity.ivfTopKFromIndex(spark, ivfDir, "vec_id", "embedding",
-        queryDf, "embedding", 5, nprobe = 2)
+    assert(!ivf.topK(spark, "vec_id", "embedding", queryDf, "embedding", 5)
       .as[(Long, Double)].collect().map(_._1).contains(999L))
-    Similarity.appendToIvfIndex(batch, "vec_id", "embedding", ivfDir)
-    val ivfTop = Similarity.ivfTopKFromIndex(spark, ivfDir, "vec_id",
-        "embedding", queryDf, "embedding", 5, nprobe = 2)
+    ivf.append(batch, "vec_id", "embedding")
+    val ivfTop = ivf.topK(spark, "vec_id", "embedding", queryDf, "embedding",
+        5)
       .as[(Long, Double)].collect()
     assert(ivfTop.head._1 === 999L && ivfTop.head._2 > 0.99)
     // sidecar centroids frozen by the append (the comparability guarantee)
@@ -445,8 +467,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
     // IVF-PQ (codes encoded with the stored codebooks)
     val pqDir = java.nio.file.Files.createTempDirectory("ivfpq_app").toString
-    val pq = CellIndex(pqDir, Pq.Codec(m = 4, k = 8), nlist = 4, nprobe = 2,
-      kmeansIters = 1)
+    val pq = CellIndex(pqDir, Voronoi(nlist = 4, nprobe = 2, kmeansIters = 1),
+      Pq.Codec(m = 4, k = 8))
     pq.write(initial, "vec_id", "embedding")
     pq.append(batch, "vec_id", "embedding")
     val pqTop = pq.topK(spark, "vec_id", "embedding", queryDf, "embedding",
@@ -456,22 +478,23 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
     // LSH (buckets derived from the stored nBits/tables params)
     val lshDir = java.nio.file.Files.createTempDirectory("lsh_app").toString
-    Similarity.writeLshIndex(initial, "vec_id", "embedding", lshDir,
-      nBits = 8, tables = 2)
-    Similarity.appendToLshIndex(batch, "vec_id", "embedding", lshDir)
-    val lshTop = Similarity.lshTopKFromIndex(spark, lshDir, "vec_id",
-        "embedding", queryDf, "embedding", 5)
+    val lsh = CellIndex(lshDir, Hyperplane(nBits = 8, tables = 2), Exact)
+    lsh.write(initial, "vec_id", "embedding")
+    lsh.append(batch, "vec_id", "embedding")
+    val lshTop = lsh.topK(spark, "vec_id", "embedding", queryDf, "embedding",
+        5)
       .as[(Long, Double)].collect()
     assert(lshTop.head._1 === 999L && lshTop.head._2 > 0.99)
   }
 
-  test("semanticDupAgainstIndex: arriving near-dup of an INDEXED vector " +
+  test("withinThreshold: arriving near-dup of an INDEXED vector " +
       "surfaces through cell-pruned exact verify") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_sem").toString
     // corpus = everything except the planted near-dup; batch = just it
     val corpus = corpusDf.filter(col("vec_id") =!= 999L)
-    Similarity.writeIvfIndex(corpus, "vec_id", "embedding", dir,
-      nlist = 4, kmeansIters = 1)
+    val ix = CellIndex(dir, Voronoi(nlist = 4, nprobe = 2, kmeansIters = 1),
+      Exact)
+    ix.write(corpus, "vec_id", "embedding")
     // the planted vector is a near-identical copy of q; q itself is NOT
     // in the corpus — but vector 999 ≈ q has no corpus twin, so index it
     // differently: batch carries a near-copy of corpus vector 1
@@ -481,61 +504,60 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       (1001L, v1.map(x => x + 1e-3f)), // near-dup of indexed vector 1
       (1002L, Array.fill(dim)(rnd.nextGaussian().toFloat)) // unrelated
     ).toDF("vec_id", "embedding")
-    val hits = Similarity.semanticDupAgainstIndex(batch, "vec_id",
-        "embedding", dir, threshold = 0.98, probes = 2)
-      .as[(Long, Long, Double)].collect()
+    def dups = ix.withinThreshold(spark, "vec_id", "embedding", batch,
+      "vec_id", "embedding", threshold = 0.98)
+    val hits = dups.as[(Long, Long, Double)].collect()
     assert(hits.map(h => (h._1, h._2)).toSet === Set((1001L, 1L)))
     assert(hits.head._3 > 0.99)
     // the corpus scan is partition-pruned to the batch's probed cells
-    val plan = Similarity.semanticDupAgainstIndex(batch, "vec_id",
-        "embedding", dir, threshold = 0.98, probes = 2)
-      .queryExecution.executedPlan.toString
+    val plan = dups.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).nonEmpty,
       plan)
+    // a threshold over approximate scores is refused
+    intercept[IllegalArgumentException] {
+      CellIndex(dir, Voronoi(), VectorCodec.Sq8).withinThreshold(spark,
+        "vec_id", "embedding", batch, "vec_id", "embedding", 0.98)
+    }
   }
 
   test("batched IVF / LSH / brute-force serving: per-query results " +
       "identical to the per-query loop; job count independent of batch " +
       "size") {
     val ivfDir = java.nio.file.Files.createTempDirectory("ivf_batch").toString
-    Similarity.writeIvfIndex(corpusDf, "vec_id", "embedding", ivfDir,
-      nlist = 4, kmeansIters = 1)
+    val ivf = CellIndex(ivfDir, Voronoi(nlist = 4, nprobe = 2,
+      kmeansIters = 1), Exact)
+    ivf.write(corpusDf, "vec_id", "embedding")
 
     // query TABLE: the planted query + 5 corpus vectors under fresh ids
     val queryRows = (0L, q) +: corpus.take(5)
       .map { case (i, v) => (1000L + i, v) }
     val queriesDf = queryRows.toDF("vec_id", "embedding")
 
-    def loopIvf(k: Int, nprobe: Int) = queryRows.flatMap { case (qid, v) =>
-      Similarity.ivfTopKFromIndex(spark, ivfDir, "vec_id", "embedding",
-          Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", k, nprobe)
+    def loop(ix: CellIndex, k: Int = 5) = queryRows.flatMap { case (qid, v) =>
+      ix.topK(spark, "vec_id", "embedding",
+          Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", k)
         .as[(Long, Double)].collect().map { case (id, s) => (qid, id, s) }
-    }
-
-    val ivfBatch = Similarity.ivfBatchTopKFromIndex(spark, ivfDir, "vec_id",
-        "embedding", queriesDf, "vec_id", "embedding", k = 5, nprobe = 2)
+    }.toSeq.sortBy(r => (r._1, -r._3, r._2))
+    def batch(ix: CellIndex, k: Int = 5) = ix.batchTopK(spark, "vec_id",
+        "embedding", queriesDf, "vec_id", "embedding", k)
       .as[(Long, Long, Double)].collect().toSeq
-    assert(ivfBatch.sortBy(r => (r._1, -r._3, r._2)) ===
-      loopIvf(5, 2).toSeq.sortBy(r => (r._1, -r._3, r._2)))
+
+    val ivfBatch = batch(ivf)
+    assert(ivfBatch.sortBy(r => (r._1, -r._3, r._2)) === loop(ivf))
     // the planted query still finds its planted neighbor through the batch
     assert(ivfBatch.filter(_._1 == 0L).maxBy(_._3)._2 === 999L)
 
     // batched LSH from the materialized index ≡ the per-query loop
+    // (hamming 2 adds the pair-flip probes on both paths; k past the
+    // corpus size compares the whole probed candidate sets)
     val lshDir = java.nio.file.Files.createTempDirectory("lsh_batch").toString
-    Similarity.writeLshIndex(corpusDf, "vec_id", "embedding", lshDir,
-      nBits = 4, tables = 4)
-    val lshBatch = Similarity.lshBatchTopKFromIndex(spark, lshDir, "vec_id",
-        "embedding", queriesDf, "vec_id", "embedding", k = 5,
-        hammingProbe = 1)
-      .as[(Long, Long, Double)].collect().toSeq
-    val lshLoop = queryRows.flatMap { case (qid, v) =>
-      Similarity.lshTopKFromIndex(spark, lshDir, "vec_id", "embedding",
-          Seq((qid, v)).toDF("vec_id", "embedding"), "embedding", 5,
-          hammingProbe = 1)
-        .as[(Long, Double)].collect().map { case (id, s) => (qid, id, s) }
+    val lsh = CellIndex(lshDir, Hyperplane(nBits = 4, tables = 4), Exact)
+    lsh.write(corpusDf, "vec_id", "embedding")
+    for (hp <- Seq(1, 2); k <- Seq(5, 1000)) {
+      val ix = CellIndex(lshDir, Hyperplane(hammingProbe = hp), Exact)
+      assert(batch(ix, k).sortBy(r => (r._1, -r._3, r._2)) === loop(ix, k),
+        s"hammingProbe = $hp, k = $k")
     }
-    assert(lshBatch.sortBy(r => (r._1, -r._3, r._2)) ===
-      lshLoop.toSeq.sortBy(r => (r._1, -r._3, r._2)))
 
     // batched brute force (the exact anchor) ≡ the single-query operator
     val bfBatch = Similarity.bruteForceBatchTopK(corpusDf, "vec_id",
@@ -550,8 +572,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       bfLoop.toSeq.sortBy(r => (r._1, -r._3, r._2)))
 
     // the batched plan prunes the index scan to the probed cells
-    val served = Similarity.ivfBatchTopKFromIndex(spark, ivfDir, "vec_id",
-      "embedding", queriesDf, "vec_id", "embedding", k = 5, nprobe = 2)
+    val served = ivf.batchTopK(spark, "vec_id", "embedding", queriesDf,
+      "vec_id", "embedding", k = 5)
     val plan = served.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).nonEmpty,
       plan)
@@ -576,8 +598,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     }
     def jobsOf(qs: org.apache.spark.sql.DataFrame): Int =
       jobsRunning {
-        Similarity.ivfBatchTopKFromIndex(spark, ivfDir, "vec_id",
-          "embedding", qs, "vec_id", "embedding", k = 5, nprobe = 2).count()
+        ivf.batchTopK(spark, "vec_id", "embedding", qs, "vec_id",
+          "embedding", k = 5).count()
       }
     val jobsSmall = jobsOf(queriesDf.limit(2))
     val jobsFull = jobsOf(queriesDf)
@@ -587,8 +609,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     // same invariance for the LSH and codec-index batch paths
     def lshJobs(qs: org.apache.spark.sql.DataFrame): Int =
       jobsRunning {
-        Similarity.lshBatchTopKFromIndex(spark, lshDir, "vec_id",
-          "embedding", qs, "vec_id", "embedding", k = 5).count()
+        lsh.batchTopK(spark, "vec_id", "embedding", qs, "vec_id",
+          "embedding", k = 5).count()
       }
     assert(lshJobs(queriesDf) === lshJobs(queriesDf.limit(2)))
     val sq = FlatIndex(
@@ -705,8 +727,8 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
 
   test("ivfIndexStats: population accounting and imbalance >= 1") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_stats").toString
-    Similarity.writeIvfIndex(corpusDf, "vec_id", "embedding", dir,
-      nlist = 4, kmeansIters = 1)
+    CellIndex(dir, Voronoi(nlist = 4, kmeansIters = 1), Exact)
+      .write(corpusDf, "vec_id", "embedding")
     val r = Similarity.ivfIndexStats(spark, dir).collect().head
     assert(r.getInt(0) === 4)                   // nlist
     val populated = r.getLong(1)
@@ -739,15 +761,15 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
         (5 to 102).map(i => (i.toLong, member(0))) ++
         (103 to 200).map(i => (i.toLong, member(1))))
         .toDF("vec_id", "embedding")
-    Similarity.writeIvfIndex(baseCorpus, "vec_id", "embedding", dir,
-      nlist = 4, kmeansIters = 2)
+    val ivf = CellIndex(dir, Voronoi(nlist = 4, kmeansIters = 2), Exact)
+    ivf.write(baseCorpus, "vec_id", "embedding")
     // the drifted batch: a THIRD direction (e2) with a small e0 bias so
     // the frozen centroids deterministically argmax all of it into one
     // e0-cell — the hot-cell degradation reclustering exists for
     val drifted = (1 to 100).map { i =>
       (5000L + i, member(2, bias = 0.5))
     }.toDF("vec_id", "embedding")
-    Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", dir)
+    ivf.append(drifted, "vec_id", "embedding")
     val before = Similarity.ivfIndexStats(spark, dir)
       .select("imbalance").as[Double].head()
     val total = spark.read.parquet(s"$dir/data").count()
@@ -787,14 +809,14 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     // drifted direction finds a drifted member with single-cell probing
     val driftedQuery = Seq((0L, member(2, bias = 0.5)))
       .toDF("vec_id", "embedding")
-    val top = Similarity.ivfTopKFromIndex(spark, dir, "vec_id", "embedding",
-        driftedQuery, "embedding", 3, nprobe = 1)
+    val top = CellIndex(dir, Voronoi(nprobe = 1), Exact).topK(spark,
+        "vec_id", "embedding", driftedQuery, "embedding", 3)
       .as[(Long, Double)].collect()
     assert(top.head._1 >= 5000L, s"expected a drifted-cluster member: $top")
     // and a base-direction query is still served from its cell
     val baseQuery = Seq((0L, member(1))).toDF("vec_id", "embedding")
-    val orig = Similarity.ivfTopKFromIndex(spark, dir, "vec_id", "embedding",
-        baseQuery, "embedding", 3, nprobe = 2)
+    val orig = CellIndex(dir, Voronoi(nprobe = 2), Exact).topK(spark,
+        "vec_id", "embedding", baseQuery, "embedding", 3)
       .as[(Long, Double)].collect()
     assert(orig.forall(t => t._1 >= 103L && t._1 <= 200L || t._1 <= 4L),
       s"base query must hit the e1 cluster: ${orig.toSeq}")
@@ -804,25 +826,26 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
       "compaction bounds them, serving result identical") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_compact")
       .toString
-    Similarity.writeIvfIndex(corpusDf, "vec_id", "embedding", dir,
-      nlist = 4, kmeansIters = 1)
+    val ivf = CellIndex(dir, Voronoi(nlist = 4, nprobe = 4, kmeansIters = 1),
+      Exact)
+    ivf.write(corpusDf, "vec_id", "embedding")
     // 12 small appends — each lands one file-set per touched cell
     (1 to 12).foreach { b =>
       val batch = Seq((5000L + b,
         Array.fill(dim)(rnd.nextGaussian().toFloat))).toDF(
         "vec_id", "embedding")
-      Similarity.appendToIvfIndex(batch, "vec_id", "embedding", dir)
+      ivf.append(batch, "vec_id", "embedding")
     }
-    val servedBefore = Similarity.ivfTopKFromIndex(spark, dir, "vec_id",
-        "embedding", queryDf, "embedding", 5, nprobe = 4)
+    val servedBefore = ivf.topK(spark, "vec_id", "embedding", queryDf,
+        "embedding", 5)
       .as[(Long, Double)].collect().toSeq
     val (filesBefore, filesAfter) = graft.sources.Compaction
       .compactPartitioned(spark, s"$dir/data", targetBytes = 64L << 20)
     assert(filesBefore > 12, s"appends should have accumulated files")
     // every cell is far under targetBytes → exactly one file per cell
     assert(filesAfter <= 4, s"expected <=1 file/cell, got $filesAfter")
-    val servedAfter = Similarity.ivfTopKFromIndex(spark, dir, "vec_id",
-        "embedding", queryDf, "embedding", 5, nprobe = 4)
+    val servedAfter = ivf.topK(spark, "vec_id", "embedding", queryDf,
+        "embedding", 5)
       .as[(Long, Double)].collect().toSeq
     assert(servedAfter === servedBefore)
     // the sidecar was untouched by construction
