@@ -7,6 +7,7 @@ import graft.operators.{CellIndex, Components, Contamination, Dedup,
   FlatIndex, Keywords, Merge, Multimodal, Pq, Similarity, VectorCodec}
 import graft.operators.CellAssigner.{Hyperplane, Voronoi}
 import graft.operators.VectorCodec.Exact
+import graft.sources.SketchSidecar.Scope
 
 /** LLM-training-data-pipeline extension operators over the `documents` /
   * `embeddings` tables (builder brief + SURVEY.md §7.1.6): dedup, similarity
@@ -382,7 +383,7 @@ object ExtQueries {
     * batches into a DAY-grouped sidecar — one row per (batch, day),
     * distinct over `user_id` — so "distinct users over an arbitrary
     * date range" is served by register union of the covered days' rows
-    * ([[graft.sources.SketchSidecar.servedDistinctAcrossGroups]]), the
+    * ([[graft.sources.SketchSidecar.servedDistinct]] over a window), the
     * classic production HLL pattern. Batches split on event_id so every
     * day spans several batches. Built once per sf dir.
     */
@@ -992,9 +993,10 @@ object ExtQueries {
     "q_sketch_by_group" -> ((s, d) => {
       val cfg = groupedSketchSidecarFor(s, d)
       val dist = graft.sources.SketchSidecar
-        .servedDistinctByGroup(s, cfg.sidecarPath)
+        .servedDistinct(s, cfg.sidecarPath, Scope.PerGroup)
       val qs = graft.sources.SketchSidecar
-        .servedQuantilesByGroup(s, cfg.sidecarPath, Seq(0.5, 0.9))
+        .servedQuantiles(s, cfg.sidecarPath, Seq(0.5, 0.9),
+          Scope.PerGroup)
         .groupBy("grp")
         .agg(max(when(col("p") === 0.5, col("value"))).as("p50"),
           max(when(col("p") === 0.9, col("value"))).as("p90"))
@@ -1013,14 +1015,15 @@ object ExtQueries {
       val e = docs(s, d).select(col("source").as("grp"), col("doc_id"),
         col("n_chars").cast("double").as("value"))
       val served = graft.sources.SketchSidecar
-        .servedDistinctByGroup(s, cfg.sidecarPath)
+        .servedDistinct(s, cfg.sidecarPath, Scope.PerGroup)
       val exact = e.groupBy("grp")
         .agg(countDistinct(col("doc_id")).as("x"))
       val distErr = served.join(exact, Seq("grp"))
         .agg(max(abs(col("distinct_estimate") - col("x")) /
           col("x").cast("double")).as("max_dist_rel_err"))
       val sq = graft.sources.SketchSidecar
-        .servedQuantilesByGroup(s, cfg.sidecarPath, Seq(0.5, 0.9))
+        .servedQuantiles(s, cfg.sidecarPath, Seq(0.5, 0.9),
+          Scope.PerGroup)
         .select(col("grp"), col("p"), col("value").as("v"))
       val qErr = e.join(broadcast(sq), Seq("grp"))
         .groupBy("grp", "p", "v")
@@ -1187,10 +1190,11 @@ object ExtQueries {
     "q_sketch_window" -> ((s, d) => {
       val cfg = daySketchSidecarFor(s, d)
       val dist = graft.sources.SketchSidecar
-        .servedDistinctAcrossGroups(s, cfg.sidecarPath, sketchWindowDays)
+        .servedDistinct(s, cfg.sidecarPath,
+          Scope.Window(sketchWindowDays))
       val qs = graft.sources.SketchSidecar
-        .servedQuantilesAcrossGroups(s, cfg.sidecarPath,
-          sketchWindowDays, Seq(0.5, 0.9))
+        .servedQuantiles(s, cfg.sidecarPath, Seq(0.5, 0.9),
+          Scope.Window(sketchWindowDays))
         .agg(max(when(col("p") === 0.5, col("value"))).as("p50"),
           max(when(col("p") === 0.9, col("value"))).as("p90"))
       dist.crossJoin(qs)
@@ -1207,14 +1211,15 @@ object ExtQueries {
     "q_sketch_window_gap" -> ((s, d) => {
       val cfg = daySketchSidecarFor(s, d)
       val served = graft.sources.SketchSidecar
-        .servedDistinctAcrossGroups(s, cfg.sidecarPath, sketchWindowDays)
+        .servedDistinct(s, cfg.sidecarPath,
+          Scope.Window(sketchWindowDays))
       val inWindow = graft.Tables.events(s, d)
         .where(col("ts").cast("date")
           .between(sketchWindowDays.head, sketchWindowDays.last))
       val exact = inWindow.agg(countDistinct(col("user_id")).as("x"))
       val sq = graft.sources.SketchSidecar
-        .servedQuantilesAcrossGroups(s, cfg.sidecarPath,
-          sketchWindowDays, Seq(0.5, 0.9))
+        .servedQuantiles(s, cfg.sidecarPath, Seq(0.5, 0.9),
+          Scope.Window(sketchWindowDays))
         .select(col("p"), col("value").as("v"))
       val qErr = inWindow
         .select(col("value").cast("double").as("value"))
@@ -1249,8 +1254,8 @@ object ExtQueries {
     // enforces all four CMS guarantees on the window's own scale
     "q_hh_window" -> ((s, d) => {
       val cfg = dayMultiSidecarFor(s, d)
-      graft.sources.SketchSidecar.servedHeavyHittersAcrossGroups(
-        s, cfg.sidecarPath, sketchWindowDays, phi = 0.1)
+      graft.sources.SketchSidecar.servedHeavyHitters(
+        s, cfg.sidecarPath, phi = 0.1, Scope.Window(sketchWindowDays))
     }),
 
     // the windowed CMS contract (one row or loudly zero): vs the EXACT
@@ -1269,14 +1274,14 @@ object ExtQueries {
         .agg(count(lit(1)).as("cnt"))
       val totalRow = exact.agg(sum(col("cnt")).as("total"))
       val allServe = graft.sources.SketchSidecar
-        .servedHeavyHittersAcrossGroups(s, cfg.sidecarPath,
-          sketchWindowDays, phi = 1e-12)
+        .servedHeavyHitters(s, cfg.sidecarPath, phi = 1e-12,
+          Scope.Window(sketchWindowDays))
       val coverage = allServe
         .agg(max(col("groups_covered")).as("groups_covered"))
       val allEst = allServe.select(col("key"), col("est"))
       val served = graft.sources.SketchSidecar
-        .servedHeavyHittersAcrossGroups(s, cfg.sidecarPath,
-          sketchWindowDays, phi)
+        .servedHeavyHitters(s, cfg.sidecarPath, phi,
+          Scope.Window(sketchWindowDays))
         .select(col("key")).withColumn("__served", lit(1))
       val bounds = allEst.join(exact, Seq("key"))
         .agg(max(col("cnt") - col("est")).as("max_under"),
@@ -1308,8 +1313,8 @@ object ExtQueries {
     // _gap twin below prices it against the exact range count
     "q_kmv_window" -> ((s, d) => {
       val cfg = dayMultiSidecarFor(s, d)
-      graft.sources.SketchSidecar.servedKmvDistinctAcrossGroups(
-          s, cfg.sidecarPath, sketchWindowDays)
+      graft.sources.SketchSidecar.servedKmvDistinct(
+          s, cfg.sidecarPath, Scope.Window(sketchWindowDays))
         .select(col("groups_covered"),
           round(col("distinct_estimate"), 6).as("distinct_estimate"))
     }),
@@ -1320,8 +1325,8 @@ object ExtQueries {
     "q_kmv_window_gap" -> ((s, d) => {
       val cfg = dayMultiSidecarFor(s, d)
       val served = graft.sources.SketchSidecar
-        .servedKmvDistinctAcrossGroups(s, cfg.sidecarPath,
-          sketchWindowDays)
+        .servedKmvDistinct(s, cfg.sidecarPath,
+          Scope.Window(sketchWindowDays))
       val exact = graft.Tables.events(s, d)
         .where(col("ts").cast("date")
           .between(sketchWindowDays.head, sketchWindowDays.last))
@@ -1401,7 +1406,7 @@ object ExtQueries {
     "q_f2_skew_by_group" -> ((s, d) => {
       val cfg = groupedSketchSidecarFor(s, d)
       graft.sources.SketchSidecar
-        .servedKeySkewByGroup(s, cfg.sidecarPath)
+        .servedKeySkew(s, cfg.sidecarPath, Scope.PerGroup)
         .select(col("grp"), col("n"), col("f2_est"),
           round(col("l2_l1_ratio"), 6).as("l2_l1_ratio"),
           round(col("uniform_equiv_keys"), 6).as("uniform_equiv_keys"),
@@ -1416,7 +1421,7 @@ object ExtQueries {
     "q_f2_skew_by_group_gap" -> ((s, d) => {
       val cfg = groupedSketchSidecarFor(s, d)
       val served = graft.sources.SketchSidecar
-        .servedKeySkewByGroup(s, cfg.sidecarPath)
+        .servedKeySkew(s, cfg.sidecarPath, Scope.PerGroup)
       val exact = docs(s, d)
         .groupBy(col("source").cast("string").as("grp"),
           col("lang").cast("string").as("key"))
@@ -1609,7 +1614,8 @@ object ExtQueries {
     // direct scan (full equality oracle, GROUP BY source)
     "q_sketch_moments_by_group" -> ((s, d) => {
       val cfg = momentsSidecarFor(s, d)
-      graft.sources.SketchSidecar.servedMomentsByGroup(s, cfg.sidecarPath)
+      graft.sources.SketchSidecar.servedMoments(s, cfg.sidecarPath,
+          Scope.PerGroup)
         .select(col("grp"), col("vn"), col("vsum"), col("vmin"),
           col("vmax"), round(col("mean"), 6).as("mean"),
           round(col("variance"), 6).as("variance"))
@@ -1667,7 +1673,7 @@ object ExtQueries {
     "q_heavy_hitters_by_group" -> ((s, d) => {
       val cfg = groupedSketchSidecarFor(s, d)
       graft.sources.SketchSidecar
-        .servedHeavyHittersByGroup(s, cfg.sidecarPath, phi = 0.25)
+        .servedHeavyHitters(s, cfg.sidecarPath, phi = 0.25, Scope.PerGroup)
         .orderBy("grp", "key")
     }),
 
@@ -1685,10 +1691,11 @@ object ExtQueries {
         .agg(count(lit(1)).as("cnt"))
       val totals = exact.groupBy("grp").agg(sum(col("cnt")).as("total"))
       val allEst = graft.sources.SketchSidecar
-        .servedHeavyHittersByGroup(s, cfg.sidecarPath, phi = 1e-12)
+        .servedHeavyHitters(s, cfg.sidecarPath, phi = 1e-12,
+          Scope.PerGroup)
         .select(col("grp"), col("key"), col("est"))
       val served = graft.sources.SketchSidecar
-        .servedHeavyHittersByGroup(s, cfg.sidecarPath, phi)
+        .servedHeavyHitters(s, cfg.sidecarPath, phi, Scope.PerGroup)
         .select(col("grp"), col("key")).withColumn("__served", lit(1))
       val bounds = allEst.join(exact, Seq("grp", "key"))
         .join(totals, Seq("grp"))
@@ -1724,7 +1731,8 @@ object ExtQueries {
     "q_kmv_by_group" -> ((s, d) => {
       val (cfgA, cfgB) = groupedKmvSidecarsFor(s, d)
       graft.sources.SketchSidecar
-        .servedOverlapByGroup(s, cfgA.sidecarPath, cfgB.sidecarPath)
+        .servedOverlap(s, cfgA.sidecarPath, cfgB.sidecarPath,
+          Scope.PerGroup)
         .select(col("grp"),
           round(col("a_est"), 4).as("a_est"),
           round(col("b_est"), 4).as("b_est"),
@@ -1747,7 +1755,8 @@ object ExtQueries {
       val relBound = 3.5 / math.sqrt((k - 2).toDouble)
       val jBound = 3.5 * 0.5 / math.sqrt(k.toDouble)
       val served = graft.sources.SketchSidecar
-        .servedOverlapByGroup(s, cfgA.sidecarPath, cfgB.sidecarPath)
+        .servedOverlap(s, cfgA.sidecarPath, cfgB.sidecarPath,
+          Scope.PerGroup)
       val m = Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderpriority").as("grp"),
           pmod(col("o_orderkey"), lit(10)).as("m"))

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session every main runs on ([[Bench]], [[Verify]], [[Explain]],
-  * [[Probe]]): `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+/** The session every main runs on ([[Bench]], [[Verify]], [[Explain]]):
+  * `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
   * partitions, UTC session time, no UI, WARN logging.
   */
 object LocalSession {

@@ -707,10 +707,7 @@ object CorpusPipeline {
             val n = readCount(cfg.sidecarPath, "_maint_rowmerge") + 1
             writeCount(cfg.sidecarPath, "_maint_rowmerge", n)
             if (n >= cfg.rowMergeEvery) {
-              if (cfg.groupKeyExpr.isDefined)
-                graft.sources.SketchSidecar.compactRowsByGroup(spark, cfg)
-              else
-                graft.sources.SketchSidecar.compactRows(spark, cfg)
+              graft.sources.SketchSidecar.compactRows(spark, cfg)
               writeCount(cfg.sidecarPath, "_maint_rowmerge", 0)
             }
           }

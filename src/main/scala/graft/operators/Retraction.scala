@@ -1193,9 +1193,7 @@ object Retraction {
     sketch.foreach { cfg =>
       if (exists(cfg.sidecarPath)) {
         graft.sources.Compaction.compact(spark, cfg.sidecarPath)
-        if (cfg.groupKeyExpr.isDefined)
-          graft.sources.SketchSidecar.compactRowsByGroup(spark, cfg)
-        else graft.sources.SketchSidecar.compactRows(spark, cfg)
+        graft.sources.SketchSidecar.compactRows(spark, cfg)
       }
     }
     a.textIndex.foreach { cfg =>

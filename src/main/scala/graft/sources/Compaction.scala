@@ -308,12 +308,10 @@ object Compaction {
     * filters are evaluated driver-side against the partition catalog
     * (casts included), and string-vs-native literals would otherwise
     * hit ANSI type-mismatch for callers that collect dir values as
-    * strings. Factored out so the plan shape is probeable
-    * ([[graft.Probe]] dumps the pruned scan's explain for the round
-    * evidence).
+    * strings.
     */
-  private[graft] def leafPrune(partCols: Seq[String],
-                               leaves: Seq[Seq[Any]])
+  private def leafPrune(partCols: Seq[String],
+                        leaves: Seq[Seq[Any]])
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.col
     leaves.map { t =>

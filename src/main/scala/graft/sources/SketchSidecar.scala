@@ -79,7 +79,8 @@ object SketchSidecar {
     *   dir as `_maint_appends`, invisible to the parquet scan)
     * @param rowMergeEvery when > 0 and the sidecar is driven by
     *   [[graft.ingest.CorpusPipeline]], every N-th append ROW-merges the
-    *   sidecar ([[compactRows]]/[[compactRowsByGroup]] by layout) — the
+    *   sidecar ([[compactRows]]: one row per group, an ungrouped sidecar
+    *   being one group) — the
     *   [[graft.sources.BloomKeyIndex.Cfg.compactEvery]] discipline: the
     *   rows are re-merged on every serve, so row count is the serve
     *   cost and this cadence is its bound, not just file hygiene. Note
@@ -125,21 +126,20 @@ object SketchSidecar {
     *   std ≤ 0.5/sqrt(k). A sketch holding fewer than k values is EXACT
     *   (it contains every distinct hash seen).
     * @param groupKeyExpr when set, the sidecar is GROUPED: one row per
-    *   (batch, group) instead of per batch, and the base faces (count,
-    *   HLL distinct, quantile summary) serve PER GROUP
-    *   ([[servedDistinctByGroup]]/[[servedQuantilesByGroup]]) — the
+    *   (batch, group) instead of per batch, and every face also serves
+    *   [[Scope.PerGroup]] and [[Scope.Window]] — the
     *   per-domain/per-language monitoring dashboard ("is the length
-    *   distribution of lang=vi drifting?") answered from the sidecar,
-    *   never a corpus re-scan. Sidecar size scales with #groups ·
-    *   #batches; groups are operator-bounded dimensions (domains,
-    *   languages, sources), the same boundedness stance as nlist.
-    *   COMPOSES with every other face: a grouped sidecar may also carry
-    *   CMS/candidate and KMV columns per (batch, group) row — still one
-    *   aggregation pass — and because CMS cell-addition, bottom-k union
-    *   and register-max are all associative, the corpus-level serves
-    *   ([[servedHeavyHitters]], [[servedKmvDistinct]], [[servedOverlap]])
-    *   merge straight across the group rows while the per-group serves
-    *   ([[servedOverlapByGroup]]) partition on them.
+    *   distribution of lang=vi drifting?") and, with a date key, any
+    *   date range, answered from the sidecar, never a corpus re-scan.
+    *   Sidecar size scales with #groups · #batches; groups are
+    *   operator-bounded dimensions (domains, languages, sources, days),
+    *   the same boundedness stance as nlist. COMPOSES with every other
+    *   face: a grouped sidecar may also carry CMS/candidate and KMV
+    *   columns per (batch, group) row — still one aggregation pass —
+    *   and because CMS cell-addition, bottom-k union, register-max and
+    *   the moment sums are all associative, [[Scope.Whole]] merges
+    *   straight across the group rows while [[Scope.PerGroup]] merges
+    *   under the group key.
     */
   case class Cfg(sidecarPath: String, distinctExpr: String,
                  valueExpr: String, lgConfigK: Int = 12,
@@ -166,6 +166,29 @@ object SketchSidecar {
     require(kmvK <= 65536,
       s"kmvK=$kmvK > 65536 — the overlap serve holds k longs per side " +
         "on the driver; raise the cap only with the serve path re-audited")
+  }
+
+  /** Which sidecar rows a serve merges into one answer. Every face
+    * merges associatively, so the three scopes are ONE merge per face
+    * applied to different rows — the Dremel serving-tree shape:
+    *   - [[Scope.Whole]]: every row, one answer (the corpus);
+    *   - [[Scope.PerGroup]]: the rows of each group of a grouped sidecar
+    *     ([[Cfg.groupKeyExpr]]), one `grp`-keyed answer per group, each
+    *     on the group's OWN scale;
+    *   - [[Scope.Window]]: the rows of the requested groups, one answer —
+    *     with day groups, any date range, O(rows-in-range) — plus
+    *     `groups_covered`, how many of the REQUESTED groups had rows
+    *     (absent groups are reported, not invented: callers telling "no
+    *     data" from "zero" check it against their request length).
+    * PerGroup and Window refuse an ungrouped sidecar loudly.
+    */
+  sealed trait Scope
+  object Scope {
+    case object Whole extends Scope
+    case object PerGroup extends Scope
+    final case class Window(groups: Seq[String]) extends Scope {
+      require(groups.nonEmpty, "empty group selection")
+    }
   }
 
   /** Bounded-memory Misra-Gries heavy-hitter summary over string keys:
@@ -287,284 +310,181 @@ object SketchSidecar {
       .coalesce(1)
       .write.mode("append").parquet(cfg.sidecarPath)
 
-  /** Merged distinct-count estimate over every appended batch: one row
-    * `(batches, distinct_estimate)`. Register-max union at the rows'
-    * common lgConfigK (a mixed sidecar fails loudly rather than
-    * silently widening the error); within the sketch's rsd of the true
-    * corpus distinct count — see the class doc for why it can differ
-    * from a single-pass sketch's estimate while both honor the rsd.
+  /** Every sidecar read: `mergeSchema`, so a sidecar whose history spans
+    * schema generations (faces added over time) shows ALL its columns
+    * whichever file's footer wins the schema sample — face detection,
+    * the compaction's column set and the moments face's pre-moments
+    * refusal all depend on it (the CorpusStream.readQuarantine
+    * convention for mixed legacy layouts).
     */
-  def servedDistinct(spark: SparkSession, sidecarPath: String): DataFrame =
-    spark.read.parquet(sidecarPath)
-      .agg(count(lit(1)).as("batches"),
-        hll_sketch_estimate(hll_union_agg(col("hll")))
-          .as("distinct_estimate"))
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(path)
 
-  /** Merged quantiles over every appended batch: one row `(p, value)` per
-    * requested probability. Each batch contributes K point masses of
-    * n/K at its equi-depth upper boundaries; the served value is the
-    * smallest point whose merged cumulative mass reaches p·N.
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+  }
+
+  private def requireGrouped(rows: DataFrame, ctx: String,
+                             why: String = ""): Unit =
+    require(rows.columns.contains("grp"),
+      s"sidecar at $ctx is not grouped (set Cfg.groupKeyExpr)$why")
+
+  private def requireFace(rows: DataFrame, column: String, ctx: String,
+                          face: String, knob: String): Unit =
+    require(rows.columns.contains(column),
+      s"sidecar at $ctx carries no $face (set Cfg.$knob)")
+
+  /** A scope's rows and merge keys: all rows under no key
+    * ([[Scope.Whole]]), all rows under `grp` ([[Scope.PerGroup]]), or
+    * the requested groups' rows under no key ([[Scope.Window]]).
+    */
+  private def scoped(rows: DataFrame, ctx: String,
+                     scope: Scope): (DataFrame, Seq[Column]) = scope match {
+    case Scope.Whole => (rows, Nil)
+    case Scope.PerGroup =>
+      requireGrouped(rows, ctx)
+      (rows, Seq(col("grp")))
+    case Scope.Window(groups) =>
+      requireGrouped(rows, ctx)
+      (rows.where(col("grp").isin(groups: _*)), Nil)
+  }
+
+  /** How many groups the rows hold — over a window's rows, how many of
+    * the REQUESTED groups had any. */
+  private def coveredAgg: Column =
+    count_distinct(col("grp")).as("groups_covered")
+
+  /** One face's merge applied to a scope: `merge` gets the scope's rows,
+    * keys and the aggregates a window adds (`groups_covered`, constant
+    * per row). A face whose merge is one aggregation takes them into it:
+    * the HLL union estimate depends on the aggregation's merge tree,
+    * which the distinct `grp` count shapes (it pre-merges per group), so
+    * the window's plan is fixed here rather than by each face. Any other
+    * answer gets them cross-joined. */
+  private def serve(rows: DataFrame, ctx: String, scope: Scope)(
+      merge: (DataFrame, Seq[Column], Seq[Column]) => DataFrame)
+      : DataFrame = {
+    val (in, keys) = scoped(rows, ctx, scope)
+    val extra = if (scope.isInstanceOf[Scope.Window]) Seq(coveredAgg) else Nil
+    val out = merge(in, keys, extra)
+    if (extra.isEmpty || out.columns.contains("groups_covered")) out
+    else out.crossJoin(broadcast(in.agg(coveredAgg)))
+  }
+
+  /** Merged distinct-count estimate: one row `(batches,
+    * distinct_estimate)` per scope answer (`batches` counts the merged
+    * sidecar rows; a group absent from some batches has fewer).
+    * Register-max union at the rows' common lgConfigK (a mixed sidecar
+    * fails loudly rather than silently widening the error); within the
+    * sketch's rsd of the true distinct count of the merged rows — see
+    * the class doc for why it can differ from a single-pass sketch's
+    * estimate while both honor the rsd. The union is associative, so
+    * every scope carries the single-sketch rsd no matter how many
+    * batches or groups it spans:
+    *   - [[Scope.Whole]]: the corpus;
+    *   - [[Scope.PerGroup]]: each group's own distinct count;
+    *   - [[Scope.Window]]: with a date `groupKeyExpr`, "distinct users
+    *     over an arbitrary date range", O(rows-in-range), never an
+    *     events re-scan.
+    */
+  def servedDistinct(spark: SparkSession, sidecarPath: String,
+                     scope: Scope = Scope.Whole): DataFrame =
+    serve(read(spark, sidecarPath), sidecarPath, scope) {
+      (rows, keys, extra) =>
+        rows.groupBy(keys: _*).agg(count(lit(1)).as("batches"),
+          hll_sketch_estimate(hll_union_agg(col("hll")))
+            .as("distinct_estimate") +: extra: _*)
+    }
+
+  /** Merged quantiles: one row `(p, value)` per requested probability
+    * and scope answer, ordered by (group, p). Each row contributes K
+    * point masses of n/K at its equi-depth upper boundaries; the served
+    * value is the smallest point whose merged cumulative mass reaches
+    * p·N.
     *
-    * Rank-error contract (enforced by the `q_sketch_sidecar_gap` twin):
+    * Rank-error contract (enforced by the `q_sketch_sidecar_gap`,
+    * `q_sketch_by_group_gap` and `q_sketch_window_gap` twins):
     * |true rank of served value − p| ≤ 2/numBuckets + 1/accuracy
     * (+ the 1/n granularity of a finite corpus). Derivation: the
     * point-mass CDF of one batch is within 1/K + 1/accuracy of its true
     * CDF everywhere, the weighted merge preserves that bound, and the
-    * serve-side selection adds at most one point weight ≤ 1/K.
+    * serve-side selection adds at most one point weight ≤ 1/K. The rank
+    * is on the answer's own scale:
+    *   - [[Scope.Whole]]: the corpus's;
+    *   - [[Scope.PerGroup]]: each group's OWN (the windows are
+    *     partitioned by the group);
+    *   - [[Scope.Window]]: the window's ("p50/p99 document length over
+    *     this date range").
     *
-    * The window below is single-partition by construction — it orders
-    * #batches × K summary points (bounded metadata, exactly like the
-    * centroid sidecars), never corpus rows.
+    * The window functions order #batches × K summary points per answer
+    * (bounded metadata, exactly like the centroid sidecars), never
+    * corpus rows.
     */
   def servedQuantiles(spark: SparkSession, sidecarPath: String,
-                      ps: Seq[Double]): DataFrame =
-    quantilesOfRows(spark, spark.read.parquet(sidecarPath), ps)
+                      ps: Seq[Double],
+                      scope: Scope = Scope.Whole): DataFrame =
+    serve(read(spark, sidecarPath), sidecarPath, scope)(
+      (rows, keys, _) => quantilesOfRows(rows, keys, ps))
 
-  /** Quantiles ACROSS a selected subset of groups — the windowed-
-    * quantile companion of [[servedDistinctAcrossGroups]]: with day
-    * groups, "p50/p99 document length over this date range" is the
-    * point-mass merge of the covered days' summaries, O(rows-in-range),
-    * carrying the same rank-error ledger as [[servedQuantiles]] on the
-    * window's own rank scale.
-    */
-  def servedQuantilesAcrossGroups(spark: SparkSession, sidecarPath: String,
-                                  groups: Seq[String],
-                                  ps: Seq[Double]): DataFrame = {
-    require(groups.nonEmpty, "empty group selection")
-    quantilesOfRows(spark,
-      spark.read.parquet(sidecarPath).where(col("grp").isin(groups: _*)),
-      ps)
-  }
-
-  /** The point-mass quantile merge over a sidecar row frame (the
-    * [[servedQuantiles]] math, row source abstracted so whole-sidecar
-    * and group-windowed serves share one implementation). */
-  private def quantilesOfRows(spark: SparkSession, rows0: DataFrame,
+  /** The point-mass quantile merge over a row frame, per key. */
+  private def quantilesOfRows(rows0: DataFrame, keys: Seq[Column],
                               ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0))
-    import spark.implicits._
+    import rows0.sparkSession.implicits._
     val rows = rows0
       .where(col("qs").isNotNull && col("n") > 0)
     // the j-th upper boundary (qs[1..K] — the leading qs[0] is the batch
     // minimum, an anchor only) carries mass n/K
-    val points = rows.select(
+    val points = rows.select(keys ++ Seq(
         explode(expr("slice(qs, 2, size(qs) - 1)")).as("v"),
-        (col("n").cast("double") / col("k")).as("w"))
+        (col("n").cast("double") / col("k")).as("w")): _*)
+    val byKey = Window.partitionBy(keys: _*)
     val cum = points
-      .withColumn("cum", sum(col("w")).over(
-        Window.orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("total", sum(col("w")).over(
-        Window.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
+      .withColumn("cum", sum(col("w")).over(byKey.orderBy(col("v"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("total", sum(col("w")).over(byKey
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
     cum.crossJoin(broadcast(ps.toDF("p")))
       .where(col("cum") >= col("p") * col("total") - lit(1e-9))
-      .groupBy(col("p"))
+      .groupBy(keys :+ col("p"): _*)
       .agg(min(col("v")).as("value"))
-      .orderBy(col("p"))
+      .orderBy(keys :+ col("p"): _*)
   }
 
-  /** The associative merge of the exact-moments columns — shared by
-    * every serve and both row-merge compactions (so a compacted
-    * sidecar's moments stay bit-identical to the unmerged rows').
-    */
-  private def momentMergeAggs: Seq[Column] = Seq(
-    sum(col("vn")).as("vn"), sum(col("vsum")).as("vsum"),
-    sum(col("vsum2")).as("vsum2"), min(col("vmin")).as("vmin"),
-    max(col("vmax")).as("vmax"))
-
-  /** `valueExpr`'s EXACT corpus moments served from the sidecar: one row
-    * `(batches, vn, vsum, vmin, vmax, mean, variance, stddev)` —
-    * population variance via vsum2/vn − mean². Unlike the sketch faces
-    * this serve carries NO error term: the per-batch sums/extrema merge
-    * associatively, so the answer equals a direct corpus scan exactly
-    * (for integer-valued `valueExpr`, bit-for-bit — double sums of
-    * exact integers below 2^53 are order-independent), which is why
-    * `q_sketch_moments` holds a full DuckDB equality oracle where every
-    * sibling face settles for a floor twin. An all-null corpus serves
-    * null moments (vn = 0), not a division error. Fails loudly on a
-    * sidecar written before the moments face existed.
-    */
-  def servedMoments(spark: SparkSession, sidecarPath: String): DataFrame =
-    momentsOfRows(readForMoments(spark, sidecarPath), sidecarPath, None)
-
-  /** Moments-serve read: `mergeSchema` so a sidecar whose history spans
-    * the introduction of the moments face reads ALL columns regardless
-    * of which file's footer wins the schema sample (the
-    * CorpusStream.readQuarantine convention for mixed legacy layouts).
-    * Legacy rows then carry null moments and are REFUSED loudly by the
-    * serve — a pre-moments batch has no sums to merge, so serving
-    * around it would present the post-upgrade batches' moments as the
-    * corpus answer.
-    */
-  private def readForMoments(spark: SparkSession,
-                             sidecarPath: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(sidecarPath)
-
-  /** [[servedMoments]] PER GROUP from a GROUPED sidecar — one row
-    * `(grp, batches, vn, vsum, vmin, vmax, mean, variance, stddev)` per
-    * group, each exactly the group's own corpus moments.
-    */
-  def servedMomentsByGroup(spark: SparkSession,
-                           sidecarPath: String): DataFrame = {
-    val rows = readForMoments(spark, sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    momentsOfRows(rows, sidecarPath, Some(col("grp")))
-  }
-
-  /** [[servedMoments]] ACROSS a selected subset of groups — the
-    * windowed-moments serve of a time-grouped sidecar ("mean/stddev
-    * document length over this date range"), exact over the covered
-    * rows, O(rows-in-range).
-    */
-  def servedMomentsAcrossGroups(spark: SparkSession, sidecarPath: String,
-                                groups: Seq[String]): DataFrame = {
-    require(groups.nonEmpty, "empty group selection")
-    val rows = readForMoments(spark, sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    momentsOfRows(rows.where(col("grp").isin(groups: _*)), sidecarPath,
-      None, coveredOf = Some(groups))
-  }
-
-  /** Distribution drift BETWEEN two group-windows of one grouped
-    * sidecar, from the EXACT moments face: Welch's z for the mean shift,
-    * z = (mean_a − mean_b) / sqrt(var_a/n_a + var_b/n_b) with the
-    * population variances the face serves — "did this week's document
-    * length shift against last week's" answered from the covered day
-    * rows, no corpus re-scan, and because the inputs are exact sums the
-    * statistic carries a full equality oracle (unlike every sketch-fed
-    * drift monitor). One row `(a_groups_covered, b_groups_covered, n_a,
-    * n_b, mean_a, mean_b, welch_z)`; z is null when either window has
-    * no values or both variances are zero (no scale to measure shift
-    * against — gate on the counts before alerting).
-    */
-  def servedMomentsDrift(spark: SparkSession, sidecarPath: String,
-                         groupsA: Seq[String],
-                         groupsB: Seq[String]): DataFrame = {
-    def sideCols(df: DataFrame, p: String): DataFrame =
-      df.select(col("groups_covered").as(s"${p}_groups_covered"),
-        col("vn").as(s"n_$p"), col("mean").as(s"mean_$p"),
-        col("variance").as(s"var_$p"))
-    val a = sideCols(
-      servedMomentsAcrossGroups(spark, sidecarPath, groupsA), "a")
-    val b = sideCols(
-      servedMomentsAcrossGroups(spark, sidecarPath, groupsB), "b")
-    val se2 = col("var_a") / col("n_a") + col("var_b") / col("n_b")
-    a.crossJoin(b)
-      .withColumn("welch_z",
-        when(col("n_a") > 0 && col("n_b") > 0 && se2 > 0,
-          (col("mean_a") - col("mean_b")) / sqrt(se2)))
-      .select(col("a_groups_covered"), col("b_groups_covered"),
-        col("n_a"), col("n_b"), col("mean_a"), col("mean_b"),
-        col("welch_z"))
-  }
-
-  /** Batch-vs-corpus anomaly screen from the exact moments face — the
-    * statistical REFUSAL hook beside [[servedThreshold]]'s adaptive
-    * cut: one row `(n_batch, n_corpus, mean_batch, mean_corpus,
-    * welch_z, anomalous)` comparing the ARRIVING batch's `valueExpr`
-    * distribution against the accepted corpus's own accumulated
-    * moments, `anomalous` when |z| > zMax. Compose it in front of
-    * [[graft.ingest.CorpusPipeline.dedupAndAppend]]: collect the row,
-    * route an anomalous batch to quarantine (or `require(!anomalous)`)
-    * BEFORE the append — read-before-append, as every adaptive hook
-    * here, so a poisoned batch cannot move the bar it is judged by.
-    * Bootstrap stance: a missing sidecar (or one with no values yet)
-    * serves null z and `anomalous = false` — the first batches define
-    * the distribution rather than being judged against nothing. Serve
-    * cost: one batch aggregation + an O(#rows) sidecar merge.
-    */
-  def batchAnomaly(batch: DataFrame, cfg: Cfg,
-                   zMax: Double): DataFrame = {
-    require(zMax > 0, s"zMax=$zMax")
-    val spark = batch.sparkSession
-    val v = expr(cfg.valueExpr).cast("double")
-    val b = batch.agg(count(v).as("n_batch"),
-      sum(v).as("bsum"), sum(v * v).as("bsum2"))
-    val hp = new org.apache.hadoop.fs.Path(cfg.sidecarPath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val c =
-      if (!fs.exists(hp))
-        b.sparkSession.sql(
-          "SELECT CAST(0 AS BIGINT) AS n_corpus, " +
-            "CAST(NULL AS DOUBLE) AS mean_corpus, " +
-            "CAST(NULL AS DOUBLE) AS var_corpus")
-      else servedMoments(spark, cfg.sidecarPath)
-        .select(col("vn").as("n_corpus"), col("mean").as("mean_corpus"),
-          col("variance").as("var_corpus"))
-    val meanB = col("bsum") / col("n_batch")
-    val varB = col("bsum2") / col("n_batch") - meanB * meanB
-    val se2 = varB / col("n_batch") + col("var_corpus") / col("n_corpus")
-    val z = when(col("n_batch") > 0 && col("n_corpus") > 0 && se2 > 0,
-      (meanB - col("mean_corpus")) / sqrt(se2))
-    b.crossJoin(c)
-      .withColumn("mean_batch", when(col("n_batch") > 0, meanB))
-      .withColumn("welch_z", z)
-      .withColumn("anomalous",
-        coalesce(abs(z) > zMax, lit(false)))
-      .select(col("n_batch"), col("n_corpus"), col("mean_batch"),
-        col("mean_corpus"), col("welch_z"), col("anomalous"))
-  }
-
-  /** The moments merge + derived statistics over a sidecar row frame
-    * (whole-sidecar, grouped and group-windowed serves share it).
-    * `coveredOf` adds a `groups_covered` column counting the REQUESTED
-    * groups that had rows — the windowed serves' "absent groups are
-    * reported, not invented" contract. */
-  private def momentsOfRows(rows: DataFrame, ctx: String,
-                            grp: Option[Column],
-                            coveredOf: Option[Seq[String]] = None)
-      : DataFrame = {
-    require(rows.columns.contains("vsum"),
-      s"sidecar at $ctx predates the moments face — rows carry no " +
-        "vsum/vsum2/vmin/vmax columns; the face cannot be reconstructed " +
-        "for batches whose sums were never recorded (start a fresh " +
-        "sidecar, or serve this one's pre-moments faces only)")
-    require(rows.where(col("vn").isNull).isEmpty,
-      s"sidecar at $ctx mixes pre-moments rows (null vn) with current " +
-        "ones — serving around them would present the post-upgrade " +
-        "batches' moments as the corpus answer; row-merge cannot add " +
-        "sums that were never recorded, so start a fresh sidecar or " +
-        "serve the pre-moments faces only")
-    var aggs = (count(lit(1)).as("batches") +: momentMergeAggs)
-    coveredOf.foreach(_ =>
-      aggs = aggs :+ count_distinct(col("grp")).as("groups_covered"))
-    val merged = grp match {
-      case Some(g) => rows.groupBy(g).agg(aggs.head, aggs.tail: _*)
-      case None => rows.agg(aggs.head, aggs.tail: _*)
-    }
-    val mean = col("vsum") / col("vn")
-    val variance = col("vsum2") / col("vn") - mean * mean
-    val out = merged
-      .withColumn("mean", when(col("vn") > 0, mean))
-      .withColumn("variance", when(col("vn") > 0, variance))
-      .withColumn("stddev", when(col("vn") > 0, sqrt(variance)))
-    grp.map(_ => out.orderBy("grp")).getOrElse(out)
-  }
-
-  /** The corpus-`p` quantile served from the sidecar as one scalar —
-    * the ADAPTIVE-GATE hook. A fixed gate ("n_chars >= 100") encodes a
+  /** The `p` quantile of each scope answer as a `threshold` column — the
+    * ADAPTIVE-GATE hook. A fixed gate ("n_chars >= 100") encodes a
     * guess made at pipeline-authoring time; reading the accepted
     * corpus's own p-quantile each batch (an O(#batches) sidecar merge,
     * never a corpus scan) lets the cut track the distribution the
     * corpus actually has: `gates = thr.map(t => "adaptive_len" ->
-    * (col("n_chars") >= t))`. Returns None until a batch row with a
-    * non-null summary exists — bootstrap batches should gate on fixed
-    * floors until the corpus has history. Read the threshold BEFORE
-    * the batch is appended (the natural order in
+    * (col("n_chars") >= t))` over the collected [[Scope.Whole]] row.
+    * [[Scope.PerGroup]] gives each source/language its OWN bar (a
+    * length floor tuned on English prose systematically mis-gates CJK
+    * text): broadcast-join the `(grp, threshold)` frame onto the batch
+    * and compare, `batch.join(broadcast(thr), Seq("lang"), "left")
+    * .where(col("n_chars") >= coalesce(col("threshold"), lit(floor)))`
+    * — groups with no history yet fall back to the caller's fixed floor
+    * via the coalesce. Serves NO rows until the sidecar exists and holds
+    * a non-null summary: bootstrap batches gate on fixed floors until
+    * the corpus has history. Read the threshold BEFORE the batch is
+    * appended (the natural order in
     * [[graft.ingest.CorpusPipeline.dedupAndAppend]], where gates run
     * first), so a poisoned batch cannot move the bar it is judged by.
     */
-  def servedThreshold(spark: SparkSession, sidecarPath: String,
-                      p: Double): Option[Double] = {
+  def servedThreshold(spark: SparkSession, sidecarPath: String, p: Double,
+                      scope: Scope = Scope.Whole): DataFrame = {
     require(p > 0.0 && p <= 1.0, s"p=$p")
-    val hp = new org.apache.hadoop.fs.Path(sidecarPath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) return None
-    servedQuantiles(spark, sidecarPath, Seq(p))
-      .collect().headOption.map(_.getDouble(1))
+    import spark.implicits._
+    // no sidecar yet: the same merge over no rows, so the empty answer
+    // has the scope's columns
+    val rows =
+      if (exists(spark, sidecarPath)) read(spark, sidecarPath)
+      else Seq.empty[(String, Long, Int, Seq[Double])]
+        .toDF("grp", "n", "k", "qs")
+    serve(rows, sidecarPath, scope)(
+        (in, keys, _) => quantilesOfRows(in, keys, Seq(p)))
+      .withColumnRenamed("value", "threshold").drop("p")
   }
 
   /** The n−1 interior equi-depth boundaries of `valueExpr` served from
@@ -587,146 +507,142 @@ object SketchSidecar {
       .collect().map(_.getDouble(0)).toSeq.distinct
   }
 
-  /** The per-group corpus-`p` quantiles of a GROUPED sidecar as a
-    * (grp, threshold) frame — the per-domain form of [[servedThreshold]]
-    * for ADAPTIVE gates that track each source/language's OWN
-    * distribution instead of one global bar (a length floor tuned on
-    * English prose systematically mis-gates CJK text; a per-lang
-    * threshold does not). Broadcast-join it onto the batch and compare:
-    * `batch.join(broadcast(thr), Seq("lang"), "left")
-    *   .where(col("n_chars") >= coalesce(col("threshold"), lit(floor)))`
-    * — groups with no sidecar history yet fall back to the caller's
-    * fixed floor via the coalesce, the [[servedThreshold]] bootstrap
-    * stance. Read BEFORE the batch appends, as ever, so a poisoned
-    * batch cannot move the bar it is judged by. Returns an empty frame
-    * when the sidecar does not exist yet.
+  /** The associative merge of the exact-moments columns — shared by
+    * every serve and the row-merge compaction (so a compacted sidecar's
+    * moments stay bit-identical to the unmerged rows').
     */
-  def servedThresholdsByGroup(spark: SparkSession, sidecarPath: String,
-                              p: Double): DataFrame = {
-    require(p > 0.0 && p <= 1.0, s"p=$p")
-    import spark.implicits._
-    val hp = new org.apache.hadoop.fs.Path(sidecarPath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp))
-      return Seq.empty[(String, Double)].toDF("grp", "threshold")
-    servedQuantilesByGroup(spark, sidecarPath, Seq(p))
-      .select(col("grp"), col("value").as("threshold"))
+  private def momentMergeAggs: Seq[Column] = Seq(
+    sum(col("vn")).as("vn"), sum(col("vsum")).as("vsum"),
+    sum(col("vsum2")).as("vsum2"), min(col("vmin")).as("vmin"),
+    max(col("vmax")).as("vmax"))
+
+  /** `valueExpr`'s EXACT moments served from the sidecar: one row
+    * `(batches, vn, vsum, vsum2, vmin, vmax, mean, variance, stddev)`
+    * per scope answer — population variance via vsum2/vn − mean².
+    * Unlike the sketch faces this serve carries NO error term in any
+    * scope: the per-batch sums/extrema merge associatively, so each
+    * answer equals a direct scan of its rows exactly (for
+    * integer-valued `valueExpr`, bit-for-bit — double sums of exact
+    * integers below 2^53 are order-independent), which is why
+    * `q_sketch_moments` and `q_sketch_moments_by_group` hold full DuckDB
+    * equality oracles where every sibling face settles for a floor
+    * twin. [[Scope.Window]] is the windowed-moments serve of a
+    * time-grouped sidecar ("mean/stddev document length over this date
+    * range"), O(rows-in-range). An all-null answer serves null moments
+    * (vn = 0), not a division error. Fails loudly on a sidecar written
+    * before the moments face existed, and on one MIXING pre-moments
+    * rows with current ones: a pre-moments batch has no sums to merge,
+    * so serving around it would present the post-upgrade batches'
+    * moments as the corpus answer.
+    */
+  def servedMoments(spark: SparkSession, sidecarPath: String,
+                    scope: Scope = Scope.Whole): DataFrame =
+    serve(read(spark, sidecarPath), sidecarPath, scope)(
+      momentsOfRows(_, _, _, sidecarPath))
+
+  /** The moments merge + derived statistics over a row frame, per key. */
+  private def momentsOfRows(rows: DataFrame, keys: Seq[Column],
+                            extra: Seq[Column], ctx: String): DataFrame = {
+    require(rows.columns.contains("vsum"),
+      s"sidecar at $ctx predates the moments face — rows carry no " +
+        "vsum/vsum2/vmin/vmax columns; the face cannot be reconstructed " +
+        "for batches whose sums were never recorded (start a fresh " +
+        "sidecar, or serve this one's pre-moments faces only)")
+    require(rows.where(col("vn").isNull).isEmpty,
+      s"sidecar at $ctx mixes pre-moments rows (null vn) with current " +
+        "ones — serving around them would present the post-upgrade " +
+        "batches' moments as the corpus answer; row-merge cannot add " +
+        "sums that were never recorded, so start a fresh sidecar or " +
+        "serve the pre-moments faces only")
+    val mean = col("vsum") / col("vn")
+    val variance = col("vsum2") / col("vn") - mean * mean
+    rows.groupBy(keys: _*)
+      .agg(count(lit(1)).as("batches"), momentMergeAggs ++ extra: _*)
+      .withColumn("mean", when(col("vn") > 0, mean))
+      .withColumn("variance", when(col("vn") > 0, variance))
+      .withColumn("stddev", when(col("vn") > 0, sqrt(variance)))
   }
 
-  /** Per-group merged distinct estimates from a GROUPED sidecar
-    * ([[Cfg.groupKeyExpr]]): one row `(grp, batches, distinct_estimate)`
-    * per group — register-max union within each group, same rsd contract
-    * as [[servedDistinct]]. `batches` counts the group's sidecar rows
-    * (a group absent from some batches has fewer).
+  /** Welch's z for a mean shift between samples a and b from their
+    * counts, means and population variances: (mean_a − mean_b) /
+    * sqrt(var_a/n_a + var_b/n_b); null when either side has no values
+    * or both variances are zero (no scale to measure shift against —
+    * gate on the counts before alerting).
     */
-  def servedDistinctByGroup(spark: SparkSession,
-                            sidecarPath: String): DataFrame =
-    spark.read.parquet(sidecarPath)
-      .groupBy("grp")
-      .agg(count(lit(1)).as("batches"),
-        hll_sketch_estimate(hll_union_agg(col("hll")))
-          .as("distinct_estimate"))
-
-  /** Distinct estimate ACROSS a selected subset of groups — the
-    * any-window serve of a time-grouped sidecar: with `groupKeyExpr` a
-    * date (one row per (batch, day)), "distinct users over an arbitrary
-    * date range" is the register-max union of the covered days' rows —
-    * O(rows-in-range), never an events re-scan, and the union is
-    * associative so the answer carries the single-sketch rsd no matter
-    * how many days it spans. `groups_covered` reports how many of the
-    * REQUESTED groups had sidecar rows (a day with no traffic
-    * contributes nothing — callers distinguishing "no data" from "zero
-    * distinct" check it against their request length).
-    */
-  def servedDistinctAcrossGroups(spark: SparkSession, sidecarPath: String,
-                                 groups: Seq[String]): DataFrame = {
-    require(groups.nonEmpty, "empty group selection")
-    spark.read.parquet(sidecarPath)
-      .where(col("grp").isin(groups: _*))
-      .agg(count_distinct(col("grp")).as("groups_covered"),
-        hll_sketch_estimate(hll_union_agg(col("hll")))
-          .as("distinct_estimate"))
+  private def welchZ(nA: Column, meanA: Column, varA: Column, nB: Column,
+                     meanB: Column, varB: Column): Column = {
+    val se2 = varA / nA + varB / nB
+    when(nA > 0 && nB > 0 && se2 > 0, (meanA - meanB) / sqrt(se2))
   }
 
-  /** Per-group merged quantiles from a GROUPED sidecar: one row
-    * `(grp, p, value)` per (group, probability) — the same point-mass
-    * merge as [[servedQuantiles]] with every window partitioned by the
-    * group, so each group's rank-error contract is the single-group
-    * bound (2/numBuckets + 1/accuracy of the group's OWN rank scale).
-    * The windows order #batches·K summary points per group — bounded
-    * metadata times an operator-bounded group count.
+  /** Distribution drift BETWEEN two group-windows of one grouped
+    * sidecar, from the EXACT moments face: [[welchZ]] of the two
+    * windows' [[servedMoments]] — "did this week's document length
+    * shift against last week's" answered from the covered day rows, no
+    * corpus re-scan, and because the inputs are exact sums the
+    * statistic carries a full equality oracle (unlike every sketch-fed
+    * drift monitor). One row `(a_groups_covered, b_groups_covered, n_a,
+    * n_b, mean_a, mean_b, welch_z)`.
     */
-  def servedQuantilesByGroup(spark: SparkSession, sidecarPath: String,
-                             ps: Seq[Double]): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0))
-    import spark.implicits._
-    val rows = spark.read.parquet(sidecarPath)
-      .where(col("qs").isNotNull && col("n") > 0)
-    val points = rows.select(col("grp"),
-        explode(expr("slice(qs, 2, size(qs) - 1)")).as("v"),
-        (col("n").cast("double") / col("k")).as("w"))
-    val cum = points
-      .withColumn("cum", sum(col("w")).over(
-        Window.partitionBy(col("grp")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("total", sum(col("w")).over(
-        Window.partitionBy(col("grp"))
-          .rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)))
-    cum.crossJoin(broadcast(ps.toDF("p")))
-      .where(col("cum") >= col("p") * col("total") - lit(1e-9))
-      .groupBy(col("grp"), col("p"))
-      .agg(min(col("v")).as("value"))
-      .orderBy(col("grp"), col("p"))
+  def servedMomentsDrift(spark: SparkSession, sidecarPath: String,
+                         groupsA: Seq[String],
+                         groupsB: Seq[String]): DataFrame = {
+    def side(groups: Seq[String], p: String): DataFrame =
+      servedMoments(spark, sidecarPath, Scope.Window(groups))
+        .select(col("groups_covered").as(s"${p}_groups_covered"),
+          col("vn").as(s"n_$p"), col("mean").as(s"mean_$p"),
+          col("variance").as(s"var_$p"))
+    side(groupsA, "a").crossJoin(side(groupsB, "b"))
+      .withColumn("welch_z", welchZ(col("n_a"), col("mean_a"),
+        col("var_a"), col("n_b"), col("mean_b"), col("var_b")))
+      .select(col("a_groups_covered"), col("b_groups_covered"),
+        col("n_a"), col("n_b"), col("mean_a"), col("mean_b"),
+        col("welch_z"))
   }
 
-  /** [[servedHeavyHitters]] PER GROUP from a GROUPED sidecar carrying
-    * the CMS face: every (group, key) whose estimated count reaches
-    * `phi` of the GROUP's total — "which languages dominate each
-    * source", one monitoring answer per group with zero corpus
-    * scanning. Returns (grp, key, est, total), grouped then heaviest
-    * first. All four [[servedHeavyHitters]] guarantees hold PER GROUP
-    * on the group's own scale: each group's CMS rows aggregate only
-    * that group's slices (over-count ≤ cmsEps·N_g), and a group-φ-heavy
-    * key has share ≥ φ in at least one of the group's batch slices, so
-    * it enters that slice's Misra-Gries candidates whenever
-    * `topK ≥ 1/φ` — the [[Cfg.topK]] argument verbatim with "batch"
-    * read as "(batch, group) slice".
+  /** Batch-vs-corpus anomaly screen from the exact moments face — the
+    * statistical REFUSAL hook beside [[servedThreshold]]'s adaptive
+    * cut: one row `(n_batch, n_corpus, mean_batch, mean_corpus,
+    * welch_z, anomalous)` comparing the ARRIVING batch's `valueExpr`
+    * distribution against the accepted corpus's own accumulated
+    * moments ([[welchZ]]), `anomalous` when |z| > zMax. Compose it in
+    * front of [[graft.ingest.CorpusPipeline.dedupAndAppend]]: collect
+    * the row, route an anomalous batch to quarantine (or
+    * `require(!anomalous)`) BEFORE the append — read-before-append, as
+    * every adaptive hook here, so a poisoned batch cannot move the bar
+    * it is judged by. Bootstrap stance: a missing sidecar (or one with
+    * no values yet) serves null z and `anomalous = false` — the first
+    * batches define the distribution rather than being judged against
+    * nothing. Serve cost: one batch aggregation + an O(#rows) sidecar
+    * merge.
     */
-  def servedHeavyHittersByGroup(spark: SparkSession, sidecarPath: String,
-                                phi: Double): DataFrame = {
-    require(phi > 0.0 && phi <= 1.0, s"phi=$phi")
-    val rows = spark.read.parquet(sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    val cmsMerge = udaf(new CmsMerge, org.apache.spark.sql.Encoders.BINARY)
-    val merged = rows.groupBy("grp")
-      .agg(cmsMerge(col("cms")).as("cms"), sum(col("n")).as("total"))
-    val cands = rows
-      .select(col("grp"), explode(col("topk")).as("kv"))
-      .select(col("grp"), col("kv.key").as("key")).distinct()
-    val estimate = udf((bytes: Array[Byte], key: String) =>
-      org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes)
-        .estimateCount(key))
-    cands.join(broadcast(merged), Seq("grp"))
-      .select(col("grp"), col("key"),
-        estimate(col("cms"), col("key")).as("est"), col("total"))
-      .where(col("est") >= col("total") * phi)
-      .orderBy(col("grp"), col("est").desc, col("key"))
-  }
-
-  /** Per-group merged KMV distinct estimates from a GROUPED sidecar
-    * carrying the KMV face — the bottom-k analog of
-    * [[servedDistinctByGroup]]: one row `(grp, distinct_estimate)` per
-    * group, exact below k, rse ≈ 1/sqrt(kmvK−2) at k.
-    */
-  def servedKmvDistinctByGroup(spark: SparkSession,
-                               sidecarPath: String): DataFrame = {
-    val (m, k) = mergedKmvByGroup(spark, sidecarPath)
-    import spark.implicits._
-    m.toSeq.sortBy(t => Option(t._1)) // null group keys order, not NPE
-      .map { case (g, kmv) => (g, kmvEstimate(kmv, k)) }
-      .toDF("grp", "distinct_estimate")
+  def batchAnomaly(batch: DataFrame, cfg: Cfg,
+                   zMax: Double): DataFrame = {
+    require(zMax > 0, s"zMax=$zMax")
+    val spark = batch.sparkSession
+    val v = expr(cfg.valueExpr).cast("double")
+    val b = batch.agg(count(v).as("n_batch"),
+      sum(v).as("bsum"), sum(v * v).as("bsum2"))
+    val c =
+      if (!exists(spark, cfg.sidecarPath))
+        spark.sql(
+          "SELECT CAST(0 AS BIGINT) AS n_corpus, " +
+            "CAST(NULL AS DOUBLE) AS mean_corpus, " +
+            "CAST(NULL AS DOUBLE) AS var_corpus")
+      else servedMoments(spark, cfg.sidecarPath)
+        .select(col("vn").as("n_corpus"), col("mean").as("mean_corpus"),
+          col("variance").as("var_corpus"))
+    val meanB = col("bsum") / col("n_batch")
+    val varB = col("bsum2") / col("n_batch") - meanB * meanB
+    val z = welchZ(col("n_batch"), meanB, varB, col("n_corpus"),
+      col("mean_corpus"), col("var_corpus"))
+    b.crossJoin(c)
+      .withColumn("mean_batch", when(col("n_batch") > 0, meanB))
+      .withColumn("welch_z", z)
+      .withColumn("anomalous",
+        coalesce(abs(z) > zMax, lit(false)))
+      .select(col("n_batch"), col("n_corpus"), col("mean_batch"),
+        col("mean_corpus"), col("welch_z"), col("anomalous"))
   }
 
   /** TAKEDOWN for sketch state: EPOCH SEGMENTATION made an operator.
@@ -735,22 +651,19 @@ object SketchSidecar {
     * [[graft.operators.Retraction]] stance); what IS exact is excising
     * whole GROUP rows of a grouped sidecar. In the day/epoch-grouped
     * monitoring layout each row is precisely one epoch's state, so
-    * dropping a poisoned ingest day's rows leaves every cross-group
-    * serve ([[servedMomentsAcrossGroups]], the windowed
-    * distinct/quantile/HH/KMV family) answering EXACTLY over the
-    * surviving epochs — the kept rows' content is untouched. One anti-join
-    * rewrite of the O(#batches·#groups) sidecar via the staged atomic
-    * swap; idempotent; refuses an ungrouped sidecar loudly (it has no
-    * epoch to segment — re-derive it from the surviving corpus instead,
-    * the [[graft.sources.TextIndex.healStats]] shape).
+    * dropping a poisoned ingest day's rows leaves every
+    * [[Scope.Window]] serve answering EXACTLY over the surviving epochs
+    * — the kept rows' content is untouched. One anti-join rewrite of
+    * the O(#batches·#groups) sidecar via the staged atomic swap;
+    * idempotent; refuses an ungrouped sidecar loudly (it has no epoch to
+    * segment — re-derive it from the surviving corpus instead, the
+    * [[graft.sources.TextIndex.healStats]] shape).
     */
   def retractGroups(spark: SparkSession, sidecarPath: String,
                     groups: Seq[String]): Unit = {
     require(groups.nonEmpty, "empty group selection")
-    val rows = spark.read.option("mergeSchema", "true").parquet(sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr) — " +
-        "per-epoch retraction needs epoch rows; re-derive an ungrouped " +
+    requireGrouped(read(spark, sidecarPath), sidecarPath,
+      " — per-epoch retraction needs epoch rows; re-derive an ungrouped " +
         "sidecar from the surviving corpus instead")
     import spark.implicits._
     // mergeSchema: the sidecar's history spans schema generations (faces
@@ -761,92 +674,91 @@ object SketchSidecar {
       readOptions = Map("mergeSchema" -> "true"))
   }
 
-  /** Row-merge compaction for a GROUPED sidecar: collapse each group's
-    * batch rows into one merged row — the same ledger as [[compactRows]]
-    * face by face (n exact; HLL union, CMS cell-addition and KMV
-    * bottom-k union identical-by-associativity; candidates re-priced
-    * against the group's merged CMS; re-bucketed quantiles add ≤ 1/K
-    * rank error per compaction generation), every merge partitioned by
-    * the group. Entirely DataFrame-side — nothing is collected; the
-    * swap is the same staged atomic rename.
+  /** Row-merge compaction: collapse the batch rows into ONE merged row
+    * per group (an ungrouped sidecar is one group), so serve cost stays
+    * O(#groups) no matter how many batches the corpus has seen — the
+    * file-level `compactEvery` pass bounds FILE count; this bounds ROW
+    * count. Atomic via the same staged [[Compaction.replace]] every
+    * sidecar rewrite uses; safe to run on any cadence (weekly/monthly),
+    * and appends keep landing next to the merged rows afterwards.
+    * Entirely DataFrame-side — nothing is collected.
+    *
+    * Exactness ledger, per merged component:
+    *   - `n`: exact sum;
+    *   - `hll`: register-max union — associative, so the merged-row
+    *     estimate is IDENTICAL to serving the unmerged rows;
+    *   - moments: exact sums/min/max — bit-identical serves. Carried
+    *     only when EVERY row has the face: merging around legacy
+    *     null-moment rows would stamp the post-upgrade batches' sums onto
+    *     the whole history's n — the compacted sidecar instead degrades
+    *     honestly to pre-moments (serves refuse loudly, not subtly
+    *     wrong);
+    *   - `cms` (when present): cell-wise addition — associative,
+    *     estimates identical to the unmerged serve;
+    *   - `topk` (when present): the group's candidate union re-priced
+    *     against its merged CMS, top `topK` kept by estimate.
+    *     Completeness survives: a φ-heavy key's estimate ≥ its true
+    *     count ≥ φ·N, and at most 1/(φ−cmsEps) keys can estimate ≥ φ·N
+    *     (each over-counts by ≤ cmsEps·N), so `topK ≥ 1/(φ−cmsEps)`
+    *     keeps every φ-heavy key servable after any number of
+    *     compactions;
+    *   - `qs`: the merged point-mass distribution re-summarized to K
+    *     equi-depth boundaries — adds AT MOST 1/K rank error per
+    *     compaction GENERATION (re-bucketing granularity). Compact on a
+    *     coarse cadence and the ledger stays far inside the serve
+    *     contract; the generation count is the operator's dial, not a
+    *     hidden constant;
+    *   - `kmv` (when present): bottom-k union — associative, the merged
+    *     row's sketch is IDENTICAL to merging the unmerged rows, so
+    *     every distinct/overlap estimate survives any number of
+    *     compactions bit-for-bit. A sidecar whose `kmvk` differs from
+    *     `cfg.kmvK` (or mixes k) refuses before anything is rewritten.
     */
-  def compactRowsByGroup(spark: SparkSession, cfg: Cfg): Unit = {
-    // mergeSchema: see compactRows
-    val rows = spark.read.option("mergeSchema", "true")
-      .parquet(cfg.sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"${cfg.sidecarPath} is not a grouped sidecar (set Cfg.groupKeyExpr)")
-    if (rows.groupBy("grp").count().where(col("count") > 1).isEmpty)
+  def compactRows(spark: SparkSession, cfg: Cfg): Unit = {
+    val rows = read(spark, cfg.sidecarPath)
+    val keys =
+      if (rows.columns.contains("grp")) Seq(col("grp")) else Seq.empty
+    if (rows.groupBy(keys: _*).count().where(col("count") > 1).isEmpty)
       return // every group already single-row
     val k = cfg.numBuckets
     val hasCms = rows.columns.contains("cms")
     val hasKmv = rows.columns.contains("kmv")
-    val served = servedQuantilesByGroup(spark, cfg.sidecarPath,
-        (1 to k).map(_.toDouble / k))
-      .groupBy("grp")
-      // array_sort on (p, value) structs orders by p, so the projected
-      // values land in boundary order qs[1..K]
+    // the served quantiles at j/K; array_sort on (p, value) structs
+    // orders by p, so the values land in boundary order qs[1..K]
+    val served = quantilesOfRows(rows, keys, (1 to k).map(_.toDouble / k))
+      .groupBy(keys: _*)
       .agg(transform(array_sort(collect_list(struct(col("p"),
           col("value")))), s => s.getField("value")).as("served"))
-    var anchorAggs = Seq(sum(col("n")).as("n"),
+    // qs[0] is the anchor: the smallest stored batch minimum
+    var aggs = Seq(sum(col("n")).as("n"),
       hll_union_agg(col("hll")).as("hll"),
       min(element_at(col("qs"), 1)).as("anchor"))
-    // same honest-degrade gate as compactRows
     if (rows.columns.contains("vsum") &&
         rows.where(col("vn").isNull).isEmpty)
-      anchorAggs = anchorAggs ++ momentMergeAggs
-    if (hasCms) {
-      val cmsMerge = udaf(new CmsMerge, org.apache.spark.sql.Encoders.BINARY)
-      anchorAggs = anchorAggs :+ cmsMerge(col("cms")).as("cms")
-    }
+      aggs = aggs ++ momentMergeAggs
+    if (hasCms) aggs = aggs ++ Seq(cmsMerged, candidates)
     if (hasKmv) {
-      val kmvMerge = udaf(new KmvMergeAgg(cfg.kmvK),
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[Array[Long]]())
-      // a mixed-k sidecar is not union-comparable — same loud failure
-      // as the serve path, enforced before the merge rewrites anything
-      val ks = rows.where(col("kmv").isNotNull)
-        .select(col("kmvk")).distinct().collect().map(_.getInt(0))
-      require(ks.forall(_ == cfg.kmvK),
-        s"sidecar kmvk ${ks.mkString(",")} != cfg.kmvK=${cfg.kmvK}")
-      anchorAggs = anchorAggs :+ kmvMerge(col("kmv")).as("kmv")
+      kmvKOf(rows, cfg.sidecarPath).foreach(sk => require(sk == cfg.kmvK,
+        s"sidecar kmvk $sk != cfg.kmvK=${cfg.kmvK}"))
+      aggs = aggs :+ kmvMerged(cfg.kmvK)
     }
-    val anchors = rows.groupBy("grp").agg(anchorAggs.head, anchorAggs.tail: _*)
-    // per-group candidate union re-priced against the group's merged
-    // CMS — the grouped form of compactRows' candidate ledger; the
-    // estimate lookup touches only #groups·topK candidate rows
-    val topkByGrp =
-      if (!hasCms) None
-      else Some {
-        val cands = rows
-          .select(col("grp"), explode(col("topk")).as("kv"))
-          .select(col("grp"), col("kv.key").as("key")).distinct()
-        val estimate = udf((bytes: Array[Byte], key: String) =>
-          org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes)
-            .estimateCount(key))
-        val w = Window.partitionBy("grp")
-          .orderBy(col("cnt").desc, col("key"))
-        cands.join(anchors.select(col("grp"), col("cms")), Seq("grp"))
-          .select(col("grp"), col("key"),
-            estimate(col("cms"), col("key")).as("cnt"))
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") <= cfg.topK)
-          .groupBy("grp")
-          // deterministic stored order: count desc, key asc
-          .agg(transform(
-            array_sort(collect_list(struct((-col("cnt")).as("negcnt"),
-              col("key"), col("cnt")))),
-            s => struct(s.getField("key").as("key"),
-              s.getField("cnt").as("cnt"))).as("topk"))
-      }
-    val merged = topkByGrp match {
-      case Some(t) => anchors.join(t, Seq("grp"), "left")
-      case None => anchors
-    }
-    val out = merged.join(served, Seq("grp"), "left")
+    val merged = rows.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+    val withTop =
+      if (!hasCms) merged
+      else merged
+        .withColumn("topk", transform(slice(pricedCandidates, 1, cfg.topK),
+          s => struct(s.getField("key").as("key"),
+            s.getField("est").as("cnt"))))
+        .drop("cands")
+    // NULL-safe on grp: a null group key is a real group
+    val withServed =
+      if (keys.isEmpty) withTop.crossJoin(served)
+      else withTop.join(served.withColumnRenamed("grp", "__grp"),
+        col("grp") <=> col("__grp"), "left").drop("__grp")
+    val out = withServed
       .withColumn("qs",
-        // an all-null-qs group merges to a null summary (serve filters
-        // null qs), mirroring compactRows' stance
+        // an all-null-qs group merges to a null summary (serves filter
+        // null qs), not an NPE
         when(col("anchor").isNull || col("served").isNull,
             lit(null).cast("array<double>"))
           .otherwise(concat(array(col("anchor")), col("served"))))
@@ -857,6 +769,7 @@ object SketchSidecar {
     val outK =
       (if (hasKmv) out.withColumn("kmvk", lit(cfg.kmvK)) else out)
       .coalesce(1)
+      // sever lineage from the files the swap below replaces
       .localCheckpoint(true)
     try Compaction.replace(cfg.sidecarPath, "rowmerge") { staging =>
       outK.write.parquet(staging.toString)
@@ -976,61 +889,63 @@ object SketchSidecar {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
-  /** The sidecar's rows merged to one sketch: explode → distinct → k
-    * smallest (unsigned order via the sign-bit flip, so a plain SQL sort
-    * works) → collect. Bounded: ≤ #batches·k rows enter the sort, ≤ k
-    * longs reach the driver — the centroid-sidecar convention. Returns
-    * the merged array and the rows' common `kmvk` (a mixed-k sidecar
-    * fails loudly: sketches of different k are not union-comparable).
-    */
-  private def mergedKmvRows(rows: DataFrame,
-                            ctx: String): (Array[Long], Int) = {
-    require(rows.columns.contains("kmv"),
-      s"sidecar at $ctx carries no KMV sketch (set Cfg.kmvKeyExpr)")
+  /** The one bottom-k merge: [[KmvMergeAgg]] over the rows' stored
+    * sketches, executor-side partial merges bounded at k longs per
+    * buffer (null rows skipped). */
+  private def kmvMerged(k: Int): Column =
+    udaf(new KmvMergeAgg(k),
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())(
+      col("kmv")).as("kmv")
+
+  /** The rows' common `kmvk`, None when no row carries a sketch. A
+    * mixed-k sidecar fails loudly: sketches of different k are not
+    * union-comparable. */
+  private def kmvKOf(rows: DataFrame, ctx: String): Option[Int] = {
+    requireFace(rows, "kmv", ctx, "KMV sketch", "kmvKeyExpr")
     val ks = rows.where(col("kmv").isNotNull)
       .select(col("kmvk")).distinct().collect().map(_.getInt(0))
-    require(ks.nonEmpty,
+    require(ks.length <= 1,
+      s"mixed kmvK in sidecar at $ctx: ${ks.mkString(",")}")
+    ks.headOption
+  }
+
+  /** The rows' sketches merged per key: `(keys, batches, kmv)`, with
+    * their common k. */
+  private def kmvOfRows(rows: DataFrame, keys: Seq[Column],
+                        ctx: String): (DataFrame, Int) = {
+    val k = kmvKOf(rows, ctx)
+    require(k.nonEmpty,
       s"sidecar at $ctx has a kmv column but no non-null KMV rows — " +
         "nothing was ever appended with kmvKeyExpr set")
-    require(ks.length == 1,
-      s"mixed kmvK in sidecar at $ctx: ${ks.mkString(",")}")
-    val k = ks.head
-    val merged = rows.where(col("kmv").isNotNull)
-      .select(explode(col("kmv")).as("h")).distinct()
-      .orderBy(col("h").bitwiseXOR(lit(Long.MinValue)))
-      .limit(k)
-      .collect().map(_.getLong(0))
-    (merged, k)
+    (rows.groupBy(keys: _*)
+      .agg(count(lit(1)).as("batches"), kmvMerged(k.get)), k.get)
   }
 
-  private def mergedKmv(spark: SparkSession,
-                        sidecarPath: String): (Array[Long], Int) =
-    mergedKmvRows(spark.read.parquet(sidecarPath), sidecarPath)
-
-  /** Merged KMV distinct-count estimate over every appended batch — the
-    * bottom-k analog of [[servedDistinct]], same O(#batches) serve cost,
-    * rse ≈ 1/sqrt(kmvK−2). One row `(batches, distinct_estimate)`.
+  /** Merged KMV distinct-count estimate — the bottom-k analog of
+    * [[servedDistinct]], same O(rows) serve cost: one row `(batches,
+    * distinct_estimate)` per scope answer, EXACT below k (the merged
+    * sketch then holds every distinct hash), rse ≈ 1/sqrt(kmvK−2) at k,
+    * on each answer's own scale (the corpus, each group, the window).
     */
-  def servedKmvDistinct(spark: SparkSession,
-                        sidecarPath: String): DataFrame = {
-    // one read serves both the merge and the row count
-    val rows = spark.read.parquet(sidecarPath)
-    val (kmv, k) = mergedKmvRows(rows, sidecarPath)
-    val batches = rows.count()
-    import spark.implicits._
-    Seq((batches, kmvEstimate(kmv, k)))
-      .toDF("batches", "distinct_estimate")
-  }
+  def servedKmvDistinct(spark: SparkSession, sidecarPath: String,
+                        scope: Scope = Scope.Whole): DataFrame =
+    serve(read(spark, sidecarPath), sidecarPath, scope) { (rows, keys, _) =>
+      val (merged, k) = kmvOfRows(rows, keys, sidecarPath)
+      val estimate = udf((kmv: Seq[Long]) => kmvEstimate(kmv.toArray, k))
+      merged.withColumn("distinct_estimate", estimate(col("kmv")))
+        .drop("kmv")
+    }
 
   /** Dataset-overlap estimates from two KMV sidecars — the question two
     * 100 TB corpora cannot afford to answer by scanning: how much does
     * corpus B overlap corpus A (snapshot-to-snapshot drift, crawl-vs-
-    * training-set contamination)? Serve cost is O(#batches·k) with k
-    * longs of driver state per side; the corpora are never touched.
+    * training-set contamination)? Serve cost is O(#rows·k) with k longs
+    * of driver state per side and answer; the corpora are never
+    * touched.
     *
-    * One row: `(a_est, b_est, union_est, jaccard, inter_est,
-    * a_only_est, b_only_est)` — the full set algebra: sizes, union,
-    * Jaccard, intersection and both differences (new-content and
+    * One row per scope answer: `(a_est, b_est, union_est, jaccard,
+    * inter_est, a_only_est, b_only_est)` — the full set algebra: sizes,
+    * union, Jaccard, intersection and both differences (new-content and
     * lost-content volume between two snapshots).
     * Estimator: K_U = the k smallest of KMV(A) ∪ KMV(B) (a valid KMV of
     * A ∪ B by associativity); every h ∈ K_U satisfies h ≤ θ_U ≤ θ_A, so
@@ -1043,18 +958,86 @@ object SketchSidecar {
     * When the union sketch is not full every estimate is EXACT (both
     * sketches then hold every distinct hash of their sets). Both
     * sidecars must share one `kmvK` (unequal-k sketches are not
-    * union-comparable — fails loudly).
+    * union-comparable — fails loudly). Scopes:
+    *   - [[Scope.Whole]]: the two corpora;
+    *   - [[Scope.PerGroup]]: the contamination-pricing dashboard by
+    *     source/language/domain ("how much of domain D's crawl is
+    *     already in the training set"), one `grp`-keyed row per group
+    *     present on either side, each group's bounds the single-pair
+    *     bounds on its OWN scale (each group has its own full-k sketch).
+    *     A group absent from one side gets that side's empty sketch: its
+    *     estimates are exact zeros and the overlap is 0 — "nothing of D
+    *     is in the training set" is an answer, not an error;
+    *   - [[Scope.Window]]: both sidecars' rows of the requested groups,
+    *     with `a_groups_covered`/`b_groups_covered`.
     */
   def servedOverlap(spark: SparkSession, sidecarPathA: String,
-                    sidecarPathB: String): DataFrame = {
-    val (a, ka) = mergedKmv(spark, sidecarPathA)
-    val (b, kb) = mergedKmv(spark, sidecarPathB)
-    require(ka == kb, s"kmvK mismatch: $ka vs $kb — sketches of " +
-      "different k are not union-comparable")
+                    sidecarPathB: String,
+                    scope: Scope = Scope.Whole): DataFrame =
+    overlapOf(spark, sidecarPathA -> scope, sidecarPathB -> scope)
+
+  /** Set algebra BETWEEN two group-windows of ONE grouped KMV sidecar —
+    * the sketch-served form of "how many of this week's users were also
+    * active last week": [[servedOverlap]] with side A the
+    * `Window(groupsA)` rows and side B the `Window(groupsB)` rows. One
+    * row `(a_groups_covered, b_groups_covered, a_est, b_est, union_est,
+    * jaccard, inter_est, a_only_est, b_only_est)` — returning users =
+    * inter, churned = a_only, new = b_only — from O(rows-in-range) work,
+    * never an events re-scan. Windows may overlap or be disjoint; a
+    * window with no covered rows has an empty (exact) sketch; both
+    * empty refuses. Estimator bounds are [[servedOverlap]]'s verbatim.
+    */
+  def servedOverlapBetweenWindows(spark: SparkSession, sidecarPath: String,
+                                  groupsA: Seq[String],
+                                  groupsB: Seq[String]): DataFrame =
+    overlapOf(spark, sidecarPath -> Scope.Window(groupsA),
+      sidecarPath -> Scope.Window(groupsB))
+
+  private def overlapOf(spark: SparkSession, a: (String, Scope),
+                        b: (String, Scope)): DataFrame = {
+    // one side's merged sketches by group (null under no key), its k —
+    // None for a window that covered no rows (an empty, exact sketch) —
+    // and a window's coverage
+    def side(path: String, scope: Scope)
+        : (Map[String, Array[Long]], Option[Int], Option[Long]) = {
+      val (rows, keys) = scoped(read(spark, path), path, scope)
+      val cov = scope match {
+        case _: Scope.Window =>
+          Some(rows.agg(coveredAgg).collect().head.getLong(0))
+        case _ => None
+      }
+      if (cov.contains(0L)) (Map.empty, None, cov)
+      else {
+        val (merged, k) = kmvOfRows(rows, keys, path)
+        (merged.collect().map { r =>
+          (if (keys.isEmpty) null else r.getAs[String]("grp")) ->
+            r.getAs[Seq[Long]]("kmv").toArray
+        }.toMap, Some(k), cov)
+      }
+    }
+    val (sa, ka, ca) = side(a._1, a._2)
+    val (sb, kb, cb) = side(b._1, b._2)
+    require(ka.nonEmpty || kb.nonEmpty,
+      "neither window covered any sidecar rows")
+    require(ka.isEmpty || kb.isEmpty || ka == kb,
+      s"kmvK mismatch: ${ka.getOrElse(0)} vs ${kb.getOrElse(0)} — " +
+        "sketches of different k are not union-comparable")
     import spark.implicits._
-    Seq(overlapStats(a, b, ka))
-      .toDF("a_est", "b_est", "union_est", "jaccard", "inter_est",
+    // sort through Option: a null group key (null groupKeyExpr values
+    // are a real group) must order, not NPE
+    val stats = (sa.keySet ++ sb.keySet).toSeq.sortBy(Option(_))
+      .map { g =>
+        val s = overlapStats(sa.getOrElse(g, Array.emptyLongArray),
+          sb.getOrElse(g, Array.emptyLongArray), ka.orElse(kb).get)
+        (g, s._1, s._2, s._3, s._4, s._5, s._6, s._7)
+      }
+      .toDF("grp", "a_est", "b_est", "union_est", "jaccard", "inter_est",
         "a_only_est", "b_only_est")
+    val coverage = Seq("a" -> ca, "b" -> cb).collect {
+      case (p, Some(c)) => lit(c).as(s"${p}_groups_covered")
+    }
+    stats.select(coverage ++ stats.columns
+      .filter(c => c != "grp" || a._2 == Scope.PerGroup).map(col): _*)
   }
 
   /** The exact-membership set algebra of [[servedOverlap]] over two
@@ -1074,68 +1057,6 @@ object SketchSidecar {
     (kmvEstimate(a, k), kmvEstimate(b, k), unionEst, jaccard,
       jaccard * unionEst, aOnly / denom * unionEst,
       bOnly / denom * unionEst)
-  }
-
-  /** Per-group merged KMV sketches of a GROUPED sidecar, collected to
-    * the driver as (group → sketch): executor-side [[KmvMergeAgg]]
-    * partial merges, then ≤ #groups·k longs of driver state — the
-    * bounded-metadata stance scaled by an operator-bounded group
-    * dimension (domains/languages/sources, the [[Cfg.groupKeyExpr]]
-    * contract). Mixed-k sidecars fail loudly, as everywhere.
-    */
-  private def mergedKmvByGroup(spark: SparkSession, sidecarPath: String)
-      : (Map[String, Array[Long]], Int) = {
-    val rows = spark.read.parquet(sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    require(rows.columns.contains("kmv"),
-      s"sidecar at $sidecarPath carries no KMV sketch (set Cfg.kmvKeyExpr)")
-    val ks = rows.where(col("kmv").isNotNull)
-      .select(col("kmvk")).distinct().collect().map(_.getInt(0))
-    require(ks.nonEmpty, s"sidecar at $sidecarPath has a kmv column but " +
-      "no non-null KMV rows")
-    require(ks.length == 1,
-      s"mixed kmvK in sidecar at $sidecarPath: ${ks.mkString(",")}")
-    val k = ks.head
-    val kmvMerge = udaf(new KmvMergeAgg(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]())
-    val merged = rows.where(col("kmv").isNotNull)
-      .groupBy("grp").agg(kmvMerge(col("kmv")).as("kmv"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-    (merged, k)
-  }
-
-  /** [[servedOverlap]] PER GROUP from two GROUPED KMV sidecars — the
-    * contamination-pricing dashboard by source/language/domain: "how
-    * much of domain D's crawl is already in the training set", one row
-    * `(grp, a_est, b_est, union_est, jaccard, inter_est, a_only_est,
-    * b_only_est)` per group present on either side, served from two
-    * O(#groups·k) sidecars without scanning either corpus. A group
-    * absent from one side gets that side's empty sketch: its estimates
-    * are exact zeros and the overlap is 0 — "nothing of D is in the
-    * training set" is an answer, not an error. Per-group error bounds
-    * are the single-pair bounds of [[servedOverlap]] on each group's
-    * OWN scale (each group has its own full-k sketch — the same
-    * per-group-contract stance as [[servedQuantilesByGroup]]).
-    */
-  def servedOverlapByGroup(spark: SparkSession, sidecarPathA: String,
-                           sidecarPathB: String): DataFrame = {
-    val (a, ka) = mergedKmvByGroup(spark, sidecarPathA)
-    val (b, kb) = mergedKmvByGroup(spark, sidecarPathB)
-    require(ka == kb, s"kmvK mismatch: $ka vs $kb — sketches of " +
-      "different k are not union-comparable")
-    import spark.implicits._
-    // sort through Option: a null group key (null groupKeyExpr values
-    // are a real group) must order, not NPE
-    (a.keySet ++ b.keySet).toSeq.sortBy(Option(_))
-      .map { g =>
-        val s = overlapStats(a.getOrElse(g, Array.emptyLongArray),
-          b.getOrElse(g, Array.emptyLongArray), ka)
-        (g, s._1, s._2, s._3, s._4, s._5, s._6, s._7)
-      }
-      .toDF("grp", "a_est", "b_est", "union_est", "jaccard", "inter_est",
-        "a_only_est", "b_only_est")
   }
 
   /** A Spark `CountMinSketch` opened for arithmetic the class API
@@ -1188,23 +1109,175 @@ object SketchSidecar {
         "serialization format changed upstream; re-audit parseCms")
   }
 
-  /** The sidecar's CMS rows merged to one parsed sketch (cell-wise
-    * executor-side merge, ≤ depth·width longs of driver state). */
-  private def mergedCms(spark: SparkSession, sidecarPath: String)
-      : ParsedCms =
-    mergedCmsRows(spark.read.parquet(sidecarPath), sidecarPath)
+  /** The one CMS merge: cell-wise [[CmsMerge]] of the rows' sketches. */
+  private def cmsMerged: Column =
+    udaf(new CmsMerge, org.apache.spark.sql.Encoders.BINARY)(col("cms"))
+      .as("cms")
 
-  private def mergedCmsRows(rows: DataFrame, sidecarPath: String)
-      : ParsedCms = {
-    require(rows.columns.contains("cms"),
-      s"sidecar at $sidecarPath carries no CMS face (set Cfg.heavyKeyExpr)")
-    val cmsMerge = udaf(new CmsMerge, org.apache.spark.sql.Encoders.BINARY)
-    val bytes = rows.where(col("cms").isNotNull)
-      .agg(cmsMerge(col("cms")).as("cms"))
-      .collect().head.getAs[Array[Byte]](0)
-    require(bytes != null,
-      s"sidecar at $sidecarPath has a cms column but no non-null rows")
-    parseCms(bytes)
+  /** The union of the rows' Misra-Gries candidate keys (≤ #rows·topK —
+    * bounded metadata). */
+  private def candidates: Column =
+    array_distinct(flatten(collect_list(col("topk.key")))).as("cands")
+
+  /** The one candidate pricing: every merged candidate (`cands`) priced
+    * against the merged sketch (`cms`), as `(key, est)` structs heaviest
+    * first, ties by key. The lookup deserializes the sketch per
+    * candidate — acceptable at candidate scale and kept out of every
+    * corpus-sized plan. */
+  private def pricedCandidates: Column = {
+    val estimate = udf((bytes: Array[Byte], key: String) =>
+      org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes)
+        .estimateCount(key))
+    transform(
+      array_sort(transform(col("cands"), c =>
+        struct((-estimate(col("cms"), c)).as("neg"), c.as("key")))),
+      s => struct(s.getField("key").as("key"),
+        (-s.getField("neg")).as("est")))
+  }
+
+  /** Heavy hitters served from the sidecar: every key whose estimated
+    * count reaches `phi` of its answer's total N, with its estimate and
+    * that total — `(key, est, total)` per scope answer, heaviest first.
+    *
+    * Mechanics: the answer's CMS rows merge cell-wise ([[CmsMerge]])
+    * into ONE sketch; the candidate set is the union of its rows'
+    * Misra-Gries summaries (computed inside the batches' single-scan
+    * aggregation); each candidate is priced against the merged sketch.
+    * Guarantees, all enforced by the `q_heavy_hitters_gap`,
+    * `q_heavy_hitters_by_group_gap` and `q_hh_window_gap` twins:
+    *   - completeness: every key with true share ≥ phi is served
+    *     (provable when phi ≥ 1/topK — see [[Cfg.topK]]);
+    *   - no under-count: est ≥ true count, always (CMS takes a MIN over
+    *     hashed counters that only ever over-count);
+    *   - bounded over-count: est ≤ true + cmsEps·N at cmsConfidence
+    *     per key — deterministic at a fixed seed;
+    *   - soundness: a served key's true share is ≥ phi − cmsEps.
+    * N and the shares are on the answer's own scale:
+    *   - [[Scope.Whole]]: the corpus ("which sources/domains/languages
+    *     dominate the corpus");
+    *   - [[Scope.PerGroup]]: each group's ("which languages dominate
+    *     each source"): each group's CMS rows aggregate only that
+    *     group's slices (over-count ≤ cmsEps·N_g), and a group-φ-heavy
+    *     key has share ≥ φ in at least one of the group's (batch, group)
+    *     slices, so it enters that slice's candidates whenever
+    *     `topK ≥ 1/φ` — the [[Cfg.topK]] argument with "batch" read as
+    *     "slice";
+    *   - [[Scope.Window]]: the window's ("which keys dominated THIS date
+    *     range") — the same argument over the covered slices.
+    */
+  def servedHeavyHitters(spark: SparkSession, sidecarPath: String,
+                         phi: Double,
+                         scope: Scope = Scope.Whole): DataFrame = {
+    require(phi > 0.0 && phi <= 1.0, s"phi=$phi")
+    serve(read(spark, sidecarPath), sidecarPath, scope) { (rows, keys, _) =>
+      rows.groupBy(keys: _*)
+        .agg(cmsMerged, sum(col("n")).as("total"), candidates)
+        .select(keys ++ Seq(explode(pricedCandidates).as("kv"),
+          col("total")): _*)
+        .select(keys ++ Seq(col("kv.key").as("key"), col("kv.est").as("est"),
+          col("total")): _*)
+        .where(col("est") >= col("total") * phi)
+        .orderBy(keys ++ Seq(col("est").desc, col("key")): _*)
+    }
+  }
+
+  /** Key-skew diagnosis from the CMS sidecar alone — "does this join/
+    * group key need salting?" answered without scanning the corpus: the
+    * merged sketch's inner product WITH ITSELF estimates the second
+    * frequency moment F2 = Σ_k cnt(k)² (never under, over by ≤
+    * 2·N²/width at the [[servedJoinSize]] confidence), and F2 pins the
+    * skew measures a partitioner plans by:
+    *   - `l2_l1_ratio` = √F2/N ∈ (0, 1] — 1/√distinct for a uniform
+    *     column, → 1 as one key dominates;
+    *   - `top_share_ub` = max priced-candidate estimate / N — at least
+    *     the heaviest candidate's true share since CMS only over-counts
+    *     — with `top_share_lb` subtracting the point-query slack
+    *     (cmsEps): the heaviest key's share, bracketed (completeness of
+    *     the candidate set per [[Cfg.topK]]);
+    *   - `uniform_equiv_keys` = N²/F2 — the "effective key count": the
+    *     number of EQUALLY-LOADED keys that would produce this F2, so
+    *     a 10^9-distinct column with uniform_equiv_keys ≈ 40 tells the
+    *     planner it hashes like 40 keys and WILL hotspot without
+    *     salting.
+    * One row `(n, f2_est, f2_bound, l2_l1_ratio, uniform_equiv_keys,
+    * top_share_lb, top_share_ub)` per scope answer, every guarantee on
+    * the answer's own scale. A [[Scope.Whole]] or [[Scope.Window]]
+    * answer whose CMS saw no keys (every batch empty or all-null
+    * heavyKeyExpr) REFUSES loudly — skew of an empty key column is not a
+    * number; [[Scope.PerGroup]] ("WHICH domain's key column is skewed")
+    * OMITS such groups, since a monitoring row of NaNs would read as an
+    * answer. Serve cost: one O(#rows) sidecar merge + a depth·width
+    * driver pass per answer (~160 KB per parsed sketch at the default
+    * eps/confidence, times the operator-bounded group dimension).
+    */
+  def servedKeySkew(spark: SparkSession, sidecarPath: String,
+                    scope: Scope = Scope.Whole): DataFrame = {
+    import spark.implicits._
+    serve(read(spark, sidecarPath), sidecarPath, scope) { (rows, keys, _) =>
+      requireFace(rows, "cms", sidecarPath, "CMS face", "heavyKeyExpr")
+      val merged = rows.where(col("cms").isNotNull).groupBy(keys: _*)
+        .agg(cmsMerged, candidates)
+        .select(keys ++ Seq(col("cms"),
+          try_element_at(pricedCandidates, lit(1)).getField("est")
+            .as("top")): _*)
+        .collect()
+      val stats = merged.toSeq.flatMap { r =>
+        val bytes = r.getAs[Array[Byte]]("cms")
+        if (keys.isEmpty) require(bytes != null,
+          s"sidecar at $sidecarPath has a cms column but no non-null rows")
+        val m = parseCms(bytes)
+        if (keys.isEmpty) require(m.total > 0,
+          s"sidecar at $sidecarPath saw no CMS keys (every batch empty or " +
+            "all-null heavyKeyExpr) — skew of an empty key column is not " +
+            "a number; gate on n before asking")
+        val top = Option(r.getAs[java.lang.Long]("top")).fold(0L)(_.longValue)
+        Option.when(m.total > 0) {
+          val s = skewStats(m, top)
+          (if (keys.isEmpty) null else r.getAs[String]("grp"),
+            s._1, s._2, s._3, s._4, s._5, s._6, s._7)
+        }
+      }
+      val out = stats.sortBy(t => Option(t._1))
+        .toDF("grp", "n", "f2_est", "f2_bound", "l2_l1_ratio",
+          "uniform_equiv_keys", "top_share_lb", "top_share_ub")
+      if (keys.isEmpty) out.drop("grp") else out
+    }
+  }
+
+  /** The CMS self inner product (min over rows of Σ c²) — the F2
+    * estimator of [[servedKeySkew]]. Double accumulation: the long form
+    * overflows at the corpus sizes these serves target (see
+    * [[servedJoinSize]]).
+    */
+  private def cmsSelfF2(m: ParsedCms): Double = {
+    var f2 = Double.PositiveInfinity
+    var d = 0
+    while (d < m.depth) {
+      var s = 0.0
+      var w = 0
+      while (w < m.width) {
+        val c = m.table(d * m.width + w).toDouble
+        s += c * c
+        w += 1
+      }
+      if (s < f2) f2 = s
+      d += 1
+    }
+    f2
+  }
+
+  /** The derived skew row (n, f2, bound, l2/l1, effective keys, top
+    * share bracket) from one parsed sketch + its priced heaviest
+    * candidate.
+    */
+  private def skewStats(m: ParsedCms, topEst: Long)
+      : (Long, Double, Double, Double, Double, Double, Double) = {
+    val f2 = cmsSelfF2(m)
+    val n = m.total.toDouble
+    val epsEff = 2.0 / m.width
+    (m.total, f2, 2.0 * n * n / m.width, math.sqrt(f2) / n,
+      n * n / f2, math.max(0.0, topEst / n - epsEff),
+      math.min(1.0, topEst / n))
   }
 
   /** Join-cardinality estimate between two corpora from their CMS
@@ -1232,8 +1305,16 @@ object SketchSidecar {
     */
   def servedJoinSize(spark: SparkSession, sidecarPathA: String,
                      sidecarPathB: String): DataFrame = {
-    val a = mergedCms(spark, sidecarPathA)
-    val b = mergedCms(spark, sidecarPathB)
+    def merged(path: String): ParsedCms = {
+      val rows = read(spark, path)
+      requireFace(rows, "cms", path, "CMS face", "heavyKeyExpr")
+      val bytes = rows.agg(cmsMerged).collect().head.getAs[Array[Byte]](0)
+      require(bytes != null,
+        s"sidecar at $path has a cms column but no non-null rows")
+      parseCms(bytes)
+    }
+    val a = merged(sidecarPathA)
+    val b = merged(sidecarPathB)
     require(a.depth == b.depth && a.width == b.width,
       s"CMS dims mismatch: ${a.depth}x${a.width} vs ${b.depth}x${b.width}")
     require(java.util.Arrays.equals(a.hashA, b.hashA),
@@ -1262,132 +1343,6 @@ object SketchSidecar {
       .toDF("a_n", "b_n", "join_size_est", "bound")
   }
 
-  /** Key-skew diagnosis from the CMS sidecar alone — "does this join/
-    * group key need salting?" answered without scanning the corpus: the
-    * sketch's inner product WITH ITSELF estimates the second frequency
-    * moment F2 = Σ_k cnt(k)² (never under, over by ≤ 2·N²/width at the
-    * [[servedJoinSize]] confidence), and F2 pins the skew measures a
-    * partitioner plans by:
-    *   - `l2_l1_ratio` = √F2/N ∈ (0, 1] — 1/√distinct for a uniform
-    *     column, → 1 as one key dominates;
-    *   - `top_share_ub` = max served-candidate estimate / N — at least
-    *     the heaviest candidate's true share since CMS only over-counts
-    *     — with `top_share_lb` subtracting the point-query slack
-    *     (cmsEps): the heaviest key's corpus share, bracketed
-    *     (completeness of the candidate set per [[Cfg.topK]]);
-    *   - `uniform_equiv_keys` = N²/F2 — the "effective key count": the
-    *     number of EQUALLY-LOADED keys that would produce this F2, so
-    *     a 10^9-distinct column with uniform_equiv_keys ≈ 40 tells the
-    *     planner it hashes like 40 keys and WILL hotspot without
-    *     salting.
-    * One row `(n, f2_est, f2_bound, l2_l1_ratio, uniform_equiv_keys,
-    * top_share_lb, top_share_ub)`. Serve cost: one O(#batches) sidecar
-    * merge + a depth·width driver pass.
-    */
-  def servedKeySkew(spark: SparkSession, sidecarPath: String): DataFrame = {
-    val rows = spark.read.parquet(sidecarPath) // one read serves both legs
-    val m = mergedCmsRows(rows, sidecarPath)
-    require(m.total > 0,
-      s"sidecar at $sidecarPath saw no CMS keys (every batch empty or " +
-        "all-null heavyKeyExpr) — skew of an empty key column is not a " +
-        "number; gate on n before asking")
-    // heaviest candidate: price the sidecar's Misra-Gries union against
-    // the merged sketch, exactly the servedHeavyHitters path. total > 0
-    // implies some batch had keys, hence a non-empty candidate union
-    val topEst = heavyHittersOfRows(rows, phi = 1e-12)
-      .agg(max(col("est"))).collect().head.getLong(0)
-    import spark.implicits._
-    Seq(skewStats(m, topEst))
-      .toDF("n", "f2_est", "f2_bound", "l2_l1_ratio",
-        "uniform_equiv_keys", "top_share_lb", "top_share_ub")
-  }
-
-  /** The CMS self inner product (min over rows of Σ c²) — the F2
-    * estimator shared by the global and per-group skew serves. Double
-    * accumulation: the long form overflows at the corpus sizes these
-    * serves target (see [[servedJoinSize]]).
-    */
-  private def cmsSelfF2(m: ParsedCms): Double = {
-    var f2 = Double.PositiveInfinity
-    var d = 0
-    while (d < m.depth) {
-      var s = 0.0
-      var w = 0
-      while (w < m.width) {
-        val c = m.table(d * m.width + w).toDouble
-        s += c * c
-        w += 1
-      }
-      if (s < f2) f2 = s
-      d += 1
-    }
-    f2
-  }
-
-  /** The derived skew row (n, f2, bound, l2/l1, effective keys, top
-    * share bracket) from one parsed sketch + its priced heaviest
-    * candidate — one definition for both skew serves.
-    */
-  private def skewStats(m: ParsedCms, topEst: Long)
-      : (Long, Double, Double, Double, Double, Double, Double) = {
-    val f2 = cmsSelfF2(m)
-    val n = m.total.toDouble
-    val epsEff = 2.0 / m.width
-    (m.total, f2, 2.0 * n * n / m.width, math.sqrt(f2) / n,
-      n * n / f2, math.max(0.0, topEst / n - epsEff),
-      math.min(1.0, topEst / n))
-  }
-
-  /** [[servedKeySkew]] PER GROUP from a GROUPED sidecar carrying the CMS
-    * face — "WHICH domain's key column is skewed": one row per group
-    * with the group's own F2 estimate, skew measures and top-share
-    * bracket, every guarantee [[servedKeySkew]]'s on the group's own
-    * scale. Groups whose CMS saw no keys (all-null heavyKeyExpr) are
-    * OMITTED — their skew is not a number, and a monitoring row of NaNs
-    * would read as an answer. Driver state: one parsed sketch per group
-    * (depth·width longs — ~160 KB at the default eps/confidence), times
-    * the operator-bounded group dimension, the [[Cfg.groupKeyExpr]]
-    * contract.
-    */
-  def servedKeySkewByGroup(spark: SparkSession,
-                           sidecarPath: String): DataFrame = {
-    val rows = spark.read.parquet(sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    require(rows.columns.contains("cms"),
-      s"sidecar at $sidecarPath carries no CMS face (set Cfg.heavyKeyExpr)")
-    val cmsMerge = udaf(new CmsMerge, org.apache.spark.sql.Encoders.BINARY)
-    val mergedBytes = rows.where(col("cms").isNotNull)
-      .groupBy("grp").agg(cmsMerge(col("cms")).as("cms"))
-      .collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
-      .toMap
-    // candidate keys per group from the stored Misra-Gries lists —
-    // bounded metadata; priced driver-side against the ALREADY-merged
-    // sketches (one deserialization per group, no second sidecar
-    // read + re-merge)
-    val cands = rows.select(col("grp"), explode(col("topk")).as("kv"))
-      .select(col("grp"), col("kv.key").as("key")).distinct()
-      .collect()
-      .groupBy(_.getString(0))
-      .view.mapValues(_.map(_.getString(1)).toSeq).toMap
-    import spark.implicits._
-    mergedBytes.toSeq.sortBy(t => Option(t._1))
-      .map { case (g, bytes) =>
-        val sketch =
-          org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes)
-        val topEst = cands.getOrElse(g, Seq.empty)
-          .map(sketch.estimateCount(_)).foldLeft(0L)(math.max)
-        g -> skewStats(parseCms(bytes), topEst)
-      }
-      .filter(_._2._1 > 0)
-      .map { case (g, s) =>
-        (g, s._1, s._2, s._3, s._4, s._5, s._6, s._7)
-      }
-      .toDF("grp", "n", "f2_est", "f2_bound", "l2_l1_ratio",
-        "uniform_equiv_keys", "top_share_lb", "top_share_ub")
-  }
-
   /** Distributive Count-Min merge: cell-wise addition of the serialized
     * sketches, run as a real Spark `Aggregator` so partial merges happen
     * on executors (tree shape), never as a driver loop over rows. The
@@ -1414,256 +1369,5 @@ object SketchSidecar {
       org.apache.spark.sql.Encoders.BINARY
     def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
       org.apache.spark.sql.Encoders.BINARY
-  }
-
-  /** Row-merge compaction: collapse every appended batch row into ONE
-    * merged row, so serve cost stays O(1) no matter how many batches the
-    * corpus has seen — the file-level `compactEvery` pass bounds FILE
-    * count; this bounds ROW count. Atomic via the same staged
-    * [[Compaction.replace]] every sidecar rewrite uses; safe to
-    * run on any cadence (weekly/monthly), and appends keep landing
-    * next to the merged row afterwards.
-    *
-    * Exactness ledger, per merged component:
-    *   - `n`: exact sum;
-    *   - `hll`: register-max union — associative, so the merged-row
-    *     estimate is IDENTICAL to serving the unmerged rows;
-    *   - `cms` (when present): cell-wise addition — associative,
-    *     estimates identical to the unmerged serve;
-    *   - `topk` (when present): the candidate union re-priced against
-    *     the merged CMS, top `topK` kept by estimate. Completeness
-    *     survives: a φ-heavy key's estimate ≥ its true count ≥ φ·N, and
-    *     at most 1/(φ−cmsEps) keys can estimate ≥ φ·N (each over-counts
-    *     by ≤ cmsEps·N), so `topK ≥ 1/(φ−cmsEps)` keeps every φ-heavy
-    *     key servable after any number of compactions;
-    *   - `qs`: the merged point-mass distribution re-summarized to K
-    *     equi-depth boundaries — adds AT MOST 1/K rank error per
-    *     compaction GENERATION (re-bucketing granularity). Compact on a
-    *     coarse cadence and the ledger stays far inside the serve
-    *     contract; the generation count is the operator's dial, not a
-    *     hidden constant;
-    *   - `kmv` (when present): bottom-k union — associative, the merged
-    *     row's sketch is IDENTICAL to merging the unmerged rows, so
-    *     every distinct/overlap estimate survives any number of
-    *     compactions bit-for-bit.
-    *
-    * Driver state: the K+1 merged boundaries and the ≤ topK candidate
-    * rows (collected to assemble the single output row) — bounded
-    * metadata, the centroid-sidecar convention.
-    */
-  def compactRows(spark: SparkSession, cfg: Cfg): Unit = {
-    // mergeSchema: face detection must see every generation's columns,
-    // not whichever file's footer wins the schema sample
-    val rows = spark.read.option("mergeSchema", "true")
-      .parquet(cfg.sidecarPath)
-    require(!rows.columns.contains("grp"),
-      s"${cfg.sidecarPath} is a grouped sidecar — use compactRowsByGroup " +
-        "(the ungrouped row-merge would destroy the group column)")
-    if (rows.limit(2).count() < 2) return // nothing to merge
-    val k = cfg.numBuckets
-    val hasCms = rows.columns.contains("cms")
-    // merged boundaries: the served quantiles at j/K over the point-mass
-    // merge (K+1 bounded values). p=0 is served as the global minimum
-    // anchor (qs[0] of the row whose minimum is smallest — approximated
-    // by the smallest stored boundary, exact for the anchor's purpose).
-    val probs = (1 to k).map(_.toDouble / k)
-    val served = servedQuantiles(spark, cfg.sidecarPath, probs)
-      .orderBy(col("p")).select(col("value"))
-      .collect().map(_.getDouble(0))
-    // a sidecar whose every row carries null qs (all-null valueExpr
-    // batches) merges to a null summary, not an NPE — the serve side
-    // already filters null qs rows
-    val minAnchorRow = rows.select(min(element_at(col("qs"), 1)))
-      .collect().head
-    val mergedQs: Option[Seq[Double]] =
-      if (served.isEmpty || minAnchorRow.isNullAt(0)) None
-      else Some(minAnchorRow.getDouble(0) +: served.toSeq)
-    var baseAggs = Seq(sum(col("n")).as("n"),
-      hll_union_agg(col("hll")).as("hll"))
-    // moments merge is EXACT (sum/sum/min/max are associative as-is).
-    // Carried only when EVERY row has the face: merging around legacy
-    // null-moment rows would stamp the post-upgrade batches' sums onto
-    // the whole history's n — the compacted sidecar instead degrades
-    // honestly to pre-moments (serves refuse loudly, not subtly wrong)
-    if (rows.columns.contains("vsum") &&
-        rows.where(col("vn").isNull).isEmpty)
-      baseAggs = baseAggs ++ momentMergeAggs
-    val aggs = if (hasCms) baseAggs :+ {
-      val cmsMerge = udaf(new CmsMerge, org.apache.spark.sql.Encoders.BINARY)
-      cmsMerge(col("cms")).as("cms")
-    } else baseAggs
-    val mergedRow = rows.agg(aggs.head, aggs.tail: _*)
-      .withColumn("qs", mergedQs.map(q => typedlit(q))
-        .getOrElse(lit(null).cast("array<double>")))
-    val withTop = if (hasCms) {
-      // candidate union re-priced by the merged sketch, topK kept
-      val top = servedHeavyHitters(spark, cfg.sidecarPath, phi = 1e-12)
-        .orderBy(col("est").desc, col("key")).limit(cfg.topK)
-        .select(col("key"), col("est").as("cnt"))
-        .agg(collect_list(struct(col("key"), col("cnt"))).as("topk"))
-      mergedRow.crossJoin(top)
-    } else mergedRow
-    // bottom-k union is associative: the merged row serves identically
-    val withKmv = if (rows.columns.contains("kmv")) {
-      val (kmvArr, kmvK) = mergedKmvRows(rows, cfg.sidecarPath)
-      withTop.withColumn("kmv", typedlit(kmvArr.toSeq))
-        .withColumn("kmvk", lit(kmvK))
-    } else withTop
-    val out = withKmv
-      .withColumn("k", lit(k))
-      .withColumn("accuracy", lit(cfg.accuracy))
-      .withColumn("lgk", lit(cfg.lgConfigK))
-      .coalesce(1)
-      // sever lineage from the files the swap below replaces
-      .localCheckpoint(true)
-    try Compaction.replace(cfg.sidecarPath, "rowmerge") { staging =>
-      out.write.parquet(staging.toString)
-      true
-    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(out)
-  }
-
-  /** Corpus heavy hitters served from the sidecar: every key whose
-    * estimated corpus count reaches `phi`·N, with its estimate and the
-    * corpus total. Returns (key, est, total), heaviest first.
-    *
-    * Mechanics: the per-batch CMS rows merge cell-wise ([[CmsMerge]])
-    * into ONE sketch; the candidate set is the union of the per-batch
-    * Misra-Gries summaries (≤ #batches·topK keys — bounded metadata,
-    * computed inside the batches' single-scan aggregation); each
-    * candidate is priced against the merged sketch. Guarantees, all
-    * enforced by the `q_heavy_hitters_gap` twin:
-    *   - completeness: every key with true share ≥ phi is served
-    *     (provable when phi ≥ 1/topK — see [[Cfg.topK]]);
-    *   - no under-count: est ≥ true count, always (CMS takes a MIN over
-    *     hashed counters that only ever over-count);
-    *   - bounded over-count: est ≤ true + cmsEps·N at cmsConfidence
-    *     per key — deterministic at a fixed seed;
-    *   - soundness: a served key's true share is ≥ phi − cmsEps.
-    *
-    * The candidate×sketch pricing is a broadcast of one merged-sketch
-    * row against the bounded candidate frame; the lookup deserializes
-    * the sketch per candidate row, acceptable at candidate scale and
-    * kept out of every corpus-sized plan.
-    */
-  def servedHeavyHitters(spark: SparkSession, sidecarPath: String,
-                         phi: Double): DataFrame = {
-    require(phi > 0.0 && phi <= 1.0, s"phi=$phi")
-    heavyHittersOfRows(spark.read.parquet(sidecarPath), phi)
-  }
-
-  /** [[servedHeavyHitters]] ACROSS a selected subset of groups — the
-    * any-window serve of a time-grouped sidecar carrying the CMS face:
-    * "which keys dominated THIS date range", by cell-wise CMS merge and
-    * candidate union over the covered rows only. All four guarantees
-    * hold on the window's own scale (the per-(batch, group) slices are
-    * exactly the window's batches: over-count ≤ cmsEps·N_window, and a
-    * window-φ-heavy key has share ≥ φ in at least one covered slice, so
-    * it entered that slice's Misra-Gries candidates whenever
-    * topK ≥ ⌈1/φ⌉ — the [[Cfg.topK]] argument with "batch" read as
-    * "covered slice").
-    */
-  def servedHeavyHittersAcrossGroups(spark: SparkSession,
-                                     sidecarPath: String,
-                                     groups: Seq[String],
-                                     phi: Double): DataFrame = {
-    require(phi > 0.0 && phi <= 1.0, s"phi=$phi")
-    require(groups.nonEmpty, "empty group selection")
-    val rows = spark.read.parquet(sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    val inWindow = rows.where(col("grp").isin(groups: _*))
-    // absent groups are reported, not invented — the same coverage
-    // column every sibling windowed serve carries (constant per row)
-    val covered = inWindow
-      .agg(count_distinct(col("grp")).as("groups_covered"))
-    heavyHittersOfRows(inWindow, phi).crossJoin(broadcast(covered))
-  }
-
-  /** Merged KMV distinct estimate ACROSS a selected subset of groups —
-    * the any-window bottom-k serve: one row `(groups_covered,
-    * distinct_estimate)`, exact below k, rse ≈ 1/sqrt(kmvK−2) at k —
-    * mirroring [[servedDistinctAcrossGroups]] for the face that also
-    * supports set algebra. `groups_covered` counts the REQUESTED groups
-    * that had rows, as there.
-    */
-  def servedKmvDistinctAcrossGroups(spark: SparkSession,
-                                    sidecarPath: String,
-                                    groups: Seq[String]): DataFrame = {
-    require(groups.nonEmpty, "empty group selection")
-    val rows = spark.read.parquet(sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    val inWindow = rows.where(col("grp").isin(groups: _*))
-    val covered = inWindow.agg(count_distinct(col("grp")))
-      .collect().head.getLong(0)
-    val (kmv, k) = mergedKmvRows(inWindow, sidecarPath)
-    import rows.sparkSession.implicits._
-    Seq((covered, kmvEstimate(kmv, k)))
-      .toDF("groups_covered", "distinct_estimate")
-  }
-
-  /** Set algebra BETWEEN two group-windows of ONE grouped KMV sidecar —
-    * the sketch-served form of "how many of this week's users were also
-    * active last week": bottom-k union over each window's covered rows,
-    * then the exact-membership overlap estimator of [[servedOverlap]].
-    * One row `(a_groups_covered, b_groups_covered, a_est, b_est,
-    * union_est, jaccard, inter_est, a_only_est, b_only_est)` — the full
-    * algebra (returning users = inter, churned = a_only, new = b_only)
-    * from O(rows-in-range) work and ≤ k longs of driver state per side,
-    * never an events re-scan. Windows may overlap or be disjoint; a
-    * window with no covered rows has an empty (exact) sketch, and each
-    * side's `*_groups_covered` reports its REQUESTED days that had rows
-    * — absent days are reported, not invented. Estimator bounds are
-    * [[servedOverlap]]'s verbatim.
-    */
-  def servedOverlapBetweenWindows(spark: SparkSession, sidecarPath: String,
-                                  groupsA: Seq[String],
-                                  groupsB: Seq[String]): DataFrame = {
-    require(groupsA.nonEmpty && groupsB.nonEmpty, "empty group selection")
-    val rows = spark.read.parquet(sidecarPath)
-    require(rows.columns.contains("grp"),
-      s"sidecar at $sidecarPath is not grouped (set Cfg.groupKeyExpr)")
-    def side(groups: Seq[String]): (Long, Array[Long], Int) = {
-      val in = rows.where(col("grp").isin(groups: _*))
-      val covered = in.agg(count_distinct(col("grp")))
-        .collect().head.getLong(0)
-      if (covered == 0) (0L, Array.emptyLongArray, 0)
-      else {
-        val (kmv, k) = mergedKmvRows(in, sidecarPath)
-        (covered, kmv, k)
-      }
-    }
-    val (ca, a, ka) = side(groupsA)
-    val (cb, b, kb) = side(groupsB)
-    require(ka == 0 || kb == 0 || ka == kb,
-      s"kmvK mismatch: $ka vs $kb — sketches of different k are not " +
-        "union-comparable")
-    val k = math.max(ka, kb)
-    require(k > 0, "neither window covered any sidecar rows")
-    val s = overlapStats(a, b, k)
-    import spark.implicits._
-    Seq((ca, cb, s._1, s._2, s._3, s._4, s._5, s._6, s._7))
-      .toDF("a_groups_covered", "b_groups_covered", "a_est", "b_est",
-        "union_est", "jaccard", "inter_est", "a_only_est", "b_only_est")
-  }
-
-  /** The CMS-merge + candidate-pricing serve over a sidecar row frame
-    * (whole-sidecar and group-windowed serves share it). */
-  private def heavyHittersOfRows(rows: DataFrame, phi: Double)
-      : DataFrame = {
-    val cmsMerge = udaf(new CmsMerge, org.apache.spark.sql.Encoders.BINARY)
-    val merged = rows.agg(cmsMerge(col("cms")).as("cms"),
-      sum(col("n")).as("total"))
-    val cands = rows
-      .select(explode(col("topk")).as("kv"))
-      .select(col("kv.key").as("key")).distinct()
-    val estimate = udf((bytes: Array[Byte], key: String) =>
-      org.apache.spark.util.sketch.CountMinSketch.readFrom(bytes)
-        .estimateCount(key))
-    cands.crossJoin(broadcast(merged))
-      .select(col("key"), estimate(col("cms"), col("key")).as("est"),
-        col("total"))
-      .where(col("est") >= col("total") * phi)
-      .orderBy(col("est").desc, col("key"))
   }
 }

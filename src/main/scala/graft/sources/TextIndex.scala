@@ -109,11 +109,17 @@ object TextIndex {
     * crash window in which one moved and the other did not.
     */
   private def ledgerPath(cfg: Cfg) = s"${statsPath(cfg)}/.retract_ledger"
-  private def hasLedger(cfg: Cfg): Boolean = {
-    val d = new File(ledgerPath(cfg))
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-  }
+  private def hasLedger(cfg: Cfg): Boolean = ledgerFiles(cfg).nonEmpty
+  private def ledgerFiles(cfg: Cfg): Seq[String] =
+    Option(new File(ledgerPath(cfg)).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(_.getPath).sorted.toSeq
+
+  /** The ledger read by its part files: Spark ignores a dot-prefixed
+    * directory given as a read root (and logs "All paths were ignored"
+    * for it), while a file root is read as named. */
+  private def readLedger(spark: SparkSession, cfg: Cfg): DataFrame =
+    spark.read.parquet(ledgerFiles(cfg): _*)
 
   /** The served (n_docs, sum_len) truth — ONE row: the additive stats
     * rows MINUS the retraction ledger's compensations. Every stats
@@ -128,7 +134,7 @@ object TextIndex {
     if (!hasLedger(cfg))
       base.select(col("__sn").as("n_docs"), col("__ss").as("sum_len"))
     else base.crossJoin(
-        spark.read.parquet(ledgerPath(cfg))
+        readLedger(spark, cfg)
           .agg(count(lit(1)).as("__ln"),
             coalesce(sum("dl"), lit(0L)).as("__ls")))
       .select((col("__sn") - col("__ln")).as("n_docs"),
@@ -234,7 +240,7 @@ object TextIndex {
   private def foldReadmitted(spark: SparkSession, cfg: Cfg,
                              batchIds: DataFrame): Unit = {
     if (!hasLedger(cfg)) return
-    val ledger = spark.read.parquet(ledgerPath(cfg))
+    val ledger = readLedger(spark, cfg)
     val overlap = ledger.join(batchIds, Seq("doc_id"), "left_semi")
     if (overlap.isEmpty) return
     // kept rows are re-written under the staging dir — sever their
@@ -772,7 +778,7 @@ object TextIndex {
       // rows) are skipped by the measurement — their leaves still
       // rewrite below, which is exactly what a crash-rerun must heal
       () => newIdsV = (if (!hasLedger(cfg)) idsPlan
-        else idsPlan.join(spark.read.parquet(ledgerPath(cfg))
+        else idsPlan.join(readLedger(spark, cfg)
             .select("doc_id"), Seq("doc_id"), "left_anti"))
         .observe(obsN, count(lit(1)).as("__n"))
         .localCheckpoint(true),

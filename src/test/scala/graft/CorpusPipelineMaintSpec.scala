@@ -259,24 +259,26 @@ class CorpusPipelineMaintSpec extends AnyFunSuite with SparkFixture {
     val idx = dir.resolve("index").toString
     val cfg = SketchSidecar.Cfg(dir.resolve("sketch").toString,
       distinctExpr = "doc_id", valueExpr = "length(text)")
+    def threshold(): Option[Double] =
+      SketchSidecar.servedThreshold(spark, cfg.sidecarPath, 0.75)
+        .collect().headOption.map(_.getAs[Double]("threshold"))
     def text(i: Int, words: Int) =
       (1 to words).map(j => s"a${i}x$j").mkString(" ")
     def run(rows: Seq[(Long, String)]): Long = {
       // threshold read BEFORE the batch appends its own sketch row
-      val thr = SketchSidecar.servedThreshold(spark, cfg.sidecarPath, 0.75)
+      val thr = threshold()
       val gates = thr.toSeq.map(t =>
         "adaptive_len" -> (length(col("text")) >= t))
       CorpusPipeline.dedupAndAppend(rows.toDF("doc_id", "text"), corpus,
         idx, "doc_id", "text", 0.8, gates = gates, sketch = Some(cfg))
     }
     // bootstrap: no history, no adaptive gate — everything lands
-    assert(SketchSidecar.servedThreshold(spark, cfg.sidecarPath, 0.75)
-      .isEmpty)
+    assert(threshold().isEmpty)
     assert(run(Seq((1L, text(1, 10)), (2L, text(2, 30)))) === 2L)
     // the corpus's p75 length lands on the longer doc: a batch of
     // short docs is cut by the corpus's OWN distribution, not a
     // hand-frozen constant; a long doc passes
-    val thr = SketchSidecar.servedThreshold(spark, cfg.sidecarPath, 0.75)
+    val thr = threshold()
     assert(thr.nonEmpty && thr.get > text(1, 10).length &&
       thr.get <= text(2, 30).length, s"p75 threshold $thr")
     assert(run(Seq((3L, text(3, 10)), (4L, text(4, 35)))) === 1L)

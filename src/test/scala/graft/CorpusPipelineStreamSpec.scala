@@ -149,13 +149,15 @@ class CorpusPipelineStreamSpec extends AnyFunSuite with SparkFixture {
     val rows = spark.read.parquet(sk.get.sidecarPath)
     assert(rows.count() === 3L)
     assert(rows.columns.contains("kmv") && rows.columns.contains("grp"))
-    assert(SketchSidecar.servedDistinctByGroup(spark, sk.get.sidecarPath)
+    assert(SketchSidecar.servedDistinct(spark, sk.get.sidecarPath,
+        SketchSidecar.Scope.PerGroup)
       .select("grp", "distinct_estimate").as[(String, Long)]
       .collect().toMap === Map("sa" -> 1L, "sb" -> 2L))
     assert(SketchSidecar
-      .servedKmvDistinctByGroup(spark, sk.get.sidecarPath)
-      .as[(String, Double)].collect().toMap ===
-      Map("sa" -> 1.0, "sb" -> 2.0))
+      .servedKmvDistinct(spark, sk.get.sidecarPath,
+        SketchSidecar.Scope.PerGroup)
+      .select("grp", "distinct_estimate").as[(String, Double)]
+      .collect().toMap === Map("sa" -> 1.0, "sb" -> 2.0))
     // the provenance store was fed in its PARTITIONED layout by the
     // pipeline (the plumbed dupLabelsPartitions), and the point lookup
     // serves through it

@@ -345,7 +345,7 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
     // sidecar's answer exactly (the rows are the same deterministic
     // appends)
     def moments(p: String) = SketchSidecar
-      .servedMomentsAcrossGroups(spark, p, Seq("d1", "d3"))
+      .servedMoments(spark, p, SketchSidecar.Scope.Window(Seq("d1", "d3")))
       .select("vn", "vsum", "vmin", "vmax")
       .as[(Long, Double, Double, Double)].collect().head
     assert(moments(full.sidecarPath) === moments(clean.sidecarPath))

@@ -641,15 +641,12 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
       if patterns.exists(line.contains) && !line.contains("Window.partitionBy")
     } yield (f.getName, i + 1, line.trim)
     // the recluster's one staged rewrite of a plain IVF root (data and
-    // centroids swap in together), and Probe's rewrite_plan fixture (a
-    // two-level table for the leaf-pruning explain, not an index)
+    // centroids swap in together)
     val exceptions = hits.filter { case (f, _, l) =>
-      (f == "Similarity.scala" &&
-        l.contains(""".write.partitionBy("cell")""")) ||
-        (f == "Probe.scala" &&
-          l.contains("""partitionBy("table", "bucket").parquet(two)"""))
+      f == "Similarity.scala" &&
+        l.contains(""".write.partitionBy("cell")""")
     }
-    assert(exceptions.size === 2, exceptions)
+    assert(exceptions.size === 1, exceptions)
     assert(hits.diff(exceptions).isEmpty,
       "cell-partitioned index write outside CodecIndex: " +
         hits.diff(exceptions))

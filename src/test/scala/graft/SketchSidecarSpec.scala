@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SketchSidecar
+import graft.sources.SketchSidecar.Scope
 
 /** The heavy-hitters face of the sketch sidecar: per-batch CMS + exact
   * top-k candidates, merged serve, and the four guarantees (completeness,
@@ -172,8 +173,8 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("grouped sidecar: per-group distinct and quantiles track each " +
-      "group's own distribution; grouped row-merge keeps serving; " +
-      "wrong-compactor use fails loudly") {
+      "group's own distribution; the row-merge collapses each group (never " +
+      "the groups) to one row and keeps serving") {
     val cfg = SketchSidecar.Cfg(
       Files.createTempDirectory("sketch_grp").resolve("sc").toString,
       distinctExpr = "id", valueExpr = "v", groupKeyExpr = Some("g"),
@@ -187,11 +188,11 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
         .toDF("id", "g", "v")
     (0 until 3).foreach(b => SketchSidecar.appendBatch(batch(b), cfg))
     def dist() = SketchSidecar
-      .servedDistinctByGroup(spark, cfg.sidecarPath)
+      .servedDistinct(spark, cfg.sidecarPath, Scope.PerGroup)
       .select("grp", "distinct_estimate").as[(String, Long)]
       .collect().toMap
     def p50() = SketchSidecar
-      .servedQuantilesByGroup(spark, cfg.sidecarPath, Seq(0.5))
+      .servedQuantiles(spark, cfg.sidecarPath, Seq(0.5), Scope.PerGroup)
       .select("grp", "value").as[(String, Double)].collect().toMap
     val (d0, q0) = (dist(), p50())
     assert(d0("lo") === 300L && d0("hi") === 150L,
@@ -200,15 +201,14 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     // leak would pull "lo" toward 1000+
     assert(q0("lo") >= 0.0 && q0("lo") <= 100.0, s"lo p50 ${q0("lo")}")
     assert(q0("hi") >= 1000.0 && q0("hi") <= 2000.0, s"hi p50 ${q0("hi")}")
-    // ungrouped compactor must refuse; grouped row-merge collapses to
-    // one row per group and serves identically for HLL, within one
-    // re-bucketing of rank for quantiles
-    intercept[IllegalArgumentException] {
-      SketchSidecar.compactRows(spark, cfg)
-    }
-    SketchSidecar.compactRowsByGroup(spark, cfg)
+    // the row-merge of a grouped sidecar collapses each group to one
+    // row (never the groups into one) and serves identically for HLL,
+    // within one re-bucketing of rank for quantiles
+    SketchSidecar.compactRows(spark, cfg)
     val rows = spark.read.parquet(cfg.sidecarPath)
     assert(rows.count() === 2, "one merged row per group")
+    assert(rows.select("grp").as[String].collect().toSet ===
+      Set("lo", "hi"))
     assert(dist() === d0)
     val q1 = p50()
     assert(math.abs(q1("lo") - q0("lo")) <= 100.0 * 2.0 / 64 + 1e-6)
@@ -220,11 +220,106 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     // any-window union across selected groups: the union of lo+hi is
     // the whole corpus; a requested group with no rows reports reduced
     // coverage instead of silently reading as zero-distinct
-    val win = SketchSidecar.servedDistinctAcrossGroups(
-        spark, cfg.sidecarPath, Seq("lo", "hi", "absent"))
+    val win = SketchSidecar.servedDistinct(spark, cfg.sidecarPath,
+        Scope.Window(Seq("lo", "hi", "absent")))
       .collect().head
-    assert(win.getLong(0) === 2L, "only 2 of 3 requested groups exist")
-    assert(win.getLong(1) === 475L, "union = 300 lo + 175 hi distinct ids")
+    assert(win.getAs[Long]("groups_covered") === 2L,
+      "only 2 of 3 requested groups exist")
+    assert(win.getAs[Long]("distinct_estimate") === 475L,
+      "union = 300 lo + 175 hi distinct ids")
+  }
+
+  test("one merge per face: Window(all groups) serves Whole, PerGroup's " +
+      "row for g serves Window(g), and one compactRows merges a grouped " +
+      "and an ungrouped sidecar of the same batches to the same answers") {
+    def mkCfg(name: String, grouped: Boolean) = SketchSidecar.Cfg(
+      Files.createTempDirectory(s"sketch_scope_$name").resolve("sc")
+        .toString,
+      distinctExpr = "id", valueExpr = "v", numBuckets = 32,
+      heavyKeyExpr = Some("key"), kmvKeyExpr = Some("id"), kmvK = 64,
+      groupKeyExpr = if (grouped) Some("g") else None)
+    val grouped = mkCfg("grouped", grouped = true)
+    val flat = mkCfg("flat", grouped = false)
+    val groups = Seq("x", "y", "z")
+    // 3 batches x 3 groups; 10 keys (fewer than topK, so every slice's
+    // Misra-Gries summary is exact and both layouts hold the same
+    // candidates), integer values (exact double sums), 150 distinct ids
+    // (HLL's exact coupon regime, where its union is layout-free)
+    val batches = (0 until 3).map { b =>
+      (0 until 50).map { i =>
+        val id = b * 50L + i
+        (id, groups((i + b) % 3), s"k${(i * i + b) % 10}",
+          (id * 37) % 101 + (if (i % 3 == 0) 500L else 0L))
+      }
+    }
+    batches.foreach { rows =>
+      val df = rows.toDF("id", "g", "key", "v")
+      SketchSidecar.appendBatch(df, grouped)
+      SketchSidecar.appendBatch(df, flat)
+    }
+    val p = grouped.sidecarPath
+    val faces: Seq[(String, Scope => org.apache.spark.sql.DataFrame)] = Seq(
+      "distinct" -> (sc => SketchSidecar.servedDistinct(spark, p, sc)),
+      "quantiles" -> (sc =>
+        SketchSidecar.servedQuantiles(spark, p, Seq(0.1, 0.5, 0.9), sc)),
+      "threshold" -> (sc => SketchSidecar.servedThreshold(spark, p, 0.5, sc)),
+      "moments" -> (sc => SketchSidecar.servedMoments(spark, p, sc)),
+      "heavy hitters" -> (sc =>
+        SketchSidecar.servedHeavyHitters(spark, p, 1e-12, sc)),
+      "key skew" -> (sc => SketchSidecar.servedKeySkew(spark, p, sc)),
+      "kmv distinct" -> (sc => SketchSidecar.servedKmvDistinct(spark, p, sc)),
+      "overlap" -> (sc => SketchSidecar.servedOverlap(spark, p, p, sc)))
+    // the face columns, rows in a stable order
+    def faceRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.drop("grp", "groups_covered", "a_groups_covered",
+          "b_groups_covered")
+        .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    faces.foreach { case (face, serve) =>
+      val whole = faceRows(serve(Scope.Whole))
+      assert(whole.nonEmpty, s"$face serves nothing")
+      assert(faceRows(serve(Scope.Window(groups))) === whole,
+        s"$face: Window(all groups) must serve Whole")
+      val perGroup = serve(Scope.PerGroup)
+      groups.foreach { g =>
+        assert(faceRows(perGroup.where(col("grp") === g)) ===
+          faceRows(serve(Scope.Window(Seq(g)))),
+          s"$face: PerGroup's $g row must serve Window($g)")
+      }
+    }
+    // the one row-merge: per group on the grouped sidecar, to one row on
+    // the ungrouped copy — the exact faces serve bit-identically on both
+    def exactFaces(c: SketchSidecar.Cfg) = (
+      SketchSidecar.servedDistinct(spark, c.sidecarPath)
+        .select("distinct_estimate").as[Long].collect().head,
+      SketchSidecar.servedHeavyHitters(spark, c.sidecarPath, 1e-12)
+        .select("key", "est", "total").as[(String, Long, Long)]
+        .collect().toSeq,
+      SketchSidecar.servedKmvDistinct(spark, c.sidecarPath)
+        .select("distinct_estimate").as[Double].collect().head,
+      SketchSidecar.servedMoments(spark, c.sidecarPath)
+        .select("vn", "vsum", "vsum2", "vmin", "vmax")
+        .as[(Long, Double, Double, Double, Double)].collect().head)
+    val before = exactFaces(grouped)
+    assert(exactFaces(flat) === before)
+    Seq(grouped, flat).foreach(SketchSidecar.compactRows(spark, _))
+    assert(spark.read.parquet(grouped.sidecarPath).count() === 3,
+      "one merged row per group")
+    assert(spark.read.parquet(flat.sidecarPath).count() === 1)
+    assert(exactFaces(grouped) === before)
+    assert(exactFaces(flat) === before)
+    // quantiles: one re-bucketing generation adds at most 1/K of rank
+    val values = batches.flatten.map(_._4.toDouble).sorted
+    val n = values.length
+    val bound = 3.0 / grouped.numBuckets + 1.0 / grouped.accuracy + 1e-9
+    Seq(grouped, flat).foreach { c =>
+      SketchSidecar.servedQuantiles(spark, c.sidecarPath, Seq(0.1, 0.5, 0.9))
+        .as[(Double, Double)].collect().foreach { case (q, v) =>
+          val lt = values.count(_ < v); val le = values.count(_ <= v)
+          val err = math.max(0.0, math.max((lt + 1).toDouble / n - q,
+            q - le.toDouble / n)) - 1.0 / n
+          assert(err <= bound, s"p$q = $v rank excess $err")
+        }
+    }
   }
 
   test("single-scan contract: every configured face — base, CMS+MG " +
@@ -265,7 +360,7 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(cfg.sidecarPath).count() === 6,
       "one row per (batch, group)")
     def distByGrp() = SketchSidecar
-      .servedDistinctByGroup(spark, cfg.sidecarPath)
+      .servedDistinct(spark, cfg.sidecarPath, Scope.PerGroup)
       .select("grp", "distinct_estimate").as[(String, Long)]
       .collect().toMap
     def hot() = SketchSidecar
@@ -282,27 +377,28 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
       s"corpus KMV distinct $kd")
     // per-group serves from the same fused rows
     def hotByGrp() = SketchSidecar
-      .servedHeavyHittersByGroup(spark, cfg.sidecarPath, phi = 0.5)
+      .servedHeavyHitters(spark, cfg.sidecarPath, phi = 0.5, Scope.PerGroup)
       .select("grp", "key").as[(String, String)].collect().toSeq
     assert(hotByGrp() === Seq(("a", "hot")),
       "hot is 60% of group a; no group-b key reaches 50%")
-    val kByGrp = SketchSidecar
-      .servedKmvDistinctByGroup(spark, cfg.sidecarPath)
-      .as[(String, Double)].collect().toMap
+    def kmvByGrp() = SketchSidecar
+      .servedKmvDistinct(spark, cfg.sidecarPath, Scope.PerGroup)
+      .select("grp", "distinct_estimate").as[(String, Double)]
+      .collect().toMap
+    val kByGrp = kmvByGrp()
     val rse = 3.5 / math.sqrt(62.0)
     assert(kByGrp.keySet === Set("a", "b") &&
       kByGrp.values.forall(v => math.abs(v - 150.0) / 150.0 <= rse),
       s"per-group KMV distinct: $kByGrp")
     // grouped row-merge: every face survives per group
-    SketchSidecar.compactRowsByGroup(spark, cfg)
+    SketchSidecar.compactRows(spark, cfg)
     assert(spark.read.parquet(cfg.sidecarPath).count() === 2)
     assert(distByGrp() === Map("a" -> 150L, "b" -> 150L))
     assert(hot() === Seq("hot"))
     assert(kmvDist() === kd,
       "bottom-k union is associative — the merged rows serve identically")
     assert(hotByGrp() === Seq(("a", "hot")))
-    assert(SketchSidecar.servedKmvDistinctByGroup(spark, cfg.sidecarPath)
-      .as[(String, Double)].collect().toMap === kByGrp,
+    assert(kmvByGrp() === kByGrp,
       "per-group bottom-k serves identically off the merged rows")
   }
 
@@ -313,7 +409,7 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
       distinctExpr = "id", valueExpr = "v", groupKeyExpr = Some("g"),
       numBuckets = 64)
     assert(SketchSidecar
-      .servedThresholdsByGroup(spark, cfg.sidecarPath, 0.5)
+      .servedThreshold(spark, cfg.sidecarPath, 0.5, Scope.PerGroup)
       .isEmpty, "no sidecar yet -> empty frame, the bootstrap stance")
     // lo ~ 0..99, hi ~ 1000..1999 — a global bar would mis-gate one side
     def batch(b: Int) =
@@ -323,7 +419,7 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
         .toDF("id", "g", "v")
     (0 until 2).foreach(b => SketchSidecar.appendBatch(batch(b), cfg))
     val thr = SketchSidecar
-      .servedThresholdsByGroup(spark, cfg.sidecarPath, 0.5)
+      .servedThreshold(spark, cfg.sidecarPath, 0.5, Scope.PerGroup)
       .as[(String, Double)].collect().toMap
     assert(thr.keySet === Set("lo", "hi"))
     assert(thr("lo") >= 0.0 && thr("lo") <= 100.0, s"lo ${thr("lo")}")
@@ -334,8 +430,8 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
         (4L, "hi", 1100L), (5L, "new", 7L))
       .toDF("id", "g", "v")
     val kept = probe
-      .join(broadcast(SketchSidecar.servedThresholdsByGroup(
-        spark, cfg.sidecarPath, 0.5)
+      .join(broadcast(SketchSidecar.servedThreshold(
+        spark, cfg.sidecarPath, 0.5, Scope.PerGroup)
         .withColumnRenamed("grp", "g")), Seq("g"), "left")
       .where(col("v") >= coalesce(col("threshold"), lit(5.0)))
       .select("id").as[Long].collect().toSet
@@ -433,7 +529,8 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     val cfgB = mk("b", (201L to 500L).map((_, "x")) ++
       (2000L to 2049L).map((_, "z")))
     val rows = SketchSidecar
-      .servedOverlapByGroup(spark, cfgA.sidecarPath, cfgB.sidecarPath)
+      .servedOverlap(spark, cfgA.sidecarPath, cfgB.sidecarPath,
+        Scope.PerGroup)
       .collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
     assert(rows.keySet === Set("x", "y", "z"))
     assert(rows("x") === Seq(300.0, 300.0, 500.0, 0.2, 100.0, 200.0, 200.0))
@@ -444,21 +541,23 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     val withNull = mk("n", (900L to 905L).map((_, "x")) ++
       Seq((910L, null.asInstanceOf[String]), (911L, null.asInstanceOf[String])))
     val nullRows = SketchSidecar
-      .servedOverlapByGroup(spark, withNull.sidecarPath, cfgB.sidecarPath)
+      .servedOverlap(spark, withNull.sidecarPath, cfgB.sidecarPath,
+        Scope.PerGroup)
       .where(col("grp").isNull).collect()
     assert(nullRows.length === 1 && nullRows.head.getDouble(1) === 2.0,
       "the null group's own sketch must serve")
     assert(SketchSidecar
-      .servedKmvDistinctByGroup(spark, withNull.sidecarPath)
-      .where(col("grp").isNull).collect().head.getDouble(1) === 2.0)
+      .servedKmvDistinct(spark, withNull.sidecarPath, Scope.PerGroup)
+      .where(col("grp").isNull).select("distinct_estimate")
+      .collect().head.getDouble(0) === 2.0)
     // an ungrouped KMV sidecar cannot serve the grouped question
     val flat = SketchSidecar.Cfg(
       Files.createTempDirectory("gkmv_flat").resolve("sc").toString,
       distinctExpr = "id", valueExpr = "id", kmvKeyExpr = Some("id"))
     SketchSidecar.appendBatch((1L to 10L).map(Tuple1(_)).toDF("id"), flat)
     intercept[IllegalArgumentException] {
-      SketchSidecar.servedOverlapByGroup(spark, flat.sidecarPath,
-        cfgB.sidecarPath)
+      SketchSidecar.servedOverlap(spark, flat.sidecarPath,
+        cfgB.sidecarPath, Scope.PerGroup)
     }
     // a grouped sidecar without the KMV face cannot either
     val noKmv = SketchSidecar.Cfg(
@@ -467,8 +566,8 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     SketchSidecar.appendBatch(
       (1L to 10L).map((_, "x")).toDF("id", "g"), noKmv)
     intercept[IllegalArgumentException] {
-      SketchSidecar.servedOverlapByGroup(spark, noKmv.sidecarPath,
-        cfgB.sidecarPath)
+      SketchSidecar.servedOverlap(spark, noKmv.sidecarPath,
+        cfgB.sidecarPath, Scope.PerGroup)
     }
   }
 
@@ -568,8 +667,8 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
         rows("d4", Seq("a" -> 30, "b" -> 15))
       SketchSidecar.appendBatch(b.toDF("id", "day", "key"), cfg)
     }
-    val winServe = SketchSidecar.servedHeavyHittersAcrossGroups(
-      spark, cfg.sidecarPath, Seq("d1", "d2", "d9"), phi = 0.4)
+    val winServe = SketchSidecar.servedHeavyHitters(
+      spark, cfg.sidecarPath, phi = 0.4, Scope.Window(Seq("d1", "d2", "d9")))
     val windowKeys = winServe.select("key").as[String].collect().toSeq
     assert(windowKeys === Seq("burst"),
       s"only 'burst' holds 40% of the d1-d2 window: $windowKeys")
@@ -583,12 +682,14 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     // windowed KMV: d1-d2 hold exactly the ids inserted there (2 x 60
     // rows < k = 64 per slice... union 120 > k, estimator regime); vs
     // the exact window count the rse bound must hold
-    val kmvWin = SketchSidecar.servedKmvDistinctAcrossGroups(
-        spark, cfg.sidecarPath, Seq("d1", "d2", "d9"))
+    val kmvWin = SketchSidecar.servedKmvDistinct(
+        spark, cfg.sidecarPath, Scope.Window(Seq("d1", "d2", "d9")))
       .collect().head
-    assert(kmvWin.getLong(0) === 2, "d9 never had rows: covered = 2")
+    assert(kmvWin.getAs[Long]("groups_covered") === 2,
+      "d9 never had rows: covered = 2")
     val exactWin = 120.0
-    assert(math.abs(kmvWin.getDouble(1) - exactWin) / exactWin <=
+    assert(math.abs(kmvWin.getAs[Double]("distinct_estimate") - exactWin) /
+      exactWin <=
       3.5 / math.sqrt(62.0))
     // ungrouped sidecar: windowed serves must refuse loudly
     val flat = SketchSidecar.Cfg(
@@ -598,12 +699,12 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     SketchSidecar.appendBatch(
       Seq((1L, "x")).toDF("id", "key"), flat)
     intercept[IllegalArgumentException] {
-      SketchSidecar.servedHeavyHittersAcrossGroups(
-        spark, flat.sidecarPath, Seq("d1"), 0.1).collect()
+      SketchSidecar.servedHeavyHitters(
+        spark, flat.sidecarPath, 0.1, Scope.Window(Seq("d1"))).collect()
     }
     intercept[IllegalArgumentException] {
-      SketchSidecar.servedKmvDistinctAcrossGroups(
-        spark, flat.sidecarPath, Seq("d1"))
+      SketchSidecar.servedKmvDistinct(
+        spark, flat.sidecarPath, Scope.Window(Seq("d1")))
     }
   }
 
@@ -818,7 +919,8 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
             null.asInstanceOf[String]) })
           .toDF("id", "g", "key"), gcfg)
     }
-    val byGrp = SketchSidecar.servedKeySkewByGroup(spark, gcfg.sidecarPath)
+    val byGrp = SketchSidecar.servedKeySkew(spark, gcfg.sidecarPath,
+        Scope.PerGroup)
       .collect().map(x => x.getString(0) -> x).toMap
     assert(byGrp.keySet === Set("skewed", "uniform"),
       "the all-null-key group must be omitted")
@@ -881,12 +983,13 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     }
     check(SketchSidecar.servedMoments(spark, cfg.sidecarPath), all)
     Seq("a", "b").foreach { g =>
-      check(SketchSidecar.servedMomentsByGroup(spark, cfg.sidecarPath)
+      check(SketchSidecar.servedMoments(spark, cfg.sidecarPath,
+          Scope.PerGroup)
           .where(col("grp") === g),
         all.where(col("g") === g))
     }
-    val winMoments = SketchSidecar.servedMomentsAcrossGroups(
-      spark, cfg.sidecarPath, Seq("b", "zzz"))
+    val winMoments = SketchSidecar.servedMoments(
+      spark, cfg.sidecarPath, Scope.Window(Seq("b", "zzz")))
     check(winMoments, all.where(col("g") === "b"))
     assert(winMoments.select("groups_covered").collect().head.getLong(0)
       === 1L, "'zzz' never had rows: covered = 1, reported not invented")
@@ -906,7 +1009,7 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
     // row-merge: the merged row's moments are bit-identical
     val before = servedTuple(
       SketchSidecar.servedMoments(spark, cfg.sidecarPath))
-    SketchSidecar.compactRowsByGroup(spark, cfg)
+    SketchSidecar.compactRows(spark, cfg)
     assert(spark.read.parquet(cfg.sidecarPath).count() === 2)
     assert(servedTuple(SketchSidecar.servedMoments(spark, cfg.sidecarPath))
       === before, "row-merge must preserve moments bit-for-bit")

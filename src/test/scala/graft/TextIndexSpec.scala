@@ -388,6 +388,62 @@ class TextIndexSpec extends AnyFunSuite with SparkFixture {
     assert(statsRow(cfg) === statsRow(fresh))
   }
 
+  test("the retraction ledger is read by its part files: a retract, a " +
+      "BM25 serve, a replayed retract and a re-admission log no " +
+      "'All paths were ignored' for the dot-prefixed ledger root") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    val ignored = new java.util.concurrent.atomic.AtomicInteger(0)
+    val probe = new AbstractAppender("ledger-read-probe", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage
+            .contains("All paths were ignored")) ignored.incrementAndGet()
+    }
+    probe.start()
+    // a read rooted at a dot-prefixed directory: the warning counted
+    def hiddenRootRead(): Unit = {
+      val d = Files.createTempDirectory("ledger_probe").resolve(".h").toString
+      Seq(1L).toDF("x").write.parquet(d)
+      assert(spark.read.parquet(d).count() === 1L)
+    }
+    // Spark swaps in its default logging configuration on first use,
+    // which would drop a probe attached earlier
+    hiddenRootRead()
+    // the DataSource logger at WARN with the probe attached, whatever
+    // level the session's logging configuration gives the root
+    val name = "org.apache.spark.sql.execution.datasources.DataSource"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val lc = new LoggerConfig(name, Level.WARN, true)
+    lc.addAppender(probe, null, null)
+    ctx.getConfiguration.addLogger(name, lc)
+    ctx.updateLoggers()
+    try {
+      hiddenRootRead()
+      assert(ignored.getAndSet(0) === 1, "the probe must see the warning")
+      val docs = corpus(40)
+      val cfg = newCfg(parts = 4)
+      TextIndex.writeIndex(docs, "doc_id", "text", cfg)
+      val gone = docs.where(col("doc_id").isin(5L, 10L))
+      assert(TextIndex.retract(spark, cfg, gone, "doc_id", "text")._1 === 2L)
+      assert(TextIndex.bm25TopK(spark, cfg, "doc_id", Seq("hash", "join"),
+        10).count() > 0)
+      assert(TextIndex.retract(spark, cfg, gone, "doc_id", "text")
+        === ((0L, 0L)), "the replay is skipped via the ledger")
+      TextIndex.appendBatch(gone, "doc_id", "text", cfg)
+      assert(TextIndex.stats(spark, cfg).as[(Long, Long, Double, Long, Long)]
+        .collect().head._1 === 40L)
+      assert(ignored.get() === 0,
+        "a ledger read went through the ignored hidden root")
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      probe.stop()
+    }
+  }
+
   test("forward-store snippet fetch: snippetTopKStored equals " +
       "snippetTopK row-for-row, the text read prunes to the winners' " +
       "kb buckets (PartitionFilters), and the store's own retraction " +

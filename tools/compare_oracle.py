@@ -11,6 +11,7 @@ published contract in the builder prompt; exact driver internals may differ,
 but any mismatch here is a real parity bug worth fixing.
 """
 import sys, json, duckdb, glob, os
+from canon import canon
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -46,13 +47,6 @@ def main(sf_dir, out_dir):
         if s_cols != o_cols:
             statuses[name] = f"SCHEMA_MISMATCH spark={s_cols} oracle={o_cols}"
             continue
-        def canon(rel, cols):
-            idx = {c: i for i, c in enumerate(rel.columns)}
-            rows = rel.fetchall()
-            out = []
-            for r in rows:
-                out.append(tuple(repr(r[idx[c]]) for c in cols))
-            return sorted(out)
         try:
             s_rows = canon(spark_rel, s_cols)
             o_rows = canon(oracle_rel, o_cols)
