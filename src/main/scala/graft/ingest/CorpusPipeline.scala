@@ -127,8 +127,10 @@ object CorpusPipeline {
   /** Rows the frozen sidecars were trained on (−1 = no index yet). */
   private def annTrainedRows(spark: SparkSession, annPath: String): Long =
     if (!pathExists(spark, s"$annPath/trained_meta")) -1L
-    else spark.read.parquet(s"$annPath/trained_meta")
-      .collect().head.getLong(0)
+    else graft.sources.SidecarCache.memo(spark, s"$annPath/trained_meta",
+      "trained_rows") {
+      spark.read.parquet(s"$annPath/trained_meta").collect().head.getLong(0)
+    }
 
   /** Per-batch SQ8 maintenance: the corpus embeddings also keep an int8
     * scalar-quantized [[graft.operators.FlatIndex]] under the
@@ -698,7 +700,7 @@ object CorpusPipeline {
         sketch.foreach { cfg =>
           graft.sources.SketchSidecar.appendBatch(survivors, cfg)
           maybeCompact(cfg.sidecarPath, cfg.compactEvery) {
-            graft.sources.Compaction.compact(spark, cfg.sidecarPath)
+            graft.sources.SketchSidecar.compactFiles(spark, cfg)
           }
           // row-merge on its own (coarser) cadence — the serve re-merges
           // every row per question, so row count IS the serve cost; the

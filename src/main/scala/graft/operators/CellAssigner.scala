@@ -97,8 +97,13 @@ object CellAssigner {
               sampleFraction: Double): Cells = Planes(nBits, tables)
 
     def read(spark: SparkSession, path: String): Cells = {
-      val meta = spark.read.parquet(s"$path/meta").collect().head
-      Planes(meta.getInt(0), meta.getInt(1))
+      // the memo holds the two ints: Planes probes with THIS hammingProbe
+      val (bits, n) =
+        graft.sources.SidecarCache.memo(spark, s"$path/meta", "planes") {
+          val meta = spark.read.parquet(s"$path/meta").collect().head
+          (meta.getInt(0), meta.getInt(1))
+        }
+      Planes(bits, n)
     }
 
     private case class Planes(bits: Int, n: Int) extends Cells {

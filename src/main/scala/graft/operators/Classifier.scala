@@ -181,8 +181,8 @@ object Classifier {
   def scoreAgainstModel(df: DataFrame, idCol: String, textCol: String,
                         path: String): DataFrame = {
     val spark = df.sparkSession
-    val buckets =
-      spark.read.parquet(s"$path/meta").collect().head.getInt(0)
+    val buckets = graft.sources.SidecarCache.memo(spark, s"$path/meta",
+      "classifier")(spark.read.parquet(s"$path/meta").collect().head.getInt(0))
     scoreLogReg(df, idCol, textCol,
       spark.read.parquet(s"$path/weights"), buckets)
   }

@@ -484,6 +484,16 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
+  /** The index's pinned (num_hashes, bands, shingle_k) from its meta
+    * sidecar, read once per commit of the sidecar
+    * ([[graft.sources.SidecarCache]]). */
+  private[graft] def minhashMeta(spark: org.apache.spark.sql.SparkSession,
+                                 path: String): (Int, Int, Int) =
+    graft.sources.SidecarCache.memo(spark, s"$path/meta", "minhash") {
+      val meta = spark.read.parquet(s"$path/meta").collect().head
+      (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    }
+
   /** Append `df`'s index rows to an existing index (parameters read from
     * the sidecar, so appended rows are always comparable to stored ones).
     * The AQE rebalance lands a batch smaller than one target file as ONE
@@ -491,9 +501,8 @@ object Dedup {
     */
   def appendMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                          path: String): Unit = {
-    val meta = df.sparkSession.read.parquet(s"$path/meta").collect().head
-    minhashIndexRows(df, idCol, textCol,
-        meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    val (numHashes, bands, shingleK) = minhashMeta(df.sparkSession, path)
+    minhashIndexRows(df, idCol, textCol, numHashes, bands, shingleK)
       .hint("rebalance")
       .write.mode("append").parquet(s"$path/data")
   }
@@ -531,8 +540,7 @@ object Dedup {
   def pairsFromMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                             path: String, ids: DataFrame, idCol: String,
                             threshold: Double): DataFrame = {
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val numHashes = meta.getInt(0)
+    val numHashes = minhashMeta(spark, path)._1
     val keys = ids.select(col(idCol).cast("long").as("__pid")).distinct()
     val rows = spark.read.parquet(s"$path/data")
       .join(broadcast(keys), col("corpus_id") === col("__pid"),
@@ -572,9 +580,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     import graft.functions.HashedShingles.hashedShingles
     import graft.functions.MinhashSig.minhashSig
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val (numHashes, bands, shingleK) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    val (numHashes, bands, shingleK) = minhashMeta(spark, path)
     val rows = numHashes / bands
     val sigs = newDocs.select(col(idCol).cast("long").as("new_id"),
         minhashSig(hashedShingles(col(textCol), shingleK), numHashes)

@@ -87,13 +87,14 @@ object Pq {
     def train(corpus: DataFrame, idCol: String, vecCol: String): Codebooks =
       Pq.train(corpus, idCol, vecCol, m, k, iters)
 
-    def read(spark: SparkSession, path: String): Codebooks = {
-      val rows = spark.read.parquet(s"$path/codebooks")
-        .orderBy("subspace").collect()
-        .map(r => r.getSeq[scala.collection.Seq[Double]](1)
-          .map(_.toSeq).toSeq).toSeq
-      Codebooks(rows.size, rows.head.size, rows.head.head.size, rows)
-    }
+    def read(spark: SparkSession, path: String): Codebooks =
+      graft.sources.SidecarCache.memo(spark, s"$path/codebooks", "pq") {
+        val rows = spark.read.parquet(s"$path/codebooks").collect()
+          .sortBy(_.getInt(0))
+          .map(r => r.getSeq[scala.collection.Seq[Double]](1)
+            .map(_.toSeq).toSeq).toSeq
+        Codebooks(rows.size, rows.head.size, rows.head.head.size, rows)
+      }
 
     def ascending = false
     def defaultOversample = 4

@@ -630,7 +630,7 @@ object Retraction {
               s"[$exLo, $exHi] would overflow the cross-engine hash")
           // manifest from the STAGED files (what will actually serve),
           // riding the same atomic swap so data + receipt install together
-          spark.read.parquet(staging.toString)
+          graft.sources.Compaction.readParquet(spark, Seq(staging.toString))
             .groupBy("shard")
             .agg(count(lit(1)).as("n_docs"),
               sum("n_tokens").as("n_tokens"),
@@ -640,7 +640,7 @@ object Retraction {
         .parquet(new java.io.File(staging, "_manifest").toString)
       true
     }
-    spark.read.parquet(s"$outPath/_manifest")
+    graft.sources.Compaction.readParquet(spark, Seq(s"$outPath/_manifest"))
   }
 
   /** INCREMENTAL training-shard export — the daily delta ship, the
@@ -712,8 +712,8 @@ object Retraction {
     val delta =
       if (epochs.isEmpty) served
       else served.join(
-        spark.read.parquet(
-          epochs.map(e => s"$outRoot/epoch=$e/_ids").toIndexedSeq: _*)
+        graft.sources.Compaction.readParquet(spark,
+          epochs.map(e => s"$outRoot/epoch=$e/_ids").toIndexedSeq)
           .select(a.idCol),
         Seq(a.idCol), "left_anti")
     val assigned = Packing.packByBudget(
@@ -744,7 +744,8 @@ object Retraction {
         require(lo >= 0 && hi < (1L << 31),
           s"exportTrainingShardsIncremental needs ids in [0, 2^31): " +
             s"[$lo, $hi] would overflow the cross-engine hash")
-        val staged = spark.read.parquet(staging.toString)
+        val staged =
+          graft.sources.Compaction.readParquet(spark, Seq(staging.toString))
         staged.select(a.idCol).coalesce(1).write
           .parquet(new java.io.File(staging, "_ids").toString)
         java.nio.file.Files.writeString(
@@ -759,7 +760,8 @@ object Retraction {
         true
       }
     }
-    if (shipped) spark.read.parquet(s"$epochDir/_manifest")
+    if (shipped)
+      graft.sources.Compaction.readParquet(spark, Seq(s"$epochDir/_manifest"))
     else spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       manifestSchema.add("epoch", org.apache.spark.sql.types.IntegerType))
@@ -882,7 +884,8 @@ object Retraction {
       val worklist: Seq[(Int, Long, Seq[Int])] =
         if (ledgered.isEmpty) Nil
         else ledgered.map { case (epochDir, nShards, ledgerDir) =>
-            spark.read.parquet(ledgerDir.toString)
+            graft.sources.Compaction.readParquet(spark,
+                Seq(ledgerDir.toString))
               .select(col(idCol).cast("long").as("__lid"),
                 lit(epochDir.getName.stripPrefix("epoch=").toInt)
                   .as("__epoch"),
@@ -942,7 +945,8 @@ object Retraction {
             // as rewritten (disk truth — a crashed prior pass converges
             // here too), untouched rows carried verbatim
             val manifestDir = new java.io.File(epochDir, "_manifest")
-            val untouched = spark.read.parquet(manifestDir.toString)
+            val untouched = graft.sources.Compaction.readParquet(spark,
+              Seq(manifestDir.toString))
               .where(!col("shard").isin(touched: _*))
             val recomputed = touched
               .map(sv => new java.io.File(epochDir, s"shard=$sv"))
@@ -1106,11 +1110,10 @@ object Retraction {
             // enters the index — re-derive under the index's OWN pinned
             // parameters from its meta sidecar
             eligible = Some { m =>
-              val meta = spark.read.parquet(s"$p/meta")
-                .select("num_hashes", "shingle_k").collect().head
+              val (numHashes, _, shingleK) = Dedup.minhashMeta(spark, p)
               eligibleOnly(m, graft.functions.MinhashSig.minhashSig(
                 graft.functions.HashedShingles.hashedShingles(
-                  col("__etext"), meta.getInt(1)), meta.getInt(0))
+                  col("__etext"), shingleK), numHashes)
                 .isNotNull)
             })
       }
@@ -1192,7 +1195,7 @@ object Retraction {
     val r = applyTombstones(spark, a)
     sketch.foreach { cfg =>
       if (exists(cfg.sidecarPath)) {
-        graft.sources.Compaction.compact(spark, cfg.sidecarPath)
+        graft.sources.SketchSidecar.compactFiles(spark, cfg)
         graft.sources.SketchSidecar.compactRows(spark, cfg)
       }
     }

@@ -435,14 +435,17 @@ object Similarity {
   }
 
   /** The centroid sidecar read back (nlist rows — bounded driver state,
-    * shared by every serve/append path of the IVF family).
+    * shared by every serve/append path of the IVF family), once per
+    * commit of the sidecar ([[graft.sources.SidecarCache]]).
     */
   private[operators] def readCentroids(spark: SparkSession,
                             path: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(s"$path/centroids")
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .toSeq
+    graft.sources.SidecarCache.memo(spark, s"$path/centroids", "centroids") {
+      spark.read.parquet(s"$path/centroids")
+        .collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1)))
+        .toSeq
+    }
 
   /** `nlist` = the sidecar's exact row count, read DRIVER-SIDE from the
     * parquet footers (the same metadata a scan planner reads) — the two

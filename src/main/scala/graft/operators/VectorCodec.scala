@@ -78,6 +78,14 @@ object VectorCodec {
       .orderBy("__dim")
       .collect()
 
+  /** The per-dimension params sidecar's rows in `dim` order, read once
+    * per commit of the sidecar ([[graft.sources.SidecarCache]]). */
+  private def readParams(spark: SparkSession, path: String,
+                         codec: String): Array[org.apache.spark.sql.Row] =
+    graft.sources.SidecarCache.memo(spark, s"$path/params", codec) {
+      spark.read.parquet(s"$path/params").collect().sortBy(_.getInt(0))
+    }
+
   /** Scalar (int8) quantization: each dimension is affinely mapped to one
     * signed byte by the per-dimension (min, max) trained on the corpus.
     * Out-of-range values of frozen-params appends clamp to the byte domain
@@ -123,7 +131,7 @@ object VectorCodec {
     }
 
     def read(spark: SparkSession, path: String): Ranges = {
-      val rows = spark.read.parquet(s"$path/params").orderBy("dim").collect()
+      val rows = readParams(spark, path, "sq8")
       Ranges(rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
     }
 
@@ -188,8 +196,7 @@ object VectorCodec {
       Thresholds(perDim(corpus, vecCol, avg("__x")).map(_.getDouble(1)))
 
     def read(spark: SparkSession, path: String): Thresholds =
-      Thresholds(spark.read.parquet(s"$path/params").orderBy("dim").collect()
-        .map(_.getDouble(1)))
+      Thresholds(readParams(spark, path, "bq").map(_.getDouble(1)))
 
     val ascending = true
     val defaultOversample = 16

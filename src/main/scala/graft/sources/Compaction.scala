@@ -23,6 +23,37 @@ object Compaction {
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
 
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || name.startsWith("_")
+
+  /** The parquet part files a scan of `dir` reads: recursive, hidden
+    * (`.`/`_`-prefixed) files and subdirectories skipped. */
+  private[graft] def partFiles(dir: File): Seq[File] =
+    Option(dir.listFiles()).getOrElse(Array.empty).toSeq
+      .filterNot(f => hidden(f.getName)).sortBy(_.getName)
+      .flatMap(f =>
+        if (f.isDirectory) partFiles(f)
+        else if (f.getName.endsWith(".parquet")) Seq(f)
+        else Nil)
+
+  /** Read parquet directories whatever their own names. Spark ignores a
+    * read root whose name is hidden (`.x` staging, `_x` receipts and
+    * ledgers), logs "All paths were ignored" for it and reads it anyway
+    * only through a listing detail; a hidden directory is therefore read
+    * by its part files ([[partFiles]]; `basePath` keeps a partitioned
+    * layout's partition columns), while a file root is read as named.
+    * Visible directories are read as plain roots.
+    */
+  def readParquet(spark: SparkSession, dirs: Seq[String],
+                  options: Map[String, String] = Map.empty)
+      : org.apache.spark.sql.DataFrame = {
+    val reader = spark.read.options(options)
+    if (!dirs.exists(d => hidden(new File(d).getName))) reader.parquet(dirs: _*)
+    else
+      (if (dirs.size == 1) reader.option("basePath", dirs.head) else reader)
+        .parquet(dirs.flatMap(d => partFiles(new File(d))).map(_.getPath): _*)
+  }
+
   /** Staging sibling for a rewrite of `dir`, named `.<name>__<suffix>`.
     * The dot prefix is load-bearing: staging/retired directories for a
     * PARTITION LEAF (`data/cell=3`) live inside the partitioned table
@@ -38,20 +69,26 @@ object Compaction {
   private[graft] def stagingDir(dir: File, suffix: String): File =
     new File(dir.getParentFile, "." + dir.getName + "__" + suffix)
 
-  /** Compact `path` to roughly `targetBytes`-sized files.
+  /** Compact `path` to roughly `targetBytes`-sized files. A table
+    * already at or below that file count is left as it is: no staging,
+    * no Spark job, the same files. `readOptions` flow into the scan of
+    * the table being rewritten, as in [[retractRows]] (a table spanning
+    * schema generations must pass `mergeSchema=true`).
     * Returns (files before, files after).
     */
   def compact(spark: SparkSession, path: String,
-              targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+              targetBytes: Long = 128L * 1024 * 1024,
+              readOptions: Map[String, String] = Map.empty): (Int, Int) = {
     require(targetBytes > 0)
     val dir = new File(path)
     restoreRetired(dir)
     val before = parquetFiles(dir)
-    if (before.isEmpty) return (0, 0)
     val totalBytes = before.map(_.length()).sum
     val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
+    if (before.length <= n) return (before.length, before.length)
     replace(path, "compacting") { staging =>
-      spark.read.parquet(path).coalesce(n).write.parquet(staging.toString)
+      readParquet(spark, Seq(path), readOptions).coalesce(n)
+        .write.parquet(staging.toString)
       true
     }
     (before.length, parquetFiles(dir).length)
@@ -192,7 +229,7 @@ object Compaction {
     restoreRetired(dir)
     if (!dir.exists()) return
     replace(path, "retract") { staging =>
-      val table = spark.read.options(readOptions).parquet(path)
+      val table = readParquet(spark, Seq(path), readOptions)
       table.join(org.apache.spark.sql.functions.broadcast(keys),
           cond(table, keys), "left_anti")
         .write.parquet(staging.toString)

@@ -318,7 +318,18 @@ object SketchSidecar {
     * convention for mixed legacy layouts).
     */
   private def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
+    spark.read.options(ReadOptions).parquet(path)
+
+  private val ReadOptions = Map("mergeSchema" -> "true")
+
+  /** File-level small-files compaction of the sidecar (the `compactEvery`
+    * pass), its rewrite read with the same `mergeSchema` as every other
+    * sidecar read: a plain read could take its schema from an older
+    * generation's footer and rewrite every row without the newer faces'
+    * columns.
+    */
+  def compactFiles(spark: SparkSession, cfg: Cfg): Unit =
+    Compaction.compact(spark, cfg.sidecarPath, readOptions = ReadOptions)
 
   private def exists(spark: SparkSession, path: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(path)
@@ -670,8 +681,7 @@ object SketchSidecar {
     // added over time) — the anti-join rewrite must see every
     // generation's columns or kept epochs lose their newer sketch state
     Compaction.retractRows(spark, sidecarPath, groups.toDF("__rg"),
-      (t, k) => t("grp") === k("__rg"),
-      readOptions = Map("mergeSchema" -> "true"))
+      (t, k) => t("grp") === k("__rg"), readOptions = ReadOptions)
   }
 
   /** Row-merge compaction: collapse the batch rows into ONE merged row

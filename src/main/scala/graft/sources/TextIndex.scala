@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.File
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted term-partitioned inverted index — BM25 retrieval WITHOUT a
@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   *    filter, so the scan lists/reads only |Q| of the P term partitions
   *    (spec-asserted on the plan). Document frequency, the per-term
   *    posting count, comes from those same pruned rows; N and avgdl come
-  *    from the `stats` sidecar (O(#appends) rows). Nothing re-visits the
-  *    corpus.
+  *    from the `stats` sidecar (O(#appends) rows), read once per commit
+  *    of it and served as literals ([[SidecarCache]]). Nothing re-visits
+  *    the corpus.
   *  - '''Doc length is DENORMALIZED into the posting''' (`dl`, the doc's
   *    total token count). BM25's length norm needs it per candidate doc;
   *    a separate doc→length table would force a corpus-sized join onto
@@ -109,36 +110,46 @@ object TextIndex {
     * crash window in which one moved and the other did not.
     */
   private def ledgerPath(cfg: Cfg) = s"${statsPath(cfg)}/.retract_ledger"
-  private def hasLedger(cfg: Cfg): Boolean = ledgerFiles(cfg).nonEmpty
-  private def ledgerFiles(cfg: Cfg): Seq[String] =
-    Option(new File(ledgerPath(cfg)).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.getPath).sorted.toSeq
+  private def hasLedger(cfg: Cfg): Boolean =
+    Compaction.partFiles(new File(ledgerPath(cfg))).nonEmpty
 
-  /** The ledger read by its part files: Spark ignores a dot-prefixed
-    * directory given as a read root (and logs "All paths were ignored"
-    * for it), while a file root is read as named. */
+  /** The ledger read by its part files ([[Compaction.readParquet]]: Spark
+    * ignores a dot-prefixed read root). */
   private def readLedger(spark: SparkSession, cfg: Cfg): DataFrame =
-    spark.read.parquet(ledgerFiles(cfg): _*)
+    Compaction.readParquet(spark, Seq(ledgerPath(cfg)))
 
-  /** The served (n_docs, sum_len) truth — ONE row: the additive stats
-    * rows MINUS the retraction ledger's compensations. Every stats
-    * consumer (BM25's N/avgdl, [[stats]]) reads through this, so the
-    * ledger commit is the single instant a retraction's compensation
-    * becomes visible.
+  /** The served (n_docs, sum_len) truth: the additive stats rows MINUS
+    * the retraction ledger's compensations. Every stats consumer (BM25's
+    * N/avgdl, [[stats]], [[compact]]) reads through this, so the ledger
+    * commit is the single instant a retraction's compensation becomes
+    * visible. Two scalars, derived once per commit of `stats/`
+    * ([[SidecarCache]]; the ledger lives inside it, so one listing stamp
+    * covers both).
     */
-  private def mergedStats(spark: SparkSession, cfg: Cfg): DataFrame = {
-    val base = spark.read.parquet(statsPath(cfg))
-      .agg(coalesce(sum("n_docs"), lit(0L)).as("__sn"),
-        coalesce(sum("sum_len"), lit(0L)).as("__ss"))
-    if (!hasLedger(cfg))
-      base.select(col("__sn").as("n_docs"), col("__ss").as("sum_len"))
-    else base.crossJoin(
-        readLedger(spark, cfg)
-          .agg(count(lit(1)).as("__ln"),
-            coalesce(sum("dl"), lit(0L)).as("__ls")))
-      .select((col("__sn") - col("__ln")).as("n_docs"),
-        (col("__ss") - col("__ls")).as("sum_len"))
+  private def servedStats(spark: SparkSession, cfg: Cfg): (Long, Long) =
+    SidecarCache.memo(spark, statsPath(cfg), "bm25") {
+      val base = spark.read.parquet(statsPath(cfg))
+        .agg(coalesce(sum("n_docs"), lit(0L)).as("__sn"),
+          coalesce(sum("sum_len"), lit(0L)).as("__ss"))
+      val merged =
+        if (!hasLedger(cfg)) base
+        else base.crossJoin(
+            readLedger(spark, cfg)
+              .agg(count(lit(1)).as("__ln"),
+                coalesce(sum("dl"), lit(0L)).as("__ls")))
+          .select(col("__sn") - col("__ln"), col("__ss") - col("__ls"))
+      val r = merged.collect().head
+      (r.getLong(0), r.getLong(1))
+    }
+
+  /** BM25's N and avgdl as literals of [[servedStats]]: avgdl =
+    * sum_len / n_docs, the same exact-long-sums double division the scan
+    * path's avg() computes (null for an index whose docs were all
+    * retracted — it serves no postings). */
+  private def bm25Stats(spark: SparkSession, cfg: Cfg): (Column, Column) = {
+    val (n, sumLen) = servedStats(spark, cfg)
+    (lit(n), if (n == 0L) lit(null).cast("double")
+      else lit(sumLen).cast("double") / lit(n))
   }
 
   /** The one tokenizer of the text family (Keywords/TextAnalysis):
@@ -301,14 +312,14 @@ object TextIndex {
     java.nio.file.Files.readString(pinned.toPath).trim.toInt
   }
 
-  /** The pruned postings for `terms` plus the two serving sidecar frames
-    * every BM25 face shares: per-term document frequency (a count of the
-    * pruned postings — df is a global per-term fact, independent of
-    * which queries ask) and the 1-row (N, avgdl) stats merge.
+  /** The pruned postings for `terms` plus the per-term document
+    * frequency every BM25 face shares (a count of the pruned postings —
+    * df is a global per-term fact, independent of which queries ask);
+    * the faces take N and avgdl from [[bm25Stats]].
     */
   private def servingFrames(spark: SparkSession, cfg: Cfg,
                             terms: Seq[String])
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     val tps = termPartitions(terms, pinnedPartitionCount(cfg))
     // tp is the partition column: this filter prunes statically, the
     // term filter lands on the surviving files' dictionary pages.
@@ -324,12 +335,7 @@ object TextIndex {
         .where(col("tp").isin(tps: _*) && col("term").isin(terms: _*)),
       cfg.indexPath, col("doc_id"))
     val dfreq = postings.groupBy("term").agg(count(lit(1)).as("__bm_df"))
-    val stats = mergedStats(spark, cfg)
-      // avgdl = sum_len / n_docs: the same exact-long-sums division the
-      // scan path's avg() computes
-      .select(col("n_docs").as("__bm_n"),
-        (col("sum_len").cast("double") / col("n_docs")).as("__bm_avgdl"))
-    (postings, dfreq, stats)
+    (postings, dfreq)
   }
 
   def bm25TopK(spark: SparkSession, cfg: Cfg, idCol: String,
@@ -339,12 +345,12 @@ object TextIndex {
     require(idCol != "bm25",
       s"idCol '$idCol' collides with the reserved output column bm25")
     val terms = query.map(_.toLowerCase).distinct
-    val (postings, dfreq, stats) = servingFrames(spark, cfg, terms)
+    val (postings, dfreq) = servingFrames(spark, cfg, terms)
+    val (n, avgdl) = bm25Stats(spark, cfg)
     postings.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
       .select(col("doc_id").as(idCol),
         graft.operators.Keywords.bm25ScoreCol(col("tf"), col("__bm_df"),
-          col("__bm_n"), col("dl"), col("__bm_avgdl"), k1, b)
+          n, col("dl"), avgdl, k1, b)
           .as("__bm_score"))
       .groupBy(col(idCol))
       .agg(sum(round(col("__bm_score"), 6).cast("decimal(18,6)"))
@@ -368,12 +374,12 @@ object TextIndex {
     require(idCol != "bm25",
       s"idCol '$idCol' collides with the reserved output column bm25")
     val terms = query.map(_.toLowerCase).distinct
-    val (postings, dfreq, stats) = servingFrames(spark, cfg, terms)
+    val (postings, dfreq) = servingFrames(spark, cfg, terms)
+    val (n, avgdl) = bm25Stats(spark, cfg)
     postings.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
       .select(col("doc_id").as(idCol),
         graft.operators.Keywords.bm25ScoreCol(col("tf"), col("__bm_df"),
-          col("__bm_n"), col("dl"), col("__bm_avgdl"), k1, b)
+          n, col("dl"), avgdl, k1, b)
           .as("__bm_score"))
       .groupBy(col(idCol))
       .agg(sum(round(col("__bm_score"), 6).cast("decimal(18,6)"))
@@ -419,12 +425,12 @@ object TextIndex {
     require(posFile(cfg).exists(),
       s"text index at ${cfg.indexPath} stores no positions — phrase " +
         "retrieval needs an index created with Cfg(positional = true)")
-    val (postings, dfreq, stats) = servingFrames(spark, cfg, terms)
+    val (postings, dfreq) = servingFrames(spark, cfg, terms)
+    val (n, avgdl) = bm25Stats(spark, cfg)
     postings.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"), col("term"), col("positions"),
         graft.operators.Keywords.bm25ScoreCol(col("tf"), col("__bm_df"),
-          col("__bm_n"), col("dl"), col("__bm_avgdl"), k1, b)
+          n, col("dl"), avgdl, k1, b)
           .as("__bm_score"))
       .groupBy(col("doc_id"))
       .agg(sum(round(col("__bm_score"), 6).cast("decimal(18,6)"))
@@ -627,7 +633,7 @@ object TextIndex {
       .map { case (p, pid) => (pid, p.map(_.toLowerCase).distinct.size) }
       .toDF("__ph_pid", "__ph_nterms")
     val terms = phrases.flatten.map(_.toLowerCase).distinct
-    val (postings, _, _) = servingFrames(spark, cfg, terms)
+    val (postings, _) = servingFrames(spark, cfg, terms)
     val perDoc = postings
       .select(col("doc_id"), col("term"), col("positions"))
       .join(broadcast(slots), "term")
@@ -683,15 +689,15 @@ object TextIndex {
         "partition pruning (driver-side, bounded by the query batch's " +
         "vocabulary) — the 65536 bound keeps that contract explicit; " +
         "serve a larger query table in chunks")
-    val (postings, dfreq, stats) = servingFrames(spark, cfg, terms)
+    val (postings, dfreq) = servingFrames(spark, cfg, terms)
+    val (n, avgdl) = bm25Stats(spark, cfg)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("bm25").desc, col(idCol))
     postings.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
       .join(broadcast(qterms), "term")
       .select(col("query_id"), col("doc_id").as(idCol),
         graft.operators.Keywords.bm25ScoreCol(col("tf"), col("__bm_df"),
-          col("__bm_n"), col("dl"), col("__bm_avgdl"), k1, b)
+          n, col("dl"), avgdl, k1, b)
           .as("__bm_score"))
       .groupBy(col("query_id"), col(idCol))
       .agg(sum(round(col("__bm_score"), 6).cast("decimal(18,6)"))
@@ -708,13 +714,12 @@ object TextIndex {
     * narrow aggregate over the (term) column — no text, no corpus.
     */
   def stats(spark: SparkSession, cfg: Cfg): DataFrame = {
-    val s = mergedStats(spark, cfg)
-    val p = spark.read.parquet(postingsPath(cfg))
+    val (_, sumLen) = servedStats(spark, cfg)
+    val (n, avgdl) = bm25Stats(spark, cfg)
+    spark.read.parquet(postingsPath(cfg))
       .agg(count(lit(1)).as("n_postings"),
         count_distinct(col("term")).as("n_terms"))
-    s.crossJoin(p)
-      .select(col("n_docs"), col("sum_len"),
-        (col("sum_len").cast("double") / col("n_docs")).as("avgdl"),
+      .select(n.as("n_docs"), lit(sumLen).as("sum_len"), avgdl.as("avgdl"),
         col("n_postings"), col("n_terms"))
   }
 
@@ -732,7 +737,7 @@ object TextIndex {
     * EXACTLY-ONCE compensation, by construction. The stats sidecar is
     * additive and its history is never rewritten; the compensation is a
     * per-doc row in the retraction LEDGER (`stats/.retract_ledger/`,
-    * see [[mergedStats]]) appended in ONE write — the verb's single
+    * see [[servedStats]]) appended in ONE write — the verb's single
     * commit point — and every stats read serves base − ledger. The
     * ordering is measure → ledger → leaf rewrites, and a re-run SKIPS
     * ids already in the ledger, which makes every crash window exact:
@@ -857,7 +862,7 @@ object TextIndex {
   /** Small-files maintenance: per-term-partition rewrite of the postings
     * (atomic per leaf, layout preserved) and a lossless row-merge of the
     * stats sidecar to ONE row. The merged row is base − ledger
-    * ([[mergedStats]] — the served value, so every serve is
+    * ([[servedStats]] — the served value, so every serve is
     * bit-identical across the pass) and the staging dir carries no
     * ledger, so the same atomic rename that installs the row FOLDS AND
     * RETIRES every pending compensation — restoring [[appendBatch]]'s
@@ -865,12 +870,10 @@ object TextIndex {
     */
   def compact(spark: SparkSession, cfg: Cfg): Unit = {
     Compaction.compactPartitioned(spark, postingsPath(cfg))
-    val sp = statsPath(cfg)
-    val merged = mergedStats(spark, cfg)
-      .collect().head // two scalars — bounded driver state
+    val (n, sumLen) = servedStats(spark, cfg)
     import spark.implicits._
-    Compaction.replace(sp, "statsmerge") { staging =>
-      Seq((merged.getLong(0), merged.getLong(1))).toDF("n_docs", "sum_len")
+    Compaction.replace(statsPath(cfg), "statsmerge") { staging =>
+      Seq((n, sumLen)).toDF("n_docs", "sum_len")
         .coalesce(1).write.parquet(staging.toString)
       true
     }

@@ -912,7 +912,7 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
     assert(rM.requested === 2L && rM.found === 2L)
     // the manual recipe on the twin deployment
     Retraction.applyTombstones(spark, aH)
-    graft.sources.Compaction.compact(spark, skH.sidecarPath)
+    SketchSidecar.compactFiles(spark, skH)
     SketchSidecar.compactRows(spark, skH)
     TextIndex.compact(spark, aH.textIndex.get)
     graft.sources.Compaction.compact(spark,
@@ -1572,5 +1572,33 @@ class RetractionSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(corpusPath)
       .where(col("doc_id") === lazyId).isEmpty)
     manifestsConsistent()
+  }
+
+  test("export verbs read their hidden roots (_manifest, _ids, the " +
+      ".epoch staging) by part files: a full export, an incremental " +
+      "export, a takedown and the next incremental export log no " +
+      "'All paths were ignored'") {
+    val root = Files.createTempDirectory("rt_export_hidden")
+    val corpusPath = root.resolve("corpus").toString
+    val full = root.resolve("full").toString
+    val out = root.resolve("out").toString
+    corpus(20).select("doc_id", "text").write.parquet(corpusPath)
+    val a = Retraction.Artifacts(corpusPath, exportRoots = Seq(out))
+    val ignored = TestProbes.ignoredRootReads(spark) {
+      assert(Retraction.exportTrainingShards(spark, a, full, shards = 4,
+        tokenBudget = 64).agg(sum("n_docs")).head.getLong(0) === 20L)
+      assert(Retraction.exportTrainingShardsIncremental(spark, a, out,
+        shards = 4, tokenBudget = 64).agg(sum("n_docs")).head.getLong(0)
+        === 20L)
+      Retraction.retractDocs(spark, Seq(1L, 2L).toDF("doc_id"), "doc_id", a)
+      corpus(30).where(col("doc_id") > 20).select("doc_id", "text")
+        .write.mode("append").parquet(corpusPath)
+      assert(Retraction.exportTrainingShardsIncremental(spark, a, out,
+        shards = 4, tokenBudget = 64).agg(sum("n_docs")).head.getLong(0)
+        === 10L)
+      assert(spark.read.parquet(out).where(col("doc_id").isin(1L, 2L))
+        .isEmpty, "a retracted doc still ships")
+    }
+    assert(ignored === 0, "an export read went through an ignored hidden root")
   }
 }

@@ -296,6 +296,49 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     assert(post === checksum)
   }
 
+  test("compaction leaves a table at or below its target file count " +
+      "as it is: the second compact launches no job and keeps every " +
+      "file; compactPartitioned rewrites only the leaves appends grew") {
+    import graft.sources.Compaction
+    // (length, mtime) of every part file a scan of `root` reads; the
+    // `_SUCCESS` markers are rewritten by any commit under the root
+    def listing(root: String): Map[String, (Long, Long)] =
+      Compaction.partFiles(new java.io.File(root))
+        .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
+    val dir = java.nio.file.Files.createTempDirectory("compact_twice")
+      .resolve("t").toString
+    (1 to 2000).map(i => (i.toLong, s"row_$i")).toDF("id", "v")
+      .repartition(8).write.parquet(dir)
+    assert(Compaction.compact(spark, dir) === ((8, 1)))
+    val once = listing(dir)
+    var second = (0, 0)
+    val jobs = TestProbes.jobsRunning(spark) {
+      second = Compaction.compact(spark, dir)
+    }
+    assert(second === ((1, 1)))
+    assert(jobs === 0, s"a compaction with nothing to merge ran $jobs jobs")
+    assert(listing(dir) === once)
+    assert(new java.io.File(dir).getParentFile.listFiles()
+      .forall(!_.getName.startsWith(".")), "a staging dir was left")
+    // partitioned: one leaf grows by an append, only it is rewritten
+    val part = java.nio.file.Files.createTempDirectory("compact_leaves")
+      .resolve("p").toString
+    val rows = (1 to 600).map(i => (i.toLong, i % 3)).toDF("id", "cell")
+    rows.repartition(4).write.partitionBy("cell").parquet(part)
+    Compaction.compactPartitioned(spark, part)
+    val compacted = listing(part)
+    assert(compacted.size === 3)
+    rows.where(col("cell") === 1).coalesce(1).write.mode("append")
+      .partitionBy("cell").parquet(part)
+    assert(Compaction.compactPartitioned(spark, part) === ((4, 3)))
+    val after = listing(part)
+    compacted.foreach { case (p, meta) =>
+      if (!p.contains("cell=1")) assert(after.get(p) === Some(meta), p)
+      else assert(!after.contains(p), s"grown leaf not rewritten: $p")
+    }
+    assert(spark.read.parquet(part).count() === 800L)
+  }
+
   test("vacuum GCs old staged-rewrite orphans; never triage, never a " +
       "sole-copy retired dir, never anything fresh or live") {
     import graft.sources.Compaction
@@ -650,6 +693,34 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
     assert(hits.diff(exceptions).isEmpty,
       "cell-partitioned index write outside CodecIndex: " +
         hits.diff(exceptions))
+  }
+
+  test("source guard: every small-sidecar read in operators/, sources/ " +
+      "and ingest/ goes through the SidecarCache memo") {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val dirs = Seq("operators", "sources", "ingest")
+      .map(d => new java.io.File(s"src/main/scala/graft/$d"))
+    assert(dirs.forall(_.isDirectory), s"run from the repo root, not ${
+      new java.io.File(".").getAbsolutePath}")
+    val sidecarRead =
+      """read(\.\w+\([^)]*\))*\.parquet\(s"\$\{?[\w.]+\}?/(meta|centroids|codebooks|params|trained_meta)"\)""".r
+    val reads = for {
+      f <- dirs.flatMap(scalaFiles)
+      lines = java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq
+      (line, i) <- lines.zipWithIndex
+      if sidecarRead.findFirstIn(line).nonEmpty
+    } yield (f.getName, i + 1, line.trim,
+      // the read is the body of a memo opened at most two lines above
+      lines.slice(math.max(0, i - 2), i + 1)
+        .exists(_.contains("SidecarCache.memo(")))
+    assert(reads.size === 7, s"the scan lost the sidecar reads: $reads")
+    assert(reads.forall(_._4),
+      s"sidecar read outside SidecarCache.memo: ${reads.filterNot(_._4)}")
   }
 
   test("bucketed equi-join plans without a shuffle exchange") {

@@ -1063,4 +1063,46 @@ class SketchSidecarSpec extends AnyFunSuite with SparkFixture {
       SketchSidecar.servedMoments(spark, legacy).collect()
     }
   }
+
+  test("file compaction keeps a newer face: six fresh two-generation " +
+      "sidecars (three files without the KMV face, then one with it) " +
+      "compacted by the corpus loop (compactEvery = 1) and by maintain " +
+      "keep the kmv column and serve its exact distinct count") {
+    val rnd = new scala.util.Random(11)
+    val words = (1 to 60).map(i => s"w$i")
+    def docs(lo: Long, n: Int): org.apache.spark.sql.DataFrame =
+      (lo until lo + n).map(i =>
+        (i, Seq.fill(12)(words(rnd.nextInt(words.size))).mkString(" ")))
+        .toDF("doc_id", "text")
+    def check(cfg: SketchSidecar.Cfg, via: String): Unit = {
+      val dir = new java.io.File(cfg.sidecarPath)
+      assert(dir.listFiles().count(_.getName.endsWith(".parquet")) === 1,
+        s"$via did not compact")
+      assert(spark.read.option("mergeSchema", "true")
+        .parquet(cfg.sidecarPath).columns.contains("kmv"),
+        s"$via dropped the kmv column")
+      assert(SketchSidecar.servedKmvDistinct(spark, cfg.sidecarPath)
+        .select("distinct_estimate").as[Double].head() === 10.0, via)
+    }
+    for (i <- 1 to 6) {
+      val root = Files.createTempDirectory(s"sketch_gen$i")
+      def gens(name: String): (SketchSidecar.Cfg, SketchSidecar.Cfg) = {
+        val old = SketchSidecar.Cfg(root.resolve(name).toString,
+          distinctExpr = "doc_id", valueExpr = "length(text)")
+        (1 to 3).foreach(b => SketchSidecar.appendBatch(docs(b * 100L, 10), old))
+        (old, old.copy(kmvKeyExpr = Some("doc_id"), compactEvery = 1))
+      }
+      val (_, loop) = gens("loop_sc")
+      graft.ingest.CorpusPipeline.dedupAndAppend(docs(1000L, 10),
+        root.resolve("corpus").toString, root.resolve("mh").toString,
+        "doc_id", "text", 0.8, sketch = Some(loop))
+      check(loop, s"the corpus loop (sidecar $i)")
+      val (_, maint) = gens("maint_sc")
+      SketchSidecar.appendBatch(docs(2000L, 10), maint)
+      graft.operators.Retraction.maintain(spark,
+        graft.operators.Retraction.Artifacts(root.resolve("corpus").toString),
+        sketch = Some(maint))
+      check(maint, s"maintain (sidecar $i)")
+    }
+  }
 }

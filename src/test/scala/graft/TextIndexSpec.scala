@@ -391,38 +391,7 @@ class TextIndexSpec extends AnyFunSuite with SparkFixture {
   test("the retraction ledger is read by its part files: a retract, a " +
       "BM25 serve, a replayed retract and a re-admission log no " +
       "'All paths were ignored' for the dot-prefixed ledger root") {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.LoggerConfig
-    val ignored = new java.util.concurrent.atomic.AtomicInteger(0)
-    val probe = new AbstractAppender("ledger-read-probe", null, null, true,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getMessage.getFormattedMessage
-            .contains("All paths were ignored")) ignored.incrementAndGet()
-    }
-    probe.start()
-    // a read rooted at a dot-prefixed directory: the warning counted
-    def hiddenRootRead(): Unit = {
-      val d = Files.createTempDirectory("ledger_probe").resolve(".h").toString
-      Seq(1L).toDF("x").write.parquet(d)
-      assert(spark.read.parquet(d).count() === 1L)
-    }
-    // Spark swaps in its default logging configuration on first use,
-    // which would drop a probe attached earlier
-    hiddenRootRead()
-    // the DataSource logger at WARN with the probe attached, whatever
-    // level the session's logging configuration gives the root
-    val name = "org.apache.spark.sql.execution.datasources.DataSource"
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val lc = new LoggerConfig(name, Level.WARN, true)
-    lc.addAppender(probe, null, null)
-    ctx.getConfiguration.addLogger(name, lc)
-    ctx.updateLoggers()
-    try {
-      hiddenRootRead()
-      assert(ignored.getAndSet(0) === 1, "the probe must see the warning")
+    val ignored = TestProbes.ignoredRootReads(spark) {
       val docs = corpus(40)
       val cfg = newCfg(parts = 4)
       TextIndex.writeIndex(docs, "doc_id", "text", cfg)
@@ -435,13 +404,8 @@ class TextIndexSpec extends AnyFunSuite with SparkFixture {
       TextIndex.appendBatch(gone, "doc_id", "text", cfg)
       assert(TextIndex.stats(spark, cfg).as[(Long, Long, Double, Long, Long)]
         .collect().head._1 === 40L)
-      assert(ignored.get() === 0,
-        "a ledger read went through the ignored hidden root")
-    } finally {
-      ctx.getConfiguration.removeLogger(name)
-      ctx.updateLoggers()
-      probe.stop()
     }
+    assert(ignored === 0, "a ledger read went through the ignored hidden root")
   }
 
   test("forward-store snippet fetch: snippetTopKStored equals " +
