@@ -4624,13 +4624,13 @@ object ExtQueries {
         .getOrElse(Array.empty)
         .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
       val ledgerHits = epochDirs.map { e =>
-        s.read.parquet(s"$e/_ids").join(taken, Seq("doc_id"),
-          "left_semi").count()
+        graft.sources.Compaction.readParquet(s, Seq(s"$e/_ids"))
+          .join(taken, Seq("doc_id"), "left_semi").count()
       }.sum
       // receipt consistency: manifests vs a full re-derivation from
       // the shipped data — exact equality, every (epoch, shard) row
       val manifests = epochDirs.map(e =>
-          s.read.parquet(s"$e/_manifest"))
+          graft.sources.Compaction.readParquet(s, Seq(s"$e/_manifest")))
         .reduce(_ unionByName _)
       val rederived = shipped.groupBy("epoch", "shard")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),

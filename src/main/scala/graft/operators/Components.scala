@@ -42,9 +42,10 @@ object Components {
     * not emitted (they are their own singleton components by definition —
     * callers left-join and coalesce to the id itself).
     *
-    * `maxIters` bounds the driver loop; propagation needs `diameter` rounds,
-    * so hitting the bound means labels may not have fully converged — the
-    * safety valve throws rather than returning silently-wrong clusters.
+    * `maxIters` bounds the [[Fixpoint]] loop; propagation needs `diameter`
+    * rounds, so hitting the bound means labels may not have fully
+    * converged — the loop throws rather than returning silently-wrong
+    * clusters.
     *
     * The returned frame is backed by the FINAL round's checkpoint blocks
     * (all earlier rounds are released inside the loop); callers that fully
@@ -64,54 +65,26 @@ object Components {
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK) // re-joined every round
-    var labels = sym.select(col("src").as("id")).distinct()
+    val init = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("component"))
-    var prevRound: DataFrame = null // last round's checkpoint, to release
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
+    try Fixpoint.iterate("connectedComponents", init, maxIters,
+        Some("changed")) { labels =>
       // the best label reachable in one hop: min over in-neighbors
       val nbrMin = sym
         .join(labels.select(col("id").as("dst"), col("component")), "dst")
         .groupBy("src").agg(min("component").as("nbr_min"))
         .withColumnRenamed("src", "id")
-      // the changed-count rides the checkpoint materialization as an
-      // observed metric — ONE job per round instead of checkpoint +
-      // isEmpty; on listener-delivery timeout (bounded wait) fall back
-      // to the explicit check over the already-checkpointed blocks
-      val obs = new org.apache.spark.sql.Observation
-      val next = labels.join(nbrMin, Seq("id"), "left")
+      labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"),
             coalesce(col("nbr_min"), col("component"))).as("component"),
           (coalesce(col("nbr_min"), col("component"))
             < col("component")).as("changed"))
-        .observe(obs, sum(when(col("changed"), 1L).otherwise(0L))
-          .as("__nchanged"))
-        .localCheckpoint(true) // truncate per-round lineage growth
-      converged = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
-        .get("__nchanged") match {
-        case Some(null) => true // zero-row round (empty graph)
-        case Some(n) => n.asInstanceOf[Long] == 0L
-        case None => next.where(col("changed")).isEmpty
-      }
-      labels = next.select("id", "component")
-      // `next` is eagerly materialized, so the previous round's blocks can
-      // never be read again — release them now or the loop pins one full
-      // label-table copy per iteration (checkpoint blocks bypass the
-      // CacheManager, so Dataset.unpersist cannot reach them)
-      if (prevRound != null)
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(prevRound)
-      prevRound = next
-      iter += 1
+    }.select("id", "component")
+    finally {
+      sym.unpersist(false)
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(e)
     }
-    sym.unpersist(false)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(e)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          "(graph diameter exceeds the bound); raise maxIters")
-    labels
   }
 
   /** Transitive corpus cleaning: one survivor (the lowest id) per connected
@@ -460,27 +433,28 @@ object Components {
     else Some(java.nio.file.Files.readString(meta.toPath).trim.toInt)
   }
 
-  /** Candidate `lp` partitions for an id, routed through the
+  /** Candidate `lp` partitions for a list of ids, routed through the
     * `_id_blooms` sidecar — bounded driver state (≤ P ints out, one
-    * per-row filter deserialization over ≤ P bloom rows in). No sidecar
-    * (a store predating it, or never updated since) routes to EVERY
-    * partition — degraded to a full scan, never a wrong answer.
+    * per-row filter deserialization over ≤ P bloom rows in, each testing
+    * the probe array). No sidecar (a store predating it, or never updated
+    * since) routes to EVERY partition — degraded to a full scan, never a
+    * wrong answer.
     */
   private def candidateLps(spark: org.apache.spark.sql.SparkSession,
-                           path: String, id: Long): Seq[Int] = {
-    val bloomsDir = new java.io.File(new java.io.File(path), "_id_blooms")
-    val hasBlooms = Option(bloomsDir.listFiles()).getOrElse(Array.empty)
-      .exists(f => f.isDirectory && f.getName.startsWith("lp="))
-    if (!hasBlooms)
-      return Option(new java.io.File(path).listFiles())
-        .getOrElse(Array.empty)
+                           path: String, ids: Seq[Long]): Seq[Int] = {
+    def lps(d: java.io.File): Seq[Int] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq
         .filter(f => f.isDirectory && f.getName.startsWith("lp="))
-        .map(_.getName.stripPrefix("lp=").toInt).toSeq
-    val probe = udf((bytes: Array[Byte]) =>
-      org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
-        .mightContainLong(id))
-    spark.read.parquet(bloomsDir.toString)
-      .where(probe(col("bloom")))
+        .map(_.getName.stripPrefix("lp=").toInt)
+    val bloomsDir = new java.io.File(new java.io.File(path), "_id_blooms")
+    if (lps(bloomsDir).isEmpty) return lps(new java.io.File(path))
+    val probes = ids.toArray
+    val anyHit = udf((bytes: Array[Byte]) => {
+      val f = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
+      probes.exists(f.mightContainLong)
+    })
+    graft.sources.Compaction.readParquet(spark, Seq(bloomsDir.toString))
+      .where(anyHit(col("bloom")))
       .select("lp").collect().map(_.getInt(0)).toSeq
   }
 
@@ -512,7 +486,7 @@ object Components {
         readLabelStore(spark, path).where(col("id") === id)
           .select("component").collect().headOption.map(_.getLong(0))
       case Some(_) =>
-        val cands = candidateLps(spark, path, id)
+        val cands = candidateLps(spark, path, Seq(id))
         if (cands.isEmpty) None
         else excludeTombstoned(
             spark.read.parquet(path)
@@ -575,27 +549,7 @@ object Components {
       case None =>
         readLabelStore(spark, path).where(col("id").isin(probes: _*))
       case Some(_) =>
-        val bloomsDir =
-          new java.io.File(new java.io.File(path), "_id_blooms")
-        val hasBlooms = Option(bloomsDir.listFiles())
-          .getOrElse(Array.empty)
-          .exists(f => f.isDirectory && f.getName.startsWith("lp="))
-        val cands =
-          if (!hasBlooms)
-            Option(new java.io.File(path).listFiles())
-              .getOrElse(Array.empty)
-              .filter(f => f.isDirectory && f.getName.startsWith("lp="))
-              .map(_.getName.stripPrefix("lp=").toInt).toSeq
-          else {
-            val probeArr = probes.toArray
-            val anyHit = udf((bytes: Array[Byte]) => {
-              val f = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
-              probeArr.exists(f.mightContainLong)
-            })
-            spark.read.parquet(bloomsDir.toString)
-              .where(anyHit(col("bloom")))
-              .select("lp").collect().map(_.getInt(0)).toSeq
-          }
+        val cands = candidateLps(spark, path, probes)
         if (cands.isEmpty)
           spark.range(0).select(col("id"), col("id").as("component"))
         else excludeTombstoned(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -12,8 +12,9 @@ import org.apache.spark.storage.StorageLevel
   * PageRank citation ranking"). The engine-side contract mirrors
   * [[Components]]: the graph is an ordinary DataFrame of (src, dst[, w])
   * rows, every iteration is one equi-join + one grouped sum keyed on node
-  * id, and per-round lineage is truncated with `localCheckpoint` so the
-  * driver loop stays O(1) in plan size.
+  * id, and every round loop runs on [[Fixpoint]] (one checkpoint per
+  * round, so the driver loop stays O(1) in plan size); the incremental
+  * stores keep their edges and state in an [[EdgeStore]].
   *
   * Scale shape: state is one (id, rank) row per node — the HOST/domain
   * graph of a 100 TB crawl is millions of rows, not billions — while the
@@ -48,55 +49,73 @@ object Graph {
       s"iterations must be in [1, 100], got $iterations")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
+    val e = weightedEdges(edges, srcCol, dstCol, weightCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = nodesOf(e).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = nodes.count() // the one driver scalar: a single long
+      require(n > 0, "pageRank needs at least one edge")
+      powerIterate("pageRank", e, nodes, _ / n, iterations, damping)
+    } finally { e.unpersist(false); nodes.unpersist(false) }
+  }
+
+  /** The canonical weighted edge frame (src, dst, w): null endpoints
+    * dropped, parallel edges coalesced by summing weights (1.0 each when
+    * unweighted). */
+  private def weightedEdges(edges: DataFrame, srcCol: String,
+                            dstCol: String,
+                            weightCol: Option[String]): DataFrame = {
     val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val e = edges
+    edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), w.as("w"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .groupBy("src", "dst").agg(sum("w").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
+  }
+
+  /** Every node of a (src, dst) frame, as `id`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // the one driver scalar: a single long
-    require(n > 0, "pageRank needs at least one edge")
-    // transition probability per edge; partitioned on src for every round's
-    // rank join
-    val trans = e.groupBy("src").agg(sum("w").as("__ow"))
+
+  /** Transition probability per edge of a (src, dst, w) frame. */
+  private def transOf(e: DataFrame): DataFrame =
+    e.groupBy("src").agg(sum("w").as("__ow"))
       .join(e, "src")
       .select(col("src"), col("dst"), (col("w") / col("__ow")).as("p"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The power iteration shared by [[pageRank]] and
+    * [[personalizedPageRank]]: `iterations` rounds of
+    * `rank' = t(1−d) + d·(Pᵀ rank + t(dang))` over the persisted node
+    * frame, where `teleport` (t) spreads a mass over the teleport set and
+    * `dang` is the rank parked on dangling nodes. Round 0 is
+    * `t(1)`, a column over the persisted node table: it needs no
+    * checkpoint action (round 1's two readers re-scan the cache). The
+    * transition rows stay partitioned on src for every round's rank join;
+    * the dangling mass rides as a 1-row cross join, so no round collects
+    * to the driver.
+    */
+  private def powerIterate(loop: String, e: DataFrame, nodes: DataFrame,
+                           teleport: Column => Column, iterations: Int,
+                           damping: Double): DataFrame = {
+    val trans = transOf(e).persist(StorageLevel.MEMORY_AND_DISK)
     val srcs = e.select("src").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // round 0 is a literal column over the PERSISTED node table — no
-    // checkpoint action needed (round 1's two readers re-scan the
-    // cache, cheaper than materializing a third copy; the per-round
-    // checkpoints below still bound lineage growth).
-    // unpersistCheckpoint on this frame is a no-op (no LogicalRDD).
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-    var prev: DataFrame = ranks
-    for (_ <- 1 to iterations) {
+    val init = nodes.select(col("*"), teleport(lit(1.0)).as("rank"))
+    try Fixpoint.iterate(loop, init, iterations) { ranks =>
       val dang = ranks.join(srcs, col("id") === col("src"), "left_anti")
         .agg(coalesce(sum("rank"), lit(0.0)).as("__dang"))
       val contrib = trans
         .join(ranks.select(col("id").as("src"), col("rank")), "src")
         .groupBy("dst").agg(sum(col("rank") * col("p")).as("__c"))
-      val next = nodes
+      nodes
         .join(contrib, col("id") === col("dst"), "left")
         .crossJoin(dang)
-        .select(col("id"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("__c"), lit(0.0)) + col("__dang") / n))
-            .as("rank"))
-        .localCheckpoint(true) // truncate per-round lineage growth
-      // previous round's blocks are unreachable once `next` materialized
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(prev)
-      prev = next
-      ranks = next
-    }
-    e.unpersist(false); nodes.unpersist(false)
-    trans.unpersist(false); srcs.unpersist(false)
-    ranks
+        .select(nodes.columns.map(col).toSeq :+
+          (teleport(lit(1.0 - damping)) + lit(damping) *
+            (coalesce(col("__c"), lit(0.0)) + teleport(col("__dang"))))
+            .as("rank"): _*)
+    } finally { trans.unpersist(false); srcs.unpersist(false) }
   }
 
   /** Personalized PageRank: random walks that TELEPORT to a seed set
@@ -115,9 +134,8 @@ object Graph {
     *
     * Same shuffle shape and loop discipline as [[pageRank]]: edge/
     * transition frames persisted once, one src-keyed join + dst-keyed
-    * aggregate per round, per-round `localCheckpoint` with
-    * previous-round release, dangling mass as a 1-row broadcast
-    * crossJoin. Seeds are a DataFrame (`idCol`), joined not collected —
+    * aggregate per round ([[powerIterate]]), dangling mass as a 1-row
+    * broadcast crossJoin. Seeds are a DataFrame (`idCol`), joined not collected —
     * a seed set can be millions of curated domains. Seeds outside the
     * graph are ignored (they can neither receive nor emit mass);
     * at least one seed must be a graph node.
@@ -132,60 +150,25 @@ object Graph {
       s"iterations must be in [1, 100], got $iterations")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
-    val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), w.as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
+    val e = weightedEdges(edges, srcCol, dstCol, weightCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val seedIds = seeds
       .select(col(seedIdCol).cast("long").as("id")).distinct()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    val nodes = nodesOf(e)
       .join(seedIds.select(col("id"), lit(1).as("__seed")), Seq("id"),
         "left")
       .select(col("id"), (col("__seed") === 1).as("is_seed"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the one driver scalar: the in-graph seed count
-    val s = nodes.where(col("is_seed")).count()
-    require(s > 0, "personalizedPageRank needs >= 1 seed inside the graph")
-    val trans = e.groupBy("src").agg(sum("w").as("__ow"))
-      .join(e, "src")
-      .select(col("src"), col("dst"), (col("w") / col("__ow")).as("p"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val srcs = e.select("src").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // e_S as a column over the node frame — reused by init, teleport
-    // and dangling redistribution so the three stay consistent
-    def teleport(of: Column): Column =
-      when(col("is_seed"), of / s).otherwise(lit(0.0))
-    // round 0 is a literal-derived column over the PERSISTED node table
-    // — no checkpoint action needed (see pageRank)
-    var ranks = nodes.select(col("id"), teleport(lit(1.0)).as("rank"))
-    var prev: DataFrame = ranks
-    for (_ <- 1 to iterations) {
-      val dang = ranks.join(srcs, col("id") === col("src"), "left_anti")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("__dang"))
-      val contrib = trans
-        .join(ranks.select(col("id").as("src"), col("rank")), "src")
-        .groupBy("dst").agg(sum(col("rank") * col("p")).as("__c"))
-      val next = nodes
-        .join(contrib, col("id") === col("dst"), "left")
-        .crossJoin(dang)
-        .select(col("id"), col("is_seed"),
-          (teleport(lit(1.0 - damping)) + lit(damping) *
-            (coalesce(col("__c"), lit(0.0)) +
-              teleport(col("__dang"))))
-            .as("rank"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(prev)
-      prev = next
-      ranks = next
-    }
-    e.unpersist(false); nodes.unpersist(false)
-    trans.unpersist(false); srcs.unpersist(false)
-    ranks.select(col("id"), col("rank").as("ppr"))
+    try {
+      // the one driver scalar: the in-graph seed count
+      val s = nodes.where(col("is_seed")).count()
+      require(s > 0, "personalizedPageRank needs >= 1 seed inside the graph")
+      // e_S: init, teleport and dangling redistribution stay consistent
+      powerIterate("personalizedPageRank", e, nodes,
+          of => when(col("is_seed"), of / s).otherwise(lit(0.0)),
+          iterations, damping)
+        .select(col("id"), col("rank").as("ppr"))
+    } finally { e.unpersist(false); nodes.unpersist(false) }
   }
 
   /** LOCAL personalized PageRank by frontier-bounded forward push
@@ -209,11 +192,10 @@ object Graph {
     * (every row carries its `resid`, so the caller can see exactly how
     * much mass is still unsettled and where).
     *
-    * Loop discipline as the other iterative operators: edge/transition/
-    * degree frames persisted once; per-round localCheckpoint of the
-    * (estimate, residual) pair with previous-round release; the only
-    * driver scalars are the seed count and the per-round frontier
-    * emptiness check.
+    * Loop discipline as the other iterative operators: the edge frame
+    * and the seed set persisted once, each round one [[Fixpoint]]
+    * checkpoint of the (estimate, residual) pair; the only driver scalar
+    * is the seed count.
     */
   def localPersonalizedPageRank(edges: DataFrame, srcCol: String,
                                 dstCol: String, seeds: DataFrame,
@@ -226,176 +208,148 @@ object Graph {
       s"damping must be in (0, 1), got $damping")
     require(eps > 0.0, s"eps must be positive, got $eps")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), w.as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
+    val e = weightedEdges(edges, srcCol, dstCol, weightCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val trans = e.groupBy("src").agg(sum("w").as("__ow"))
-      .join(e, "src")
-      .select(col("src"), col("dst"), (col("w") / col("__ow")).as("p"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // out-degree per node (distinct neighbors) — the ACL push threshold
-    // r(u) ≥ eps·deg(u); dangling nodes push at deg 1
-    val degs = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-      .select(col("src").as("id"), col("__deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seedIds = seeds
+    val seedsInGraph = seeds
       .select(col(seedIdCol).cast("long").as("id")).distinct()
-    val graphNodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val seedsInGraph = seedIds.join(graphNodes, Seq("id"), "left_semi")
+      .join(nodesOf(e), Seq("id"), "left_semi")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val s = seedsInGraph.count()
-    require(s > 0,
-      "localPersonalizedPageRank needs >= 1 seed inside the graph")
-    // state starts as r = e_S
-    val init = seedsInGraph
-      .select(col("id"), lit(0.0).as("p"), lit(1.0 / s).as("r"))
-    val state =
-      try pushLoop(trans, degs, seedsInGraph, s, init, damping, eps,
-        maxRounds)
-      finally {
-        e.unpersist(false); trans.unpersist(false)
-        degs.unpersist(false); seedsInGraph.unpersist(false)
-      }
-    state.select(col("id"), col("p").as("ppr"), col("r").as("resid"))
+    try {
+      val s = seedsInGraph.count()
+      require(s > 0,
+        "localPersonalizedPageRank needs >= 1 seed inside the graph")
+      push(e, seedsInGraph, s, seedMass(seedsInGraph, s), damping, eps,
+          maxRounds)
+        .select(col("id"), col("p").as("ppr"), col("r").as("resid"))
+    } finally { e.unpersist(false); seedsInGraph.unpersist(false) }
   }
 
-  /** The batch-synchronous ACL forward-push loop over a (id, p, r)
-    * state — shared by [[localPersonalizedPageRank]] (fresh push,
-    * residuals non-negative) and [[updateLocalPprStore]] (delta push,
-    * residuals SIGNED: an edge batch can reveal that stored estimates
-    * over-allocated mass, and the correction injects negative
-    * residual). Signed push is the same linear identity — settling
-    * moves (1−d)·r into the estimate whatever r's sign, and each push
-    * strictly removes (1−d)·|r| ≥ (1−d)·eps from Σ|r|, so the loop
-    * terminates; `Σ|ppr − p| ≤ Σ|r|` (the pricing bound) holds by
-    * linearity of `ppr = p + Σᵤ r(u)·pprᵤ`. Pointwise `p ≤ ppr` holds
-    * only for non-negative residuals (the fresh path) — a delta push
-    * can transiently overshoot, priced by |resid|.
+  /** The push state that starts every from-scratch push: r = e_S. */
+  private def seedMass(seeds: DataFrame, s: Long): DataFrame =
+    seeds.select(col("id"), lit(0.0).as("p"), lit(1.0 / s).as("r"))
+
+  /** The batch-synchronous ACL forward push over the (src, dst, w) edges
+    * `all`, from an (id, p, r) state — shared by
+    * [[localPersonalizedPageRank]] (fresh push, residuals non-negative)
+    * and the push stores' delta bodies (residuals SIGNED: an edge batch
+    * can reveal that stored estimates over-allocated mass, and the
+    * correction injects negative residual). Signed push is the same
+    * linear identity — settling moves (1−d)·r into the estimate whatever
+    * r's sign, and each push strictly removes (1−d)·|r| ≥ (1−d)·eps from
+    * Σ|r|, so the loop terminates; `Σ|ppr − p| ≤ Σ|r|` (the pricing
+    * bound) holds by linearity of `ppr = p + Σᵤ r(u)·pprᵤ`. Pointwise
+    * `p ≤ ppr` holds only for non-negative residuals (the fresh path) — a
+    * delta push can transiently overshoot, priced by |resid|.
     *
-    * Push threshold: |r(u)| ≥ eps·deg(u), computed INTO the
-    * checkpointed state so the per-round convergence probe scans
-    * in-memory blocks instead of re-running the degree join (round
-    * latency, not data volume, is this loop's cost on a point query).
+    * Push threshold: |r(u)| ≥ eps·deg(u) (dangling nodes at deg 1),
+    * computed INTO each round's state as the `__push` column, the loop's
+    * active column: [[Fixpoint]] counts it on the round's own checkpoint
+    * job, and the initial state is probed as round 0.
     */
-  private def pushLoop(trans: DataFrame, degs: DataFrame,
-                       seedsInGraph: DataFrame, s: Long,
-                       init: DataFrame, damping: Double, eps: Double,
-                       maxRounds: Int): DataFrame = {
+  private def push(all: DataFrame, seeds: DataFrame, s: Long,
+                   init: DataFrame, damping: Double, eps: Double,
+                   maxRounds: Int): DataFrame = {
+    val trans = transOf(all).persist(StorageLevel.MEMORY_AND_DISK)
+    // out-degree per node (distinct neighbors)
+    val degs = all.groupBy("src").agg(count(lit(1)).as("__deg"))
+      .select(col("src").as("id"), col("__deg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     def pushFlagged(df: DataFrame): DataFrame =
       df.join(degs, Seq("id"), "left")
         .select(col("id"), col("p"), col("r"),
           (abs(col("r")) >= lit(eps) *
             greatest(coalesce(col("__deg"), lit(1L))
               .cast("double"), lit(1.0))).as("__push"))
-    var state = pushFlagged(init).localCheckpoint(true)
-    var prev: DataFrame = state
-    var round = 0
-    var frontierEmpty = false
-    while (!frontierEmpty && round < maxRounds) {
+    try Fixpoint.iterate(s"forward push at eps=$eps", pushFlagged(init),
+        maxRounds, Some("__push")) { state =>
       val active = state.where(col("__push"))
-      frontierEmpty = active.isEmpty
-      if (!frontierEmpty) {
-        // settled mass stays put; pushed residual zeroes out
-        val settled = state.select(col("id"),
-          when(col("__push"), col("p") + lit(1.0 - damping) * col("r"))
-            .otherwise(col("p")).as("p"),
-          when(col("__push"), lit(0.0)).otherwise(col("r")).as("r"))
-        // d·r along the transition rows of pushing nodes
-        val viaEdges = active
-          .select(col("id").as("src"), col("r"))
-          .join(trans, "src")
-          .select(col("dst").as("id"),
-            (lit(damping) * col("r") * col("p")).as("__dr"))
-        // pushing nodes with NO out-edges forward their d·r to the seed
-        // distribution (1 row → broadcast crossJoin, the global form's
-        // dangling discipline)
-        val dangMass = active
-          .join(degs, Seq("id"), "left_anti")
-          .agg(coalesce(sum("r"), lit(0.0)).as("__dang"))
-        val toSeeds = seedsInGraph.crossJoin(broadcast(dangMass))
+      // settled mass stays put; pushed residual zeroes out
+      val settled = state.select(col("id"),
+        when(col("__push"), col("p") + lit(1.0 - damping) * col("r"))
+          .otherwise(col("p")).as("p"),
+        when(col("__push"), lit(0.0)).otherwise(col("r")).as("r"))
+      // d·r along the transition rows of pushing nodes
+      val viaEdges = active
+        .select(col("id").as("src"), col("r"))
+        .join(trans, "src")
+        .select(col("dst").as("id"),
+          (lit(damping) * col("r") * col("p")).as("__dr"))
+      // pushing nodes with NO out-edges forward their d·r to the seed
+      // distribution (1 row → broadcast crossJoin, the global form's
+      // dangling discipline)
+      val dangMass = active
+        .join(degs, Seq("id"), "left_anti")
+        .agg(coalesce(sum("r"), lit(0.0)).as("__dang"))
+      val toSeeds = seeds.crossJoin(broadcast(dangMass))
+        .select(col("id"),
+          (lit(damping) * col("__dang") / s).as("__dr"))
+      val incoming = viaEdges.union(toSeeds)
+        .groupBy("id").agg(sum("__dr").as("__dr"))
+      pushFlagged(
+        settled.join(incoming, Seq("id"), "full_outer")
           .select(col("id"),
-            (lit(damping) * col("__dang") / s).as("__dr"))
-        val incoming = viaEdges.union(toSeeds)
-          .groupBy("id").agg(sum("__dr").as("__dr"))
-        val next = pushFlagged(
-            settled.join(incoming, Seq("id"), "full_outer")
-              .select(col("id"),
-                coalesce(col("p"), lit(0.0)).as("p"),
-                (coalesce(col("r"), lit(0.0)) +
-                  coalesce(col("__dr"), lit(0.0))).as("r")))
-          .localCheckpoint(true)
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(prev)
-        prev = next
-        state = next
-        round += 1
-      }
-    }
-    if (!frontierEmpty)
-      throw new IllegalStateException(
-        s"forward push did not drain the frontier in $maxRounds rounds " +
-          "at eps=" + eps + "; raise maxRounds or eps")
-    state
+            coalesce(col("p"), lit(0.0)).as("p"),
+            (coalesce(col("r"), lit(0.0)) +
+              coalesce(col("__dr"), lit(0.0))).as("r")))
+    } finally { trans.unpersist(false); degs.unpersist(false) }
   }
 
-  // ---- shared machinery of the incremental push stores (local PPR +
-  // ---- full-graph PageRank): edge-set signature, one-rename state
-  // ---- install, transition/degree frames --------------------------------
-
-  /** bit_xor(xxhash64) signature of a canonical (src, dst, w) edge
-    * frame — the identity a push-store state claims. */
-  private def edgesSig(df: DataFrame): Long = df
-    .agg(expr("bit_xor(xxhash64(src, dst, w))")).collect().head match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-
-  /** The signature and damping pin ride INSIDE the state directory
-    * (hidden files), so state + its identity install in ONE atomic
-    * rename — a crash can never leave a state claiming another edge
-    * set's signature. */
-  private def writePushState(statePath: String, st: DataFrame, sig: Long,
-                             damping: Double): Unit = {
-    graft.sources.Compaction.replace(statePath, "pprstate") { staging =>
-      st.select("id", "p", "r").write.parquet(staging.toString)
-      java.nio.file.Files.writeString(
-        new java.io.File(staging, "_edges_sig").toPath, sig.toString)
-      java.nio.file.Files.writeString(
-        new java.io.File(staging, "_damping").toPath, damping.toString)
-      true
-    }
-  }
-
-  private def readPushMeta(statePath: String): Option[(Long, Double)] = {
-    val sf = new java.io.File(statePath, "_edges_sig")
-    val df0 = new java.io.File(statePath, "_damping")
-    if (!sf.exists() || !df0.exists()) None
-    else Some((
-      java.nio.file.Files.readString(sf.toPath).trim.toLong,
-      java.nio.file.Files.readString(df0.toPath).trim.toDouble))
-  }
-
-  /** Transition rows + out-degrees of a canonical edge frame, both
-    * persisted (the caller unpersists after its push loop). */
-  private def transAndDegs(all: DataFrame): (DataFrame, DataFrame) = {
-    val trans = all.groupBy("src").agg(sum("w").as("__ow"))
-      .join(all, "src")
-      .select(col("src"), col("dst"), (col("w") / col("__ow")).as("p"))
-    val degs = all.groupBy("src").agg(count(lit(1)).as("__deg"))
-      .select(col("src").as("id"), col("__deg"))
-    (trans.persist(StorageLevel.MEMORY_AND_DISK),
-      degs.persist(StorageLevel.MEMORY_AND_DISK))
+  /** The delta body of both push stores: the stored (id, p, r) with an
+    * edge batch's correction injected (the derivation is on
+    * [[updateLocalPprStore]]), drained by [[push]] over the merged
+    * edges. `teleport` maps the batch's formerly-dangling sources
+    * (src, __pu) to the correction rows (id, dp, dr) of the teleport
+    * side, which is the one place the two stores differ. Returns the
+    * pushed (id, p, r), a checkpoint.
+    */
+  private def pushDelta(d: EdgeStore.Delta, seeds: DataFrame, s: Long,
+                        damping: Double, eps: Double, maxRounds: Int)
+                       (teleport: DataFrame => DataFrame): DataFrame = {
+    val ratio = damping / (1.0 - damping)
+    // sources whose transition row changes, with their mass
+    val chg = d.added.groupBy("src").agg(sum("w").as("__wadd"))
+      .join(d.old.groupBy("src").agg(sum("w").as("__wold")),
+        Seq("src"), "left")
+      .join(d.state.select(col("id").as("src"), col("p").as("__pu")),
+        Seq("src"), "left")
+      .select(col("src"),
+        coalesce(col("__wold"), lit(0.0)).as("__wold"),
+        col("__wadd"),
+        coalesce(col("__pu"), lit(0.0)).as("__pu"))
+      .where(col("__pu") =!= 0.0)
+      .localCheckpoint(true)
+    try {
+      val hadOut = chg.where(col("__wold") > 0)
+      val wasDang = chg.where(col("__wold") === 0)
+      val adjSelf = hadOut.select(col("src").as("id"),
+        (col("__pu") * col("__wadd") / col("__wold")).as("dp"),
+        (-col("__pu") * col("__wadd") /
+          (lit(1.0 - damping) * col("__wold"))).as("dr"))
+      val adjNew = d.added.join(hadOut, Seq("src"))
+        .select(col("dst").as("id"), lit(0.0).as("dp"),
+          (lit(ratio) * col("__pu") * col("w") / col("__wold")).as("dr"))
+      val adjDangNew = d.added.join(wasDang, Seq("src"))
+        .select(col("dst").as("id"), lit(0.0).as("dp"),
+          (lit(ratio) * col("__pu") * col("w") / col("__wadd")).as("dr"))
+      val adj = adjSelf.unionAll(adjNew).unionAll(adjDangNew)
+        .unionAll(teleport(wasDang))
+        .groupBy("id").agg(sum("dp").as("dp"), sum("dr").as("dr"))
+      val init = d.state.join(adj, Seq("id"), "full_outer")
+        .select(col("id"),
+          (coalesce(col("p"), lit(0.0)) +
+            coalesce(col("dp"), lit(0.0))).as("p"),
+          (coalesce(col("r"), lit(0.0)) +
+            coalesce(col("dr"), lit(0.0))).as("r"))
+      push(d.all, seeds, s, init, damping, eps, maxRounds)
+        .select("id", "p", "r")
+    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(chg)
   }
 
   /** INCREMENTALLY-maintained local PPR — the delta engine for a link
     * graph that GROWS: rank state is kept as the forward-push pair
     * (estimate `p`, residual `r`) and an edge-batch append INJECTS
     * RESIDUAL exactly where the stored estimates now mis-allocate mass,
-    * then drains it with the same [[pushLoop]] — work tracks the
+    * then drains it with the same [[push]] — work tracks the
     * batch's blast radius at tolerance `eps`, not the graph, where the
     * full [[personalizedPageRank]] re-pays whole-graph rounds per day.
     *
@@ -417,31 +371,15 @@ object Graph {
     * new edge and `r(t) −= (d/α)·p(u)/s` per seed. Sources with
     * `p(u) = 0` (outside the settled neighborhood) need no correction —
     * the delta cost tracks the seeds' neighborhood. Residuals go SIGNED
-    * here; [[pushLoop]] drains |r| and every row still prices itself
+    * here; [[push]] drains |r| and every row still prices itself
     * (`Σ|ppr − p| ≤ Σ|r|` by linearity — the `q_ppr_incremental_gap`
     * floor).
     *
-    * Store layout: `edges/` (src, dst, w — canonical, distinct pairs),
-    * `state/` (id, p, r — with the pinned damping and the bit_xor
-    * signature of the edge set the state covers riding INSIDE as
-    * hidden files, so state and identity install in one rename),
-    * `seeds/` (the seed set ∩ creation graph, PINNED — the teleport
-    * distribution is part of the state's identity; later-arriving
-    * seeds don't enter it). Crash contract: the delta EDGES append
-    * BEFORE the state (with its signature) swaps — so a crash between
-    * the two leaves edges AHEAD of state, which the next call detects
-    * (the stored signature matches neither the disk edges nor
-    * disk ∪ its own delta) and heals with a full re-push over
-    * everything on disk plus the new delta: no delivered edge is ever
-    * dropped. The REVERSE order would silently lose a crashed batch —
-    * a state claiming old ∪ delta while the edge store never caught
-    * up means the next delivery's heal pushes over old ∪ nextDelta
-    * only, erasing the crashed batch from both stores forever. Stale
-    * state heals to exactly the fresh answer, never compounds.
-    * Re-sent (src, dst) pairs dedupe
-    * against the store (weight CHANGES to existing edges are not
-    * incremental — rebuild or re-push for those, documented like the
-    * census's re-sent rule).
+    * Store: an [[EdgeStore]] of (src, dst, w) edges and an (id, p, r)
+    * state pinned to its damping, whose crash contract, re-sent-edge rule
+    * and heal apply here. Beside it, `seeds/` holds the seed set ∩ the
+    * store's first graph, PINNED: the teleport distribution is part of
+    * the state's identity, so later-arriving seeds don't enter it.
     *
     * Returns the updated (id, ppr, resid) — [[readLocalPprState]] serves
     * it later without recomputation.
@@ -453,179 +391,47 @@ object Graph {
                           weightCol: Option[String] = None,
                           damping: Double = 0.85, eps: Double = 1e-4,
                           maxRounds: Int = 200): DataFrame = {
-    import graft.sources.Compaction
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
     require(eps > 0.0, s"eps must be positive, got $eps")
+    val batch = weightedEdges(newEdges, srcCol, dstCol, weightCol)
     val edgesPath = s"$storePath/edges"
-    val statePath = s"$storePath/state"
     val seedsPath = s"$storePath/seeds"
-    def sigOf(df: DataFrame): Long = edgesSig(df)
-    def writeState(st: DataFrame, sig: Long): Unit =
-      writePushState(statePath, st, sig, damping)
-    def readMeta(): Option[(Long, Double)] = readPushMeta(statePath)
-    def frames(all: DataFrame): (DataFrame, DataFrame) = transAndDegs(all)
-    def fullPush(all: DataFrame, seedsInGraph: DataFrame, s: Long,
-                 sig: Long): DataFrame = {
-      val (trans, degs) = frames(all)
-      val init = seedsInGraph
-        .select(col("id"), lit(0.0).as("p"), lit(1.0 / s).as("r"))
-      val st =
-        try pushLoop(trans, degs, seedsInGraph, s, init, damping, eps,
-          maxRounds)
-        finally { trans.unpersist(false); degs.unpersist(false) }
-      writeState(st, sig)
-      st
-    }
-    val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val batch = newEdges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), w.as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    val exists = new java.io.File(edgesPath).exists()
-    if (!exists) {
-      // CREATION: the batch is the graph; the in-graph seed set pins
-      val all = batch.localCheckpoint(true)
+    val noSeeds = "updateLocalPprStore needs >= 1 seed inside the graph"
+    if (!new java.io.File(seedsPath).exists()) {
+      // pin against the stored graph, or the batch at creation (a crash
+      // before the pin landed re-pins from the same inputs)
+      val graph =
+        if (new java.io.File(edgesPath).exists()) spark.read.parquet(edgesPath)
+        else batch
+      val pin = seeds.select(col(seedIdCol).cast("long").as("id"))
+        .distinct().join(nodesOf(graph), Seq("id"), "left_semi")
+        .localCheckpoint(true)
       try {
-        val nodes = all.select(col("src").as("id"))
-          .union(all.select(col("dst").as("id"))).distinct()
-        val seedsInGraph = seeds
-          .select(col(seedIdCol).cast("long").as("id")).distinct()
-          .join(nodes, Seq("id"), "left_semi")
-          .localCheckpoint(true)
-        try {
-          val s = seedsInGraph.count()
-          require(s > 0,
-            "updateLocalPprStore needs >= 1 seed inside the graph")
-          all.write.mode("overwrite").parquet(edgesPath)
-          seedsInGraph.write.mode("overwrite").parquet(seedsPath)
-          val st = fullPush(all, seedsInGraph, s, sigOf(all))
-          st.select(col("id"), col("p").as("ppr"), col("r").as("resid"))
-        } finally org.apache.spark.sql.GraftBridge
-          .unpersistCheckpoint(seedsInGraph)
-      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(all)
-    } else {
-      val old = spark.read.parquet(edgesPath)
-      // a crash before the creation-time seeds write: re-pin from the
-      // given seeds against the stored graph (same inputs → same pin)
-      if (!new java.io.File(seedsPath).exists()) {
-        val nodes = old.select(col("src").as("id"))
-          .union(old.select(col("dst").as("id"))).distinct()
-        seeds.select(col(seedIdCol).cast("long").as("id")).distinct()
-          .join(nodes, Seq("id"), "left_semi")
-          .write.mode("overwrite").parquet(seedsPath)
-      }
-      val seedsInGraph = spark.read.parquet(seedsPath)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val s = seedsInGraph.count()
-        require(s > 0,
-          "updateLocalPprStore needs >= 1 seed inside the graph")
-        val delta = batch.join(old, Seq("src", "dst"), "left_anti")
-          .localCheckpoint(true)
-        try {
-          val all = old.unionAll(delta).localCheckpoint(true)
-          try {
-            readMeta().foreach { case (_, pinned) =>
-              require(pinned == damping,
-                s"ppr store at $storePath was created with damping=" +
-                  s"$pinned, not $damping — the state encodes it")
-            }
-            val oldSig = sigOf(old)
-            readMeta().map(_._1) match {
-              case None =>
-                // crashed creation (edges without a committed state):
-                // full heal over the merged set
-                if (!delta.isEmpty)
-                  delta.write.mode("append").parquet(edgesPath)
-                val st = fullPush(all, seedsInGraph, s, sigOf(all))
-                return st.select(col("id"), col("p").as("ppr"),
-                  col("r").as("resid"))
-              case Some(storedSig) =>
-                if (delta.isEmpty && storedSig == oldSig)
-                  return readLocalPprState(spark, storePath) // no-op
-                if (storedSig == sigOf(all)) {
-                  // state ahead of edges (unreachable under the
-                  // edges-first write order, kept as a defensive heal
-                  // for externally-produced stores): the state already
-                  // covers exactly old ∪ delta — finish the append
-                  if (!delta.isEmpty)
-                    delta.write.mode("append").parquet(edgesPath)
-                  return readLocalPprState(spark, storePath)
-                }
-                if (storedSig != oldSig) {
-                  // interleaved crash (state matches neither) — heal
-                  if (!delta.isEmpty)
-                    delta.write.mode("append").parquet(edgesPath)
-                  val st = fullPush(all, seedsInGraph, s, sigOf(all))
-                  return st.select(col("id"), col("p").as("ppr"),
-                    col("r").as("resid"))
-                }
-            }
-            // NORMAL DELTA PATH: state consistent with `old`
-            val st = spark.read.parquet(statePath)
-            val ratio = damping / (1.0 - damping)
-            val chg = delta.groupBy("src").agg(sum("w").as("__wadd"))
-              .join(old.groupBy("src").agg(sum("w").as("__wold")),
-                Seq("src"), "left")
-              .join(st.select(col("id").as("src"), col("p").as("__pu")),
-                Seq("src"), "left")
-              .select(col("src"),
-                coalesce(col("__wold"), lit(0.0)).as("__wold"),
-                col("__wadd"),
-                coalesce(col("__pu"), lit(0.0)).as("__pu"))
-              .where(col("__pu") =!= 0.0)
-              .localCheckpoint(true)
-            try {
-              val hadOut = chg.where(col("__wold") > 0)
-              val wasDang = chg.where(col("__wold") === 0)
-              val adjSelf = hadOut.select(col("src").as("id"),
-                (col("__pu") * col("__wadd") / col("__wold")).as("dp"),
-                (-col("__pu") * col("__wadd") /
-                  (lit(1.0 - damping) * col("__wold"))).as("dr"))
-              val adjNew = delta.join(hadOut, Seq("src"))
-                .select(col("dst").as("id"), lit(0.0).as("dp"),
-                  (lit(ratio) * col("__pu") * col("w") / col("__wold"))
-                    .as("dr"))
-              val adjDangNew = delta.join(wasDang, Seq("src"))
-                .select(col("dst").as("id"), lit(0.0).as("dp"),
-                  (lit(ratio) * col("__pu") * col("w") / col("__wadd"))
-                    .as("dr"))
-              val dangMass = wasDang
-                .agg(coalesce(sum("__pu"), lit(0.0)).as("__m"))
-              val adjSeeds = seedsInGraph.crossJoin(broadcast(dangMass))
-                .select(col("id"), lit(0.0).as("dp"),
-                  (-lit(ratio) * col("__m") / s).as("dr"))
-              val adj = adjSelf.unionAll(adjNew).unionAll(adjDangNew)
-                .unionAll(adjSeeds)
-                .groupBy("id").agg(sum("dp").as("dp"), sum("dr").as("dr"))
-              val init = st.join(adj, Seq("id"), "full_outer")
-                .select(col("id"),
-                  (coalesce(col("p"), lit(0.0)) +
-                    coalesce(col("dp"), lit(0.0))).as("p"),
-                  (coalesce(col("r"), lit(0.0)) +
-                    coalesce(col("dr"), lit(0.0))).as("r"))
-              val (trans, degs) = frames(all)
-              val pushed =
-                try pushLoop(trans, degs, seedsInGraph, s, init, damping,
-                  eps, maxRounds)
-                finally { trans.unpersist(false); degs.unpersist(false) }
-              // edges append BEFORE the state commit — see the crash
-              // contract above (state-first would let a crash here
-              // silently drop this batch's edges on the next delivery)
-              delta.write.mode("append").parquet(edgesPath)
-              writeState(pushed, sigOf(all))
-              pushed.select(col("id"), col("p").as("ppr"),
-                col("r").as("resid"))
-            } finally org.apache.spark.sql.GraftBridge
-              .unpersistCheckpoint(chg)
-          } finally org.apache.spark.sql.GraftBridge
-            .unpersistCheckpoint(all)
-        } finally org.apache.spark.sql.GraftBridge
-          .unpersistCheckpoint(delta)
-      } finally seedsInGraph.unpersist(false)
+        require(!pin.isEmpty, noSeeds)
+        pin.write.mode("overwrite").parquet(seedsPath)
+      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(pin)
     }
+    val pinned = spark.read.parquet(seedsPath)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val s = pinned.count()
+      require(s > 0, noSeeds)
+      val ratio = damping / (1.0 - damping)
+      EdgeStore.update(spark, storePath, batch, Seq("src", "dst"),
+          pins = Map("damping" -> damping.toString))(
+        all => push(all, pinned, s, seedMass(pinned, s), damping, eps,
+          maxRounds).select("id", "p", "r"),
+        d => pushDelta(d, pinned, s, damping, eps, maxRounds) { wasDang =>
+          // a formerly-dangling source's seed-distribution row withdrawn
+          val dangMass = wasDang
+            .agg(coalesce(sum("__pu"), lit(0.0)).as("__m"))
+          pinned.crossJoin(broadcast(dangMass))
+            .select(col("id"), lit(0.0).as("dp"),
+              (-lit(ratio) * col("__m") / s).as("dr"))
+        })._1
+        .select(col("id"), col("p").as("ppr"), col("r").as("resid"))
+    } finally pinned.unpersist(false)
   }
 
   /** The stored (id, ppr, resid) of an incremental local-PPR store. */
@@ -684,19 +490,15 @@ object Graph {
     *    e-change and the re-aimed uniform dangling rows, folded (both
     *    are uniform over the same sets).
     *
-    * Residuals go signed; [[pushLoop]] drains |r| ≥ eps·deg and the
+    * Residuals go signed; [[push]] drains |r| ≥ eps·deg and the
     * sub-threshold remainder is priced by the returned `resid`
     * (`‖rank − p‖₁ ≤ Σ|r|` by linearity). Mass check: Σp + Σr = 1
     * exactly (up to float) at every commit — spec-asserted.
     *
-    * Store layout and crash contract are [[updateLocalPprStore]]'s,
-    * minus the seeds pin (the teleport set IS the node set, derived
-    * from the edges): `edges/` + `state/` with `_edges_sig`/`_damping`
-    * riding inside, edges append BEFORE the one-rename state install,
-    * signature mismatch heals with a full [[pageRankPush]] over the
-    * merged edges. Weight CHANGES to existing (src, dst) pairs are not
-    * incremental — re-sent pairs dedupe against the store, documented
-    * like the census's re-sent rule.
+    * Store: an [[EdgeStore]] of (src, dst, w) edges and an (id, p, r)
+    * state pinned to its damping, as [[updateLocalPprStore]]'s but with
+    * no seeds pin (the teleport set IS the node set); its full body is a
+    * [[pageRankPush]] over the merged edges.
     *
     * Returns the updated (id, rank, resid); [[readPageRankState]]
     * serves it later without recomputation.
@@ -710,180 +512,51 @@ object Graph {
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
     require(eps > 0.0, s"eps must be positive, got $eps")
-    val edgesPath = s"$storePath/edges"
-    val statePath = s"$storePath/state"
-    def serve(st: DataFrame): DataFrame =
-      st.select(col("id"), col("p").as("rank"), col("r").as("resid"))
-    def nodesOf(e: DataFrame): DataFrame =
-      e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
-    def fullPush(all: DataFrame, sig: Long): DataFrame = {
+    import org.apache.spark.sql.GraftBridge.unpersistCheckpoint
+    val ratio = damping / (1.0 - damping)
+    def full(all: DataFrame): DataFrame = {
       val nodes = nodesOf(all).localCheckpoint(true)
       try {
         val n = nodes.count()
-        val (trans, degs) = transAndDegs(all)
-        val init = nodes
-          .select(col("id"), lit(0.0).as("p"), lit(1.0 / n).as("r"))
-        val st =
-          try pushLoop(trans, degs, nodes, n, init, damping, eps,
-            maxRounds)
-          finally { trans.unpersist(false); degs.unpersist(false) }
-        writePushState(statePath, st, sig, damping)
-        st
-      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(nodes)
+        require(n > 0, "updatePageRankStore needs >= 1 edge")
+        push(all, nodes, n, seedMass(nodes, n), damping, eps, maxRounds)
+          .select("id", "p", "r")
+      } finally unpersistCheckpoint(nodes)
     }
-    val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val batch = newEdges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), w.as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    if (!new java.io.File(edgesPath).exists()) {
-      // CREATION: the batch is the graph — edges land first, then the
-      // from-scratch push installs state + signature in one rename
-      val all = batch.localCheckpoint(true)
+    def delta(d: EdgeStore.Delta): DataFrame = {
+      val nodesOld = nodesOf(d.old).localCheckpoint(true)
+      val nodesAll = nodesOf(d.all).localCheckpoint(true)
       try {
-        require(!all.isEmpty, "updatePageRankStore needs >= 1 edge")
-        all.write.mode("overwrite").parquet(edgesPath)
-        serve(fullPush(all, edgesSig(all)))
-      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(all)
-    } else {
-      // ONE stored-edge scan per batch (down from three): sig(old)
-      // rides the dedup anti-join's scan as an observed metric, and the
-      // post-batch signature delta-folds (bit_xor is its own inverse:
-      // sig(old ∪ delta) = sig(old) XOR sig(delta), delta disjoint by
-      // the anti-join) — the updateCommunityStore discipline.
-      val oldRaw = spark.read.parquet(edgesPath)
-      val obs = new org.apache.spark.sql.Observation
-      val tObs0 = System.nanoTime()
-      val delta = batch.join(
-          oldRaw.observe(obs,
-            expr("bit_xor(xxhash64(src, dst, w))").as("__sig")),
-          Seq("src", "dst"), "left_anti")
-        .localCheckpoint(true)
-      // the metrics listener fires asynchronously after the action; on
-      // a loaded cluster delivery can trail the action by more than a
-      // fixed constant, so the wait scales with the action itself
-      val obsWaitMs = math.max(3000L,
-        3L * (System.nanoTime() - tObs0) / 1000000L)
-      try {
-        val all = oldRaw.unionAll(delta).localCheckpoint(true)
-        try {
-          readPushMeta(statePath).foreach { case (_, pinned) =>
-            require(pinned == damping,
-              s"pagerank store at $storePath was created with damping=" +
-                s"$pinned, not $damping — the state encodes it")
-          }
-          val oldSig = org.apache.spark.sql.GraftBridge
-            .observedOrEmpty(obs, obsWaitMs).get("__sig") match {
-            case Some(null) => 0L // empty stored-edge frame
-            case Some(x) => x.asInstanceOf[Long]
-            case None => edgesSig(oldRaw) // metric pruned (empty batch)
-          }
-          lazy val allSig = oldSig ^ edgesSig(delta)
-          readPushMeta(statePath).map(_._1) match {
-            case None =>
-              // crashed creation (edges without a committed state)
-              if (!delta.isEmpty)
-                delta.write.mode("append").parquet(edgesPath)
-              return serve(fullPush(all, allSig))
-            case Some(storedSig) =>
-              if (delta.isEmpty && storedSig == oldSig)
-                return readPageRankState(spark, storePath) // no-op
-              if (storedSig != oldSig) {
-                // edges ahead of state (a crash between the edges
-                // append and the state install) or any other mismatch —
-                // heal with a full push over everything delivered (the
-                // fold still holds: observed disk sig ^ delta sig)
-                if (!delta.isEmpty)
-                  delta.write.mode("append").parquet(edgesPath)
-                return serve(fullPush(all, allSig))
-              }
-          }
-          // NORMAL DELTA PATH: state consistent with `old`
-          val st = spark.read.parquet(statePath)
-          val ratio = damping / (1.0 - damping)
-          val nodesOld = nodesOf(oldRaw).localCheckpoint(true)
-          val nodesAll = nodesOf(all).localCheckpoint(true)
-          try {
-            val nOld = nodesOld.count()
-            val nAll = nodesAll.count()
-            val newNodes = nodesAll.join(nodesOld, Seq("id"), "left_anti")
-            // sources whose transition row changes, with their mass
-            val chg = delta.groupBy("src").agg(sum("w").as("__wadd"))
-              .join(oldRaw.groupBy("src").agg(sum("w").as("__wold")),
-                Seq("src"), "left")
-              .join(st.select(col("id").as("src"), col("p").as("__pu")),
-                Seq("src"), "left")
-              .select(col("src"),
-                coalesce(col("__wold"), lit(0.0)).as("__wold"),
-                col("__wadd"),
-                coalesce(col("__pu"), lit(0.0)).as("__pu"))
-              .where(col("__pu") =!= 0.0)
-              .localCheckpoint(true)
-            try {
-              val hadOut = chg.where(col("__wold") > 0)
-              val wasDang = chg.where(col("__wold") === 0)
-              val adjSelf = hadOut.select(col("src").as("id"),
-                (col("__pu") * col("__wadd") / col("__wold")).as("dp"),
-                (-col("__pu") * col("__wadd") /
-                  (lit(1.0 - damping) * col("__wold"))).as("dr"))
-              val adjNew = delta.join(hadOut, Seq("src"))
-                .select(col("dst").as("id"), lit(0.0).as("dp"),
-                  (lit(ratio) * col("__pu") * col("w") / col("__wold"))
-                    .as("dr"))
-              val adjDangNew = delta.join(wasDang, Seq("src"))
-                .select(col("dst").as("id"), lit(0.0).as("dp"),
-                  (lit(ratio) * col("__pu") * col("w") / col("__wadd"))
-                    .as("dr"))
-              // the two bounded scalars of the uniform corrections:
-              // mass on sources that STOP being dangling (their old
-              // uniform row is withdrawn) and mass on nodes dangling
-              // before AND after (their uniform row re-aims at the
-              // grown node set)
-              val dGain = wasDang
-                .agg(coalesce(sum("__pu"), lit(0.0))).collect()
-                .head.getDouble(0)
-              val allSrcs = all.select("src").distinct()
-              val dStill = st.where(col("p") =!= 0.0)
-                .join(allSrcs, col("id") === col("src"), "left_anti")
-                .agg(coalesce(sum("p"), lit(0.0))).collect()
-                .head.getDouble(0)
-              val kOld = (1.0 + ratio * dStill) * (1.0 / nAll - 1.0 / nOld) -
-                ratio * dGain / nOld
-              val kNew = (1.0 + ratio * dStill) / nAll
-              val adjUnifOld = nodesOld.select(col("id"),
-                lit(0.0).as("dp"), lit(kOld).as("dr"))
-              val adjUnifNew = newNodes.select(col("id"),
-                lit(0.0).as("dp"), lit(kNew).as("dr"))
-              val adj = adjSelf.unionAll(adjNew).unionAll(adjDangNew)
-                .unionAll(adjUnifOld).unionAll(adjUnifNew)
-                .groupBy("id").agg(sum("dp").as("dp"), sum("dr").as("dr"))
-              val init = st.join(adj, Seq("id"), "full_outer")
-                .select(col("id"),
-                  (coalesce(col("p"), lit(0.0)) +
-                    coalesce(col("dp"), lit(0.0))).as("p"),
-                  (coalesce(col("r"), lit(0.0)) +
-                    coalesce(col("dr"), lit(0.0))).as("r"))
-              val (trans, degs) = transAndDegs(all)
-              val pushed =
-                try pushLoop(trans, degs, nodesAll, nAll, init, damping,
-                  eps, maxRounds)
-                finally { trans.unpersist(false); degs.unpersist(false) }
-              // edges append BEFORE the state commit — the crash
-              // contract shared with updateLocalPprStore
-              delta.write.mode("append").parquet(edgesPath)
-              writePushState(statePath, pushed, allSig, damping)
-              serve(pushed)
-            } finally org.apache.spark.sql.GraftBridge
-              .unpersistCheckpoint(chg)
-          } finally {
-            org.apache.spark.sql.GraftBridge.unpersistCheckpoint(nodesOld)
-            org.apache.spark.sql.GraftBridge.unpersistCheckpoint(nodesAll)
-          }
-        } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(all)
-      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(delta)
+        val nOld = nodesOld.count()
+        val nAll = nodesAll.count()
+        pushDelta(d, nodesAll, nAll, damping, eps, maxRounds) { wasDang =>
+          // the two bounded scalars of the uniform corrections: mass on
+          // sources that STOP being dangling (their old uniform row is
+          // withdrawn) and mass on nodes dangling before AND after
+          // (their uniform row re-aims at the grown node set)
+          val dGain = wasDang
+            .agg(coalesce(sum("__pu"), lit(0.0))).head().getDouble(0)
+          val dStill = d.state.where(col("p") =!= 0.0)
+            .join(d.all.select("src").distinct(),
+              col("id") === col("src"), "left_anti")
+            .agg(coalesce(sum("p"), lit(0.0))).head().getDouble(0)
+          val kOld = (1.0 + ratio * dStill) * (1.0 / nAll - 1.0 / nOld) -
+            ratio * dGain / nOld
+          val kNew = (1.0 + ratio * dStill) / nAll
+          nodesOld.select(col("id"), lit(0.0).as("dp"), lit(kOld).as("dr"))
+            .unionAll(nodesAll.join(nodesOld, Seq("id"), "left_anti")
+              .select(col("id"), lit(0.0).as("dp"), lit(kNew).as("dr")))
+        }
+      } finally {
+        unpersistCheckpoint(nodesOld)
+        unpersistCheckpoint(nodesAll)
+      }
     }
+    EdgeStore.update(spark, storePath,
+        weightedEdges(newEdges, srcCol, dstCol, weightCol),
+        Seq("src", "dst"), pins = Map("damping" -> damping.toString))(
+        full, delta)._1
+      .select(col("id"), col("p").as("rank"), col("r").as("resid"))
   }
 
   /** The stored (id, rank, resid) of an incremental PageRank store. */
@@ -1041,8 +714,7 @@ object Graph {
     * the sequence is monotonically non-increasing and its fixpoint is
     * EXACTLY the coreness. Spark shape: one value-join + one per-node
     * window per round (c is monotone per node, so rounds are
-    * idempotent to replay), per-round `localCheckpoint` with
-    * previous-round release — the [[pageRank]] loop discipline.
+    * idempotent to replay), each round one [[Fixpoint]] checkpoint.
     * Convergence is certified, not assumed: iteration stops when a
     * round changes nothing, and [[graft.ExtQueries]]'s `q_kcore_gap`
     * twin re-checks the fixpoint property over the final assignment
@@ -1059,51 +731,33 @@ object Graph {
     try {
       val sym = e.select(col("lo").as("id"), col("hi").as("nb"))
         .unionAll(e.select(col("hi").as("id"), col("lo").as("nb")))
-      var c = degreesOf(e).withColumnRenamed("deg", "c")
-        .localCheckpoint(true)
+      val deg = degreesOf(e).withColumnRenamed("deg", "c")
       // Round bound: peeling propagates ONE HOP per round, so the round
       // count is bounded by the graph's diameter — which on a perfectly
       // legitimate chain/ring graph is Θ(nodes), not a constant. The
       // auto default (maxRounds = 0) therefore scales with the node
-      // count: max(200, #nodes) rounds can never fire the convergence
-      // require on a real graph (the H sequence strictly decreases
-      // somewhere every non-converged round, and values are bounded by
-      // n), while still bounding a would-be-infinite loop if the
-      // monotonicity argument were ever violated by a bug. Pass an
-      // explicit maxRounds only to CAP latency on graphs whose diameter
-      // you know.
+      // count: max(200, #nodes) rounds can never hit the bound on a real
+      // graph (the H sequence strictly decreases somewhere every
+      // non-converged round, and values are bounded by n), while still
+      // bounding a would-be-infinite loop if the monotonicity argument
+      // were ever violated by a bug. Pass an explicit maxRounds only to
+      // CAP latency on graphs whose diameter you know.
       val roundBound =
         if (maxRounds > 0) maxRounds
-        else math.max(200L, c.count()).min(Int.MaxValue.toLong).toInt
-      var round = 0
-      var changed = 1L
-      while (changed > 0 && round < roundBound) {
-        // H-index of neighbor values: rank neighbors by value desc,
-        // h = max over neighbors of min(value, rank)
-        val w = Window.partitionBy("id")
-          .orderBy(col("nbc").desc, col("nb"))
-        val next = sym
-          .join(c.withColumnRenamed("id", "nb")
-            .withColumnRenamed("c", "nbc"), Seq("nb"))
+        else math.max(200L, deg.count()).min(Int.MaxValue.toLong).toInt
+      // H-index of neighbor values: rank neighbors by value desc,
+      // h = max over neighbors of min(value, rank)
+      val w = Window.partitionBy("id").orderBy(col("nbc").desc, col("nb"))
+      Fixpoint.iterate("coreness", deg, roundBound, Some("changed")) { c =>
+        sym
+          .join(c.select(col("id").as("nb"), col("c").as("nbc")), Seq("nb"))
           .withColumn("__rk", row_number().over(w))
           .groupBy("id")
           .agg(max(least(col("nbc"), col("__rk"))).as("c"))
-          .localCheckpoint(true)
-        changed = next.join(c.withColumnRenamed("c", "prev"), Seq("id"))
-          .where(col("c") =!= col("prev")).count()
-        val old = c
-        c = next
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(old)
-        round += 1
-      }
-      require(changed == 0,
-        s"coreness did not converge in $roundBound rounds — with the " +
-          "auto bound (maxRounds = 0, #nodes rounds) this indicates a " +
-          "bug, not a slow graph; with an explicit cap, raise it " +
-          "(rounds needed grow with the graph's diameter: any " +
-          "large-diameter sparse graph — a long path or ring, not just " +
-          "adversarial input — legitimately needs ~diameter rounds)")
-      c.withColumnRenamed("c", "coreness")
+          .join(c.select(col("id"), col("c").as("__prev")), Seq("id"))
+          .select(col("id"), col("c"), (col("c") =!= col("__prev"))
+            .as("changed"))
+      }.select(col("id"), col("c").as("coreness"))
     } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(e)
   }
 
@@ -1178,116 +832,62 @@ object Graph {
     * (inclusion–exclusion over new-edge membership). Re-sent edges
     * dedupe against the store first, so replaying a batch is a no-op.
     *
-    * Crash window, pinned: edges append commits BEFORE the census swap,
-    * so a crash between them leaves a stale census. The next update
-    * DETECTS the mismatch (stored edge count vs the store's actual) and
-    * falls back to a full [[triangles]] recount — stale state heals to
-    * exactly the closure, it never compounds. The returned row carries
-    * a `mode` column (`incremental` / `recount` / `noop`) so callers
-    * and tests can see which path ran; [[readTriangleCensus]] serves
-    * the stored row without it.
+    * Store: an [[EdgeStore]] of (lo, hi) edges whose state directory is
+    * `census/`; its crash contract applies, and the full body is a
+    * [[triangles]] recount of the merged edges. The returned row carries
+    * a `mode` column (`incremental` / `recount` / `noop`) so callers and
+    * tests can see which path ran; [[readTriangleCensus]] serves the
+    * stored row without it.
     */
   def updateTriangleCensus(spark: org.apache.spark.sql.SparkSession,
                            storePath: String, newEdges: DataFrame,
                            srcCol: String, dstCol: String): DataFrame = {
-    import graft.sources.Compaction
-    val edgesPath = s"$storePath/edges"
-    val censusPath = s"$storePath/census"
-    val hasEdges = new java.io.File(edgesPath).exists()
-    val old =
-      if (hasEdges) spark.read.parquet(edgesPath)
-      else spark.range(0).select(col("id").as("lo"), col("id").as("hi"))
-    val delta = canonicalEdges(newEdges, srcCol, dstCol)
-      .join(old, Seq("lo", "hi"), "left_anti")
-      .localCheckpoint(true)
-    try {
-      val censusFile = new java.io.File(censusPath)
-      val stored: Option[Row] =
-        if (censusFile.exists())
-          spark.read.parquet(censusPath).collect().headOption
-        else None
-      val oldEdgeCount = old.count()
-      val stale = stored.forall(r =>
-        r.getLong(r.fieldIndex("edges")) != oldEdgeCount)
-      if (delta.isEmpty && !stale) {
-        // materialize from the already-collected row — a lazy read over
-        // census/ would dangle once the NEXT update's swap retires it
-        val s0 = stored.get
-        import spark.implicits._
-        return Seq((s0.getLong(s0.fieldIndex("nodes")),
-            s0.getLong(s0.fieldIndex("edges")),
-            s0.getLong(s0.fieldIndex("wedges")),
-            s0.getLong(s0.fieldIndex("triangles")),
-            if (s0.isNullAt(s0.fieldIndex("global_clustering"))) None
-            else Some(s0.getDouble(s0.fieldIndex("global_clustering")))))
-          .toDF("nodes", "edges", "wedges", "triangles",
-            "global_clustering")
-          .withColumn("mode", lit("noop"))
-      }
-      // one materialized copy of the merged set: every count below (and
-      // the recount path) reads it instead of re-scanning the store
-      val full = old.unionAll(delta).localCheckpoint(true)
-      try {
-      def sym(f: DataFrame): DataFrame =
-        f.select(col("lo").as("a"), col("hi").as("b"))
-          .unionAll(f.select(col("hi").as("a"), col("lo").as("b")))
-      val (tri, mode) =
-        if (stale) {
-          val t = triangles(full, "lo", "hi")
-            .collect().head
-          (t.getLong(t.fieldIndex("triangles")), "recount")
-        } else {
-          // A: per new edge (lo, hi), its common neighbors in the full
-          // set — w adjacent to lo, with (w, hi) closing
-          val a = delta.as("d")
-            .join(sym(full).as("n"), col("n.a") === col("d.lo") &&
-              col("n.b") =!= col("d.hi"))
-            .select(least(col("n.b"), col("d.hi")).as("lo"),
-              greatest(col("n.b"), col("d.hi")).as("hi"))
-            .join(full, Seq("lo", "hi"), "left_semi")
-            .count()
-          // B: wedges made of TWO new edges, closed by any full edge
-          val dsym = sym(delta)
-          val b = dsym.as("d1")
-            .join(dsym.as("d2"), col("d1.a") === col("d2.a") &&
-              col("d1.b") < col("d2.b"))
-            .select(col("d1.b").as("lo"), col("d2.b").as("hi"))
-            .join(full, Seq("lo", "hi"), "left_semi")
-            .count()
-          // C: triangles made of three new edges
-          val cRow = triangles(delta, "lo", "hi").collect().head
-          val c = cRow.getLong(cRow.fieldIndex("triangles"))
-          val oldTri = stored.map(r =>
-            r.getLong(r.fieldIndex("triangles"))).getOrElse(0L)
-          (oldTri + (a - b + c), "incremental")
-        }
-      // nodes/edges/wedges from one degree scan of the full set — O(m),
-      // no joins; triangles is the only component worth maintaining
-      val deg = full.select(col("lo").as("id"))
-        .unionAll(full.select(col("hi").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
+    import spark.implicits._
+    // nodes/edges/wedges from one degree scan of the merged set — O(m),
+    // no joins; triangles is the only component worth maintaining
+    def census(full: DataFrame, tri: Long): DataFrame = {
       val st = full.agg(count(lit(1)).as("edges"))
-        .crossJoin(deg.agg(count(lit(1)).as("nodes"),
+        .crossJoin(degreesOf(full).agg(count(lit(1)).as("nodes"),
           sum(col("deg") * (col("deg") - 1) / 2).as("wedges")))
-        .collect().head
+        .head()
       val (nEdges, nNodes, wedges) = (st.getLong(0), st.getLong(1),
         if (st.isNullAt(2)) 0.0 else st.getDouble(2))
-      import spark.implicits._
-      val census = Seq((nNodes, nEdges, wedges.toLong, tri,
+      Seq((nNodes, nEdges, wedges.toLong, tri,
           if (wedges > 0) Some(3.0 * tri / wedges) else None))
-        .toDF("nodes", "edges", "wedges", "triangles",
-          "global_clustering")
-      // edges commit first; the census swap is atomic — the stale
-      // window between them is exactly what the recount path heals
-      if (!delta.isEmpty)
-        delta.write.mode("append").parquet(edgesPath)
-      Compaction.replace(censusPath, "census") { staging =>
-        census.coalesce(1).write.parquet(staging.toString)
-        true
-      }
-      census.withColumn("mode", lit(mode))
-      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(full)
-    } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(delta)
+        .toDF("nodes", "edges", "wedges", "triangles", "global_clustering")
+    }
+    def trianglesOf(df: DataFrame): Long =
+      df.select("triangles").head().getLong(0)
+    def sym(f: DataFrame): DataFrame =
+      f.select(col("lo").as("a"), col("hi").as("b"))
+        .unionAll(f.select(col("hi").as("a"), col("lo").as("b")))
+    val (st, mode) = EdgeStore.update(spark, storePath,
+        canonicalEdges(newEdges, srcCol, dstCol), Seq("lo", "hi"),
+        stateDir = "census")(
+      all => census(all, trianglesOf(triangles(all, "lo", "hi"))),
+      d => {
+        // A: per new edge (lo, hi), its common neighbors in the merged
+        // set — w adjacent to lo, with (w, hi) closing
+        val a = d.added.as("d")
+          .join(sym(d.all).as("n"), col("n.a") === col("d.lo") &&
+            col("n.b") =!= col("d.hi"))
+          .select(least(col("n.b"), col("d.hi")).as("lo"),
+            greatest(col("n.b"), col("d.hi")).as("hi"))
+          .join(d.all, Seq("lo", "hi"), "left_semi")
+          .count()
+        // B: wedges made of TWO new edges, closed by any merged edge
+        val dsym = sym(d.added)
+        val b = dsym.as("d1")
+          .join(dsym.as("d2"), col("d1.a") === col("d2.a") &&
+            col("d1.b") < col("d2.b"))
+          .select(col("d1.b").as("lo"), col("d2.b").as("hi"))
+          .join(d.all, Seq("lo", "hi"), "left_semi")
+          .count()
+        // C: triangles made of three new edges
+        val c = trianglesOf(triangles(d.added, "lo", "hi"))
+        census(d.all, trianglesOf(d.state) + (a - b + c))
+      })
+    st.withColumn("mode", lit(if (mode == "full") "recount" else mode))
   }
 
   /** The stored census row of an incremental triangle store. */
@@ -1317,9 +917,8 @@ object Graph {
     * Scale shape = [[graft.operators.Components.connectedComponents]]'s:
     * per round one equi-join (labels into edge endpoints), one
     * (id, label) count aggregate and one per-id argmax — all
-    * key-partitioned shuffles, no cartesian; per-round eager
-    * localCheckpoint truncates the iterative-plan growth and the
-    * previous round's blocks release immediately. Returns
+    * key-partitioned shuffles, no cartesian; each round is one
+    * [[Fixpoint]] checkpoint, probed on its `changed` column. Returns
     * (id, community) with community = the surviving shared label.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
@@ -1328,39 +927,43 @@ object Graph {
     val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(true)
     val sym = e.unionAll(e.select(col("hi").as("lo"), col("lo").as("hi")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("lo").as("id")).distinct()
+    val init = sym.select(col("lo").as("id")).distinct()
       .select(col("id"), col("id").as("community"))
-    var prevRound: DataFrame = null
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
+    try Fixpoint.iterate("labelPropagation", init, maxIters,
+        Some("changed"), mustConverge = false) { labels =>
       // neighbor labels + the node's own (self-vote, the oscillation
-      // damper); most frequent wins, smallest label on ties
+      // damper)
       val votes = sym
         .join(labels.select(col("id").as("hi"),
           col("community").as("vote")), "hi")
         .select(col("lo").as("id"), col("vote"))
         .unionAll(labels.select(col("id"), col("community").as("vote")))
-        .groupBy("id", "vote").agg(count(lit(1)).as("n"))
-      val next = votes
-        .groupBy("id")
-        .agg(max(struct(col("n"), (-col("vote")).as("nv")))
-          .as("best"))
-        .select(col("id"), (-col("best.nv")).as("community"))
-        .join(labels.withColumnRenamed("community", "__old"), Seq("id"))
-        .select(col("id"), col("community"),
-          (col("community") =!= col("__old")).as("changed"))
-        .localCheckpoint(true)
-      converged = next.where(col("changed")).isEmpty
-      labels = next.select("id", "community")
-      if (prevRound != null)
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(prevRound)
-      prevRound = next
-      iter += 1
+      revote(votes, labels).select(col("id"), col("community"),
+        col("__new").isNotNull.as("changed"))
+    }.select("id", "community")
+    finally {
+      sym.unpersist(false)
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(e)
     }
-    sym.unpersist(false)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(e)
-    labels
+  }
+
+  /** One synchronous LPA vote over (id, vote) rows: the most frequent
+    * label wins, the smallest on ties. Returns `labels` with `__new`, the
+    * winning label where it differs from the node's `community` (null
+    * elsewhere). */
+  private def revote(votes: DataFrame, labels: DataFrame): DataFrame = {
+    val moved = votes
+      .groupBy("id", "vote").agg(count(lit(1)).as("n"))
+      .groupBy("id")
+      .agg(max(struct(col("n"), (-col("vote")).as("nv"))).as("best"))
+      .select(col("id"), (-col("best.nv")).as("__new"))
+      .join(labels.select(col("id"), col("community").as("__old")),
+        Seq("id"))
+      .where(col("__new") =!= col("__old"))
+      .select("id", "__new")
+    labels.join(moved, Seq("id"), "left")
+      .select(col("id"), coalesce(col("__new"), col("community"))
+        .as("community"), col("__new"))
   }
 
   /** INCREMENTALLY-maintained LPA communities — the store discipline of
@@ -1405,12 +1008,10 @@ object Graph {
     * edge frame once with a BROADCAST semi-join against the (bounded)
     * candidate set — no shuffle of the edge set, and the vote aggregate
     * is over the frontier's incident edges only; rounds track how far
-    * the batch's influence actually travels. Store layout and crash
-    * contract are [[updatePageRankStore]]'s: `edges/` + `state/` with
-    * `_edges_sig` riding inside the one-rename state install, edges
-    * append BEFORE the state commit, signature mismatch heals with a
-    * full [[labelPropagation]] over the merged edges. Re-sent edges
-    * dedupe against the store (the census's re-sent rule).
+    * the batch's influence actually travels. Store: an [[EdgeStore]] of
+    * (lo, hi) edges and an (id, community) state; its crash contract
+    * and re-sent-edge rule apply, and its full body is a
+    * [[labelPropagation]] over the merged edges.
     *
     * Returns the updated (id, community);
     * [[readCommunityState]] serves it later without recomputation.
@@ -1420,169 +1021,52 @@ object Graph {
                            srcCol: String, dstCol: String,
                            maxIters: Int = 20): DataFrame = {
     require(maxIters >= 1, s"maxIters must be positive, got $maxIters")
-    val edgesPath = s"$storePath/edges"
-    val statePath = s"$storePath/state"
-    def sig(df: DataFrame): Long = df
-      .agg(expr("bit_xor(xxhash64(lo, hi))")).collect().head match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-    def writeState(labels: DataFrame, s: Long): Unit = {
-      graft.sources.Compaction.replace(statePath, "lpastate") { staging =>
-        labels.select("id", "community").write.parquet(staging.toString)
-        java.nio.file.Files.writeString(
-          new java.io.File(staging, "_edges_sig").toPath, s.toString)
-        true
-      }
+    def full(all: DataFrame): DataFrame = {
+      require(!all.isEmpty, "updateCommunityStore needs >= 1 edge")
+      labelPropagation(all, "lo", "hi", maxIters)
     }
-    def storedSig(): Option[Long] = {
-      val f = new java.io.File(statePath, "_edges_sig")
-      if (!f.exists()) None
-      else Some(java.nio.file.Files.readString(f.toPath).trim.toLong)
+    def delta(d: EdgeStore.Delta): DataFrame = {
+      val sym = d.all
+        .unionAll(d.all.select(col("hi").as("lo"), col("lo").as("hi")))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // blast radius: only the batch's endpoints saw their neighborhood
+      // change — everything else is still at the stored fixed point;
+      // new nodes start as their own community
+      val frontier = d.added.select(col("lo").as("id"))
+        .unionAll(d.added.select(col("hi").as("id"))).distinct()
+        .select(col("id"), lit(true).as("__f"))
+      val init = sym.select(col("lo").as("id")).distinct()
+        .join(d.state, Seq("id"), "left")
+        .join(frontier, Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("community"), col("id")).as("community"),
+          coalesce(col("__f"), lit(false)).as("changed"))
+      try Fixpoint.iterate("community frontier", init, maxIters,
+          Some("changed"), mustConverge = false) { labels =>
+        // the only argmaxes that can move: the frontier (the nodes the
+        // last round relabeled) and its neighbors
+        val front = labels.where(col("changed")).select("id")
+        val cand = front.unionAll(
+            sym.join(broadcast(front.select(col("id").as("hi"))), "hi")
+              .select(col("lo").as("id")))
+          .distinct()
+        val votes = sym
+          .join(broadcast(cand.select(col("id").as("lo"))), Seq("lo"),
+            "left_semi")
+          .join(labels.select(col("id").as("hi"),
+            col("community").as("vote")), "hi")
+          .select(col("lo").as("id"), col("vote"))
+          .unionAll(labels.join(broadcast(cand), Seq("id"), "left_semi")
+            .select(col("id"), col("community").as("vote")))
+        revote(votes, labels.select("id", "community"))
+          .select(col("id"), col("community"),
+            col("__new").isNotNull.as("changed"))
+      }.select("id", "community")
+      finally sym.unpersist(false)
     }
-    def full(all: DataFrame, s: Long): DataFrame = {
-      val labels = labelPropagation(all, "lo", "hi", maxIters)
-      writeState(labels, s)
-      labels
-    }
-    val batch = canonicalEdges(newEdges, srcCol, dstCol)
-    if (!new java.io.File(edgesPath).exists()) {
-      // CREATION: edges land first, then the from-scratch propagation
-      // installs state + signature in one rename
-      val all = batch.localCheckpoint(true)
-      try {
-        require(!all.isEmpty, "updateCommunityStore needs >= 1 edge")
-        all.write.mode("overwrite").parquet(edgesPath)
-        full(all, sig(all))
-      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(all)
-    } else {
-      // ONE stored-edge scan per batch (down from three): sig(old)
-      // rides the dedup anti-join's scan as an observed metric, and
-      // the post-batch signature delta-folds — bit_xor is its own
-      // inverse, so sig(old ∪ delta) = sig(old) XOR sig(delta), with
-      // delta disjoint from old by the anti-join and a local
-      // checkpoint (small) feeding sig(delta).
-      val oldRaw = spark.read.parquet(edgesPath)
-      val obs = new org.apache.spark.sql.Observation
-      val tObs0 = System.nanoTime()
-      val delta = batch.join(
-          oldRaw.observe(obs,
-            expr("bit_xor(xxhash64(lo, hi))").as("__sig")),
-          Seq("lo", "hi"), "left_anti")
-        .localCheckpoint(true)
-      // listener delivery is async; scale the wait with the action
-      // (see updatePageRankStore)
-      val obsWaitMs = math.max(3000L,
-        3L * (System.nanoTime() - tObs0) / 1000000L)
-      try {
-        val all = oldRaw.unionAll(delta).localCheckpoint(true)
-        try {
-          val oldSig = org.apache.spark.sql.GraftBridge
-            .observedOrEmpty(obs, obsWaitMs).get("__sig") match {
-            case Some(null) => 0L // empty stored-edge frame
-            case Some(x) => x.asInstanceOf[Long]
-            // the metric node can be pruned away (an empty batch lets
-            // AQE fold the anti-join to an empty relation without
-            // touching the store side) — pay the explicit scan then
-            case None => sig(oldRaw)
-          }
-          // lazy: the no-op early return must not pay even the small
-          // delta-signature action
-          lazy val allSig = oldSig ^ sig(delta)
-          storedSig() match {
-            case None =>
-              // crashed creation (edges without a committed state)
-              if (!delta.isEmpty)
-                delta.write.mode("append").parquet(edgesPath)
-              return full(all, allSig)
-            case Some(ss) =>
-              if (delta.isEmpty && ss == oldSig)
-                return readCommunityState(spark, storePath) // no-op
-              if (ss != oldSig) {
-                // edges ahead of state (a crash between the edges
-                // append and the state install) — heal from scratch:
-                // the fold still holds (observed disk sig ^ delta sig)
-                if (!delta.isEmpty)
-                  delta.write.mode("append").parquet(edgesPath)
-                return full(all, allSig)
-              }
-          }
-          // NORMAL DELTA PATH: state consistent with `old`
-          val st = spark.read.parquet(statePath)
-            .select(col("id"), col("community"))
-          val sym = all
-            .unionAll(all.select(col("hi").as("lo"), col("lo").as("hi")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            var labels = sym.select(col("lo").as("id")).distinct()
-              .join(st, Seq("id"), "left")
-              .select(col("id"),
-                coalesce(col("community"), col("id")).as("community"))
-              .localCheckpoint(true)
-            // blast radius: only the batch's endpoints saw their
-            // neighborhood change — everything else is still at the
-            // stored fixed point
-            var frontier = delta.select(col("lo").as("id"))
-              .unionAll(delta.select(col("hi").as("id"))).distinct()
-              .localCheckpoint(true)
-            var iter = 0
-            while (!frontier.isEmpty && iter < maxIters) {
-              // the only argmaxes that can move: the frontier and its
-              // neighbors (one vote input changed for each)
-              val cand = frontier.unionAll(
-                  sym.join(broadcast(frontier.select(col("id").as("hi"))),
-                    "hi").select(col("lo").as("id")))
-                .distinct()
-              val symC = sym.join(broadcast(cand.select(col("id")
-                .as("lo"))), Seq("lo"), "left_semi")
-              val votes = symC
-                .join(labels.select(col("id").as("hi"),
-                  col("community").as("vote")), "hi")
-                .select(col("lo").as("id"), col("vote"))
-                .unionAll(labels.join(broadcast(cand), Seq("id"),
-                    "left_semi")
-                  .select(col("id"), col("community").as("vote")))
-                .groupBy("id", "vote").agg(count(lit(1)).as("n"))
-              val changed = votes
-                .groupBy("id")
-                .agg(max(struct(col("n"), (-col("vote")).as("nv")))
-                  .as("best"))
-                .select(col("id"), (-col("best.nv")).as("community"))
-                .join(labels.withColumnRenamed("community", "__old"),
-                  Seq("id"))
-                .where(col("community") =!= col("__old"))
-                .select("id", "community")
-                .localCheckpoint(true)
-              val nextLabels = labels
-                .join(changed.withColumnRenamed("community", "__new"),
-                  Seq("id"), "left")
-                .select(col("id"),
-                  coalesce(col("__new"), col("community"))
-                    .as("community"))
-                .localCheckpoint(true)
-              org.apache.spark.sql.GraftBridge
-                .unpersistCheckpoint(labels)
-              org.apache.spark.sql.GraftBridge
-                .unpersistCheckpoint(frontier)
-              labels = nextLabels
-              frontier = changed.select("id")
-              iter += 1
-            }
-            // the final round's frontier blocks are dead once the loop
-            // exits (labels is its own checkpoint) — release them, or a
-            // driver folding many batches pins one leaked checkpoint
-            // per call for the session
-            org.apache.spark.sql.GraftBridge.unpersistCheckpoint(frontier)
-            // edges append BEFORE the state commit — the crash contract
-            // shared with every push store
-            if (!delta.isEmpty)
-              delta.write.mode("append").parquet(edgesPath)
-            writeState(labels, allSig)
-            labels
-          } finally sym.unpersist(false)
-        } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(all)
-      } finally org.apache.spark.sql.GraftBridge.unpersistCheckpoint(delta)
-    }
+    EdgeStore.update(spark, storePath,
+      canonicalEdges(newEdges, srcCol, dstCol), Seq("lo", "hi"))(
+      full, delta)._1
   }
 
   /** The stored (id, community) of an incremental LPA store. */

@@ -507,9 +507,16 @@ class DedupSpec extends AnyFunSuite with SparkFixture {
       "id_a", "id_b", partitions = 16)
     // the takedown-list shape: labeled ids from different components
     // plus a never-labeled probe, every probe answered in one call
-    val got = Components.lookupComponents(spark, part,
-        Seq(2L, 501L, 999L, 11L))
-      .as[(Long, Long)].collect().toMap
+    var got = Map.empty[Long, Long]
+    // the bloom sidecar (_id_blooms) is a hidden root: both lookups read
+    // it by its part files, never through an ignored-path read
+    val ignored = TestProbes.ignoredRootReads(spark) {
+      got = Components.lookupComponents(spark, part,
+          Seq(2L, 501L, 999L, 11L))
+        .as[(Long, Long)].collect().toMap
+      assert(Components.lookupComponent(spark, part, 501L) === Some(500L))
+    }
+    assert(ignored === 0, "a bloom-routed lookup read an ignored root")
     assert(got === Map(2L -> 1L, 501L -> 500L, 999L -> 999L, 11L -> 10L))
     // the confirm read prunes on the routed partitions
     intercept[IllegalArgumentException] {

@@ -526,11 +526,11 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     // below that fails LOUDLY (no silent wrong answer), and the auto
     // bound (maxRounds = 0 → max(200, nodes)) converges on any graph
     val path = (1L until 12L).map(i => (i, i + 1))
-    val capped = intercept[IllegalArgumentException] {
+    val capped = intercept[IllegalStateException] {
       Graph.coreness(path.toDF("src", "dst"), "src", "dst", maxRounds = 2)
         .collect()
     }
-    assert(capped.getMessage.contains("did not converge"))
+    assert(capped.getMessage.contains("coreness did not converge"))
     assert(served(path) === (1L to 12L).map(_ -> 1L).toMap)
   }
 
@@ -706,5 +706,79 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
         b1.where(lit(false)), "src", "dst")
     }
     assert(e.getMessage.contains("edge"))
+  }
+
+  test("store results stay readable: a result held from a call that " +
+      "changes nothing survives the next update's swap of the state, for " +
+      "the local-PPR, PageRank and community stores") {
+    import graft.operators.Graph
+    val ring = (1L to 6L).map(i => (i, i % 6 + 1)).toDF("src", "dst")
+    val more = Seq((2L, 5L), (6L, 3L)).toDF("src", "dst")
+    val seeds = Seq(1L).toDF("id")
+    val stores: Seq[(String, (String, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "ppr" -> ((st, b) => Graph.updateLocalPprStore(spark, st, b, "src",
+        "dst", seeds, "id", eps = 1e-3)),
+      "pagerank" -> ((st, b) => Graph.updatePageRankStore(spark, st, b,
+        "src", "dst", eps = 1e-3)),
+      "community" -> ((st, b) => Graph.updateCommunityStore(spark, st, b,
+        "src", "dst")))
+    stores.foreach { case (name, update) =>
+      val st = java.nio.file.Files.createTempDirectory(s"held_$name")
+        .resolve("st").toString
+      val first = update(st, ring).collect().toSet
+      val held = update(st, ring) // a replay: nothing changes
+      update(st, more)
+      assert(held.collect().toSet === first, s"$name: held no-op result")
+    }
+  }
+
+  test("Fixpoint: stops on the first round with no changed row, throws " +
+      "IllegalStateException naming the loop at the bound, leaves only " +
+      "the returned round persisted, and gives the same rounds when the " +
+      "observation is skipped") {
+    import graft.operators.Fixpoint
+    // each round moves v one step toward 0: v = 3 needs 3 changing rounds
+    // and a 4th that changes nothing
+    val init = Seq((1L, 3L), (2L, 1L), (3L, 0L)).toDF("id", "v")
+    def run(maxRounds: Int, waitMs: Long): (Map[Long, Long], Int) = {
+      var steps = 0
+      val out = Fixpoint.iterate("countdown", init, maxRounds,
+          Some("changed"), waitMs = waitMs) { st =>
+        steps += 1
+        st.select(col("id"), greatest(col("v") - 1, lit(0L)).as("v"),
+          (col("v") > 0).as("changed"))
+      }
+      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(out)
+      (got, steps)
+    }
+    // RDDs persisted since `before` (the cleaner may drop older ones)
+    def added(before: collection.Set[Int]) =
+      spark.sparkContext.getPersistentRDDs.keySet -- before
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (observed, rounds) = run(10, 3000L)
+    assert(observed === Map(1L -> 0L, 2L -> 0L, 3L -> 0L))
+    assert(rounds === 4)
+    assert(added(before).isEmpty, "a round's checkpoint leaked")
+    // the fallback scan settles on the same round
+    assert(run(10, 0L) === (observed, rounds))
+    // only the returned round stays persisted
+    val out = Fixpoint.iterate("countdown", init, 10, Some("changed")) { st =>
+      st.select(col("id"), greatest(col("v") - 1, lit(0L)).as("v"),
+        (col("v") > 0).as("changed"))
+    }
+    assert(added(before).size === 1)
+    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(out)
+    // the bound: a loop that must converge fails loudly, naming itself,
+    // and releases its last round
+    val e = intercept[IllegalStateException](run(2, 3000L))
+    assert(e.getMessage.contains("countdown did not converge in 2 rounds"))
+    assert(added(before).isEmpty)
+    // a fixed-round loop (no active column) runs exactly maxRounds
+    var fixed = 0
+    val f = Fixpoint.iterate("fixed", init, 3) { st => fixed += 1; st }
+    assert(fixed === 3 && f.count() === 3L)
+    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(f)
   }
 }

@@ -664,6 +664,30 @@ class ScaleOpsSpec extends AnyFunSuite with SparkFixture {
       s"hand-rolled commit outside Compaction: ${hits.diff(claims)}")
   }
 
+  test("source guard: the graph operators keep no hand-rolled round loop " +
+      "and no store protocol of their own (Fixpoint, EdgeStore)") {
+    val ops = new java.io.File("src/main/scala/graft/operators")
+    assert(ops.isDirectory, s"run from the repo root, not ${
+      new java.io.File(".").getAbsolutePath}")
+    def lines(f: java.io.File): Seq[(String, Int, String)] =
+      java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String]).toSeq.zipWithIndex
+        .map { case (l, i) => (f.getName, i + 1, l.trim) }
+    val loops = Seq("Graph.scala", "Components.scala")
+      .flatMap(n => lines(new java.io.File(ops, n)))
+      .filter(_._3.contains("while ("))
+    assert(loops.isEmpty, s"round loop outside Fixpoint: $loops")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val sigs = scalaFiles(new java.io.File("src/main/scala"))
+      .filter(_.getName != "EdgeStore.scala").flatMap(lines)
+      .filter(_._3.contains("_edges_sig"))
+    assert(sigs.isEmpty, s"edge-signature protocol outside EdgeStore: $sigs")
+  }
+
   test("source guard: every cell-partitioned ANN table in src/main is " +
       "written by CodecIndex") {
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
